@@ -27,7 +27,7 @@ import org.apache.spark.sql.SparkSession
   *   normal burn (the box was busy, not the engine); a true
   *   regression raises wall AND cpu on every rep. One known
   *   confounder: process CPU time includes GC threads, so a
-  *   periodic concurrent GC cycle (see the cleaner config below)
+  *   periodic concurrent GC cycle (see GraftSession's cleaner config)
   *   overlapping a SHORT query's reps inflates wall and cpu
   *   together — distinguish from a real regression by rerunning
   *   that query alone (SPARK_GRAFT_BENCH_FILTER) before acting.
@@ -60,7 +60,7 @@ import org.apache.spark.sql.SparkSession
   * n_ok says how partial.
   */
 object Bench {
-  private def loadavg1(): String =
+  private[graft] def loadavg1(): String =
     try java.nio.file.Files.readString(
       java.nio.file.Paths.get("/proc/loadavg")).split(" ")(0)
     catch { case _: Throwable => "-1" }
@@ -71,7 +71,7 @@ object Bench {
     * reads idle, and the steal delta is the only forensic that
     * catches it (observed: a loadavg-0.36 capture with 100+ stolen
     * CPU-seconds and 3× spikes on deterministic queries). */
-  private def stealJiffies(): Long =
+  private[graft] def stealJiffies(): Long =
     try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/stat"))
       .linesIterator.next().trim.split("\\s+")(8).toLong
     catch { case _: Throwable => -1L }
@@ -119,40 +119,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.ShuffleIo.tune(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // naive parquet timestamps read as LTZ (pre-Spark-4 behavior):
-      // the driver's testdata encodes ts/o_orderdate/l_shipdate as
-      // timestamp[us] without a zone, and the UTC session makes the
-      // LTZ reading value-identical to DuckDB's naive interpretation
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // Long-run block hygiene. localCheckpoint blocks (every iterative
-      // loop's lineage truncation) are freed by ContextCleaner only
-      // after a GC drops their RDD references into its queue — and on a
-      // 24g heap that never fills, the only guaranteed GC is Spark's
-      // periodic one, whose DEFAULT interval (30min) is close to a full
-      // 133-query × 3-rep run. Measured effect of the backlog: the
-      // cache-retained suite pass after the ~35-min median phase ran
-      // 193 s with q1_agg at 9.9 s, vs 114 s / sub-second q1_agg on a
-      // fresh JVM — same code, same box. A 2-minute cadence bounds the
-      // block pile-up; ExplicitGCInvokesConcurrent (build.sbt) keeps
-      // each cycle concurrent instead of a stop-the-world Full GC
-      // inside someone's timed rep.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // the SQL status store retains up to 1000 executions' plan
-      // graphs even with the UI disabled — a multi-rep 133-query run
-      // holds every one of them on the heap
-      .config("spark.sql.ui.retainedExecutions", "15")
-      .config("spark.ui.retainedJobs", "200")
-      .config("spark.ui.retainedStages", "200")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession()
     // absorb one-time session/codegen warmup outside the per-query timings
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** IVF serving-tier pricing probe (r13): the persisted
@@ -27,16 +26,6 @@ import org.apache.spark.sql.functions._
   * SPARK_GRAFT_IVF_K (default 2048), SPARK_GRAFT_IVF_OUT.
   */
 object BenchIvf {
-  private def loadavg1(): String =
-    try java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/proc/loadavg")).split(" ")(0)
-    catch { case _: Throwable => "-1" }
-
-  private def stealJiffies(): Long =
-    try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/stat"))
-      .linesIterator.next().trim.split("\\s+")(8).toLong
-    catch { case _: Throwable => -1L }
-
   private def timeNoop(df: org.apache.spark.sql.DataFrame): Double = {
     val t0 = System.nanoTime()
     df.write.format("noop").mode("overwrite").save()
@@ -48,18 +37,8 @@ object BenchIvf {
     val repl = sys.env.getOrElse("SPARK_GRAFT_IVF_REPL", "32").toInt
     val k = sys.env.getOrElse("SPARK_GRAFT_IVF_K", "2048").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.ShuffleIo.tune(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val la0 = loadavg1(); val st0 = stealJiffies()
+    val spark = graft.core.GraftSession()
+    val la0 = Bench.loadavg1(); val st0 = Bench.stealJiffies()
 
     // stage the replicated corpus as a corpus dir (embeddings.parquet)
     val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -94,8 +73,8 @@ object BenchIvf {
       timeNoop(operators.Ann.ivf(spark, dir, operators.Ann.NProbe, k))
     }.sorted
 
-    val la1 = loadavg1()
-    val steal = (stealJiffies() - st0) / 100.0
+    val la1 = Bench.loadavg1()
+    val steal = (Bench.stealJiffies() - st0) / 100.0
     def r3(v: Double) =
       String.format(java.util.Locale.ROOT, "%.3f", v)
     val json =

@@ -135,17 +135,8 @@ object BenchStream {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.core.ShuffleIo.tune(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.GraftSession.cores
+    val spark = graft.core.GraftSession(cpus)
     val tmp = java.nio.file.Files.createTempDirectory("graft_bstream").toString
     val nEvents = stage(spark, s"$sfDir/events.parquet", s"$tmp/events")
     val nDocs = stage(spark, s"$sfDir/documents.parquet", s"$tmp/documents")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round tooling: run ONE query and print per-job /
   * per-stage wall, task counts and shuffle bytes — the local stand-in
@@ -15,23 +14,14 @@ object JobProbe {
     }
     val Array(sfDir, name) = args.take(2)
     val reps = args.lift(2).map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // A/B tooling: extra session confs as "k=v;k=v" (probe-only knob)
     val extra = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
       .split(";").map(_.trim).filter(_.contains("="))
       .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val builder0 = graft.core.ShuffleIo.tune(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // extras LAST so the probe can override any fixed conf
-    val spark = extra.foldLeft(builder0) { case (b, (k, v)) => b.config(k, v) }
+    // extras LAST, on the shared builder, so the probe can override any fixed conf
+    val spark = extra.foldLeft(graft.core.GraftSession.builder(
+        graft.core.GraftSession.cores)) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
     // warm up (codegen, file listing) untimed
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round tooling: dump `.explain("formatted")` for named
@@ -13,18 +12,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix) = args.take(3)
     val names = args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.ShuffleIo.tune(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "15")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.forall(_.exists(n.startsWith)) }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,30 +8,7 @@ object Verify {
     // the driver always passes exactly two args = full run)
     val Array(sfDir, outDir) = args.take(2)
     val nameFilter = args.lift(2).map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.ShuffleIo.tune(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // naive parquet timestamps read as LTZ (pre-Spark-4 behavior):
-      // the driver's testdata encodes ts/o_orderdate/l_shipdate as
-      // timestamp[us] without a zone, and the UTC session makes the
-      // LTZ reading value-identical to DuckDB's naive interpretation
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // same long-run hygiene as Bench: a 133-query verify run in one
-      // JVM accumulates localCheckpoint blocks (ContextCleaner frees
-      // them only on GC — default periodic GC is 30min away) and SQL
-      // status-store plan graphs; bound both so the tail of the run
-      // doesn't pay the pile-up
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.sql.ui.retainedExecutions", "15")
-      .config("spark.ui.retainedJobs", "200")
-      .config("spark.ui.retainedStages", "200")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) =>

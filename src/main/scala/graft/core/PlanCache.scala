@@ -13,9 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Same bounding rationale as [[Tables]]: a DataFrame strongly
   * references its SparkSession, so an unbounded map would retain
   * every session a long-lived process creates. LRU-bounded; evicted
-  * entries release their storage blocks via unpersist. Values are
-  * built lazily and `.cache()`d, so the first consumer pays the
-  * build and later consumers read executor-memory blocks.
+  * entries release their storage blocks via unpersist. A lookup hands
+  * back a frame that is `.cache()`d AND already materialized, so every
+  * consumer reads executor-memory blocks.
   */
 final class PlanCache(maxEntries: Int = 16) {
   PlanCache.register(this)
@@ -30,68 +30,59 @@ final class PlanCache(maxEntries: Int = 16) {
         else false
     }
 
-  /** The cached frame for `key`, building (and `.cache()`ing) it on
-    * first use. The build runs OUTSIDE the monitor — plan resolution
-    * can do I/O; on a racing duplicate build, first insert wins and
-    * the loser's frame is simply dropped WITHOUT unpersisting:
-    * CacheManager registrations are keyed by logical plan, not
-    * Dataset identity, so unpersisting the (value-identical) loser
-    * would silently un-cache the winner's registration too. */
+  /** The cached frame for `key`, building it on first use. The build
+    * runs OUTSIDE the monitor — plan resolution can do I/O; on a
+    * racing duplicate build, first insert wins and the loser's frame
+    * is simply dropped, never cached: CacheManager registrations are
+    * keyed by logical plan, not Dataset identity, so unpersisting the
+    * (value-identical) loser would silently un-cache the winner's
+    * registration too. Only the winner is materialized, also outside
+    * the monitor (see [[materialized]]). */
   def getOrBuild(spark: SparkSession, key: String)
       (build: => DataFrame): DataFrame = {
     val k = (spark, key)
     val hit = m.synchronized(m.get(k))
-    if (hit != null) {
-      // harness loops call spark.catalog.clearCache() between queries
-      // (block hygiene over a 128-query run); that drops this frame's
-      // storage but not the memo. Re-register so the next consumer
-      // re-materializes once and sharing resumes — a duplicate
-      // cache() race is benign (no-op + log line).
-      //
-      // Materialize EAGERLY (count() populates every partition of the
-      // InMemoryRelation, no row deserialization): a lazily
-      // re-registered frame under a multi-branch consumer plan lets
-      // every concurrent task that misses a block recompute the
-      // frame's lineage for itself — observed r14 as sporadic
-      // 10-60× CPU blowups on single reps of the dedup family
-      // mid-suite ("Block rdd_N already exists" warnings = the racing
-      // duplicate adds), e.g. dedup_prefix_filter reps of 60/17/603
-      // CPU-s for identical input. One sequential pass here is
-      // exactly what the first consumer pays anyway, runs inside the
-      // caller's timed region, and removes the race.
-      if (hit.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        hit.cache()
-        hit.count()
-      }
-      hit
-    } else {
-      val built = build.cache()
+    materialized(if (hit != null) hit else {
+      val built = build
       m.synchronized {
         val raced = m.get(k)
         if (raced != null) raced
         else { m.put(k, built); built }
       }
-    }
+    })
   }
 
   /** The cached frame for `key` if (and only if) it is already memoized
-    * — no build, no insertion, but a hit refreshes LRU recency and
-    * re-registers dropped storage like [[getOrBuild]]. Lets a builder
-    * derive one frame from another already-paid one (e.g. a
+    * — no build, no insertion, but a hit refreshes LRU recency. Lets a
+    * builder derive one frame from another already-paid one (e.g. a
     * higher-threshold edge set sliced from a lower-threshold memo)
-    * without forcing the cheaper frame into existence when nothing
-    * has paid for it. */
-  def peek(spark: SparkSession, key: String): Option[DataFrame] = {
-    val hit = m.synchronized(m.get((spark, key)))
-    if (hit == null) None
-    else {
-      // same eager re-materialization as getOrBuild (see there)
-      if (hit.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        hit.cache()
-        hit.count()
-      }
-      Some(hit)
+    * without building the cheaper frame when nothing has paid for it.
+    * A hit whose storage was dropped runs one job to re-materialize it,
+    * like [[getOrBuild]]. */
+  def peek(spark: SparkSession, key: String): Option[DataFrame] =
+    Option(m.synchronized(m.get((spark, key)))).map(materialized)
+
+  /** `df`, cached and materialized: the one path for a first build and
+    * for a memo whose storage a harness `clearCache()` dropped (that
+    * drops the blocks but not the memo).
+    *
+    * Materialize EAGERLY (count() populates every partition of the
+    * InMemoryRelation, no row deserialization): a lazily cached frame
+    * under a multi-branch consumer plan lets every concurrent task
+    * that misses a block recompute the frame's lineage for itself —
+    * observed r14 as sporadic 10-60× CPU blowups on single reps of the
+    * dedup family mid-suite ("Block rdd_N already exists" warnings =
+    * the racing duplicate adds), e.g. dedup_prefix_filter reps of
+    * 60/17/603 CPU-s for identical input. One sequential pass here is
+    * exactly what the first consumer pays anyway, runs inside the
+    * caller's timed region, and removes the race. Two callers racing
+    * here both cache() (a no-op plus a log line) and count(). */
+  private def materialized(df: DataFrame): DataFrame = {
+    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
+      df.cache()
+      df.count()
     }
+    df
   }
 
   /** Drop (and unpersist) entries whose key starts with `prefix` —

@@ -157,7 +157,7 @@ object Tables {
     * keyed the same way (per-order groupBys, the orderkey join)
     * reuse the spread exchange instead of adding their own.
     *
-    * Scale-adaptive by construction, not a local[32] constant: the
+    * Scale-adaptive by construction, not a 32-core constant: the
     * condition reads the actual file bytes and the session's
     * maxPartitionBytes/openCostInBytes/defaultParallelism, so a
     * production table (row groups ≈ 128 MB, bytes ≫ cores ×

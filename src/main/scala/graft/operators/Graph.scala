@@ -444,7 +444,7 @@ object Graph {
     * surface; [[hits]] derives the trade edges inline). */
   private[graft] def hitsOf(edges: DataFrame, iters: Int = 5): DataFrame = {
     // r13 optimization note: two variants were implemented and
-    // A/B-measured against this implementation at sf0.1/local[32]
+    // A/B-measured against this implementation at sf0.1 on 32 cores
     // (steal-gated filtered bench, 5 reps): (a) pre-partitioned cached
     // edge layouts (by c and by s) + lazy checkpoints, (b) same caches
     // + per-round max as a driver scalar instead of the broadcast

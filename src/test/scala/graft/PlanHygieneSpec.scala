@@ -112,6 +112,20 @@ class PlanHygieneSpec extends SparkSpecBase {
     assert(a.storageLevel == StorageLevel.NONE, "clear() must unpersist")
   }
 
+  test("PlanCache's first build is cached and already materialized") {
+    import org.apache.spark.storage.StorageLevel
+    val pc = new graft.core.PlanCache(2)
+    val a = pc.getOrBuild(spark, "first")(spark.range(7).toDF("first"))
+    assert(a.storageLevel != StorageLevel.NONE, "miss must cache the frame")
+    // withCachedData = the plan with CacheManager entries substituted
+    val loaded = a.queryExecution.withCachedData.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        r.cacheBuilder.isCachedColumnBuffersLoaded
+    }
+    assert(loaded.contains(true), "miss must materialize the cache before returning")
+    pc.clear()
+  }
+
   test("Tables.invalidate(dir) drops PlanCache entries built over that dir") {
     val pc = new graft.core.PlanCache(4)
     var builds = 0

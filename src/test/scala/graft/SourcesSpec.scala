@@ -88,15 +88,21 @@ class SourcesSpec extends SparkSpecBase {
       d => IO.readJson(spark, d, sample.schema))
   }
 
-  test("DSv2 word-count source reads the reference's own outputs with pruning") {
-    val dir = "/root/reference/output_compare/mr-wordc"
+  // hand-written inputs and their hand-checked `word, count` outputs
+  private lazy val fixture = java.nio.file.Paths.get(
+    getClass.getResource("/wordcount").toURI).toString
+  private val refDir = "/root/reference"
+
+  /** The source over a dir of `word, count` files whose `doc-0.txt`
+    * is one sorted reducer output. */
+  private def checkSourceRead(dir: String): Unit = {
     val df = spark.read.format("graft.sources.WordCountSource").load(dir)
     // totals agree with a plain-text parse of the same files
     val viaText = spark.read.textFile(dir).filter(_.nonEmpty).collect()
       .map { l => val i = l.lastIndexOf(", "); l.substring(i + 2).trim.toLong }
       .sum
     assert(df.agg(sum(col("cnt"))).head().getLong(0) == viaText)
-    // the reference's sorted-per-file invariant survives the read
+    // the sorted-per-file invariant survives the read
     val one = spark.read.format("graft.sources.WordCountSource")
       .load(s"$dir/doc-0.txt").collect().map(_.getString(0))
     assert(one.toSeq == one.sortBy(identity[String]).toSeq && one.nonEmpty)
@@ -110,22 +116,21 @@ class SourcesSpec extends SparkSpecBase {
       s"expected pruned scan output: $scanLine")
   }
 
-  test("DSv2 word-count sink: byte-parity with the reference output, truncate, append") {
+  /** The sink writes wordcount(`input`) byte-identical to `expected`,
+    * then round-trips, truncates and appends. */
+  private def checkSink(input: String, expected: String): Unit = {
     val out = Files.createTempDirectory("graft_wc_sink").toString
     // single sorted partition = one reducer's file, like the C framework
-    val wc = graft.operators.TextMR
-      .wordcountFile(spark, "/root/reference/input/mr-wordc/doc-0.txt")
+    val wc = graft.operators.TextMR.wordcountFile(spark, input)
       .repartition(1).sortWithinPartitions("word")
     wc.write.format("graft.sources.WordCountSource").mode("overwrite").save(out)
     val files = new java.io.File(out).listFiles.filter(_.getName.endsWith(".txt"))
     assert(files.length == 1 &&
       files.head.getName.matches("part-00000-[0-9a-f]{8}\\.txt"))
-    // the write path reproduces the reference's expected output byte-for-byte
-    val got = java.nio.file.Files.readAllBytes(files.head.toPath)
-    val want = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/output_compare/mr-wordc/doc-0.txt"))
+    val got = Files.readAllBytes(files.head.toPath)
+    val want = Files.readAllBytes(java.nio.file.Paths.get(expected))
     assert(java.util.Arrays.equals(got, want),
-      s"sink output differs from reference (${got.length} vs ${want.length} bytes)")
+      s"sink output differs from $expected (${got.length} vs ${want.length} bytes)")
     // round-trip through the connector's own read side
     val back = spark.read.format("graft.sources.WordCountSource").load(out)
     assert(back.orderBy("word").collect().toSeq ==
@@ -142,6 +147,24 @@ class SourcesSpec extends SparkSpecBase {
     val names = new java.io.File(out).listFiles.map(_.getName)
     assert(names.count(_.endsWith(".txt")) == 2, names.mkString(","))
     assert(!names.exists(_.startsWith(".tmp")), names.mkString(","))
+  }
+
+  test("DSv2 word-count source reads word-count outputs with pruning") {
+    checkSourceRead(s"$fixture/output")
+  }
+
+  test("DSv2 word-count sink: byte-parity with the expected output, truncate, append") {
+    Seq("doc-0.txt", "doc-1.txt").foreach { f =>
+      checkSink(s"$fixture/input/$f", s"$fixture/output/$f")
+    }
+  }
+
+  test("DSv2 word-count source and sink against the reference's own outputs") {
+    assume(Files.isDirectory(java.nio.file.Paths.get(refDir)),
+      "reference checkout not present")
+    checkSourceRead(s"$refDir/output_compare/mr-wordc")
+    checkSink(s"$refDir/input/mr-wordc/doc-0.txt",
+      s"$refDir/output_compare/mr-wordc/doc-0.txt")
   }
 
   test("orc round-trip with filter pushdown") {

@@ -3,27 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite. */
+/** The session every suite shares (one per forked test JVM). Fixed at
+  * 4 cores: suites assume 4 shuffle partitions. */
 trait SparkSpecBase extends AnyFunSuite {
   val Sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName(getClass.getSimpleName)
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // naive parquet timestamps read as LTZ (pre-Spark-4 behavior):
-      // the driver's testdata encodes ts/o_orderdate/l_shipdate as
-      // timestamp[us] without a zone, and the UTC session makes the
-      // LTZ reading value-identical to DuckDB's naive interpretation
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.core.GraftSession(4)
 }

@@ -1,10 +1,21 @@
 #!/bin/bash
-# One-command local gate: compile, specs, 3-SF oracle verify (plus a
-# partition-invariance pass), bench.
+# One-command local gate: one session builder, compile, specs, 3-SF
+# oracle verify (plus a partition-invariance pass), bench.
 # Usage: tools/gate.sh [quick]   (quick = sf0.01 verify only, no bench)
 set -e
 set -o pipefail
 cd "$(dirname "$0")/.."
+
+# One session builder: every main and the test base go through
+# graft.core.GraftSession, so a second SparkSession.builder under src/
+# is a config copy that will drift from it.
+echo "=== one session builder ==="
+builders=$(grep -rn "SparkSession.builder" src/ | grep -v "^src/main/scala/graft/core/GraftSession.scala:" || true)
+if [ -n "$builders" ]; then
+  echo "SparkSession.builder outside GraftSession.scala:"
+  echo "$builders"
+  exit 1
+fi
 
 echo "=== sbt test ==="
 sbt -batch test 2>&1 | grep -E "Tests:|\*\*\*" | tail -2
