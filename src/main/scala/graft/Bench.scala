@@ -5,13 +5,13 @@ import org.apache.spark.sql.SparkSession
 /** Per-round benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
-  * Each query executes through the `noop` sink — a plain count()
-  * would let Catalyst prune the aggregate/projection work and
-  * under-report. For the per-query medians, caches are cleared
-  * between reps so operators that legitimately self-cache (dedup
-  * signature indexes, shared profiler samples) pay their own
-  * materialization cost rather than a predecessor's — every timed
-  * rep is a full cold execution of that operator.
+  * Each query is built and executed through the `noop` sink (a plain
+  * count() would let Catalyst prune the aggregate/projection work and
+  * under-report) inside one [[graft.core.WorkingSet.scope]], which
+  * releases its working sets. For the per-query medians, caches are
+  * also cleared between reps so PlanCache memos (dedup's pair base,
+  * the profiler's sample) are paid by every rep, not a predecessor —
+  * every timed rep is a full cold execution of that operator.
   *
   * Honesty signals ride along, enough to adjudicate a disturbed
   * capture from the JSON alone (the round-6 driver capture doubled
@@ -50,7 +50,8 @@ import org.apache.spark.sql.SparkSession
   *   caches retained — the pipeline-shaped total where shared
   *   derived frames ([[graft.core.PlanCache]]: dedup's postings
   *   pair set, the profiler's bottom-k sample) are paid once and
-  *   reused. This is how the engine actually runs a query batch;
+  *   reused (each query's working sets still close with its scope).
+  *   This is how the engine actually runs a query batch;
   *   the per-query-median `value` deliberately excludes that
   *   sharing, so the pair is the measured cost/benefit of reuse.
   *
@@ -126,7 +127,8 @@ object Bench {
     val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      graft.core.WorkingSet.scope(
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save())
     val loadStart = loadavg1()
     val stealStart = stealJiffies()
     val canaryStart = canaryMedian(spark, reps)

@@ -23,8 +23,10 @@ object JobProbe {
         graft.core.GraftSession.cores)) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     val fn = SparkEntry.queries(name)
+    def run(): Unit = graft.core.WorkingSet.scope(
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save())
     // warm up (codegen, file listing) untimed
-    fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    run()
 
     case class St(var tasks: Int = 0, var taskTimeMs: Long = 0,
       var cpuMs: Long = 0, var gcMs: Long = 0, var deserMs: Long = 0,
@@ -69,7 +71,7 @@ object JobProbe {
       spark.catalog.clearCache()
       jobs.clear(); stages.clear()
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      run()
       val wall = (System.nanoTime() - t0) / 1e9
       Thread.sleep(600) // let the listener bus drain
       println(f"===== rep $r: wall=$wall%.3f s =====")

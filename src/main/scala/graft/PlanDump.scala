@@ -20,9 +20,11 @@ object PlanDump {
         try {
           spark.catalog.clearCache()
           spark.sparkContext.setJobDescription(s"plandump: $name")
-          val df = fn(spark, sfDir)
-          df.write.format("noop").mode("overwrite").save()
-          val qe = df.queryExecution
+          val qe = graft.core.WorkingSet.scope {
+            val df = fn(spark, sfDir)
+            df.write.format("noop").mode("overwrite").save()
+            df.queryExecution
+          }
           val txt = qe.explainString(
             org.apache.spark.sql.execution.ExplainMode.fromString("formatted")) +
             "\n===== executedPlan (post-AQE where applicable) =====\n" +

@@ -14,13 +14,14 @@ object Verify {
       .filter { case (name, _) =>
         nameFilter.forall(_.pattern.matcher(name).matches()) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      // the scope releases the query's working sets; clearCache also
+      // drops the PlanCache memos' blocks between queries
+      try graft.core.WorkingSet.scope {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // operators that legitimately self-cache (dedup indexes, ANN
-      // buckets) must not pile blocks up across a 60-query run
       spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -37,12 +37,12 @@ final class PlanCache(maxEntries: Int = 16) {
     * keyed by logical plan, not Dataset identity, so unpersisting the
     * (value-identical) loser would silently un-cache the winner's
     * registration too. Only the winner is materialized, also outside
-    * the monitor (see [[materialized]]). */
+    * the monitor (see [[PlanCache.materialized]]). */
   def getOrBuild(spark: SparkSession, key: String)
       (build: => DataFrame): DataFrame = {
     val k = (spark, key)
     val hit = m.synchronized(m.get(k))
-    materialized(if (hit != null) hit else {
+    PlanCache.materialized(if (hit != null) hit else {
       val built = build
       m.synchronized {
         val raced = m.get(k)
@@ -60,30 +60,7 @@ final class PlanCache(maxEntries: Int = 16) {
     * A hit whose storage was dropped runs one job to re-materialize it,
     * like [[getOrBuild]]. */
   def peek(spark: SparkSession, key: String): Option[DataFrame] =
-    Option(m.synchronized(m.get((spark, key)))).map(materialized)
-
-  /** `df`, cached and materialized: the one path for a first build and
-    * for a memo whose storage a harness `clearCache()` dropped (that
-    * drops the blocks but not the memo).
-    *
-    * Materialize EAGERLY (count() populates every partition of the
-    * InMemoryRelation, no row deserialization): a lazily cached frame
-    * under a multi-branch consumer plan lets every concurrent task
-    * that misses a block recompute the frame's lineage for itself —
-    * observed r14 as sporadic 10-60× CPU blowups on single reps of the
-    * dedup family mid-suite ("Block rdd_N already exists" warnings =
-    * the racing duplicate adds), e.g. dedup_prefix_filter reps of
-    * 60/17/603 CPU-s for identical input. One sequential pass here is
-    * exactly what the first consumer pays anyway, runs inside the
-    * caller's timed region, and removes the race. Two callers racing
-    * here both cache() (a no-op plus a log line) and count(). */
-  private def materialized(df: DataFrame): DataFrame = {
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      df.cache()
-      df.count()
-    }
-    df
-  }
+    Option(m.synchronized(m.get((spark, key)))).map(PlanCache.materialized(_))
 
   /** Drop (and unpersist) entries whose key starts with `prefix` —
     * keys embed the data directory, so this is the staleness hook
@@ -111,6 +88,34 @@ object PlanCache {
     new java.util.concurrent.CopyOnWriteArrayList[PlanCache]()
 
   private def register(pc: PlanCache): Unit = instances.add(pc)
+
+  /** `df`, cached and materialized — the one eager-cache step, shared
+    * by every memo lookup (a harness `clearCache()` drops a memo's
+    * blocks, not the memo) and every [[WorkingSet]]. A plan already
+    * cached is left alone; otherwise `created` sees `df` once its
+    * CacheManager entry exists, before the count, so a failing count
+    * still leaves the entry with its owner.
+    *
+    * Materialize EAGERLY (count() populates every partition of the
+    * InMemoryRelation, no row deserialization): a lazily cached frame
+    * under a multi-branch consumer plan lets every concurrent task
+    * that misses a block recompute the frame's lineage for itself —
+    * observed r14 as sporadic 10-60× CPU blowups on single reps of the
+    * dedup family mid-suite ("Block rdd_N already exists" warnings =
+    * the racing duplicate adds), e.g. dedup_prefix_filter reps of
+    * 60/17/603 CPU-s for identical input. One sequential pass here is
+    * exactly what the first consumer pays anyway, runs inside the
+    * caller's timed region, and removes the race. Two callers racing
+    * here both cache() (a no-op plus a log line) and count(). */
+  private[core] def materialized(df: DataFrame,
+      created: DataFrame => Unit = _ => ()): DataFrame = {
+    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
+      df.cache()
+      created(df)
+      df.count()
+    }
+    df
+  }
 
   /** Invalidate every PlanCache entry under `dirPrefix` (all
     * instances). Called by [[Tables.invalidate]] so one hook covers

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Tables, WorkingSet}
 import graft.functions.{TopKScoreAgg, Vectors}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -34,7 +34,7 @@ object Ann {
 
   // Derived-corpus memo (the Graph/Dedup discipline): pq, pq_trained
   // and ivf_pq each consume a quantized/residual corpus frame; ad-hoc
-  // .cache() here never unpersisted, so a full-suite Verify run
+  // caches here were never unpersisted, so a full-suite Verify run
   // accumulated three redundant cached corpora in executor memory.
   // LRU-bounded getOrBuild shares the frame across the family AND
   // releases evicted blocks.
@@ -1090,7 +1090,7 @@ object Ann {
     val approx = approxR
       .select(col("qid"), col("vec_id"), col("rank").cast("long").as("arank"))
     // the joined frame has exactly ONE consumer (the explode+groupBy
-    // pass below) — no cache: the r11 .cache() here was never read a
+    // pass below) — no cache: the r11 cache here was never read a
     // second time and leaked storage blocks across a long session
     truth.join(approx, Seq("qid", "vec_id"), "left")
       .select(col("trank"), col("arank"),
@@ -1250,19 +1250,16 @@ object Ann {
     * (corpus smaller than the requested top-k) scores against the
     * rows it actually has. */
   def evalOf(approxRanking: DataFrame, truthRanking: DataFrame): DataFrame = {
-    // Drain both rankings to local relations FIRST (bounded by
-    // contract: k × |queries| rows — the same class as the codebook
-    // collect). Spark plans are trees, and this eval consumes `truth`
-    // three times (kq / overlap / nn2) and `approx` twice (overlap /
-    // nnRank), all of it under a 2-branch union — without the drain
-    // the full brute-force scoring subtree re-executed up to 6× and
-    // the approximate ranking up to 4× per eval (measured r14:
-    // ann_eval ≈ 2.4 s against ~1.1 s for its two rankings run once).
-    // Values are untouched: the drain is a collect + local relation
-    // of the identical rows, per invocation, from the parquet inputs.
-    val truth = graft.core.Drain.bounded(
+    // Both rankings are working sets of the caller's scope. Spark
+    // plans are trees, and this eval consumes `truth` three times
+    // (kq / overlap / nn2) and `approx` twice (overlap / nnRank), all
+    // of it under a 2-branch union — uncached, the full brute-force
+    // scoring subtree re-executed up to 6× and the approximate
+    // ranking up to 4× per eval (measured r14: ann_eval ≈ 2.4 s
+    // against ~1.1 s for its two rankings run once).
+    val truth = WorkingSet(
       truthRanking.select(col("qid"), col("rank"), col("vec_id")))
-    val approx = graft.core.Drain.bounded(
+    val approx = WorkingSet(
       approxRanking.select(col("qid"), col("rank"), col("vec_id")))
     // every truth qid, with its own k — the spine every metric hangs off
     val kq = truth.groupBy(col("qid")).agg(count(lit(1)).as("k_truth"))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.core.Tables
+import graft.core.{Tables, WorkingSet}
 import graft.functions.PortableHash
 
 /** Nearest-centroid assignment over QUANTIZED (integer) vectors as
@@ -191,18 +191,20 @@ object Cluster {
     kmeansDf(Tables(spark, dir).embeddings, k, iters)
 
   def kmeansDf(embeddings: DataFrame, k: Int, iters: Int): DataFrame =
-    kmeansAssign(embeddings, k, iters)
-      .groupBy(col("cid").cast("long").as("cluster_id"))
-      .agg(count(lit(1)).as("n"), sum(col("dist")).as("inertia"))
-      .orderBy("cluster_id")
+    clusterSizes(kmeansAssign(embeddings, k, iters))
+
+  /** Per-cluster size and inertia of an assignment, by cluster id. */
+  private def clusterSizes(assigned: DataFrame): DataFrame = assigned
+    .groupBy(col("cid").cast("long").as("cluster_id"))
+    .agg(count(lit(1)).as("n"), sum(col("dist")).as("inertia"))
+    .orderBy("cluster_id")
 
   /** The per-vector assignment after the Lloyd's rounds:
     * (vec_id, cid, dist) — the blocking input for semantic dedup
     * and any cluster-routed downstream. */
   def kmeansAssign(embeddings: DataFrame, k: Int, iters: Int): DataFrame = {
-    val e = quantized(embeddings).cache()
-    try kmeansLoop(e, hashSeeds(e, k), iters)._1
-    finally e.unpersist()
+    val e = WorkingSet(quantized(embeddings))
+    kmeansLoop(e, hashSeeds(e, k), iters)._1
   }
 
   /** Deterministic seeds: the k smallest portable hashes, cid in that
@@ -266,14 +268,9 @@ object Cluster {
     * converged instead of re-walking from hash seeds. */
   def embKmeansResume(spark: SparkSession, dir: String, k: Int = 8,
       itersCold: Int = 2, itersWarm: Int = 2): DataFrame = {
-    val e = quantized(Tables(spark, dir).embeddings).cache()
-    try {
-      val (_, codebook) = kmeansLoop(e, hashSeeds(e, k), itersCold)
-      kmeansLoop(e, codebook, itersWarm)._1
-        .groupBy(col("cid").cast("long").as("cluster_id"))
-        .agg(count(lit(1)).as("n"), sum(col("dist")).as("inertia"))
-        .orderBy("cluster_id")
-    } finally e.unpersist()
+    val e = WorkingSet(quantized(Tables(spark, dir).embeddings))
+    val (_, codebook) = kmeansLoop(e, hashSeeds(e, k), itersCold)
+    clusterSizes(kmeansLoop(e, codebook, itersWarm)._1)
   }
 
   /** The WITH-chain reproducing [[kmeansAssign]] in DuckDB, ending at
@@ -332,41 +329,38 @@ object Cluster {
     * centroid literals broadcast inside the expression). */
   def embKmeansEval(spark: SparkSession, dir: String,
       k: Int = 8, iters: Int = 3): DataFrame = {
-    val e = quantized(Tables(spark, dir).embeddings).cache()
-    try {
-      val (assigned, cents) = kmeansLoop(e, hashSeeds(e, k), iters)
-      def distTo(c: Array[Long]): Column =
-        aggregate(
-          zip_with(col("q"), typedlit(c.toSeq),
-            (x, y) => (x - y) * (x - y)),
-          lit(0L), (acc, v) => acc + v)
-      // the loop's public assignment drops q; rejoin the cached
-      // quantized frame for the distance fan-out
-      val withD = assigned
-        .join(e.select(col("vec_id"), col("q")), Seq("vec_id"))
-        .select(col("vec_id"), col("cid"),
-          posexplode(array(cents.map(distTo).toIndexedSeq: _*))
-            .as(Seq("ci", "dist2")))
-      val sil = withD.groupBy(col("vec_id"), col("cid"))
-        .agg(max(when(col("ci") === col("cid"), col("dist2"))).as("adist"),
-          min(when(col("ci") =!= col("cid"), col("dist2"))).as("bdist"))
-      val s = sil.select(col("cid"),
-        expr("""CASE WHEN greatest(adist, bdist) = 0 THEN CAST(0 AS BIGINT)
-                ELSE CAST((CAST(bdist - adist AS DECIMAL(38,0)) * 1000000)
-                          div greatest(adist, bdist) AS BIGINT) END""")
-          .as("s_micro"))
-        .cache()
-      val per = s.groupBy(col("cid").cast("long").as("cluster_id"))
-        .agg(count(lit(1)).as("n"),
-          expr("sum(s_micro) div count(*)").cast("long")
-            .as("mean_sil_micro"))
-      per.unionByName(
-          s.agg(count(lit(1)).as("n"),
-              expr("sum(s_micro) div count(*)").as("msm"))
-            .select(lit(-1L).as("cluster_id"), col("n"),
-              col("msm").cast("long").as("mean_sil_micro")))
-        .orderBy("cluster_id")
-    } finally e.unpersist()
+    val e = WorkingSet(quantized(Tables(spark, dir).embeddings))
+    val (assigned, cents) = kmeansLoop(e, hashSeeds(e, k), iters)
+    def distTo(c: Array[Long]): Column =
+      aggregate(
+        zip_with(col("q"), typedlit(c.toSeq),
+          (x, y) => (x - y) * (x - y)),
+        lit(0L), (acc, v) => acc + v)
+    // the loop's public assignment drops q; rejoin the cached
+    // quantized frame for the distance fan-out
+    val withD = assigned
+      .join(e.select(col("vec_id"), col("q")), Seq("vec_id"))
+      .select(col("vec_id"), col("cid"),
+        posexplode(array(cents.map(distTo).toIndexedSeq: _*))
+          .as(Seq("ci", "dist2")))
+    val sil = withD.groupBy(col("vec_id"), col("cid"))
+      .agg(max(when(col("ci") === col("cid"), col("dist2"))).as("adist"),
+        min(when(col("ci") =!= col("cid"), col("dist2"))).as("bdist"))
+    val s = WorkingSet(sil.select(col("cid"),
+      expr("""CASE WHEN greatest(adist, bdist) = 0 THEN CAST(0 AS BIGINT)
+              ELSE CAST((CAST(bdist - adist AS DECIMAL(38,0)) * 1000000)
+                        div greatest(adist, bdist) AS BIGINT) END""")
+        .as("s_micro")))
+    val per = s.groupBy(col("cid").cast("long").as("cluster_id"))
+      .agg(count(lit(1)).as("n"),
+        expr("sum(s_micro) div count(*)").cast("long")
+          .as("mean_sil_micro"))
+    per.unionByName(
+        s.agg(count(lit(1)).as("n"),
+            expr("sum(s_micro) div count(*)").as("msm"))
+          .select(lit(-1L).as("cluster_id"), col("n"),
+            col("msm").cast("long").as("mean_sil_micro")))
+      .orderBy("cluster_id")
   }
 
   /** Generated DuckDB oracle for [[embKmeansEval]] — the unrolled

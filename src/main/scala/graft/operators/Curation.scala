@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Tables, WorkingSet}
 import graft.functions.PortableHash
 import graft.functions.ShingleCol
 import graft.functions.TextAnalysis._
@@ -143,14 +143,13 @@ object Curation {
     // 1-row count and the next stage's semi/anti join — uncached,
     // every reference re-runs the full upstream text pass (the plan
     // audit counted 12 corpus scans; ids are doc_id-only rows)
-    val qualIds = textGopherDf(corpus).filter(col("keep")).select("doc_id")
-      .cache()
+    val qualIds = WorkingSet(
+      textGopherDf(corpus).filter(col("keep")).select("doc_id"))
     val qualDocs = corpus.join(qualIds, Seq("doc_id"), "left_semi")
-    val reps = qualDocs
+    val reps = WorkingSet(qualDocs
       .groupBy(md5(col("text")).as("h"))
       .agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id")
-      .cache()
+      .select("doc_id"))
     val contaminated = pipelineDecontamDf(docs, benchSource)
       .filter(col("contaminated")).select("doc_id")
     val fin = reps.join(contaminated, Seq("doc_id"), "left_anti")

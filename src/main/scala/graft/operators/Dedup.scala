@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Tables, WorkingSet}
 import graft.functions.PortableHash
 import graft.functions.Shingles._
 import graft.functions.Vectors
@@ -237,9 +237,9 @@ object Dedup {
     * runs one bounded Spark job (a single aggregate over the cached
     * postings) to decide whether the cap actually bites — i.e. this
     * method is not purely lazy. The probe is what buys the shared
-    * exact-pair fast path below; callers building plans on a hot
-    * driver path should call [[ngramJaccardDf]] directly, which is
-    * fully lazy and always pays the capped formulation. */
+    * exact-pair fast path below; [[ngramJaccardDf]] is the direct
+    * formulation without the shared base (its working sets
+    * materialize at construction, like every [[WorkingSet]]). */
   def ngramJaccard(spark: SparkSession, dir: String, tau: Double = 0.1,
       maxDf: Long = 0): DataFrame = {
     // fast path through the shared pair base: when the cap doesn't
@@ -282,7 +282,7 @@ object Dedup {
     *   (boilerplate ≪ content). */
   private[graft] def ngramJaccardPairs(docs: DataFrame, tau: Double,
       pruneSingletons: Boolean = false, maxDf: Long = 0): DataFrame = {
-    val g = docGrams(docs).cache()
+    val g = WorkingSet(docGrams(docs))
     val sizes = g.select(col("doc_id"), size(col("grams")).as("n"))
     // materialized before the self-join — otherwise the shingling
     // subtree executes once per join side. Postings carry the 60-bit
@@ -299,7 +299,7 @@ object Dedup {
       explode(graft.functions.SketchExprs.gramHashes(col("grams"))).as("gid"))
     val needDfs = pruneSingletons || maxDf > 0
     val dfs = if (needDfs) {
-      allPosts.groupBy(col("gid")).agg(count(lit(1)).as("df")).cache()
+      WorkingSet(allPosts.groupBy(col("gid")).agg(count(lit(1)).as("df")))
     } else null
     // One tiny job over the (cached, already-needed) df table decides
     // whether the cap actually bites. When it doesn't — the common
@@ -317,13 +317,13 @@ object Dedup {
     }
     val minDf = if (pruneSingletons) 1L else 0L
     val needFilter = pruneSingletons || capBites
-    val posts = (if (needFilter) {
+    val posts = WorkingSet(if (needFilter) {
       val kept = dfs
         .filter(col("df") > minDf &&
           (if (capBites) col("df") <= maxDf else lit(true)))
         .select("gid")
       allPosts.join(kept, Seq("gid"), "left_semi")
-    } else allPosts).cache()
+    } else allPosts)
     val rawPairs = posts.as("a")
       .join(posts.as("b"),
         col("a.gid") === col("b.gid") && col("a.doc_id") < col("b.doc_id"))
@@ -407,11 +407,11 @@ object Dedup {
 
   def minhashLshDf(docs: DataFrame, tau: Double, k: Int = 32,
       bands: Int = 8): DataFrame =
-    minhashFromGrams(docGrams(docs).cache(), tau, k, bands)
+    minhashFromGrams(WorkingSet(docGrams(docs)), tau, k, bands)
 
   private def minhashFromGrams(g: DataFrame, tau: Double, k: Int,
       bands: Int): DataFrame = {
-    val buckets = bandBuckets(g, k, bands).cache()
+    val buckets = WorkingSet(bandBuckets(g, k, bands))
     val cands = buckets.as("a")
       .join(buckets.as("b"),
         col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
@@ -459,8 +459,8 @@ object Dedup {
     * production this is persisted and appended per admitted shard. */
   private[graft] def standingIndex(existing: DataFrame, k: Int = 32,
       bands: Int = 8): (DataFrame, DataFrame) = {
-    val ge = docGrams(existing).cache()
-    (ge, bandBuckets(ge, k, bands).cache())
+    val ge = WorkingSet(docGrams(existing))
+    (ge, WorkingSet(bandBuckets(ge, k, bands)))
   }
 
   /** Persist a [[standingIndex]] as two parquet tables — the
@@ -506,8 +506,8 @@ object Dedup {
       .map(_.toString).sorted
     require(shards.nonEmpty,
       s"loadStandingIndex($path): no committed shard directories found")
-    (spark.read.parquet(shards.map(s => s"$s/grams").toSeq: _*).cache(),
-      spark.read.parquet(shards.map(s => s"$s/buckets").toSeq: _*).cache())
+    (WorkingSet(spark.read.parquet(shards.map(s => s"$s/grams").toSeq: _*)),
+      WorkingSet(spark.read.parquet(shards.map(s => s"$s/buckets").toSeq: _*)))
   }
 
   /** Fold admitted documents into a persisted index — the append
@@ -522,14 +522,13 @@ object Dedup {
     * deletes the leftover and rewrites, and nothing is visible to
     * [[loadStandingIndex]] until the marker lands after BOTH tables. */
   def appendToStandingIndex(docs: DataFrame, path: String, shardId: String,
-      k: Int = 32, bands: Int = 8): Unit = {
+      k: Int = 32, bands: Int = 8): Unit = WorkingSet.scope {
     require(shardId.nonEmpty && shardId != "base" &&
       shardId.matches("[A-Za-z0-9._-]+"),
       s"appendToStandingIndex: invalid shardId '$shardId'")
-    val g = docGrams(docs).cache()
+    val g = WorkingSet(docGrams(docs))
     writeShard(g, bandBuckets(g, k, bands), path, shardId,
       overwriteCommitted = false)
-    g.unpersist()
   }
 
   /** Write one shard's grams + buckets, then its `_COMMITTED` marker.
@@ -558,7 +557,7 @@ object Dedup {
       fresh: DataFrame, tau: Double, k: Int = 32,
       bands: Int = 8): DataFrame = {
     val (ge, eBuckets) = index
-    val gf = docGrams(fresh).cache()
+    val gf = WorkingSet(docGrams(fresh))
     val cands = bandBuckets(gf, k, bands).as("f")
       .join(eBuckets.as("e"), col("f.bk") === col("e.bk"))
       .select(col("f.doc_id").as("dn"), col("e.doc_id").as("de"))
@@ -597,13 +596,13 @@ object Dedup {
     // SimHashAgg and with the 64 sum-of-vote columns, see
     // SketchAggsSpec), so signature derivation is map-side and the
     // operator's first shuffle is the chunk-bucket candidate join.
+    // one working set: both join sides read the chunks, only they read sigs
     val sigs = docGrams(docs)
       .filter(size(col("grams")) > 0)
       .select(col("doc_id"),
         graft.functions.SketchExprs.simhashSig(col("grams")).as("sim"))
-      .cache()
-    val chunks = sigs.select(col("doc_id"), col("sim"),
-      explode(simhashChunks(col("sim"))).as("ck")).cache()
+    val chunks = WorkingSet(sigs.select(col("doc_id"), col("sim"),
+      explode(simhashChunks(col("sim"))).as("ck")))
     chunks.as("a")
       .join(chunks.as("b"),
         col("a.ck") === col("b.ck") && col("a.doc_id") < col("b.doc_id"))
@@ -627,19 +626,19 @@ object Dedup {
     * round so the loop survives arbitrarily many iterations at
     * scale. */
   def components(pairs: DataFrame, maxRounds: Int = 20,
-      seed: DataFrame = null): DataFrame = {
+      seed: DataFrame = null): DataFrame = WorkingSet.scope {
     // materialize the pair derivation once — the union below references
     // it twice, and without this the whole upstream (shingling +
     // self-join) executes per side
-    val p = pairs.cache()
+    val p = WorkingSet(pairs)
     // partitioned by src at cache time: every round's label join then
     // reuses this layout via a SHUFFLE_HASH hint below — the
     // checkpointed label vector has no stats, so an unhinted plan
     // falls back to sort-merge and re-sorts the edge set every round
     // (the same fix as Graph.pagerank)
-    val edges = p.select(col("d1").as("src"), col("d2").as("dst"))
+    val edges = WorkingSet(p.select(col("d1").as("src"), col("d2").as("dst"))
       .unionAll(p.select(col("d2").as("src"), col("d1").as("dst")))
-      .distinct().repartition(col("src")).cache()
+      .distinct().repartition(col("src")))
     // Round-0 labels: each node's own id, or (warm start) the caller's
     // prior (doc_id, component) labels — the daily-delta loop: when
     // yesterday's corpus grew by today's documents, seeding with
@@ -725,11 +724,8 @@ object Dedup {
         s"raise maxRounds for graphs with diameter > $maxRounds")
     }
     // the final labels are a materialized localCheckpoint — they no
-    // longer reference the pair/edge lineage, so the blocks cached for
-    // the loop can be released here instead of leaking until the
-    // session's LRU evicts them
-    edges.unpersist(blocking = false)
-    p.unpersist(blocking = false)
+    // longer reference the pair/edge lineage, so this call's scope
+    // releases the loop's working sets on return
     labels.select(col("node").as("doc_id"), col("comp").as("component"))
       .sortWithinPartitions("doc_id")
   }
@@ -832,7 +828,7 @@ object Dedup {
     // cached: consumed by both the size projection and the postings
     // explode — without it the shingling subtree runs twice (same
     // discipline as ngramJaccardPairs)
-    val g = docGrams(docs).cache()
+    val g = WorkingSet(docGrams(docs))
     val sizes = g.select(col("doc_id"), size(col("grams")).as("n"))
     val posts = g.select(col("doc_id"),
       explode(graft.functions.SketchExprs.gramHashes(col("grams"))).as("gid"))

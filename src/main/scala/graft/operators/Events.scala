@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Tables, WorkingSet}
 
 /** Events / time-series operator block (SURVEY.md §2 C).
   *
@@ -277,10 +277,9 @@ object Events {
     // each consumer re-scans the events corpus and re-runs the
     // distinct (the dedup-postings cache discipline; this is the
     // operator's working set)
-    val ud = events
+    val ud = WorkingSet(events
       .select(expr("cast(ts as long) div 86400").as("d"), col("user_id"))
-      .distinct()
-      .cache()
+      .distinct())
     val span = ud.agg(min(col("d")).as("dmin"), max(col("d")).as("dmax"))
     // full day spine: every in-span day reports, even across a gap
     val spine = span.select(explode(expr("sequence(dmin, dmax)")).as("day"))
@@ -891,12 +890,11 @@ object Events {
     // reference re-scans the events corpus (the plan audit counted 16
     // parquet scans) — one scan materializes the days-bounded table,
     // everything downstream recomputes from ≤ 36.5k rows
-    val daily = Tables(spark, dir).events
+    val daily = WorkingSet(Tables(spark, dir).events
       .filter(col("event_type") === "purchase")
       .select(expr("cast(ts as long) div 86400").as("day"),
         round(col("value") * 100, 0).cast("long").as("c"))
-      .groupBy(col("day")).agg(sum(col("c")).as("cents"))
-      .cache()
+      .groupBy(col("day")).agg(sum(col("c")).as("cents")))
     val span = daily.agg(min(col("day")).as("dmin"), max(col("day")).as("dmax"))
     val filled = span
       .select(explode(expr("sequence(dmin, dmax)")).as("day"))
@@ -940,10 +938,9 @@ object Events {
     // re-reference this frame, and uncached each re-runs the full
     // sessionize window over the corpus (plan audit: 7 scans → 1);
     // the frame is sessions-bounded, not event-bounded
-    val st = qSessionize(spark, dir)
+    val st = WorkingSet(qSessionize(spark, dir)
       .select(col("user_id"), col("session_id"), col("n_events"),
-        (col("end_s") - col("start_s")).as("dur_s"))
-      .cache()
+        (col("end_s") - col("start_s")).as("dur_s")))
     val agg = st.agg(count(lit(1)).cast("long").as("n_sessions"),
       sum(when(col("n_events") === 1L, 1L).otherwise(0L)).as("n_single"),
       sum(col("n_events")).as("total_events"))
@@ -1266,29 +1263,18 @@ object Events {
     * "what does a typical Tuesday look like"; this answers "what
     * will NEXT Tuesday be, given where level and trend are now". */
   def eventsForecastHw(spark: SparkSession, dir: String): DataFrame = {
-    val (out, hw) = eventsForecastHwLazy(spark, dir)
-    // 7 rows — force while `hw` is cached, then release it
-    graft.core.Drain.bounded(out, hw)
-  }
-
-  /** The un-drained [[eventsForecastHw]] plan + its cached fitted
-    * frame (plan-hygiene sweep surface; see [[eventsCcfLazy]]). */
-  private[graft] def eventsForecastHwLazy(
-      spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val hw = eventsHoltWinters(spark, dir)
-      .select(col("day"), col("level"), col("trend"), col("seasonal"))
-      .cache()
+    val hw = WorkingSet(eventsHoltWinters(spark, dir)
+      .select(col("day"), col("level"), col("trend"), col("seasonal")))
     val last = hw.crossJoin(broadcast(hw.agg(max(col("day")).as("dmax"))))
       .filter(col("day") === col("dmax"))
       .select(col("dmax"), col("level").as("l"), col("trend").as("b"))
-    val out = hw.crossJoin(broadcast(last))
+    hw.crossJoin(broadcast(last))
       .filter(col("day") > col("dmax") - 7)
       .select((col("day") + 7).as("day"),
         (col("day") + 7 - col("dmax")).as("h"),
         (col("l") + (col("day") + 7 - col("dmax")) * col("b") +
           col("seasonal")).as("forecast_cents"))
       .orderBy(col("day"))
-    (out, hw)
   }
 
   /** Generated DuckDB oracle for [[eventsForecastHw]] — the shared
@@ -1463,17 +1449,6 @@ object Events {
     * corpus-proportional past the two daily rollups. */
   def eventsCcf(spark: SparkSession, dir: String,
       maxLag: Int = 7): DataFrame = {
-    val (out, filled) = eventsCcfLazy(spark, dir, maxLag)
-    // ±maxLag+1 rows — force while `filled` is cached, then release it
-    graft.core.Drain.bounded(out, filled)
-  }
-
-  /** The un-drained [[eventsCcf]] plan, plus the cached spine frame
-    * the caller must release — the plan-hygiene sweep inspects this
-    * (the public operator returns a drained local relation, which
-    * would hide the real plan from PlanHygieneSpec). */
-  private[graft] def eventsCcfLazy(spark: SparkSession, dir: String,
-      maxLag: Int = 7): (DataFrame, DataFrame) = {
     val ev = Tables(spark, dir).events
     val xd = ev.filter(col("event_type") === "purchase")
       .select(expr("cast(ts as long) div 86400").as("day"),
@@ -1486,12 +1461,11 @@ object Events {
     // corpus→bounded boundary (the eventsAcf lazy-rescan lesson)
     val span = xd.select(col("day")).unionAll(yd.select(col("day")))
       .agg(min(col("day")).as("dmin"), max(col("day")).as("dmax"))
-    val filled = span
+    val filled = WorkingSet(span
       .select(explode(expr("sequence(dmin, dmax)")).as("day"))
       .join(xd, Seq("day"), "left").join(yd, Seq("day"), "left")
       .select(col("day"), coalesce(col("xv"), lit(0L)).as("xv"),
-        coalesce(col("yv"), lit(0L)).as("yv"))
-      .cache()
+        coalesce(col("yv"), lit(0L)).as("yv")))
     val st = filled.agg(count(lit(1)).as("n"),
       sum(col("xv")).as("sx"), sum(col("yv")).as("sy"))
     val dev = filled.crossJoin(broadcast(st))
@@ -1507,7 +1481,7 @@ object Events {
       explode(expr(s"sequence(${-maxLag}, $maxLag)")).as("lag"))
       .select((col("day") + col("lag")).as("day"), col("lag"),
         col("dx").as("da"), col("n"))
-    val out = fan
+    fan
       .join(dev.select(col("day"), col("dy").as("db")), Seq("day"))
       .groupBy(col("lag"))
       .agg(max(col("n")).as("n_days"),
@@ -1519,7 +1493,6 @@ object Events {
           sqrt(col("denx").cast("double") * col("deny").cast("double")), 6)
           .as("ccf"))
       .orderBy(col("lag"))
-    (out, filled)
   }
 
   /** Generated DuckDB oracle for [[eventsCcf]] — the identical

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Tables, WorkingSet}
 
 /** Iterative graph analytics beyond connected components (which
   * lives with its dedup consumer in [[Dedup.components]]).
@@ -208,7 +208,7 @@ object Graph {
     * hash gate proves resume ≡ straight-through — the strongest
     * checkable form of the warm-start contract. */
   def pagerankResume(spark: SparkSession, dir: String,
-      coldIters: Int = 3, moreIters: Int = 2): DataFrame = {
+      coldIters: Int = 3, moreIters: Int = 2): DataFrame = WorkingSet.scope {
     // prepare ONCE, run twice: both loop invocations share the same
     // src-partitioned edge cache and node count — the cross-job resume
     // APIs above can't share (the warm job starts cold), but a
@@ -217,14 +217,8 @@ object Graph {
     // either way: prepare affects layout, never values.
     val b = prepareRanks(
       tradeEdges(spark, dir).withColumn("w", lit(1L)), assumeNoSinks = true)
-    if (b.n == 0) {
-      b.release()
-      return b.nodes.withColumn("pr", lit(0L)).select(col("node"), col("pr"))
-    }
-    val mid = runRanks(b, coldIters, seed = null)
-    val out = top100(runRanks(b, moreIters, seed = mid))
-    b.release()
-    out
+    if (b.n == 0) emptyRanks(b)
+    else top100(runRanks(b, moreIters, seed = runRanks(b, coldIters, null)))
   }
 
   /** Presentation slice shared by the public pagerank views: the 100
@@ -241,19 +235,16 @@ object Graph {
     * checkpoints) to maintain. */
   private def pagerankLoop(edgeList: DataFrame, iters: Int,
       assumeNoSinks: Boolean, weightBound: Long = Long.MaxValue,
-      seed: DataFrame = null): DataFrame = {
+      seed: DataFrame = null): DataFrame = WorkingSet.scope {
     val b = prepareRanks(edgeList, assumeNoSinks, weightBound)
     // empty edge set (or all-filtered weighted input): no nodes, no
     // ranks — return the empty (node, pr) frame instead of letting
     // the base computation divide by zero
-    if (b.n == 0) {
-      b.release()
-      return b.nodes.withColumn("pr", lit(0L)).select(col("node"), col("pr"))
-    }
-    val out = runRanks(b, iters, seed)
-    b.release()
-    out
+    if (b.n == 0) emptyRanks(b) else runRanks(b, iters, seed)
   }
+
+  private def emptyRanks(b: RankBase): DataFrame =
+    b.nodes.withColumn("pr", lit(0L)).select(col("node"), col("pr"))
 
   /** The loop-static state one PageRank invocation prepares exactly
     * once and every round reads: the src-partitioned cached edge set
@@ -262,13 +253,12 @@ object Graph {
     * found empty), and the node count. Split from [[runRanks]] so a
     * caller that runs SEVERAL round batches over one graph — the
     * resume demo, or a service answering "k more rounds" requests —
-    * prepares once instead of once per batch. `release()` when the
-    * last batch's result has materialized (the final round's eager
+    * prepares once instead of once per batch. The edge set is a
+    * [[WorkingSet]] of the caller's scope, which closes once the last
+    * batch's result has materialized (the final round's eager
     * checkpoint makes the result independent of the cache). */
   private final case class RankBase(edges: DataFrame, nodes: DataFrame,
-      dangling: DataFrame, hasDangling: Boolean, n: Long) {
-    def release(): Unit = edges.unpersist(blocking = false)
-  }
+      dangling: DataFrame, hasDangling: Boolean, n: Long)
 
   private def prepareRanks(edgeList: DataFrame,
       assumeNoSinks: Boolean,
@@ -277,11 +267,10 @@ object Graph {
     // then the outgoing-weight total rides the SAME partitioning as a
     // window sum (the GraphX-style "edge carries source degree"
     // layout) — no degree join, no second cache
-    val edges = edgeList
+    val edges = WorkingSet(edgeList
       .repartition(col("src"))
       .withColumn("wout",
-        sum(col("w")).over(Window.partitionBy(col("src"))))
-      .cache()
+        sum(col("w")).over(Window.partitionBy(col("src")))))
     // node set = src ∪ dst, built as src-distinct (exchange-FREE — it
     // rides the edge partitioning) + the sink-only remainder, so the
     // only new shuffle is the dst-side distinct. Checkpointed once:
@@ -304,23 +293,22 @@ object Graph {
         .localCheckpoint(eager = false)
     val hasDangling = dangling != null && dangling.count() > 0
     // lazy: the count() below is a FULL action, so it materializes the
-    // checkpoint (and the edge cache) in the same job an eager
-    // checkpoint would have spent a separate job on.
+    // checkpoint in the same job an eager checkpoint would have spent
+    // a separate job on.
     val nodes = (if (hasDangling) srcNodes.unionAll(dangling) else srcNodes)
       .localCheckpoint(eager = false)
     val n = nodes.count()
     // fail-fast overflow gate for weighted callers: reads the cached
-    // edge blocks (materialized by the count above), costs one tiny
+    // edge blocks (materialized by WorkingSet), costs one tiny
     // aggregate, and stops before any round can hit pr·w overflow
     // (skipped on the empty graph — there is no weight to probe and
     // no round to protect)
     if (n > 0 && weightBound != Long.MaxValue) {
       val maxW = edges.agg(max(col("w"))).head().getLong(0)
       if (maxW > weightBound) {
-        // release the just-materialized edge cache before failing: a
-        // session that catches the rejection and moves on must not
-        // keep a full edge set pinned in storage memory
-        edges.unpersist(blocking = false)
+        // the loop's scope releases the edge set on the way out: a
+        // session that catches the rejection and moves on keeps no
+        // edge set pinned in storage memory
         throw new IllegalArgumentException(
           s"weighted pagerank: max edge weight $maxW exceeds the Long " +
             s"overflow headroom $weightBound (pr*w with pr up to $Scale); " +
@@ -362,8 +350,8 @@ object Graph {
     }
     // FULL vector out — presentation slicing (top100) is the public
     // views' concern; the resume path needs every node's rank.
-    // The base stays persisted: the CALLER releases it, so a resume
-    // demo can run another batch of rounds over the same cache first.
+    // The base stays cached until the CALLER's scope closes, so a
+    // resume demo can run another batch of rounds over it first.
     pr.select(col("node"), col("pr"))
   }
 
@@ -1016,7 +1004,7 @@ object Graph {
     // Cached: el's two endpoint joins each read the full label vector,
     // and an uncached frame would re-run the node distinct + left join
     // per reference (node-bounded, so the cache is small by contract).
-    // Memoized through the family PlanCache (not a bare .cache()):
+    // Memoized through the family PlanCache (not a working set):
     // the LRU evicts-and-unpersists, so a long-lived session calling
     // modularity() repeatedly holds at most one registration per
     // (dir, thresholds) instead of leaking one InMemoryRelation pair
@@ -1475,9 +1463,10 @@ object Graph {
     *
     * `edgeList` must be SYMMETRIC (both directions present), one row
     * per directed edge, no self-loops — the [[tradeEdges]] shape. */
-  def corenessOf(edgeList: DataFrame, maxRounds: Int = 8): DataFrame = {
-    val edges = edgeList.select(col("src"), col("dst"))
-      .repartition(col("src")).cache()
+  def corenessOf(edgeList: DataFrame,
+      maxRounds: Int = 8): DataFrame = WorkingSet.scope {
+    val edges = WorkingSet(edgeList.select(col("src"), col("dst"))
+      .repartition(col("src")))
     // c₀ = degree: rides the edge partitioning, no extra exchange
     var c = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("c"))
@@ -1518,7 +1507,6 @@ object Graph {
       rounds += 1
       System.err.println(s"[graft] coreness round $rounds: changed=$changed")
     }
-    edges.unpersist(blocking = false)
     c.select(col("node"), col("c").as("coreness"))
       .sortWithinPartitions("node")
   }
@@ -1603,13 +1591,12 @@ object Graph {
     * is rejected (it would borrow from the hop unit and break the
     * lexicographic encode), w = 0 is fine. */
   def ssspOf(edgeList: DataFrame, state: DataFrame,
-      rounds: Int = 4): DataFrame = {
-    val edges = edgeList
+      rounds: Int = 4): DataFrame = WorkingSet.scope {
+    val edges = WorkingSet(edgeList
       .select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .repartition(col("src"))
-      .cache()
-    // one block-read aggregate materializes the cache AND probes both
-    // weight bounds before any round can corrupt the encode
+      .repartition(col("src")))
+    // one block-read aggregate probes both weight bounds before any
+    // round can corrupt the encode
     val wRow = edges.agg(min(col("w")), max(col("w"))).head()
     if (!wRow.isNullAt(0)) {
       require(wRow.getLong(0) >= 0,
@@ -1637,7 +1624,6 @@ object Graph {
         .agg(min(col("dist")).as("dist"))
         .localCheckpoint(eager = i == rounds)
     }
-    edges.unpersist(blocking = false)
     dist.select(col("node"),
         expr(s"dist div $HopSpan").as("hops"),
         expr(s"dist % $HopSpan").as("cost"))

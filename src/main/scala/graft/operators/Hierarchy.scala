@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Tables, WorkingSet}
 
 /** Recursive hierarchy flattening — root and depth for every node of
   * a parent-pointer tree (SURVEY.md §2.B extension; reference scope:
@@ -55,14 +55,14 @@ object Hierarchy {
     * destroy a sort; the gated wrapper sorts). */
   def flattenOf(rel: DataFrame, isRoot: Column,
       maxRounds: Int = 40): DataFrame = {
-    val nodes = rel.select(col("node").cast("long").as("node"),
-      col("parent").cast("long").as("parent")).cache()
+    val nodes = WorkingSet(rel.select(col("node").cast("long").as("node"),
+      col("parent").cast("long").as("parent")))
     val roots = nodes.filter(isRoot)
       .select(col("node"), col("node").as("root"), lit(0L).as("depth"))
     // root-id set: drives the termination probe each round. Cached —
     // tiny relative to the corpus but NOT assumed broadcast-able
     // (a forest can have many roots).
-    val rootIds = nodes.filter(isRoot).select(col("node").as("rid")).cache()
+    val rootIds = WorkingSet(nodes.filter(isRoot).select(col("node").as("rid")))
     // jump state for non-roots: anc = parent, d = 1. Roots carry no
     // row, so "anc is a root" ⇔ "anc has no jump row" for well-formed
     // trees — the composition below exploits exactly that.

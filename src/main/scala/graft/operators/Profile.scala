@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Tables, WorkingSet}
 import graft.functions.{Hll, PortableHash}
 
 /** Data-profiling operator block: the "what is in this table" sweep
@@ -871,11 +871,10 @@ object Profile {
   def psiOf(events: DataFrame, split: Column): DataFrame = {
     // dictionary-bounded and referenced by tot, perType AND the total
     // row — cached so the corpus is scanned once, not per reference
-    val counts = events
+    val counts = WorkingSet(events
       .groupBy(col("event_type"))
       .agg(sum(when(col("ts") < split, 1L).otherwise(0L)).as("n_ref"),
-        sum(when(col("ts") >= split, 1L).otherwise(0L)).as("n_cur"))
-      .cache()
+        sum(when(col("ts") >= split, 1L).otherwise(0L)).as("n_cur")))
     val tot = counts.agg(sum(col("n_ref")).as("nr"), sum(col("n_cur")).as("nc"))
     val lrMicro = when(col("n_ref") > 0 && col("n_cur") > 0,
       round(log((col("n_ref") * col("nc")).cast("double") /
@@ -1026,11 +1025,10 @@ object Profile {
   def jsdOf(events: DataFrame, split: Column): DataFrame = {
     // dictionary-bounded and referenced by tot, perType AND the total
     // row — cached so the corpus is scanned once, not per reference
-    val counts = events
+    val counts = WorkingSet(events
       .groupBy(col("event_type"))
       .agg(sum(when(col("ts") < split, 1L).otherwise(0L)).as("n_ref"),
-        sum(when(col("ts") >= split, 1L).otherwise(0L)).as("n_cur"))
-      .cache()
+        sum(when(col("ts") >= split, 1L).otherwise(0L)).as("n_cur")))
     val tot = counts.agg(sum(col("n_ref")).as("nr"), sum(col("n_cur")).as("nc"))
     // integer ratio arguments: 2p/(p+q) and 2q/(p+q) with p = n_ref/nr,
     // q = n_cur/nc share the denominator (n_ref·nc + n_cur·nr)
@@ -1231,15 +1229,14 @@ object Profile {
     // alternative (one select per check) re-scans the corpus per check
     // the 1-row fold is cached: stack rows AND the RI total below
     // reuse it, so lineitem is aggregated once, not once per consumer
-    val liAgg = li.agg(
+    val liAgg = WorkingSet(li.agg(
       sum(when(col("l_quantity") < 1 || col("l_quantity") > 50, 1L)
         .otherwise(0L)).as("v_qty"),
       sum(when(col("l_discount") < 0 || col("l_discount") > 0.1, 1L)
         .otherwise(0L)).as("v_disc"),
       sum(when(col("l_extendedprice") <= 0, 1L).otherwise(0L)).as("v_price"),
       sum(when(col("l_shipdate").isNull, 1L).otherwise(0L)).as("v_ship"),
-      count(lit(1)).as("n"))
-      .cache()
+      count(lit(1)).as("n")))
     val liRows = liAgg
       .select(expr("""stack(4,
           'l_quantity_in_1_50', v_qty,
@@ -1330,23 +1327,11 @@ object Profile {
     * (HUGEINT on the oracle side); two dictionary-sized aggregates
     * past the one corpus scan. */
   def profileChi2(spark: SparkSession, dir: String): DataFrame = {
-    val (out, cells) = profileChi2Lazy(spark, dir)
-    // event_type×dow cells + total — force while `cells` is cached,
-    // then release it
-    graft.core.Drain.bounded(out, cells)
-  }
-
-  /** The un-drained [[profileChi2]] plan + its cached contingency
-    * frame (plan-hygiene sweep surface; see
-    * [[graft.operators.Events.eventsCcfLazy]]). */
-  private[graft] def profileChi2Lazy(
-      spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val cells = Tables(spark, dir).events
+    val cells = WorkingSet(Tables(spark, dir).events
       .select(col("event_type"),
         expr("cast(ts as long) div 86400 % 7").as("dow"))
       .groupBy(col("event_type"), col("dow"))
-      .agg(count(lit(1)).as("obs"))
-      .cache()
+      .agg(count(lit(1)).as("obs")))
     val rows = cells.groupBy(col("event_type")).agg(sum(col("obs")).as("r"))
     val cols_ = cells.groupBy(col("dow")).agg(sum(col("obs")).as("c"))
     val n = cells.agg(sum(col("obs")).as("n"))
@@ -1362,7 +1347,7 @@ object Profile {
                  * 1000000)
                 div (cast(n as decimal(38,0)) * r * c)""")
           .cast("long").as("chi2_micro"))
-    val out = scored.select(col("event_type"), col("dow"), col("obs"),
+    scored.select(col("event_type"), col("dow"), col("obs"),
         col("e_micro"), col("chi2_micro"))
       .unionAll(scored.agg(sum(col("obs")).as("obs"),
           sum(col("e_micro")).as("e_micro"),
@@ -1370,7 +1355,6 @@ object Profile {
         .select(lit("__total__").as("event_type"), lit(-1L).as("dow"),
           col("obs"), col("e_micro"), col("chi2_micro")))
       .orderBy(col("event_type"), col("dow"))
-    (out, cells)
   }
 
   /** Generated DuckDB oracle for [[profileChi2]] — HUGEINT squares,

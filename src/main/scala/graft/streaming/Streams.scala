@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.core.WorkingSet
+
 /** Structured Streaming twins of the events operators (SURVEY.md §2 C).
   *
   * The batch queries in [[graft.operators.Events]] and these streams
@@ -677,15 +679,17 @@ object Streams {
     * run (StreamingSpec pins a forced 2-batch split against
     * [[graft.operators.Dedup.incrementalDf]]). Zero streaming state:
     * the per-batch probe is bounded by the batch, the index by the
-    * standing corpus. Drains synchronously. */
+    * standing corpus. Drains synchronously. The call's scope owns the
+    * standing index; each batch's own scope (the stream thread has no
+    * outer one) releases that batch's gram set once it is written. */
   def incrementalDedupStream(docs: DataFrame, existing: DataFrame,
-      outPath: String, tau: Double = 0.5): Unit = {
+      outPath: String, tau: Double = 0.5): Unit = WorkingSet.scope {
     val index = graft.operators.Dedup.standingIndex(existing)
     val q = docs.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Dedup.probeIncremental(index, batch, tau)
-          .write.mode("append").parquet(outPath)
+        WorkingSet.scope(graft.operators.Dedup.probeIncremental(index, batch, tau)
+          .write.mode("append").parquet(outPath))
       }
       .start()
     try q.processAllAvailable() finally q.stop()

@@ -92,33 +92,16 @@ class GraphProfileSpec extends SparkSpecBase {
     val g = Seq(("a", "b", Graph.MaxEdgeWeight + 1), ("b", "a", 1L))
       .toDF("src", "dst", "w")
     // The weight probe materializes the loop's cached edge frame
-    // before rejecting; the rejection path must unpersist it, not pin
-    // it in the CacheManager for the session's lifetime. Probe: a
-    // value-identical reconstruction of the loop's edge prep (keep in
-    // sync with pagerankLoop) canonicalizes to the same plan, so
-    // CacheManager dedupes the loop's internal cache() onto THIS
-    // registration — and the rejection path's unpersist must clear
-    // it. A lineage drift fails the final assert (the entry survives
-    // untouched), so the check cannot rot silently; counting
-    // persistent RDDs instead would be racy (parallel suites share
-    // the context, ContextCleaner frees checkpoint RDDs on GC).
-    val reconstructed = g
-      .select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .filter(col("w") > 0)
-      .repartition(col("src"))
-      .withColumn("wout", sum(col("w")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-    reconstructed.cache()
-    assert(reconstructed.storageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE)
+    // before rejecting; the rejection path must release it, not pin
+    // it in the CacheManager for the session's lifetime. Starting
+    // from an empty CacheManager, nothing may be cached afterwards.
+    spark.catalog.clearCache()
     val ex = intercept[IllegalArgumentException] {
       Graph.pagerankWeightedOf(g)
     }
     assert(ex.getMessage.contains("rescale"), ex.getMessage)
-    assert(reconstructed.storageLevel ==
-      org.apache.spark.storage.StorageLevel.NONE,
-      "rejected weighted pagerank left its edge frame cached (or the " +
-        "reconstruction drifted from pagerankLoop's edge prep — re-sync it)")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "rejected weighted pagerank left a frame cached")
   }
 
   test("weighted pagerank: a node sunk by the w<=0 filter keeps its mass via the dangling term") {

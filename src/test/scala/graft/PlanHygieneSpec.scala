@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.{
+  Aggregate, GlobalLimit, LogicalPlan, ResolvedHint}
+
+import graft.core.{PlanCache, WorkingSet}
+
 /** Global plan-hygiene invariant over the ENTIRE query surface:
   * no query may plan a CartesianProduct. Unkeyed joins are the one
   * shape that cannot survive a 100 TB input — every intentional
@@ -7,64 +12,29 @@ package graft
   * (scalar-subquery thresholds, query sets, sketch matrices), which
   * plans as BroadcastNestedLoopJoin, never CartesianProduct.
   *
-  * Planning only (queryExecution.sparkPlan) — no execution — so this
-  * also smoke-tests that every queries entry analyzes and plans
-  * against a real SF directory. Iterative operators (components,
-  * pagerank) do run their loop actions during construction; their
-  * per-round plans are covered by their own specs, and the cheap
+  * The sweeps read the planned query (queryExecution.sparkPlan) and
+  * then drain it, so this also smoke-tests that every queries entry
+  * analyzes, plans and runs against a real SF directory, and that no
+  * query leaves a cached frame behind. Per-round plans of the
+  * iterative operators are covered by their own specs, and the cheap
   * sf0.001 input keeps this suite fast.
   */
 class PlanHygieneSpec extends SparkSpecBase {
 
-  /** Queries whose PUBLIC entry returns a drained local relation
-    * ([[graft.core.Drain.bounded]] — the r11-ADVICE cache-release
-    * discipline): the real plan lives behind the `*Lazy` builder, so
-    * the sweeps below inspect THAT, or the hygiene rules would pass
-    * vacuously on a 5-row LocalRelation. The cached working-set frame
-    * is released immediately (plan inspection never executes it). */
-  private def drainedLazy: Seq[(String, org.apache.spark.sql.DataFrame)] = {
-    def rel(p: (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame)) = {
-      p._2.unpersist(blocking = false)
-      p._1
-    }
-    Seq(
-      "events_ccf(lazy)" -> rel(operators.Events.eventsCcfLazy(spark, Sf)),
-      "events_forecast_hw(lazy)" ->
-        rel(operators.Events.eventsForecastHwLazy(spark, Sf)),
-      "profile_chi2(lazy)" -> rel(operators.Profile.profileChi2Lazy(spark, Sf)))
-  }
-
-  test("no query plans a CartesianProduct") {
-    // iterators: each frame is built, inspected, and its caches
-    // cleared before the next one is constructed
-    val offenders = (SparkEntry.queries.toSeq.sortBy(_._1).iterator.map {
-      case (name, fn) => name -> fn(spark, Sf)
-    } ++ drainedLazy.iterator).flatMap { case (name, df) =>
-      val plan = df.queryExecution.sparkPlan.toString
-      spark.catalog.clearCache()
-      if (plan.contains("CartesianProduct")) Some(name) else None
-    }.toList
-    assert(offenders.isEmpty,
-      s"cartesian joins in: ${offenders.mkString(", ")}")
-  }
-
-  test("no query broadcast-hints a frame derived from a corpus-scaling table") {
-    // `customer`, `part`, and `supplier` grow linearly with the corpus
-    // (10×/SF in the driver's testdata: customer 150→15000, part
-    // 200→20000, supplier 10→1000 across sf0.001/0.01/0.1); a
-    // constant-selectivity filter on them still grows linearly, so a
-    // forced broadcast() of such a slice OOMs at 100 TB no matter how
-    // small it looks at test SF. This class of defect shipped three
-    // times (q8/q14 in r3, q2/q3/q9/q17/q19/q20 in r4, nine
-    // supplier-derived hints through r5) — this rule makes a fourth
-    // impossible. The one legitimate shape is a GLOBAL (ungrouped)
-    // aggregate of such a table: that is 1 row by construction at any
-    // scale (e.g. q22's avg-balance threshold), so subtrees containing
-    // an ungrouped Aggregate are exempt. Only nation (25) and region
-    // (5) are fixed-size and hintable.
-    import org.apache.spark.sql.catalyst.plans.logical.{
-      Aggregate, GlobalLimit, LogicalPlan, ResolvedHint}
+  // `customer`, `part`, and `supplier` grow linearly with the corpus
+  // (10×/SF in the test data: customer 150→15000, part
+  // 200→20000, supplier 10→1000 across sf0.001/0.01/0.1); a
+  // constant-selectivity filter on them still grows linearly, so a
+  // forced broadcast() of such a slice OOMs at 100 TB no matter how
+  // small it looks at test SF. This class of defect shipped three
+  // times (q8/q14 in r3, q2/q3/q9/q17/q19/q20 in r4, nine
+  // supplier-derived hints through r5) — this rule makes a fourth
+  // impossible. The one legitimate shape is a GLOBAL (ungrouped)
+  // aggregate of such a table: that is 1 row by construction at any
+  // scale (e.g. q22's avg-balance threshold), so subtrees containing
+  // an ungrouped Aggregate are exempt. Only nation (25) and region
+  // (5) are fixed-size and hintable.
+  private def hintsScalingFrame(analyzed: LogicalPlan): Boolean = {
     val scalingLeafCols = Set("c_custkey", "p_partkey", "s_suppkey")
     def leavesScale(p: LogicalPlan): Boolean = p.collectLeaves().exists(
       l => l.output.map(_.name).toSet.intersect(scalingLeafCols).nonEmpty)
@@ -72,23 +42,47 @@ class PlanHygieneSpec extends SparkSpecBase {
       case a: Aggregate if a.groupingExpressions.isEmpty => a
       case g: GlobalLimit => g
     }.nonEmpty
-    // drainedLazy appended: the three Drain.bounded public entries
-    // analyze to a LocalRelation, so only the lazy builders expose
-    // their real plan to this rule (r12 ADVICE — without them the
-    // rule passed vacuously on those three)
-    val offenders = (SparkEntry.queries.toSeq.sortBy(_._1).iterator.map {
-      case (name, fn) => name -> fn(spark, Sf)
-    } ++ drainedLazy.iterator).flatMap { case (name, df) =>
-      val analyzed = df.queryExecution.analyzed
-      spark.catalog.clearCache()
-      val bad = analyzed.collect {
-        case h: ResolvedHint
-            if leavesScale(h.child) && !boundedByConstruction(h.child) => h
+    analyzed.collect {
+      case h: ResolvedHint
+          if leavesScale(h.child) && !boundedByConstruction(h.child) => h
+    }.nonEmpty
+  }
+
+  private case class Swept(name: String, cartesian: Boolean, badHint: Boolean, leaked: Boolean)
+
+  /** One pass over the surface, shared by the sweeps below: each query
+    * is built, inspected and drained inside its own WorkingSet scope,
+    * then every memo is dropped and the CacheManager must be empty. */
+  private lazy val swept: Seq[Swept] = {
+    spark.catalog.clearCache()
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val (cartesian, badHint) = WorkingSet.scope {
+        val df = fn(spark, Sf)
+        df.write.format("noop").mode("overwrite").save()
+        val qe = df.queryExecution
+        (qe.sparkPlan.toString.contains("CartesianProduct"), hintsScalingFrame(qe.analyzed))
       }
-      if (bad.nonEmpty) Some(name) else None
-    }.toList
-    assert(offenders.isEmpty,
-      s"broadcast() on customer/part/supplier-derived frames in: ${offenders.mkString(", ")}")
+      PlanCache.invalidate("")
+      val leaked = !spark.sharedState.cacheManager.isEmpty
+      spark.catalog.clearCache()
+      Swept(name, cartesian, badHint, leaked)
+    }
+  }
+
+  private def offenders(p: Swept => Boolean): String =
+    swept.filter(p).map(_.name).mkString(", ")
+
+  test("no query plans a CartesianProduct") {
+    assert(offenders(_.cartesian).isEmpty, s"cartesian joins in: ${offenders(_.cartesian)}")
+  }
+
+  test("no query broadcast-hints a frame derived from a corpus-scaling table") {
+    assert(offenders(_.badHint).isEmpty,
+      s"broadcast() on customer/part/supplier-derived frames in: ${offenders(_.badHint)}")
+  }
+
+  test("no query leaves a cached frame behind once its scope closes and the memos are dropped") {
+    assert(offenders(_.leaked).isEmpty, s"cached frames left behind by: ${offenders(_.leaked)}")
   }
 
   test("PlanCache builds once per key and re-registers after a harness clearCache") {

@@ -782,7 +782,9 @@ class StreamingSpec extends SparkSpecBase {
     assert(boom.getMessage != null)
   }
 
-  test("stream-static near-dup gate: 2-batch split equals one-shot batch") {
+  /** Run the stream-static near-dup gate over a forced 2-batch split
+    * of the batch query's fresh shard; returns the output directory. */
+  private def incrementalDedupSplit(): String = {
     import java.nio.file._
     val docs = graft.core.Tables(spark, Sf).documents
     // the batch query's own shard boundary: every 10th doc is fresh
@@ -808,6 +810,11 @@ class StreamingSpec extends SparkSpecBase {
       spark.readStream.schema(Streams.documentsSchema)
         .option("maxFilesPerTrigger", 1).parquet(staged.toString),
       existing, out)
+    out
+  }
+
+  test("stream-static near-dup gate: 2-batch split equals one-shot batch") {
+    val out = incrementalDedupSplit()
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getBoolean(1), r.getLong(2), r.getDouble(3))
     val got = spark.read.parquet(out)
@@ -817,6 +824,12 @@ class StreamingSpec extends SparkSpecBase {
       .map(key).toSet
     assert(got == want)
     assert(want.exists(_._2), "planted corpus must contain near-dups")
+  }
+
+  test("stream-static near-dup gate leaves nothing cached: not the index, not any batch's grams") {
+    spark.catalog.clearCache()
+    incrementalDedupSplit()
+    assert(spark.sharedState.cacheManager.isEmpty, "cached frames left behind")
   }
 
   test("streaming STL monitor: 2-batch split refreshes to the exact batch decomposition") {

@@ -17,6 +17,18 @@ if [ -n "$builders" ]; then
   exit 1
 fi
 
+# One cache owner: PlanCache (cross-query memo) and WorkingSet (per
+# scope) are the only places a frame is cached, so every cached frame
+# has an owner that releases it.
+echo "=== one cache owner ==="
+caches=$(grep -rnE '\.(cache|persist)\(' src/main/scala/graft \
+  | grep -vE '^src/main/scala/graft/core/(PlanCache|WorkingSet)\.scala:' || true)
+if [ -n "$caches" ]; then
+  echo ".cache()/.persist() outside PlanCache.scala and WorkingSet.scala:"
+  echo "$caches"
+  exit 1
+fi
+
 echo "=== sbt test ==="
 sbt -batch test 2>&1 | grep -E "Tests:|\*\*\*" | tail -2
 
