@@ -40,6 +40,8 @@ import org.apache.spark.sql.SparkSession
   *   loadavg reads idle — observed as a loadavg-0.36 capture with
   *   100+ stolen seconds and 3× spikes on deterministic queries.
   *   High steal ⇒ rerun before reading any per-query delta.
+  * - `cores`: the session's local cores (= shuffle partitions), so
+  *   captures from differently sized hosts are not compared blind.
   * - `canary_sec` / `canary_end_sec`: median of a fixed-cost 1-row
   *   noop-sink query timed before and after the median phase — the
   *   constant per-query harness overhead, separable from engine
@@ -277,7 +279,7 @@ object Bench {
         s""""total_min":$totalMin,"total_cpu_med":$totalCpuMed,$suiteScalar""" +
         s""""loadavg_start":$loadStart,"loadavg_end":$loadEnd,""" +
         s""""canary_sec":${r3(canaryStart)},"canary_end_sec":${r3(canaryEnd)},""" +
-        s""""steal_sec":$stealSec"""
+        s""""steal_sec":$stealSec,"cores":${graft.core.GraftSession.cores}"""
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""queries_min":$qsMin,"queries_reps_wall":$qsRepsWall,""" +

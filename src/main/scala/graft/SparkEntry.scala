@@ -791,37 +791,15 @@ object SparkEntry {
     * every iteration pure SQL — unrolled here as chained CTEs (one
     * per round), since the arithmetic is integer-exact on both
     * engines (`div`/`//` truncation on non-negative values). */
-  private lazy val pagerankSql: String = {
-    val iters = 5
-    val chain = (1 to iters).map { i =>
-      s"""pr$i AS (SELECT d.node, d.outdeg,
-             (${Graph.Scale} * 15 // 100) // c.n
-               + (${Graph.Damping} * sum(p.pr // p.outdeg)) // 100 AS pr
-           FROM pr${i - 1} p JOIN edges e ON p.node = e.src
-             JOIN deg d ON e.dst = d.node
-             CROSS JOIN const c
-           GROUP BY d.node, d.outdeg, c.n)"""
-    }.mkString(",\n         ")
-    s"""WITH pairs AS (SELECT DISTINCT
-             'C' || CAST(o_custkey AS VARCHAR) AS c,
-             'S' || CAST(l_suppkey AS VARCHAR) AS s
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         edges AS (SELECT c AS src, s AS dst FROM pairs
-                   UNION ALL SELECT s AS src, c AS dst FROM pairs),
-         deg AS (SELECT src AS node, count(*) AS outdeg FROM edges GROUP BY src),
-         const AS (SELECT count(*) AS n FROM deg),
-         pr0 AS (SELECT node, outdeg, ${Graph.Scale} // n AS pr
-                 FROM deg CROSS JOIN const),
-         $chain
-         SELECT node, CAST(pr AS BIGINT) AS pr FROM pr$iters
-         ORDER BY pr DESC, node LIMIT 100"""
-  }
+  private lazy val pagerankSql: String = pagerankOracle(weighted = false)
 
-  /** graph_pagerank_weighted oracle: same unrolled integer CTE chain
-    * as [[pagerankSql]], with uniform 1/outdeg splitting replaced by
-    * per-edge (pr · w) // wout — truncation applied per edge BEFORE
-    * the sum in both engines, so the chain stays hash-exact. */
-  private lazy val pagerankWeightedSql: String = {
+  /** graph_pagerank_weighted oracle: per-edge (pr · w) // wout —
+    * truncation applied per edge BEFORE the sum in both engines, so
+    * the chain stays hash-exact. The unweighted chain is this one at
+    * w ≡ 1, where wout is the out-degree. */
+  private lazy val pagerankWeightedSql: String = pagerankOracle(weighted = true)
+
+  private def pagerankOracle(weighted: Boolean): String = {
     val iters = 5
     val chain = (1 to iters).map { i =>
       s"""pr$i AS (SELECT d.node, d.wout,
@@ -835,7 +813,7 @@ object SparkEntry {
     s"""WITH pairs AS (SELECT
              'C' || CAST(o_custkey AS VARCHAR) AS c,
              'S' || CAST(l_suppkey AS VARCHAR) AS s,
-             count(*) AS w
+             ${if (weighted) "count(*)" else "1"} AS w
            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
            GROUP BY 1, 2),
          edges AS (SELECT c AS src, s AS dst, w FROM pairs
@@ -2216,11 +2194,7 @@ object SparkEntry {
     // id-ordered 3-way self-join: orientation in the Spark plan only
     // changes where each triangle is FOUND, never the per-node census
     "graph_triangles" ->
-      """WITH sl AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-         e AS (SELECT a.l_suppkey AS u, b.l_suppkey AS v
-               FROM sl a JOIN sl b ON a.l_orderkey = b.l_orderkey
-                AND a.l_suppkey < b.l_suppkey
-               GROUP BY 1, 2 HAVING count(*) >= 5),
+      s"""WITH ${Graph.coOrderedCtes("e", "l_suppkey", 5)},
          t AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
                FROM e e1 JOIN e e2 ON e1.v = e2.u
                JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
@@ -2231,11 +2205,7 @@ object SparkEntry {
     // triangles census + degrees, wedge-normalized in exact ppm;
     // deg >= 2 rows only, triangle-free nodes report 0
     "graph_clustering" ->
-      """WITH sl AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-         e AS (SELECT a.l_suppkey AS u, b.l_suppkey AS v
-               FROM sl a JOIN sl b ON a.l_orderkey = b.l_orderkey
-                AND a.l_suppkey < b.l_suppkey
-               GROUP BY 1, 2 HAVING count(*) >= 5),
+      s"""WITH ${Graph.coOrderedCtes("e", "l_suppkey", 5)},
          t AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
                FROM e e1 JOIN e e2 ON e1.v = e2.u
                JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
@@ -2258,11 +2228,7 @@ object SparkEntry {
     // resource allocation, anti-join drops existing edges, top-100
     // by (jaccard, cn, u, v)
     "graph_linkpred" ->
-      """WITH sl AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-         e AS (SELECT a.l_partkey AS u, b.l_partkey AS v
-               FROM sl a JOIN sl b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-               GROUP BY 1, 2 HAVING count(*) >= 2),
+      s"""WITH ${Graph.coOrderedCtes("e", "l_partkey", 2)},
          nb AS (SELECT u AS n, v AS m FROM e UNION ALL SELECT v, u FROM e),
          d AS (SELECT n, CAST(count(*) AS BIGINT) AS deg FROM nb GROUP BY n),
          w AS (SELECT a.m AS u, b.m AS v, a.n AS z
@@ -2281,12 +2247,7 @@ object SparkEntry {
     // same thresholded co-purchase pairs; truncating integer ppm for
     // support/confidence, one rounded double for lift
     "basket_rules" ->
-      """WITH sl AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-         e AS (SELECT a.l_partkey AS u, b.l_partkey AS v,
-                      CAST(count(*) AS BIGINT) AS w
-               FROM sl a JOIN sl b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-               GROUP BY 1, 2 HAVING count(*) >= 2),
+      s"""WITH ${Graph.coOrderedCtes("e", "l_partkey", 2)},
          pc AS (SELECT l_partkey AS p, CAST(count(*) AS BIGINT) AS np
                 FROM sl GROUP BY 1),
          nb AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n
@@ -2307,11 +2268,7 @@ object SparkEntry {
     // (DuckDB's HUGEINT sums cast back), and the identical one-shot
     // double Pearson expression — NULL on a variance-free graph
     "graph_assortativity" ->
-      """WITH sl AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-         e AS (SELECT a.l_suppkey AS u, b.l_suppkey AS v
-               FROM sl a JOIN sl b ON a.l_orderkey = b.l_orderkey
-                AND a.l_suppkey < b.l_suppkey
-               GROUP BY 1, 2 HAVING count(*) >= 5),
+      s"""WITH ${Graph.coOrderedCtes("e", "l_suppkey", 5)},
          d AS (SELECT n, CAST(count(*) AS BIGINT) AS deg
                FROM (SELECT u AS n FROM e UNION ALL SELECT v FROM e)
                GROUP BY n),
@@ -2338,12 +2295,7 @@ object SparkEntry {
     // propagation loop on its second input (reach is bounded by
     // |component|² rows, fine at the gate SF)
     "graph_components" ->
-      """WITH RECURSIVE sl AS (
-           SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-         e0 AS (SELECT a.l_suppkey AS u, b.l_suppkey AS v
-                FROM sl a JOIN sl b ON a.l_orderkey = b.l_orderkey
-                 AND a.l_suppkey < b.l_suppkey
-                GROUP BY 1, 2 HAVING count(*) >= 5),
+      s"""WITH RECURSIVE ${Graph.coOrderedCtes("e0", "l_suppkey", 5)},
          edges AS (SELECT u AS a, v AS b FROM e0
                    UNION SELECT v, u FROM e0),
          reach(a, b) AS (
@@ -2364,13 +2316,7 @@ object SparkEntry {
     "graph_degree_dist_sql" -> graft.operators.Graph.degreeDistOracleSql(),
     "text_rake" -> graft.operators.TextOps.rakeOracleSql(),
     "graph_communities" ->
-      """WITH RECURSIVE sl AS (
-           SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-         e0 AS (SELECT a.l_suppkey AS u, b.l_suppkey AS v,
-                       count(*) AS w
-                FROM sl a JOIN sl b ON a.l_orderkey = b.l_orderkey
-                 AND a.l_suppkey < b.l_suppkey
-                GROUP BY 1, 2 HAVING count(*) >= 5),
+      s"""WITH RECURSIVE ${Graph.coOrderedCtes("e0", "l_suppkey", 5)},
          edges AS (SELECT u AS a, v AS b FROM e0
                    UNION SELECT v, u FROM e0),
          reach(a, b) AS (

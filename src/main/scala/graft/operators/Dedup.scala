@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, WorkingSet}
+import graft.core.{Fixpoint, Tables, WorkingSet}
 import graft.functions.PortableHash
 import graft.functions.Shingles._
 import graft.functions.Vectors
@@ -618,24 +618,18 @@ object Dedup {
     * component, drop the rest). Distributed min-label propagation:
     * each iteration joins labels across edges and keeps the minimum;
     * converges in O(component diameter) rounds (typically ≤ 5 for
-    * near-dup clusters). Each round is ONE job and ONE shuffle
-    * (union + groupBy-min with map-side partial mins); the aggregate
-    * that materializes the lazily-localCheckpointed round result also
-    * yields Σcomp, whose monotone decrease doubles as the convergence
-    * test — no separate convergence scan. Lineage is truncated per
-    * round so the loop survives arbitrarily many iterations at
-    * scale. */
+    * near-dup clusters). Each round is one label join and one
+    * union + groupBy-min (map-side partial mins); labels only
+    * decrease, so Σcomp holding still is the convergence test
+    * ([[graft.core.Fixpoint.untilStable]]). */
   def components(pairs: DataFrame, maxRounds: Int = 20,
       seed: DataFrame = null): DataFrame = WorkingSet.scope {
     // materialize the pair derivation once — the union below references
     // it twice, and without this the whole upstream (shingling +
     // self-join) executes per side
     val p = WorkingSet(pairs)
-    // partitioned by src at cache time: every round's label join then
-    // reuses this layout via a SHUFFLE_HASH hint below — the
-    // checkpointed label vector has no stats, so an unhinted plan
-    // falls back to sort-merge and re-sorts the edge set every round
-    // (the same fix as Graph.pagerank)
+    // partitioned by src once: every round's SHUFFLE_HASH label join
+    // reuses the layout (see graft.core.Fixpoint on joins)
     val edges = WorkingSet(p.select(col("d1").as("src"), col("d2").as("dst"))
       .unionAll(p.select(col("d2").as("src"), col("d1").as("dst")))
       .distinct().repartition(col("src")))
@@ -656,66 +650,27 @@ object Dedup {
     // after edge REMOVAL a component can split and stale labels would
     // under-segment — recompute cold for compaction/deletion runs.
     val coldLabels = edges.select(col("src").as("node")).distinct()
-    var labels = (if (seed == null) coldLabels.withColumn("comp", col("node"))
-                  else coldLabels
-                    .join(seed.select(col("doc_id").as("node"),
-                      col("component").as("seed_comp")), Seq("node"), "left")
-                    .select(col("node"),
-                      least(col("node"),
-                        coalesce(col("seed_comp"), col("node"))).as("comp")))
-      // lazy: round 1's union + join both scan every seed partition,
-      // so the seed materializes inside round 1's job instead of its
-      // own (there is no pre-loop action at all — see labelSum)
-      .localCheckpoint(eager = false)
-    // labels only ever decrease (min-propagation), so Σcomp strictly
-    // decreases on any change: convergence = the sum holding still.
-    // Decimal sum: a 100 TB graph's Σ(64-bit ids) overflows a long.
-    // No pre-loop sum of the seed: round 1 ALWAYS changes a label on
-    // any nonempty edge set (the edge holding the globally-minimal
-    // endpoint propagates it to a larger id), so the comparison can
-    // start at round 2 and the seed's dedicated aggregate job is
-    // saved — the seed checkpoint materializes inside round 1's job
-    // instead. (A degenerate all-self-loop edge set runs one extra
-    // idempotent round; an EMPTY edge set yields a null round-1 sum,
-    // which reads as converged rather than the NPE the seed-sum
-    // comparison used to hit.)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("comp").cast("decimal(38,0)"))).head()
-        .getDecimal(0)
-    var prevSum: java.math.BigDecimal = null
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < maxRounds) {
-      val t0 = System.nanoTime()
-      // one round = one shuffle: each node keeps the min of its own
-      // label and its neighbors' labels (union + groupBy-min, with
-      // map-side partial mins)
-      val next = labels
+    val init = if (seed == null) coldLabels.withColumn("comp", col("node"))
+      else coldLabels
+        .join(seed.select(col("doc_id").as("node"),
+          col("component").as("seed_comp")), Seq("node"), "left")
+        .select(col("node"),
+          least(col("node"), coalesce(col("seed_comp"), col("node"))).as("comp"))
+    // Round 1 always changes a label on a nonempty edge set (the edge
+    // holding the globally-minimal endpoint propagates it to a larger
+    // id), so the kernel's check from round 2 on loses nothing.
+    val result = Fixpoint.untilStable("components", init, "comp", maxRounds) { labels =>
+      // one round: each node keeps the min of its own label and its
+      // neighbors' labels (union + groupBy-min, with map-side partial
+      // mins)
+      labels
         .unionAll(edges
           .join(labels.hint("shuffle_hash"), col("src") === col("node"))
           .select(col("dst").as("node"), col("comp")))
         .groupBy(col("node"))
         .agg(min("comp").as("comp"))
-        .localCheckpoint(eager = false)
-      // this aggregate materializes the lazy checkpoint AND evaluates
-      // convergence — one job per round, no separate scan. Round 1
-      // (prevSum == null) is always "changed" on a nonempty graph;
-      // a null s means the label set itself is empty — converged.
-      val s = labelSum(next)
-      changed = s != null && (prevSum == null || s.compareTo(prevSum) != 0)
-      prevSum = s
-      labels = next
-      rounds += 1
-      // per-round telemetry: when a bench number for this operator
-      // moves between runs, this line localizes it to round count vs
-      // per-round cost vs checkpoint materialization. Locale.ROOT: a
-      // comma decimal separator would break scripts parsing the line.
-      System.err.println("[graft] components round " + rounds + ": " +
-        String.format(java.util.Locale.ROOT, "%.3f",
-          (System.nanoTime() - t0) / 1e9) +
-        s" s, sum=$s, changed=$changed")
     }
-    if (changed) {
+    if (!result.converged) {
       // surfacing beats silently emitting partial components: labels
       // are still a valid refinement (over-segmented), but dedup built
       // on them would under-merge
@@ -726,7 +681,7 @@ object Dedup {
     // the final labels are a materialized localCheckpoint — they no
     // longer reference the pair/edge lineage, so this call's scope
     // releases the loop's working sets on return
-    labels.select(col("node").as("doc_id"), col("comp").as("component"))
+    result.state.select(col("node").as("doc_id"), col("comp").as("component"))
       .sortWithinPartitions("doc_id")
   }
 

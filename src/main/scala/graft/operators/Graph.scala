@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, WorkingSet}
+import graft.core.{Fixpoint, Tables, WorkingSet}
 
 /** Iterative graph analytics beyond connected components (which
   * lives with its dedup consumer in [[Dedup.components]]).
@@ -27,8 +27,7 @@ object Graph {
   /** One PageRank round: contributions flow src → dst (the round's
     * single real shuffle, map-side partial sums) after a SHUFFLE_HASH
     * join of the rank vector against the pre-partitioned edge set
-    * (ExplainSpec pins the join choice — a sort-merge fallback would
-    * re-exchange and re-sort every edge every round).
+    * (see [[graft.core.Fixpoint]] on joins).
     *
     * `nodes` (the src-node set) is unioned in as zero contributions
     * BEFORE the groupBy — without it, a node with out-edges but no
@@ -51,8 +50,8 @@ object Graph {
   /** [[round]] plus the dangling-mass term: sink-only nodes (in-edges
     * but no out-edges) hold rank they can't redistribute through
     * edges; real PageRank returns that mass uniformly to every node.
-    * The per-round addition is ONE tiny job shape: a semi-join of the
-    * rank vector against the (static, checkpointed) dangling-node
+    * The per-round addition (3 of the round's 5 jobs) is a semi-join
+    * of the rank vector against the (static, checkpointed) dangling-node
     * set feeding an ungrouped sum — a 1-row frame that rides a
     * broadcast cross join into the per-node formula. Same integer
     * fixed-point discipline (`div` truncation, deterministic at any
@@ -106,37 +105,28 @@ object Graph {
   private def custNode: Column = concat(lit("C"), col("o_custkey"))
   private def suppNode: Column = concat(lit("S"), col("l_suppkey"))
 
-  /** Symmetric (src, dst, w) trading edges — both directions from one
-    * explode (a unionAll of two projections would run the pair
-    * aggregate once per branch; only the exchange below it is
-    * reuse-deduped). Weights are the pair's lineitem counts, ≥ 1 by
-    * construction. */
-  private def tradeEdgesW(spark: SparkSession, dir: String): DataFrame =
-    tradePairs(spark, dir)
-      .select(explode(array(
-        struct(custNode.as("src"), suppNode.as("dst"), col("w")),
-        struct(suppNode.as("src"), custNode.as("dst"), col("w")))).as("e"))
+  /** Both directions of every (a, b, w) edge as (src, dst, w), from
+    * one explode (a unionAll of two projections would run the input
+    * once per branch; only the exchange below it is reuse-deduped). */
+  private def bothWays(edges: DataFrame, a: Column, b: Column): DataFrame =
+    edges.select(explode(array(
+        struct(a.as("src"), b.as("dst"), col("w")),
+        struct(b.as("src"), a.as("dst"), col("w")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.w").as("w"))
+
+  /** Symmetric (src, dst, w) trading edges. Weights are the pair's
+    * lineitem counts, ≥ 1 by construction. */
+  private def tradeEdgesW(spark: SparkSession, dir: String): DataFrame =
+    bothWays(tradePairs(spark, dir), custNode, suppNode)
 
   private def tradeEdges(spark: SparkSession, dir: String): DataFrame =
     tradeEdgesW(spark, dir).drop("w")
 
   /** Fixed-iteration PageRank over the trading graph. Each round is
     * one shuffle (contributions grouped by destination, map-side
-    * partial sums) plus joins of the rank vector. The join shape is
-    * the classic PageRank co-partitioning: the edge set is hash-
-    * partitioned by `src` ONCE and cached, and every round's
-    * rank-vector join is SHUFFLE_HASH — the already-partitioned edge
-    * side never moves and never sorts; only the rank vector (one row
-    * per node, orders of magnitude smaller) is exchanged per round.
-    * Without the hint, the checkpointed rank vector has no stats, so
-    * the planner would fall back to sort-merge and re-exchange +
-    * re-sort the full edge set every round — measured 2.5× slower
-    * here, and the difference GROWS with |edges|/|nodes| at 100 TB.
-    * Lineage is truncated with *lazy* localCheckpoints (same
-    * discipline as [[Dedup.components]], but with no per-round
-    * convergence action the rounds pipeline into one job — each
-    * round's result still materializes exactly once).
+    * partial sums) plus joins of the rank vector against the edge
+    * set, hash-partitioned by `src` ONCE and cached: only the rank
+    * vector moves. The rounds run on [[graft.core.Fixpoint.rounds]].
     * Every node has out-edges (both edge directions exist), so there
     * is no dangling-mass term. */
   def pagerank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame =
@@ -165,8 +155,7 @@ object Graph {
     * edge construction proves it. */
   def pagerankOf(edgeList: DataFrame, iters: Int = 5,
       assumeNoSinks: Boolean = false): DataFrame =
-    top100(pagerankLoop(edgeList.select(col("src"), col("dst"))
-      .withColumn("w", lit(1L)), iters, assumeNoSinks))
+    top100(pagerankRanksOf(edgeList, iters, assumeNoSinks))
 
   /** FULL rank vector (node, pr) after `iters` rounds — the resumable
     * state [[pagerankResumedOf]] accepts, where the public top-100
@@ -198,8 +187,7 @@ object Graph {
     * state, never the update rule). */
   def pagerankResumedOf(edgeList: DataFrame, seed: DataFrame,
       iters: Int = 2, assumeNoSinks: Boolean = false): DataFrame =
-    top100(pagerankLoop(edgeList.select(col("src"), col("dst"))
-      .withColumn("w", lit(1L)), iters, assumeNoSinks, seed = seed))
+    top100(pagerankRanksOf(edgeList, iters, assumeNoSinks, seed))
 
   /** The `graph_pagerank_resume` query: split the flagship 5-round
     * trading-graph PageRank into 3 cold rounds + a 2-round warm
@@ -231,8 +219,8 @@ object Graph {
     * splitting IS the weighted formula with w ≡ 1 ((pr·w) div wout ≡
     * pr div outdeg — GraphProfileSpec pins the equivalence
     * bit-exactly), so there is a single copy of the loop discipline
-    * (edge partition + cache, zero-seed union, dangling term, lazy
-    * checkpoints) to maintain. */
+    * (edge partition + cache, zero-seed union, dangling term) to
+    * maintain. */
   private def pagerankLoop(edgeList: DataFrame, iters: Int,
       assumeNoSinks: Boolean, weightBound: Long = Long.MaxValue,
       seed: DataFrame = null): DataFrame = WorkingSet.scope {
@@ -280,21 +268,15 @@ object Graph {
     // empty ⇒ the dangling term is identically 0, so the plain round
     // is VALUE-identical and cheaper (one emptiness probe here beats
     // a no-op semi-join + broadcast in every round). Callers that
-    // prove no-sinks by construction skip the probe too.
-    // lazy + count(): one job materializes the (loop-static) dangling
-    // set AND answers the emptiness question — count is a FULL action,
-    // so the truncated lineage is complete. (Lazy + a partial action
-    // like isEmpty would be the hazard: truncated lineage with
-    // partitions unmaterialized.)
+    // prove no-sinks by construction skip the probe too. Both
+    // checkpoints are lazy and filled by their count() (see
+    // graft.core.Fixpoint on lazy checkpoints and full actions).
     val dangling =
       if (assumeNoSinks) null
       else edges.select(col("dst").as("node")).distinct()
         .join(srcNodes, Seq("node"), "left_anti")
         .localCheckpoint(eager = false)
     val hasDangling = dangling != null && dangling.count() > 0
-    // lazy: the count() below is a FULL action, so it materializes the
-    // checkpoint in the same job an eager checkpoint would have spent
-    // a separate job on.
     val nodes = (if (hasDangling) srcNodes.unionAll(dangling) else srcNodes)
       .localCheckpoint(eager = false)
     val n = nodes.count()
@@ -330,29 +312,19 @@ object Graph {
     // prior vector with uniform fill for nodes the seed doesn't cover
     // — one node-keyed left join, paid once before round 1, after
     // which the loop is byte-identical to the cold path.
-    // lazy like the intermediate rounds: round 1's join reads every
-    // seed partition, so the seed materializes inside round 1's job
-    // instead of a dedicated eager-checkpoint job here
-    var pr = (if (seed == null) nodes.withColumn("pr", lit(Scale / n))
-              else nodes.join(
-                  seed.select(col("node"), col("pr").as("seed_pr")),
-                  Seq("node"), "left")
-                .select(col("node"),
-                  coalesce(col("seed_pr"), lit(Scale / n)).as("pr")))
-      .localCheckpoint(eager = false)
-    for (i <- 1 to iters) {
-      // intermediate rounds checkpoint lazily (they pipeline into the
-      // final round's job); the LAST round is eager so the whole
-      // chain materializes here, while the edge cache is still alive
-      pr = (if (hasDangling) roundDangling(edges, pr, base, nodes, dangling, n)
-            else round(edges, pr, base, nodes))
-        .localCheckpoint(eager = i == iters)
-    }
+    val init =
+      if (seed == null) nodes.withColumn("pr", lit(Scale / n))
+      else nodes.join(seed.select(col("node"), col("pr").as("seed_pr")),
+          Seq("node"), "left")
+        .select(col("node"), coalesce(col("seed_pr"), lit(Scale / n)).as("pr"))
     // FULL vector out — presentation slicing (top100) is the public
     // views' concern; the resume path needs every node's rank.
     // The base stays cached until the CALLER's scope closes, so a
     // resume demo can run another batch of rounds over it first.
-    pr.select(col("node"), col("pr"))
+    Fixpoint.rounds("pagerank", init, iters) { pr =>
+      if (hasDangling) roundDangling(edges, pr, base, nodes, dangling, n)
+      else round(edges, pr, base, nodes)
+    }.select(col("node"), col("pr"))
   }
 
   /** Weighted PageRank over the trading graph: the edge weight is the
@@ -431,16 +403,11 @@ object Graph {
   /** The HITS loop over ANY directed (c, s) edge frame (spec
     * surface; [[hits]] derives the trade edges inline). */
   private[graft] def hitsOf(edges: DataFrame, iters: Int = 5): DataFrame = {
-    // r13 optimization note: two variants were implemented and
-    // A/B-measured against this implementation at sf0.1 on 32 cores
-    // (steal-gated filtered bench, 5 reps): (a) pre-partitioned cached
-    // edge layouts (by c and by s) + lazy checkpoints, (b) same caches
-    // + per-round max as a driver scalar instead of the broadcast
-    // crossJoin. Both measured neutral-to-slower (8.2 s baseline vs
-    // 8.7-9.2 s) — the per-round edge exchange reads a ~6.5 MB cached
-    // pair aggregate and is NOT the bottleneck; the two extra cache
-    // materializations cost more than 2·iters vector-sized exchanges
-    // save. Kept as-is; see OPTIMIZATION_r13.md.
+    // r13: (a) edge layouts cached by c and by s with lazy
+    // checkpoints and (b) the same plus a collected scalar max both
+    // A/B-measured neutral-to-slower (8.2 s vs 8.7-9.2 s at sf0.1):
+    // the extra cache builds cost more than the vector-sized
+    // exchanges they save. See OPTIMIZATION_r13.md.
     var h = edges.select(col("c").as("node")).distinct()
       .withColumn("h", lit(HitsScale))
     var a: DataFrame = null
@@ -578,30 +545,41 @@ object Graph {
         .flatMap(s => shared.peek(spark, s"$dir#cosupply$s"))
         .take(1).toSeq.headOption
         .map(_.filter(col("w") >= minOrders))
-      sliced.getOrElse {
-        // one shuffle to per-order supplier sets (collect_set partials
-        // are bounded by suppliers-per-order, a schema constant ~7 —
-        // NOT by line volume), pairs exploded map-side after it, one
-        // shuffle to pair counts: 2 exchanges where distinct +
-        // self-join + groupBy spent 4, and the wide pair set never
-        // crosses the wire unkeyed.
-        // Tables.spread (r13): when the file layout serializes the
-        // scan (1-row-group testdata), pre-exchange by the SAME key
-        // the groupBy needs so the set aggregation runs at full
-        // width instead of inside the single scan task; a no-op at
-        // production scale, where map-side partials stay the win.
-        val byOrder = graft.core.Tables.spread(spark, dir, "lineitem",
-            Tables(spark, dir).lineitem
-              .select(col("l_orderkey"), col("l_suppkey")), "l_orderkey")
-          .groupBy(col("l_orderkey"))
-          .agg(sort_array(collect_set(col("l_suppkey"))).as("ss"))
-        byOrder.select(arrayPairs(col("ss")).as("p"))
-          .select(col("p.u"), col("p.v"))
-          .groupBy(col("u"), col("v"))
-          .agg(count(lit(1)).as("w"))
-          .filter(col("w") >= minOrders)
-      }
+      sliced.getOrElse(coOrdered(spark, dir, "l_suppkey", minOrders))
     }
+
+  /** Pairs `(u, v, w)` of `key` values co-occurring in w ≥ `minOrders`
+    * orders: one shuffle to per-order key sets (collect_set partials
+    * are bounded by keys-per-order, a schema constant ~7 — NOT by
+    * line volume), pairs exploded map-side after it, one shuffle to
+    * pair counts: 2 exchanges where distinct + self-join + groupBy
+    * spent 4, and the wide pair set never crosses the wire unkeyed. */
+  private def coOrdered(spark: SparkSession, dir: String, key: String,
+      minOrders: Int): DataFrame =
+    // Tables.spread (r13): when the file layout serializes the scan
+    // (1-row-group testdata), pre-exchange by the SAME key the groupBy
+    // needs so the set aggregation runs at full width instead of
+    // inside the single scan task; a no-op at production scale, where
+    // map-side partials stay the win.
+    graft.core.Tables.spread(spark, dir, "lineitem",
+        Tables(spark, dir).lineitem.select(col("l_orderkey"), col(key)), "l_orderkey")
+      .groupBy(col("l_orderkey"))
+      .agg(sort_array(collect_set(col(key))).as("ks"))
+      .select(arrayPairs(col("ks")).as("p"))
+      .select(col("p.u"), col("p.v"))
+      .groupBy(col("u"), col("v"))
+      .agg(count(lit(1)).as("w"))
+      .filter(col("w") >= minOrders)
+
+  /** DuckDB oracle CTEs for [[coOrdered]]: `sl`, then `name` =
+    * (u, v, w) with u < v and w ≥ `minOrders` shared orders. */
+  private[graft] def coOrderedCtes(name: String, key: String, minOrders: Int,
+      materialized: Boolean = false): String =
+    s"""sl AS (SELECT DISTINCT l_orderkey, $key FROM lineitem),
+         $name AS ${if (materialized) "MATERIALIZED " else ""}(
+           SELECT a.$key AS u, b.$key AS v, count(*) AS w
+           FROM sl a JOIN sl b ON a.l_orderkey = b.l_orderkey AND a.$key < b.$key
+           GROUP BY 1, 2 HAVING count(*) >= $minOrders)"""
 
   private[graft] def coSupplyEdges(spark: SparkSession, dir: String,
       minOrders: Int = 5): DataFrame =
@@ -622,16 +600,35 @@ object Graph {
     *
     * `edges` must be canonical: columns (u, v) with u < v, one row
     * per undirected edge. */
-  def trianglesOf(edges: DataFrame): DataFrame = {
-    val deg = edges.select(col("u").as("n"))
-      .unionAll(edges.select(col("v").as("n")))
+  def trianglesOf(edges: DataFrame): DataFrame =
+    closedWedges(edges)
+      .select(explode(array(col("x"), col("n1"), col("n2"))).as("suppkey"))
+      .groupBy(col("suppkey")).agg(count(lit(1)).as("n_tri"))
+      // presentation order only (the gate re-sorts): per-node output
+      // scales with the graph, so a global sort is a pure extra
+      // range exchange at 100× — within-partition order suffices
+      .sortWithinPartitions(col("suppkey"))
+
+  /** Node degrees (n, deg) of a canonical (u < v) edge list. */
+  private def degrees(edges: DataFrame): DataFrame =
+    edges.select(col("u").as("n")).unionAll(edges.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    val withDeg = edges
+
+  /** Every canonical edge with both endpoint degrees (du, dv). */
+  private def withDegrees(edges: DataFrame): DataFrame = {
+    val deg = degrees(edges)
+    edges
       .join(deg.select(col("n").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("n").as("v"), col("deg").as("dv")), "v")
+  }
+
+  /** Every triangle of a canonical edge list once, as (x; n1, n2):
+    * the wedge at its lowest (degree, id)-ordered vertex x, closed by
+    * the edge (n1, n2). */
+  private def closedWedges(edges: DataFrame): DataFrame = {
     val srcFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = withDeg.select(
+    val oriented = withDegrees(edges).select(
       when(srcFirst, col("u")).otherwise(col("v")).as("src"),
       when(srcFirst, col("v")).otherwise(col("u")).as("dst"))
     // wedge (x; n1, n2), n1 < n2 BY ID so the unordered pair appears
@@ -640,19 +637,13 @@ object Graph {
     // arrays (bounded by the ORIENTED out-degree, which the (deg, id)
     // ordering caps at O(√|E|) even for hubs), pairs map-side after it
     // — not a self-join that re-exchanges the edge set twice
-    val byNode = oriented.groupBy(col("src"))
+    val wedges = oriented.groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("ns"))
-    val wedges = byNode
       .select(col("src").as("x"), arrayPairs(col("ns")).as("p"))
       .select(col("x"), col("p.u").as("n1"), col("p.v").as("n2"))
-    val tri = wedges.join(edges,
-      wedges("n1") === edges("u") && wedges("n2") === edges("v"))
-    tri.select(explode(array(col("x"), col("n1"), col("n2"))).as("suppkey"))
-      .groupBy(col("suppkey")).agg(count(lit(1)).as("n_tri"))
-      // presentation order only (the gate re-sorts): per-node output
-      // scales with the graph, so a global sort is a pure extra
-      // range exchange at 100× — within-partition order suffices
-      .sortWithinPartitions(col("suppkey"))
+    wedges.join(edges,
+        wedges("n1") === edges("u") && wedges("n2") === edges("v"))
+      .select(col("x"), col("n1"), col("n2"))
   }
 
   /** Triangle census of the strong-tie supplier graph: how many
@@ -692,11 +683,8 @@ object Graph {
   /** Core over any canonical (u < v) edge frame; pass `tri` to reuse
     * an already-derived census over the same edges. */
   def clusteringOf(edges: DataFrame,
-      tri: Option[DataFrame] = None): DataFrame = {
-    val deg = edges.select(col("u").as("n"))
-      .unionAll(edges.select(col("v").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    deg.filter(col("deg") >= 2)
+      tri: Option[DataFrame] = None): DataFrame =
+    degrees(edges).filter(col("deg") >= 2)
       .join(tri.getOrElse(trianglesOf(edges))
         .withColumnRenamed("suppkey", "n"), Seq("n"), "left")
       .select(col("n").as("suppkey"), col("deg"),
@@ -704,30 +692,16 @@ object Graph {
         expr("CAST((2000000 * coalesce(n_tri, 0)) div (deg * (deg - 1)) AS BIGINT)")
           .as("cc_ppm"))
       .sortWithinPartitions("suppkey")
-  }
 
   /** Part co-purchase edges `(u, v)` — part pairs appearing together
     * in ≥ `minOrders` distinct orders: the market-basket graph, the
     * second independently-derived edge set (after co-supply) the
-    * generic graph API consumes. Same 2-exchange derivation
-    * discipline as [[coSupplyEdgesW]]: per-order sorted part sets
-    * (collect_set partials bounded by lines-per-order, a schema
-    * constant ~7), pairs exploded map-side, one shuffle to pair
-    * counts. Memoized like its sibling. */
+    * generic graph API consumes. Derived by [[coOrdered]] and
+    * memoized like its sibling. */
   private[graft] def coPurchaseEdgesW(spark: SparkSession, dir: String,
       minOrders: Int = 2): DataFrame =
     shared.getOrBuild(spark, s"$dir#copurchase$minOrders") {
-      // same scan-width fix as coSupplyEdgesW (see there)
-      val byOrder = graft.core.Tables.spread(spark, dir, "lineitem",
-          Tables(spark, dir).lineitem
-            .select(col("l_orderkey"), col("l_partkey")), "l_orderkey")
-        .groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-      byOrder.select(arrayPairs(col("ps")).as("p"))
-        .select(col("p.u"), col("p.v"))
-        .groupBy(col("u"), col("v"))
-        .agg(count(lit(1)).as("w"))
-        .filter(col("w") >= minOrders)
+      coOrdered(spark, dir, "l_partkey", minOrders)
     }
 
   private[graft] def coPurchaseEdges(spark: SparkSession, dir: String,
@@ -857,12 +831,7 @@ object Graph {
   /** Core over any canonical (u < v, one row per undirected edge)
     * edge frame. */
   def assortativityOf(edges: DataFrame): DataFrame = {
-    val deg = edges.select(col("u").as("n"))
-      .unionAll(edges.select(col("v").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    val sums = edges
-      .join(deg.select(col("n").as("u"), col("deg").as("du")), "u")
-      .join(deg.select(col("n").as("v"), col("deg").as("dv")), "v")
+    val sums = withDegrees(edges)
       .agg(count(lit(1)).as("m"),
         sum(col("du") + col("dv")).as("s_deg"),
         sum(col("du") * col("du") + col("dv") * col("dv")).as("s_deg2"),
@@ -883,8 +852,8 @@ object Graph {
     * communities: suppliers linked (transitively) by ≥ `minOrders`
     * co-supplied orders share a component, labeled by the component's
     * min suppkey. Reuses [[Dedup.components]]' min-label-propagation
-    * loop verbatim (one shuffle + one job per round, Σ-label
-    * convergence, per-round lineage truncation) on a second,
+    * loop verbatim (Σ-label convergence on
+    * [[graft.core.Fixpoint.untilStable]]) on a second,
     * independently-derived edge set — the generic-API path: any
     * (d1, d2) pair frame clusters through the same loop. Nodes with
     * no strong tie have no component (same contract as dedup —
@@ -912,16 +881,16 @@ object Graph {
     * strength are deterministic, hash-checkable against the
     * recursive-CTE oracle, and the threshold plays the resolution
     * role Louvain's γ does: sweep `minOrders` to walk the community
-    * hierarchy. Each level is the proven one-shuffle-per-round
-    * label-propagation loop; the stats join is one shuffle on the
-    * component key, output ∝ #communities, never corpus.
+    * hierarchy. Each level is the [[Dedup.components]] loop; the
+    * stats join is one shuffle on the component key, output ∝
+    * #communities, never corpus.
     *
     * n_members ≥ 2 always (labels exist only for edge endpoints), so
     * the density division cannot hit zero. */
   def supplierCommunities(spark: SparkSession, dir: String,
       minOrders: Int = 5): DataFrame =
     communityStats(coSupplyEdgesW(spark, dir, minOrders),
-      componentLabels(spark, dir, minOrders))
+      componentLabels(spark, dir, minOrders), Seq("component"))
 
   /** Memoized component labels per (dir, threshold): the min-label
     * propagation loop is EAGER (jobs per round) and both the
@@ -956,11 +925,7 @@ object Graph {
 
   /** Generated DuckDB oracle for [[degreeDist]]. */
   def degreeDistOracleSql(minOrders: Int = 3): String =
-    s"""WITH sl AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-       e0 AS (SELECT a.l_suppkey AS u, b.l_suppkey AS v
-              FROM sl a JOIN sl b ON a.l_orderkey = b.l_orderkey
-               AND a.l_suppkey < b.l_suppkey
-              GROUP BY 1, 2 HAVING count(*) >= $minOrders),
+    s"""WITH ${coOrderedCtes("e0", "l_suppkey", minOrders)},
        d AS (SELECT n, CAST(count(*) AS BIGINT) AS degree
              FROM (SELECT u AS n FROM e0 UNION ALL SELECT v FROM e0)
              GROUP BY n)
@@ -986,9 +951,9 @@ object Graph {
     * `q_micro`; the `__total__` row (component = −1) sums the
     * per-community micros, the [[graft.operators.Profile.psiOf]]
     * discipline. Shape: both edge sets come from the PlanCache-
-    * memoized co-supply base, labels from the proven one-shuffle-
-    * per-round propagation loop; the scoring adds two bounded
-    * groupBys on the component key — output ∝ #communities. */
+    * memoized co-supply base, labels from the [[Dedup.components]]
+    * loop; the scoring adds two bounded groupBys on the component
+    * key — output ∝ #communities. */
   def modularity(spark: SparkSession, dir: String,
       partThreshold: Int = 5, evalThreshold: Int = 3): DataFrame = {
     require(evalThreshold <= partThreshold,
@@ -1064,12 +1029,7 @@ object Graph {
     * coalesce, same HUGEINT numerator and single division. */
   def modularityOracleSql(partThreshold: Int = 5,
       evalThreshold: Int = 3): String =
-    s"""WITH RECURSIVE sl AS (
-         SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-       e3 AS (SELECT a.l_suppkey AS u, b.l_suppkey AS v, count(*) AS w
-              FROM sl a JOIN sl b ON a.l_orderkey = b.l_orderkey
-               AND a.l_suppkey < b.l_suppkey
-              GROUP BY 1, 2 HAVING count(*) >= $evalThreshold),
+    s"""WITH RECURSIVE ${coOrderedCtes("e3", "l_suppkey", evalThreshold)},
        e5 AS (SELECT u, v FROM e3 WHERE w >= $partThreshold),
        edges AS (SELECT u AS a, v AS b FROM e5 UNION SELECT v, u FROM e5),
        reach(a, b) AS (
@@ -1114,34 +1074,28 @@ object Graph {
        FROM per
        ORDER BY component"""
 
-  /** The community-summary body shared by the single-threshold view
-    * and the sweep: label via the propagation loop, then one grouped
-    * pass for size / edges / weight / exact ppm density. */
-  private def communityStats(ew: DataFrame,
-      labelsIn: DataFrame = null): DataFrame = {
-    val labels = if (labelsIn != null) labelsIn
-      else Dedup.components(
-        ew.select(col("u").as("d1"), col("v").as("d2")))
-        .select(col("doc_id").as("node"), col("component"))
+  /** Size / edges / weight / exact ppm density per community, keyed
+    * by `keys`: the component, plus the sweep's level. */
+  private def communityStats(ew: DataFrame, labels: DataFrame,
+      keys: Seq[String]): DataFrame = {
     // every edge is internal to exactly one community (both endpoints
     // share a label by construction), so one endpoint join suffices.
-    // Member and edge contributions union into ONE groupBy(component)
+    // Member and edge contributions union into ONE groupBy(keys)
     // — a (nodeStats ⋈ edgeStats) formulation would run two grouping
     // shuffles plus a join exchange for the same three sums
-    val memberRows = labels.select(col("component"),
-      lit(1L).as("m"), lit(0L).as("e"), lit(0L).as("iw"))
-    val edgeRows = ew.join(labels, ew("u") === labels("node"))
-      .select(col("component"),
-        lit(0L).as("m"), lit(1L).as("e"), col("w").as("iw"))
+    val on = keys.filter(_ != "component").map(k => ew(k) === labels(k))
+      .foldLeft(ew("u") === labels("node"))(_ && _)
+    val memberRows = labels.select(keys.map(labels(_)) ++
+      Seq(lit(1L).as("m"), lit(0L).as("e"), lit(0L).as("iw")): _*)
+    val edgeRows = ew.join(labels, on).select(keys.map(labels(_)) ++
+      Seq(lit(0L).as("m"), lit(1L).as("e"), col("w").as("iw")): _*)
     memberRows.unionAll(edgeRows)
-      .groupBy(col("component"))
+      .groupBy(keys.map(col): _*)
       .agg(sum(col("m")).as("n_members"), sum(col("e")).as("n_edges"),
         sum(col("iw")).as("internal_weight"))
-      .select(col("component"), col("n_members"), col("n_edges"),
-        col("internal_weight"),
-        expr("CAST((2000000 * n_edges) div (n_members * (n_members - 1)) AS BIGINT)")
-          .as("density_ppm"))
-      .sortWithinPartitions("component")
+      .withColumn("density_ppm",
+        expr("CAST((2000000 * n_edges) div (n_members * (n_members - 1)) AS BIGINT)"))
+      .sortWithinPartitions(keys.map(col): _*)
   }
 
   /** The community HIERARCHY in one query: [[supplierCommunities]] at
@@ -1161,8 +1115,8 @@ object Graph {
     *    encode is order-preserving within a level — every id carries
     *    the same offset — so the decoded label is exactly the level's
     *    min reachable node id), but a k-level sweep now pays
-    *    max(diameter) rounds with one job per round instead of
-    *    Σ diameters with k jobs per round — at any corpus size, loop
+    *    max(diameter) rounds of one loop instead of Σ diameters
+    *    over k loops — at any corpus size, loop
     *    rounds are driver-side latency that level-count should not
     *    multiply. Headroom is enforced fail-fast on the cached base
     *    (max node id < 2⁴⁴ — the [[MaxEdgeWeight]] probe discipline:
@@ -1194,24 +1148,11 @@ object Graph {
       .select(expr(s"doc_id div $NodeSpan").as("lv"),
         (col("doc_id") % NodeSpan).as("node"),
         (col("component") % NodeSpan).as("component"))
-    // the single-threshold member/edge union-aggregate, with the
-    // level in the grouping key: still one grouping shuffle for the
-    // whole hierarchy
-    val memberRows = labels.select(col("lv"), col("component"),
-      lit(1L).as("m"), lit(0L).as("e"), lit(0L).as("iw"))
-    val edgeRows = lvl.join(labels,
-        lvl("lv") === labels("lv") && lvl("u") === labels("node"))
-      .select(labels("lv"), col("component"),
-        lit(0L).as("m"), lit(1L).as("e"), col("w").as("iw"))
-    memberRows.unionAll(edgeRows)
-      .groupBy(col("lv"), col("component"))
-      .agg(sum(col("m")).as("n_members"), sum(col("e")).as("n_edges"),
-        sum(col("iw")).as("internal_weight"))
-      .select(col("lv").cast("int").as("min_orders"), col("component"),
-        col("n_members"), col("n_edges"), col("internal_weight"),
-        expr("CAST((2000000 * n_edges) div (n_members * (n_members - 1)) AS BIGINT)")
-          .as("density_ppm"))
-      .sortWithinPartitions("min_orders", "component")
+    // the single-threshold stats with the level in the grouping key:
+    // still one grouping shuffle for the whole hierarchy
+    communityStats(lvl, labels, Seq("lv", "component"))
+      .withColumn("lv", col("lv").cast("int"))
+      .withColumnRenamed("lv", "min_orders")
   }
 
   /** Node-id headroom of the sweep's (level, node) BIGINT encoding:
@@ -1251,13 +1192,7 @@ object Graph {
     }.mkString(",\n         ")
     val union = thresholds.sorted.map(t => s"SELECT * FROM out$t")
       .mkString(" UNION ALL ")
-    s"""WITH RECURSIVE sl AS (
-           SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-         e0 AS MATERIALIZED (SELECT a.l_suppkey AS u, b.l_suppkey AS v,
-                       count(*) AS w
-                FROM sl a JOIN sl b ON a.l_orderkey = b.l_orderkey
-                 AND a.l_suppkey < b.l_suppkey
-                GROUP BY 1, 2 HAVING count(*) >= $baseT),
+    s"""WITH RECURSIVE ${coOrderedCtes("e0", "l_suppkey", baseT, materialized = true)},
          $levels
          SELECT * FROM ($union)
          ORDER BY min_orders, component"""
@@ -1276,9 +1211,9 @@ object Graph {
     * edge set never re-shuffles (a recompute-the-induced-subgraph
     * formulation would semi-join the FULL edge set twice per round).
     * One degree aggregate (map-side partials) + one emptiness check
-    * per round; lazy checkpoints truncate lineage exactly like the
-    * components loop. Synchronous-removal semantics match the
-    * unrolled-CTE DuckDB oracle round for round, and extra rounds
+    * per round ([[graft.core.Fixpoint.untilEmpty]]). Synchronous-
+    * removal semantics match the unrolled-CTE DuckDB oracle round
+    * for round, and extra rounds
     * after stability are idempotent — so the driver-side early exit
     * can never diverge from the oracle's fixed unroll. */
   def kcore(spark: SparkSession, dir: String, k: Int = 8,
@@ -1314,37 +1249,15 @@ object Graph {
   def kcoreWeightedOf(undirected: DataFrame, k: Long,
       maxRounds: Int): DataFrame = {
     // symmetric edge list: strength(n) = Σw over rows with src = n
-    var live = undirected
-      .select(explode(array(
-        struct(col("a").as("src"), col("b").as("dst"), col("w")),
-        struct(col("b").as("src"), col("a").as("dst"), col("w")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.w").as("w"))
-      .repartition(col("src"))
-      // lazy: round 1's strength aggregate scans every partition and
-      // materializes it in the same job (the eager/partial-action
-      // hazard doesn't apply — see pagerankLoop's nodes checkpoint)
-      .localCheckpoint(eager = false)
-    var rounds = 0
-    var stable = false
-    while (!stable && rounds < maxRounds) {
-      val deg = live.groupBy(col("src")).agg(sum(col("w")).as("d"))
-      // lazy + count(): ONE job both materializes the peel set (count
-      // is a full action — every partition scans, so the truncated
-      // lineage is complete) and answers the emptiness question the
-      // old eager-checkpoint-then-isEmpty pair spent two jobs on
-      val bad = deg.filter(col("d") < k).select(col("src").as("n"))
-        .localCheckpoint(eager = false)
-      if (bad.count() == 0) stable = true
-      else live = live
+    // a capped run is no error: the oracle unrolls the same rounds
+    val live = Fixpoint.untilEmpty("kcore",
+        bothWays(undirected, col("a"), col("b")).repartition(col("src")), maxRounds)(
+      _.groupBy(col("src")).agg(sum(col("w")).as("d"))
+        .filter(col("d") < k).select(col("src").as("n"))) { (live, bad) =>
+      live
         .join(bad, col("src") === col("n"), "left_anti")
-        .join(bad.withColumnRenamed("n", "m"),
-          col("dst") === col("m"), "left_anti")
-        // lazy: the next round's strength aggregate (or the final
-        // grouped output) is a full action over it
-        .localCheckpoint(eager = false)
-      rounds += 1
-      System.err.println(s"[graft] kcore round $rounds: stable=$stable")
-    }
+        .join(bad.withColumnRenamed("n", "m"), col("dst") === col("m"), "left_anti")
+    }.state
     live.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"), sum(col("w")).as("strength"))
       .sortWithinPartitions("node")
@@ -1358,19 +1271,36 @@ object Graph {
     kcoreWeightedOf(tradePairs(spark, dir)
       .select(custNode.as("a"), suppNode.as("b"), col("w")), k, maxRounds)
 
-  /** Generated DuckDB oracle for [[kcoreWeighted]]: the same
-    * synchronous strength peel unrolled as chained CTEs — the
-    * [[kcoreOracleSql]] recipe with count(*) replaced by sum(w). */
-  def kcoreWeightedOracleSql(k: Long = 48, rounds: Int = 4): String = {
+  /** Generated DuckDB oracle for [[kcoreWeighted]]: the [[kcore]]
+    * peel with strength = sum(w) in place of the degree. */
+  def kcoreWeightedOracleSql(k: Long = 48, rounds: Int = 4): String =
+    kcorePeelSql(k, rounds, weighted = true)
+
+  /** Generated DuckDB oracle for [[kcore]]: the same synchronous
+    * peel unrolled as chained CTEs (rounds past stability are
+    * idempotent, so a fixed unroll matches the early-exiting loop). */
+  def kcoreOracleSql(k: Int = 8, rounds: Int = 4): String =
+    kcorePeelSql(k, rounds, weighted = false)
+
+  private def kcorePeelSql(k: Long, rounds: Int, weighted: Boolean): String = {
+    // every CTE is AS MATERIALIZED: each round references the
+    // previous round's node set twice (the a- and b-side IN filters),
+    // and DuckDB's default CTE INLINING re-expands the whole chain —
+    // including the base lineitem⋈orders dedup — exponentially in the
+    // round count; at sf0.1 the inlined plan spilled > 80 GB of temp
+    // before exhausting disk. Materialization makes the chain linear
+    // (one hash table per round), same results.
+    val d = if (weighted) "sum(w)" else "count(*)"
     val steps = (1 to rounds).map { r =>
       s"""l$r AS MATERIALIZED (SELECT a, b, w FROM ed
              WHERE a IN (SELECT n FROM n${r - 1})
                AND b IN (SELECT n FROM n${r - 1})),
-         d$r AS MATERIALIZED (SELECT n, sum(w) AS d
+         d$r AS MATERIALIZED (SELECT n, $d AS d
              FROM (SELECT a AS n, w FROM l$r UNION ALL SELECT b, w FROM l$r)
              GROUP BY n),
          n$r AS MATERIALIZED (SELECT n FROM d$r WHERE d >= $k)"""
     }.mkString(",\n         ")
+    val strength = if (weighted) ",\n                CAST(sum(w) AS BIGINT) AS strength" else ""
     s"""WITH ed AS MATERIALIZED (SELECT
              'C' || CAST(o_custkey AS VARCHAR) AS a,
              'S' || CAST(l_suppkey AS VARCHAR) AS b,
@@ -1382,43 +1312,8 @@ object Graph {
          lf AS MATERIALIZED (SELECT a, b, w FROM ed
                 WHERE a IN (SELECT n FROM n$rounds)
                   AND b IN (SELECT n FROM n$rounds))
-         SELECT n AS node, CAST(count(*) AS BIGINT) AS deg,
-                CAST(sum(w) AS BIGINT) AS strength
+         SELECT n AS node, CAST(count(*) AS BIGINT) AS deg$strength
          FROM (SELECT a AS n, w FROM lf UNION ALL SELECT b AS n, w FROM lf)
-         GROUP BY n ORDER BY node"""
-  }
-
-  /** Generated DuckDB oracle for [[kcore]]: the same synchronous
-    * peel unrolled as chained CTEs (rounds past stability are
-    * idempotent, so a fixed unroll matches the early-exiting loop). */
-  def kcoreOracleSql(k: Int = 8, rounds: Int = 4): String = {
-    // every CTE is AS MATERIALIZED: each round references the
-    // previous round's node set twice (the a- and b-side IN filters),
-    // and DuckDB's default CTE INLINING re-expands the whole chain —
-    // including the base lineitem⋈orders dedup — exponentially in the
-    // round count; at sf0.1 the inlined plan spilled > 80 GB of temp
-    // before exhausting disk. Materialization makes the chain linear
-    // (one hash table per round), same results.
-    val steps = (1 to rounds).map { r =>
-      s"""l$r AS MATERIALIZED (SELECT a, b FROM ed
-             WHERE a IN (SELECT n FROM n${r - 1})
-               AND b IN (SELECT n FROM n${r - 1})),
-         d$r AS MATERIALIZED (SELECT n, count(*) AS d
-             FROM (SELECT a AS n FROM l$r UNION ALL SELECT b FROM l$r)
-             GROUP BY n),
-         n$r AS MATERIALIZED (SELECT n FROM d$r WHERE d >= $k)"""
-    }.mkString(",\n         ")
-    s"""WITH ed AS MATERIALIZED (SELECT DISTINCT
-             'C' || CAST(o_custkey AS VARCHAR) AS a,
-             'S' || CAST(l_suppkey AS VARCHAR) AS b
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         n0 AS MATERIALIZED (SELECT a AS n FROM ed UNION SELECT b FROM ed),
-         $steps,
-         lf AS MATERIALIZED (SELECT a, b FROM ed
-                WHERE a IN (SELECT n FROM n$rounds)
-                  AND b IN (SELECT n FROM n$rounds))
-         SELECT n AS node, CAST(count(*) AS BIGINT) AS deg
-         FROM (SELECT a AS n FROM lf UNION ALL SELECT b AS n FROM lf)
          GROUP BY n ORDER BY node"""
   }
 
@@ -1441,15 +1336,14 @@ object Graph {
     * the collapsed rows with one cumulative-count window:
     * h = max over distinct values v of min(v, #neighbors ≥ v).
     * No per-node arrays, no unbounded collect. Convergence = Σc
-    * holding still (values only decrease; decimal sum — the
-    * [[Dedup.components]] discipline, check from round 2), and
+    * holding still ([[graft.core.Fixpoint.untilStable]]), and
     * rounds past convergence are idempotent, so the early exit can
     * never diverge from the oracle's fixed unroll.
     *
     * `maxRounds` is a safety budget, not a tuning knob: values before
     * convergence are valid UPPER bounds on coreness that later rounds
     * only tighten, so a capped run is a monotone over-estimate (the
-    * round log says which happened; the trading graph converges in
+    * exit log line says which happened; the trading graph converges in
     * ≤ 6 rounds at every test SF, with budget 8 for headroom). The
     * oracle matches either way —
     * both engines walk the identical trajectory.
@@ -1468,15 +1362,10 @@ object Graph {
     val edges = WorkingSet(edgeList.select(col("src"), col("dst"))
       .repartition(col("src")))
     // c₀ = degree: rides the edge partitioning, no extra exchange
-    var c = edges.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
-    def cSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("c").cast("decimal(38,0)"))).head().getDecimal(0)
-    var prev: java.math.BigDecimal = null
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < maxRounds) {
+    val c0 = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("c"))
+    // values only decrease, so Σc holding still means every c is
+    // unchanged; a capped run is a valid upper bound (see above)
+    val c = Fixpoint.untilStable("coreness", c0, "c", maxRounds) { c =>
       // neighbor values, collapsed map-side before the shuffle
       val nb = edges
         .join(c.hint("shuffle_hash"), col("src") === col("node"))
@@ -1490,23 +1379,12 @@ object Graph {
       // h-frame IS the next state. Dropping the min drops a whole
       // per-round state join (and the oracle does the same, so the
       // trajectories stay bit-identical).
-      val next = nb
-        .withColumn("cum", sum(col("cnt")).over(
+      nb.withColumn("cum", sum(col("cnt")).over(
           Window.partitionBy(col("dst")).orderBy(col("c").desc)))
         .groupBy(col("dst"))
         .agg(max(least(col("c"), col("cum"))).as("c"))
         .withColumnRenamed("dst", "node")
-        .localCheckpoint(eager = false)
-      // the convergence aggregate materializes the lazy checkpoint —
-      // one extra tiny job per round, no separate scan. Σ unchanged
-      // under element-wise ≤ means element-wise equal: converged.
-      val s = cSum(next)
-      changed = s != null && (prev == null || s.compareTo(prev) != 0)
-      prev = s
-      c = next
-      rounds += 1
-      System.err.println(s"[graft] coreness round $rounds: changed=$changed")
-    }
+    }.state
     c.select(col("node"), col("c").as("coreness"))
       .sortWithinPartitions("node")
   }
@@ -1565,9 +1443,8 @@ object Graph {
     * (Bellman-Ford's round form), which is the formulation that
     * scales: each round is ONE shuffle (relaxed candidates grouped by
     * node, map-side partial `min`) plus a SHUFFLE_HASH join of the
-    * distance vector against the src-partitioned cached edge set —
-    * the pagerank loop's exact join discipline, so the full edge set
-    * is exchanged once for the whole loop, never per round. After
+    * distance vector against the src-partitioned cached edge set, so
+    * the edge set is exchanged once for the whole loop. After
     * `rounds` rounds the result is exact over all paths of ≤ `rounds`
     * edges: dist is monotone under relaxation and `min` is
     * merge-order-invariant, so the output is partition-invariant and
@@ -1606,23 +1483,18 @@ object Graph {
         s"sssp: max edge weight ${wRow.getLong(1)} × $rounds rounds " +
           s"exceeds the 2^44 cost headroom — rescale the weights")
     }
-    var dist = state
-      .select(col("node"),
-        (col("hops") * HopSpan + col("cost")).as("dist"))
-      .localCheckpoint(eager = false)
-    for (i <- 1 to rounds) {
+    val dist = Fixpoint.rounds("sssp",
+        state.select(col("node"), (col("hops") * HopSpan + col("cost")).as("dist")),
+        rounds) { dist =>
       // relax: every edge proposes source-dist + (1 hop, w); the
-      // standing distances ride the same shuffle as zero-delta rows.
-      // No per-round action — rounds pipeline into one job, lineage
-      // truncated by the lazy checkpoints (the pagerank discipline).
-      dist = edges
+      // standing distances ride the same shuffle as zero-delta rows
+      edges
         .join(dist.hint("shuffle_hash"), col("src") === col("node"))
         .select(col("dst").as("node"),
           (col("dist") + lit(HopSpan) + col("w")).as("dist"))
         .unionAll(dist)
         .groupBy(col("node"))
         .agg(min(col("dist")).as("dist"))
-        .localCheckpoint(eager = i == rounds)
     }
     dist.select(col("node"),
         expr(s"dist div $HopSpan").as("hops"),
@@ -1641,11 +1513,7 @@ object Graph {
   def sssp(spark: SparkSession, dir: String, minOrders: Int = 5,
       rounds: Int = 4): DataFrame = {
     val ew = coSupplyEdgesW(spark, dir, minOrders)
-    val sym = ew.select(explode(array(
-        struct(col("u").as("src"), col("v").as("dst"), col("w")),
-        struct(col("v").as("src"), col("u").as("dst"), col("w")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"),
-        col("e.w").as("w"))
+    val sym = bothWays(ew, col("u"), col("v"))
     // min over the canonical u < v pairs is the global min node; the
     // aggregate reads the PlanCache-memoized (Spark-cached) pair base,
     // not the corpus. Empty graph (possible at tiny SFs / tight
@@ -1673,12 +1541,7 @@ object Graph {
              FROM d${r - 1} p JOIN ed e ON p.node = e.a)
            GROUP BY node)"""
     }.mkString(",\n         ")
-    s"""WITH sl AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-         e0 AS MATERIALIZED (SELECT a.l_suppkey AS u, b.l_suppkey AS v,
-                       count(*) AS w
-                FROM sl a JOIN sl b ON a.l_orderkey = b.l_orderkey
-                 AND a.l_suppkey < b.l_suppkey
-                GROUP BY 1, 2 HAVING count(*) >= $minOrders),
+    s"""WITH ${coOrderedCtes("e0", "l_suppkey", minOrders, materialized = true)},
          ed AS MATERIALIZED (SELECT u AS a, v AS b, w FROM e0
                 UNION ALL SELECT v, u, w FROM e0),
          -- empty-graph-safe source row: no aggregate-over-empty NULL
@@ -1724,10 +1587,7 @@ object Graph {
   /** The mutual-top-m filter over ANY canonical weighted edge list
     * (u < v, one row per undirected edge; spec surface). */
   def backboneOf(edgesW: DataFrame, m: Int): DataFrame = {
-    val sym = edgesW.select(explode(array(
-        struct(col("u").as("src"), col("v").as("dst"), col("w")),
-        struct(col("v").as("src"), col("u").as("dst"), col("w")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.w").as("w"))
+    val sym = bothWays(edgesW, col("u"), col("v"))
     val kept = sym.groupBy(col("src"))
       .agg(graft.functions.TopKScoreAgg.topk(
         col("w").cast("double"), col("dst"), m).as("top"))
@@ -1746,27 +1606,8 @@ object Graph {
     * [[trianglesOf]] (hub out-fan-out bounded O(√|E|)), but each
     * found triangle credits its THREE edges instead of its three
     * nodes. */
-  private def trussSupport(edges: DataFrame): DataFrame = {
-    val deg = edges.select(col("u").as("n"))
-      .unionAll(edges.select(col("v").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    val withDeg = edges
-      .join(deg.select(col("n").as("u"), col("deg").as("du")), "u")
-      .join(deg.select(col("n").as("v"), col("deg").as("dv")), "v")
-    val srcFirst = col("du") < col("dv") ||
-      (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = withDeg.select(
-      when(srcFirst, col("u")).otherwise(col("v")).as("src"),
-      when(srcFirst, col("v")).otherwise(col("u")).as("dst"))
-    val byNode = oriented.groupBy(col("src"))
-      .agg(sort_array(collect_list(col("dst"))).as("ns"))
-    val wedges = byNode
-      .select(col("src").as("x"), arrayPairs(col("ns")).as("p"))
-      .select(col("x"), col("p.u").as("n1"), col("p.v").as("n2"))
-    val tri = wedges.join(edges,
-        wedges("n1") === edges("u") && wedges("n2") === edges("v"))
-      .select(col("x"), col("n1"), col("n2"))
-    tri.select(explode(array(
+  private def trussSupport(edges: DataFrame): DataFrame =
+    closedWedges(edges).select(explode(array(
         struct(least(col("x"), col("n1")).as("u"),
           greatest(col("x"), col("n1")).as("v")),
         struct(least(col("x"), col("n2")).as("u"),
@@ -1774,7 +1615,6 @@ object Graph {
         struct(col("n1").as("u"), col("n2").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("sup"))
-  }
 
   /** K-TRUSS of the backbone: iteratively peel every edge in fewer
     * than k−2 triangles until stable — the edge-level cohesion
@@ -1794,25 +1634,15 @@ object Graph {
   def ktrussOf(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(k >= 3, s"ktruss: k must be >= 3, got $k")
     val minSup = k - 2
-    var live = edges.select(col("u"), col("v"))
-      .repartition(col("u"))
-      .localCheckpoint(eager = false)
-    var rounds = 0
-    var stable = false
-    while (!stable && rounds < maxRounds) {
-      val bad = live
+    // a capped run is no error: the oracle unrolls the same rounds
+    val live = Fixpoint.untilEmpty("ktruss",
+        edges.select(col("u"), col("v")).repartition(col("u")), maxRounds)(
+      live => live
         .join(trussSupport(live), Seq("u", "v"), "left")
         .filter(coalesce(col("sup"), lit(0L)) < minSup)
-        .select(col("u").as("bu"), col("v").as("bv"))
-        .localCheckpoint(eager = false)
-      if (bad.count() == 0) stable = true
-      else live = live
-        .join(bad, col("u") === col("bu") && col("v") === col("bv"),
-          "left_anti")
-        .localCheckpoint(eager = false)
-      rounds += 1
-      System.err.println(s"[graft] ktruss round $rounds: stable=$stable")
-    }
+        .select(col("u").as("bu"), col("v").as("bv"))) { (live, bad) =>
+      live.join(bad, col("u") === col("bu") && col("v") === col("bv"), "left_anti")
+    }.state
     live.join(trussSupport(live), Seq("u", "v"), "left")
       .select(col("u"), col("v"),
         coalesce(col("sup"), lit(0L)).as("support"))
@@ -1823,12 +1653,7 @@ object Graph {
     * edge set) — one SQL statement of truth for the backbone and
     * truss oracles. */
   private def backboneCtes(m: Int): String =
-    s"""sl AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-         ed AS MATERIALIZED (SELECT a.l_suppkey AS u, b.l_suppkey AS v,
-                count(*) AS w
-              FROM sl a JOIN sl b ON a.l_orderkey = b.l_orderkey
-               AND a.l_suppkey < b.l_suppkey
-              GROUP BY 1, 2 HAVING count(*) >= 5),
+    s"""${coOrderedCtes("ed", "l_suppkey", 5, materialized = true)},
          sym AS (SELECT u AS src, v AS dst, w FROM ed
                  UNION ALL SELECT v, u, w FROM ed),
          rk AS (SELECT src, dst,

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, WorkingSet}
+import graft.core.{Fixpoint, Tables, WorkingSet}
 
 /** Recursive hierarchy flattening — root and depth for every node of
   * a parent-pointer tree (SURVEY.md §2.B extension; reference scope:
@@ -30,8 +30,7 @@ import graft.core.{Tables, WorkingSet}
   *
   * Each round is ONE self-join of a frame bounded by |nodes| (no
   * blow-up: every node contributes exactly one row per round),
-  * lineage truncated with lazy localCheckpoints per the
-  * [[Graph]]/[[Dedup]] fixed-point discipline. `maxRounds` fail-fasts
+  * run on [[graft.core.Fixpoint.untilDone]]. `maxRounds` fail-fasts
   * on cycles and dangling parent pointers (neither ever finishes; a
   * well-formed tree of depth ≤ 2^maxRounds always does).
   */
@@ -65,31 +64,28 @@ object Hierarchy {
     val rootIds = WorkingSet(nodes.filter(isRoot).select(col("node").as("rid")))
     // jump state for non-roots: anc = parent, d = 1. Roots carry no
     // row, so "anc is a root" ⇔ "anc has no jump row" for well-formed
-    // trees — the composition below exploits exactly that.
-    var jump = nodes.filter(!isRoot)
+    // trees — the composition below exploits exactly that. Done once
+    // every row is at a root; maxRounds + 1 probes allow maxRounds
+    // doubling rounds.
+    val jump0 = nodes.filter(!isRoot)
       .select(col("node"), col("parent").as("anc"), lit(1L).as("d"))
-      .localCheckpoint(eager = false)
-    var round = 0
-    while (!jump.join(rootIds, col("anc") === col("rid"), "left_anti")
-        .isEmpty) {
-      round += 1
-      if (round > maxRounds)
-        throw new IllegalStateException(
-          s"hierarchy: not closed after $maxRounds doubling rounds — " +
-            s"cycle or dangling parent pointer, or depth > 2^$maxRounds")
+    val closed = Fixpoint.untilDone("hierarchy", jump0, maxRounds + 1)(
+      _.join(rootIds, col("anc") === col("rid"), "left_anti").isEmpty) { j =>
       // compose jumps: a row whose anc is still mid-tree finds anc's
       // own jump row and leaps (anc', d + d'); a row already at a root
       // finds no match (roots have no jump row) and passes through.
-      val j = jump
-      jump = j.as("a")
+      j.as("a")
         .join(j.select(col("node").as("bn"), col("anc").as("banc"),
           col("d").as("bd")).as("b"), col("a.anc") === col("bn"), "left")
         .select(col("a.node").as("node"),
           coalesce(col("banc"), col("a.anc")).as("anc"),
           (col("a.d") + coalesce(col("bd"), lit(0L))).as("d"))
-        .localCheckpoint(eager = false)
     }
-    jump.select(col("node"), col("anc").as("root"), col("d").as("depth"))
+    if (!closed.converged)
+      throw new IllegalStateException(
+        s"hierarchy: not closed after $maxRounds doubling rounds — " +
+          s"cycle or dangling parent pointer, or depth > 2^$maxRounds")
+    closed.state.select(col("node"), col("anc").as("root"), col("d").as("depth"))
       .unionByName(roots)
   }
 

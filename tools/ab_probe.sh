@@ -20,7 +20,7 @@ for t in $(seq 1 "$TRIES"); do
     sleep 60
   done
   SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
-    SPARK_GRAFT_CPUS=32 SPARK_GRAFT_BENCH_REPS="$REPS" \
+    SPARK_GRAFT_BENCH_REPS="$REPS" \
     SPARK_GRAFT_BENCH_FILTER="$FILTER" SPARK_GRAFT_BENCH_OUT="$OUT" \
     sbt -batch "runMain graft.Bench" > /tmp/ab_probe.log 2>&1
   rc=$?

@@ -119,7 +119,7 @@ if [ "$1" != "quick" ]; then
     fi
   fi
   echo "=== bench sf0.1 (loadavg_start $load, steal_30s $steal) ==="
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
     SPARK_GRAFT_BENCH_OUT=/tmp/gate_bench.json \
     sbt -batch "runMain graft.Bench" > /dev/null 2>&1
   cat /tmp/gate_bench.json; echo

@@ -38,7 +38,7 @@ best_steal=999999
 for i in $(seq 1 "$MAX"); do
   wait_for_quiet
   echo "[quiet_bench] attempt $i/$MAX launching"
-  SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR="$SF_DIR" \
     SPARK_GRAFT_BENCH_REPS="${SPARK_GRAFT_BENCH_REPS:-3}" \
     SPARK_GRAFT_BENCH_OUT=/tmp/quiet_bench_try.json \
     sbt -batch "runMain graft.Bench" > "/tmp/quiet_bench_$i.log" 2>&1

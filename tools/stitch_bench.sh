@@ -51,7 +51,7 @@ for fam in "${FAMILIES[@]}"; do
   for t in $(seq 1 "$TRIES"); do
     wait_quiet
     echo "[stitch] $fam try $t"
-    SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS=32 \
+    SPARK_GRAFT_SF_DIR="$SF_DIR" \
       SPARK_GRAFT_BENCH_REPS="${SPARK_GRAFT_BENCH_REPS:-3}" \
       SPARK_GRAFT_BENCH_FILTER="$fam" \
       SPARK_GRAFT_BENCH_OUT="/tmp/stitch/try_$tag.json" \
@@ -84,7 +84,7 @@ import json, os, sys
 out = sys.argv[1]
 tags = sys.argv[2:]
 merged = {"metric": "bench_stitched", "unit": "sec", "sf": None,
-          "cpus": 32, "reps": None, "families": {}, "queries": {},
+          "cpus": None, "reps": None, "families": {}, "queries": {},
           "queries_min": {}, "queries_suite": {}, "n_ok": 0,
           "n_failed": 0, "failed": []}
 missing = [t for t in tags if not os.path.exists(f"/tmp/stitch/{t}.json")]
@@ -96,6 +96,7 @@ for fam in sorted(tags):
         continue
     d = json.load(open(p))
     merged["sf"] = d.get("sf"); merged["reps"] = d.get("reps")
+    merged["cpus"] = d.get("cores")
     merged["families"][fam] = {
         "steal_sec": d.get("steal_sec"), "n_ok": d.get("n_ok"),
         "n_failed": d.get("n_failed"), "suite_sec": d.get("suite_sec"),
