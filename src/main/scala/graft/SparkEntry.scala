@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.functions.{PortableHash, Shingles, TokenCol}
 import graft.operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -322,22 +323,6 @@ object SparkEntry {
     "avro_roundtrip" -> (graft.sources.IO.avroRoundtrip _),
   )
 
-  /** Shared DuckDB CTE prefix: word-3-gram shingle sets per document —
-    * the exact twin of `Shingles.grams3` (proven by the
-    * dedup_ngram_jaccard hash match since round 1). */
-  private val ShingleCte =
-    """toks AS (
-           SELECT doc_id, string_split_regex(trim(text, ' '), '\s+') AS t
-           FROM documents),
-         g AS (
-           SELECT doc_id,
-                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                       ELSE list_distinct(list_transform(range(1, len(t) - 1),
-                              i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                  END AS gs
-           FROM toks),
-         posts AS (SELECT doc_id, unnest(gs) AS gram FROM g)"""
-
   /** Naive all-pairs levenshtein at the dictionary level — ground
     * truth by construction, shared by BOTH blocked linkage surfaces
     * (FastSS deletion variants and positional q-gram count filter):
@@ -356,29 +341,7 @@ object SparkEntry {
   /** The dedup_ngram_jaccard oracle statement — shared verbatim by
     * the pair query and the cross-source attribution built on it. */
   private val NgramJaccardPairsSql: String =
-    """WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(text, ' '), '\s+') AS t
-           FROM documents),
-         g AS (
-           SELECT doc_id,
-                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                       ELSE list_distinct(list_transform(range(1, len(t) - 1),
-                              i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                  END AS gs
-           FROM toks),
-         posts AS (SELECT doc_id, unnest(gs) AS gram FROM g),
-         -- postings join on the 60-bit portable hash, mirroring the
-         -- Spark side exactly (collisions, were any to exist, would
-         -- be identical on both engines)
-         hp AS (SELECT doc_id,
-                       ('0x' || substring(md5(gram), 1, 15))::BIGINT AS gid
-                FROM posts),
-         sizes AS (SELECT doc_id, len(gs) AS n FROM g),
-         pairs AS (
-           SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-           FROM hp a JOIN hp b
-             ON a.gid = b.gid AND a.doc_id < b.doc_id
-           GROUP BY a.doc_id, b.doc_id)
+    s"""WITH ${Dedup.interPairsCtes}
          SELECT d1, d2, inter,
                 round(inter * 1.0 / (s1.n + s2.n - inter), 6) AS jaccard
          FROM pairs
@@ -638,26 +601,10 @@ object SparkEntry {
 
   /** dedup_minhash_lsh oracle, generated from the same affine salt
     * parameters as [[graft.functions.MinHashAgg]]. */
-  private lazy val minhashLshSql: String = {
-    val (as, bs) = graft.functions.PortableHash.affineParams(32)
-    val sigCols = (0 until 32).map(i =>
-      s"min((${as(i)} * hp + ${bs(i)}) % 2147483647) AS s$i")
-      .mkString(",\n                 ")
-    val bandKeys = (0 until 8).map { band =>
-      val parts = (band * 4 until (band + 1) * 4)
-        .map(i => s"CAST(s$i AS VARCHAR)").mkString(" || '_' || ")
-      s"'$band#' || $parts"
-    }.mkString(",\n                 ")
-    s"""WITH $ShingleCte,
-         hp AS (SELECT doc_id,
-                       CAST(('0x' || substring(md5(gram), 1, 15)) AS BIGINT)
-                         % 2147483647 AS hp
-                FROM posts),
-         sig AS (SELECT doc_id,
-                 $sigCols
-                 FROM hp GROUP BY doc_id),
-         bk AS (SELECT doc_id, unnest([
-                 $bandKeys]) AS bk FROM sig),
+  private lazy val minhashLshSql: String =
+    s"""WITH ${Shingles.grams3Cte},
+         ${Shingles.minhashSigCte(32)},
+         bk AS (SELECT doc_id, unnest(${Shingles.bandKeysSql(8, 4)}) AS bk FROM sig),
          cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
                   FROM bk a JOIN bk b
                     ON a.bk = b.bk AND a.doc_id < b.doc_id),
@@ -674,32 +621,15 @@ object SparkEntry {
          JOIN sizes s2 ON s2.doc_id = i.d2
          WHERE round(i.inter * 1.0 / (s1.n + s2.n - i.inter), 6) >= 0.5
          ORDER BY d1, d2"""
-  }
 
   /** dedup_incremental oracle: same generated signature/band-key
     * machinery as [[minhashLshSql]], with the asymmetric
     * fresh-probes-existing candidate join and a per-fresh-doc
     * best-match verdict. */
-  private lazy val dedupIncrementalSql: String = {
-    val (as, bs) = graft.functions.PortableHash.affineParams(32)
-    val sigCols = (0 until 32).map(i =>
-      s"min((${as(i)} * hp + ${bs(i)}) % 2147483647) AS s$i")
-      .mkString(",\n                 ")
-    val bandKeys = (0 until 8).map { band =>
-      val parts = (band * 4 until (band + 1) * 4)
-        .map(i => s"CAST(s$i AS VARCHAR)").mkString(" || '_' || ")
-      s"'$band#' || $parts"
-    }.mkString(",\n                 ")
-    s"""WITH $ShingleCte,
-         hp AS (SELECT doc_id,
-                       CAST(('0x' || substring(md5(gram), 1, 15)) AS BIGINT)
-                         % 2147483647 AS hp
-                FROM posts),
-         sig AS (SELECT doc_id,
-                 $sigCols
-                 FROM hp GROUP BY doc_id),
-         bk AS (SELECT doc_id, unnest([
-                 $bandKeys]) AS bk FROM sig),
+  private lazy val dedupIncrementalSql: String =
+    s"""WITH ${Shingles.grams3Cte},
+         ${Shingles.minhashSigCte(32)},
+         bk AS (SELECT doc_id, unnest(${Shingles.bandKeysSql(8, 4)}) AS bk FROM sig),
          cand AS (SELECT DISTINCT f.doc_id AS dn, e.doc_id AS de
                   FROM bk f JOIN bk e ON f.bk = e.bk
                   WHERE f.doc_id % 10 = 0 AND e.doc_id % 10 <> 0),
@@ -727,24 +657,12 @@ object SparkEntry {
          LEFT JOIN (SELECT dn, de, j FROM best WHERE rn = 1) b
            ON b.dn = d.doc_id
          ORDER BY d.doc_id"""
-  }
 
   /** dedup_simhash oracle: the portable 60-bit base hash makes the
     * signature pure SQL (votes per bit position, sign-packed). */
   private val simhashSql: String =
-    s"""WITH $ShingleCte,
-         h AS (SELECT doc_id,
-                      CAST(('0x' || substring(md5(gram), 1, 15)) AS BIGINT) AS h
-               FROM posts),
-         votes AS (SELECT doc_id, j,
-                          sum(CASE WHEN ((h >> j) & 1) = 1 THEN 1 ELSE -1 END) AS v
-                   FROM h CROSS JOIN (SELECT unnest(range(0, 60)) AS j)
-                   GROUP BY doc_id, j),
-         sig AS (SELECT doc_id,
-                        CAST(sum(CASE WHEN v > 0
-                                 THEN CAST(1 AS BIGINT) << j
-                                 ELSE 0 END) AS BIGINT) AS sim
-                 FROM votes GROUP BY doc_id),
+    s"""WITH ${Shingles.grams3Cte},
+         ${Shingles.simhashCte},
          chunks AS (SELECT doc_id, sim,
                            CAST(c AS VARCHAR) || '#' ||
                              CAST(((sim >> (16 * c)) & 65535) AS VARCHAR) AS ck
@@ -760,19 +678,8 @@ object SparkEntry {
     * once at the loosest (5×12-bit pigeonhole) threshold, one
     * conditional arm per tolerance. */
   private lazy val sweepHammingSql: String =
-    s"""WITH $ShingleCte,
-         h AS (SELECT doc_id,
-                      CAST(('0x' || substring(md5(gram), 1, 15)) AS BIGINT) AS h
-               FROM posts),
-         votes AS (SELECT doc_id, j,
-                          sum(CASE WHEN ((h >> j) & 1) = 1 THEN 1 ELSE -1 END) AS v
-                   FROM h CROSS JOIN (SELECT unnest(range(0, 60)) AS j)
-                   GROUP BY doc_id, j),
-         sig AS (SELECT doc_id,
-                        CAST(sum(CASE WHEN v > 0
-                                 THEN CAST(1 AS BIGINT) << j
-                                 ELSE 0 END) AS BIGINT) AS sim
-                 FROM votes GROUP BY doc_id),
+    s"""WITH ${Shingles.grams3Cte},
+         ${Shingles.simhashCte},
          chunks AS (SELECT doc_id, sim,
                            CAST(c AS VARCHAR) || '#' ||
                              CAST(((sim >> (12 * c)) & 4095) AS VARCHAR) AS ck
@@ -827,39 +734,12 @@ object SparkEntry {
          ORDER BY pr DESC, node LIMIT 100"""
   }
 
-  /** dedup_components oracle: recursive-CTE transitive closure over
-    * the same near-dup pair set the Spark side derives (tiny clusters
-    * → closure stays small). Shared VERBATIM with
-    * `dedup_components_resume`: the warm-started loop must land on
-    * the identical fixed point, so one oracle text gates both. */
   /** The n-gram-LSH near-dup graph + transitive closure as a CTE
     * prefix ending at `comp` = (doc_id, component) — shared by the
     * components oracle and the keep-best oracle so the clustering
     * trajectory has one SQL statement of truth. */
   private lazy val dedupComponentsCtes: String =
-    """WITH RECURSIVE toks AS (
-           SELECT doc_id, string_split_regex(trim(text, ' '), '\s+') AS t
-           FROM documents),
-         g AS (
-           SELECT doc_id,
-                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                       ELSE list_distinct(list_transform(range(1, len(t) - 1),
-                              i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                  END AS gs
-           FROM toks),
-         posts AS (SELECT doc_id, unnest(gs) AS gram FROM g),
-         -- postings join on the 60-bit portable hash, mirroring the
-         -- Spark side exactly (collisions, were any to exist, would
-         -- be identical on both engines)
-         hp AS (SELECT doc_id,
-                       ('0x' || substring(md5(gram), 1, 15))::BIGINT AS gid
-                FROM posts),
-         sizes AS (SELECT doc_id, len(gs) AS n FROM g),
-         pairs AS (
-           SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-           FROM hp a JOIN hp b
-             ON a.gid = b.gid AND a.doc_id < b.doc_id
-           GROUP BY a.doc_id, b.doc_id),
+    s"""WITH RECURSIVE ${Dedup.interPairsCtes},
          near AS (
            SELECT d1, d2 FROM pairs
            JOIN sizes s1 ON s1.doc_id = d1
@@ -875,6 +755,11 @@ object SparkEntry {
            SELECT a AS doc_id, least(a, min(b)) AS component
            FROM reach GROUP BY a)"""
 
+  /** dedup_components oracle: recursive-CTE transitive closure over
+    * the same near-dup pair set the Spark side derives (tiny clusters
+    * → closure stays small). Shared VERBATIM with
+    * `dedup_components_resume`: the warm-started loop must land on
+    * the identical fixed point, so one oracle text gates both. */
   private lazy val dedupComponentsSql: String =
     dedupComponentsCtes +
       "\n         SELECT doc_id, component FROM comp ORDER BY doc_id"
@@ -916,12 +801,11 @@ object SparkEntry {
     val joins = (0 until depth).map(i => s"JOIN c$i ON bkt.b$i = c$i.bk")
       .mkString("\n           ")
     val least = (0 until depth).map(i => s"c$i.c").mkString(", ")
-    s"""WITH w AS (SELECT unnest(string_split_regex(text, '[^A-Za-z]+')) AS word
+    s"""WITH w AS (SELECT unnest(${TokenCol.letterTokensSql("text")}) AS word
                    FROM documents),
-         t AS (SELECT word, count(*) AS cnt FROM w
-               WHERE word <> '' GROUP BY word),
+         t AS (SELECT word, count(*) AS cnt FROM w GROUP BY word),
          h AS (SELECT word, cnt,
-                      ('0x' || substring(md5(word), 1, 15))::BIGINT % $p AS hp
+                      ${PortableHash.h60Sql("word")} % $p AS hp
                FROM t),
          bkt AS (SELECT word, cnt,
                 $bucketCols
@@ -1219,8 +1103,8 @@ object SparkEntry {
 
   /** text_tfidf oracle (shared verbatim with the `_sql` twin). */
   private val TfidfOracleSql =
-    """WITH toks AS (
-           SELECT doc_id, unnest(string_split_regex(trim(text, ' '), '\s+')) AS term
+    s"""WITH toks AS (
+           SELECT doc_id, unnest(${Shingles.tokensSql("text")}) AS term
            FROM documents),
          tf AS (SELECT doc_id, term, count(*) AS tf
                 FROM toks GROUP BY doc_id, term),
@@ -1237,6 +1121,32 @@ object SparkEntry {
                 round(CAST(score_scaled AS DOUBLE) / 1000000.0, 6) AS tfidf, rn
          FROM r WHERE rn <= 3 ORDER BY doc_id, rn"""
 
+  /** The bottom-k-by-hash sample shared by profile_quantiles and
+    * profile_mad: per lineitem column, the 1000 rows with the smallest
+    * portable row hash (`s`: col_name, value, value rank `vr`, `n`). */
+  private val LineitemSampleCtes: String =
+    s"""m AS (
+           SELECT ${PortableHash.h60Sql(
+                    "CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)")} AS h,
+                  col_name, value
+           FROM (SELECT l_orderkey, l_linenumber, 'l_quantity' AS col_name,
+                        l_quantity AS value FROM lineitem
+                 UNION ALL SELECT l_orderkey, l_linenumber, 'l_extendedprice',
+                        l_extendedprice FROM lineitem
+                 UNION ALL SELECT l_orderkey, l_linenumber, 'l_discount',
+                        l_discount FROM lineitem
+                 UNION ALL SELECT l_orderkey, l_linenumber, 'l_tax',
+                        l_tax FROM lineitem)),
+         r AS (SELECT col_name, value,
+                      row_number() OVER (PARTITION BY col_name
+                                         ORDER BY h, value) AS rn
+               FROM m),
+         s AS (SELECT col_name, value,
+                      row_number() OVER (PARTITION BY col_name
+                                         ORDER BY value) AS vr,
+                      count(*) OVER (PARTITION BY col_name) AS n
+               FROM r WHERE rn <= 1000)"""
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Every query has one (50/50): the sketch
     * ops use the engine-portable [[graft.functions.PortableHash]]
@@ -1245,19 +1155,18 @@ object SparkEntry {
     * identical signatures, buckets, and cells. */
   def oracleSql: Map[String, String] = Map(
     "mr_wordcount" ->
-      """SELECT word, count(*) AS cnt
-         FROM (SELECT unnest(string_split_regex(text, '[^A-Za-z]+')) AS word
+      s"""SELECT word, count(*) AS cnt
+         FROM (SELECT unnest(${TokenCol.letterTokensSql("text")}) AS word
                FROM documents)
-         WHERE word <> '' GROUP BY word ORDER BY word""",
+         GROUP BY word ORDER BY word""",
     "mr_grep_count" ->
       """SELECT source, count(*) AS n_match FROM documents
          WHERE text LIKE '%join%' GROUP BY source ORDER BY source""",
     "mr_inverted_index" ->
-      """WITH wd AS (
+      s"""WITH wd AS (
            SELECT DISTINCT word, doc_id
-           FROM (SELECT unnest(string_split_regex(text, '[^A-Za-z]+')) AS word,
-                        doc_id FROM documents)
-           WHERE word <> '')
+           FROM (SELECT unnest(${TokenCol.letterTokensSql("text")}) AS word,
+                        doc_id FROM documents))
          SELECT word, count(*) AS df,
                 string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS postings
          FROM wd GROUP BY word ORDER BY word""",
@@ -1265,12 +1174,12 @@ object SparkEntry {
     // is exact while capacity >= per-source vocabulary, so the hash
     // must match the exhaustive computation
     "mr_topwords" ->
-      """WITH w AS (
+      s"""WITH w AS (
            SELECT source,
-                  unnest(string_split_regex(text, '[^A-Za-z]+')) AS word
+                  unnest(${TokenCol.letterTokensSql("text")}) AS word
            FROM documents),
          c AS (SELECT source, word, count(*) AS cnt FROM w
-               WHERE word <> '' GROUP BY source, word),
+               GROUP BY source, word),
          r AS (SELECT source, word, cnt,
                       row_number() OVER (PARTITION BY source
                         ORDER BY cnt DESC, word) AS rank
@@ -1283,10 +1192,9 @@ object SparkEntry {
     // above it with lower bound cnt - theta — a pure multiset function,
     // so the window-rank replay hash-matches at any partitioning
     "mr_heavyhitters" ->
-      """WITH w AS (SELECT unnest(string_split_regex(text, '[^A-Za-z]+')) AS word
+      s"""WITH w AS (SELECT unnest(${TokenCol.letterTokensSql("text")}) AS word
                     FROM documents),
-         c AS (SELECT word, count(*) AS cnt FROM w
-               WHERE word <> '' GROUP BY word),
+         c AS (SELECT word, count(*) AS cnt FROM w GROUP BY word),
          r AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, word) AS rk
                FROM c),
          t AS (SELECT CAST(coalesce(max(CASE WHEN rk = 9 THEN cnt END), 0)
@@ -2396,26 +2304,7 @@ object SparkEntry {
     // order, first |s|−⌈τ|s|⌉+1 shingles), so the hash match IS the
     // prefix-bound completeness proof
     "dedup_prefix_filter" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(text, ' '), '\s+') AS t
-           FROM documents),
-         g AS (
-           SELECT doc_id,
-                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                       ELSE list_distinct(list_transform(range(1, len(t) - 1),
-                              i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                  END AS gs
-           FROM toks),
-         posts AS (SELECT doc_id, unnest(gs) AS gram FROM g),
-         hp AS (SELECT doc_id,
-                       ('0x' || substring(md5(gram), 1, 15))::BIGINT AS gid
-                FROM posts),
-         sizes AS (SELECT doc_id, len(gs) AS n FROM g),
-         pairs AS (
-           SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-           FROM hp a JOIN hp b
-             ON a.gid = b.gid AND a.doc_id < b.doc_id
-           GROUP BY a.doc_id, b.doc_id)
+      s"""WITH ${Dedup.interPairsCtes}
          SELECT d1, d2, inter,
                 round(inter * 1.0 / (s1.n + s2.n - inter), 6) AS jaccard
          FROM pairs
@@ -2449,26 +2338,7 @@ object SparkEntry {
     // same postings-hash pair derivation as dedup_ngram_jaccard; only
     // the scoring differs (both per-side containments, max-gated)
     "dedup_containment" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(text, ' '), '\s+') AS t
-           FROM documents),
-         g AS (
-           SELECT doc_id,
-                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                       ELSE list_distinct(list_transform(range(1, len(t) - 1),
-                              i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                  END AS gs
-           FROM toks),
-         posts AS (SELECT doc_id, unnest(gs) AS gram FROM g),
-         hp AS (SELECT doc_id,
-                       ('0x' || substring(md5(gram), 1, 15))::BIGINT AS gid
-                FROM posts),
-         sizes AS (SELECT doc_id, len(gs) AS n FROM g),
-         pairs AS (
-           SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-           FROM hp a JOIN hp b
-             ON a.gid = b.gid AND a.doc_id < b.doc_id
-           GROUP BY a.doc_id, b.doc_id)
+      s"""WITH ${Dedup.interPairsCtes}
          SELECT d1, d2, inter,
                 round(inter * 1.0 / s1.n, 6) AS cont_d1_in_d2,
                 round(inter * 1.0 / s2.n, 6) AS cont_d2_in_d1
@@ -2533,7 +2403,7 @@ object SparkEntry {
         .mkString(", ")
       s"""WITH lex(lang, word) AS (SELECT * FROM (VALUES $lexRows) AS v(lang, word)),
          toks AS (SELECT doc_id,
-                         unnest(string_split_regex(trim(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' '), '\\s+')) AS tok
+                         unnest(${Shingles.tokensSql("translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')")}) AS tok
                   FROM documents),
          n AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id),
          hits AS (SELECT t.doc_id, l.lang, count(*) AS h
@@ -2821,10 +2691,10 @@ object SparkEntry {
     // both snapshots rebuilt from the same portable-hash carve the
     // Spark side uses, so the diff is value-identical
     "snapshot_diff" ->
-      """WITH c AS (
+      s"""WITH c AS (
            SELECT c_custkey,
                   CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents,
-                  ('0x' || substring(md5(CAST(c_custkey AS VARCHAR)), 1, 15))::BIGINT % 20 AS hv
+                  ${PortableHash.h60Sql("CAST(c_custkey AS VARCHAR)")} % 20 AS hv
            FROM customer),
          base AS (SELECT c_custkey AS b_key, cents AS old_cents
                   FROM c WHERE hv != 0),
@@ -2845,10 +2715,10 @@ object SparkEntry {
     // running flag sum is the island id, min/max version per island
     // become the validity stamps
     "snapshot_scd2" ->
-      """WITH c AS (
+      s"""WITH c AS (
            SELECT c_custkey,
                   CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents,
-                  ('0x' || substring(md5(CAST(c_custkey AS VARCHAR)), 1, 15))::BIGINT % 20 AS hv
+                  ${PortableHash.h60Sql("CAST(c_custkey AS VARCHAR)")} % 20 AS hv
            FROM customer),
          rows_ AS (
            SELECT c_custkey, 1 AS ver, cents FROM c WHERE hv != 0
@@ -2896,10 +2766,10 @@ object SparkEntry {
     // fold(old_agg, delta) == agg(new) — the incremental refresh is
     // indistinguishable from a full rescan.
     "snapshot_agg_delta" ->
-      """WITH c AS (
+      s"""WITH c AS (
            SELECT c_custkey, c_nationkey,
                   CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents,
-                  ('0x' || substring(md5(CAST(c_custkey AS VARCHAR)), 1, 15))::BIGINT % 20 AS hv
+                  ${PortableHash.h60Sql("CAST(c_custkey AS VARCHAR)")} % 20 AS hv
            FROM customer),
          curr AS (SELECT c_nationkey,
                          CASE WHEN hv % 7 = 3 THEN cents + 100
@@ -2968,9 +2838,9 @@ object SparkEntry {
          FROM s GROUP BY split ORDER BY split""",
     // Running token total per source, pack = starting offset / budget.
     "pipeline_pack" ->
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT source, doc_id,
-                  CAST(len(string_split_regex(trim(text, ' '), '\s+')) AS BIGINT) AS n_tok
+                  CAST(len(${Shingles.tokensSql("text")}) AS BIGINT) AS n_tok
            FROM documents),
          c AS (
            SELECT source, doc_id, n_tok,
@@ -2988,15 +2858,15 @@ object SparkEntry {
                 min(doc_id) AS first_doc, max(doc_id) AS last_doc
          FROM p GROUP BY source, pack_id ORDER BY source, pack_id""",
     "text_quality" ->
-      """SELECT doc_id, length(text) AS n_chars_m,
-                len(string_split_regex(trim(text, ' '), '\s+')) AS n_tokens,
-                round(CAST(list_sum(list_transform(string_split_regex(trim(text, ' '), '\s+'), t -> length(t))) AS DOUBLE)
-                      / len(string_split_regex(trim(text, ' '), '\s+')), 6) AS avg_tok_len,
-                round(CAST(len(list_filter(string_split_regex(trim(text, ' '), '\s+'),
+      s"""SELECT doc_id, length(text) AS n_chars_m,
+                len(${Shingles.tokensSql("text")}) AS n_tokens,
+                round(CAST(list_sum(list_transform(${Shingles.tokensSql("text")}, t -> length(t))) AS DOUBLE)
+                      / len(${Shingles.tokensSql("text")}), 6) AS avg_tok_len,
+                round(CAST(len(list_filter(${Shingles.tokensSql("text")},
                         t -> t IN ('the','a','of','and','to','in','is','on','for','with'))) AS DOUBLE)
-                      / len(string_split_regex(trim(text, ' '), '\s+')), 6) AS stopword_ratio,
-                round(CAST(len(list_distinct(string_split_regex(trim(text, ' '), '\s+'))) AS DOUBLE)
-                      / len(string_split_regex(trim(text, ' '), '\s+')), 6) AS distinct_ratio,
+                      / len(${Shingles.tokensSql("text")}), 6) AS stopword_ratio,
+                round(CAST(len(list_distinct(${Shingles.tokensSql("text")})) AS DOUBLE)
+                      / len(${Shingles.tokensSql("text")}), 6) AS distinct_ratio,
                 CASE WHEN length(text) = 0 THEN 0.0
                      ELSE round(CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')) AS DOUBLE)
                                 / length(text), 6) END AS punct_ratio
@@ -3008,8 +2878,8 @@ object SparkEntry {
     // each ln quantizes once to micro-nats (counts ≥ 1 → ln ≥ 0, so
     // half-up and half-away rounding agree), then exact BIGINT adds
     "text_collocations" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(text, ' '), '\s+') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, ${Shingles.tokensSql("text")} AS t
            FROM documents),
          uni AS (SELECT w, count(*) AS c1
                  FROM (SELECT unnest(t) AS w FROM toks) GROUP BY w),
@@ -3040,10 +2910,10 @@ object SparkEntry {
     // milli-unit integer Flesch: DuckDB // ≡ Spark DIV on the
     // non-negative counts, so the score column hash-matches exactly
     "text_readability" ->
-      """WITH c AS (
+      s"""WITH c AS (
            SELECT doc_id,
                   greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS n_sentences,
-                  len(string_split_regex(trim(text, ' '), '\s+')) AS n_words,
+                  len(${Shingles.tokensSql("text")}) AS n_words,
                   len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[aeiouy]+')) AS n_syllables
            FROM documents)
          SELECT doc_id,
@@ -3056,9 +2926,9 @@ object SparkEntry {
                      - (84600 * n_syllables) // n_words AS BIGINT) AS flesch_milli
          FROM c ORDER BY doc_id""",
     "text_tokens" ->
-      """SELECT doc_id,
-                len(string_split_regex(trim(text, ' '), '\s+')) AS ws_tokens,
-                len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS re_tokens
+      s"""SELECT doc_id,
+                len(${Shingles.tokensSql("text")}) AS ws_tokens,
+                len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS re_tokens
          FROM documents ORDER BY doc_id""",
     "text_fingerprint" ->
       """SELECT doc_id,
@@ -3080,16 +2950,16 @@ object SparkEntry {
                 CAST(norm_text <> text AS INT) AS changed
          FROM n ORDER BY doc_id""",
     "pipeline_clean" ->
-      """WITH q AS (
+      s"""WITH q AS (
            SELECT doc_id, text,
-                  len(string_split_regex(trim(text, ' '), '\s+')) AS n_tokens,
-                  round(CAST(len(list_distinct(string_split_regex(trim(text, ' '), '\s+'))) AS DOUBLE)
-                        / len(string_split_regex(trim(text, ' '), '\s+')), 6) AS dr,
+                  len(${Shingles.tokensSql("text")}) AS n_tokens,
+                  round(CAST(len(list_distinct(${Shingles.tokensSql("text")})) AS DOUBLE)
+                        / len(${Shingles.tokensSql("text")}), 6) AS dr,
                   round(CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')) AS DOUBLE)
                         / length(text), 6) AS pr
            FROM documents)
          SELECT min(doc_id) AS keep_id,
-                md5(translate(regexp_replace(trim(text, ' '), '\s+', ' ', 'g'), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')) AS fp,
+                md5(translate(regexp_replace(trim(text, ' '), '\\s+', ' ', 'g'), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')) AS fp,
                 count(*) AS n_dups, min(n_tokens) AS n_tokens
          FROM q WHERE n_tokens >= 20 AND dr >= 0.3 AND pr <= 0.3
          GROUP BY fp ORDER BY keep_id""",
@@ -3104,8 +2974,8 @@ object SparkEntry {
     // Non-distinct bigram list (the duplicate count IS the signal);
     // same degenerate len<2 rule as the shingle expression.
     "text_repetition" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(text, ' '), '\s+') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, ${Shingles.tokensSql("text")} AS t
            FROM documents),
          g AS (
            SELECT doc_id,
@@ -3122,9 +2992,9 @@ object SparkEntry {
     // Flags compare against the 6dp-rounded metrics on both engines,
     // so gate decisions can't flip on accumulation order.
     "text_gopher" ->
-      """WITH tk AS (
+      s"""WITH tk AS (
            SELECT doc_id,
-                  unnest(string_split_regex(trim(text, ' '), '\s+')) AS tok
+                  unnest(${Shingles.tokensSql("text")}) AS tok
            FROM documents),
          per AS (
            SELECT doc_id, count(*) AS n_tokens,
@@ -3154,8 +3024,8 @@ object SparkEntry {
     // GPT-3/Gopher decontamination window) — same shingle rule as the
     // Spark expression (degenerate len<13 → one all-tokens shingle).
     "pipeline_decontam" ->
-      """WITH toks AS (
-           SELECT doc_id, source, string_split_regex(trim(text, ' '), '\s+') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, source, ${Shingles.tokensSql("text")} AS t
            FROM documents),
          g AS (
            SELECT doc_id, source,
@@ -3180,13 +3050,13 @@ object SparkEntry {
     // Integer thresholds (floor div) + the portable md5-60bit hash —
     // the sample membership is bit-identical across engines.
     "sample_stratified" ->
-      """WITH counts AS (SELECT lang, count(*) AS n_lang FROM documents
+      s"""WITH counts AS (SELECT lang, count(*) AS n_lang FROM documents
                          GROUP BY lang),
          m AS (SELECT min(n_lang) AS min_n FROM counts),
          th AS (SELECT lang, (min_n * 1048576) // n_lang AS thresh
                 FROM counts CROSS JOIN m),
          h AS (SELECT doc_id, lang,
-                      CAST(('0x' || substring(md5('smp#' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
+                      ${PortableHash.h60Sql("'smp#' || CAST(doc_id AS VARCHAR)")}
                         % 1048576 AS b
                FROM documents)
          SELECT h.doc_id, h.lang FROM h JOIN th ON th.lang = h.lang
@@ -3204,10 +3074,10 @@ object SparkEntry {
     // floor(w * 2^20) — DOUBLE forced before every division/floor so
     // both engines derive the identical integer threshold.
     "sample_weighted" ->
-      """SELECT doc_id,
+      s"""SELECT doc_id,
                 round(least(CAST(1 AS DOUBLE), CAST(length(text) AS DOUBLE) / 500.0), 6) AS weight
          FROM documents
-         WHERE CAST(('0x' || substring(md5('wsmp#' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1048576
+         WHERE ${PortableHash.h60Sql("'wsmp#' || CAST(doc_id AS VARCHAR)")} % 1048576
                < CAST(floor(least(CAST(1 AS DOUBLE), CAST(length(text) AS DOUBLE) / 500.0) * 1048576) AS BIGINT)
          ORDER BY doc_id""",
     // Generated from Curation.MixTargetsPpm (operator and oracle
@@ -3339,28 +3209,7 @@ object SparkEntry {
     // the sample MULTISET unchanged), then exact index picks from the
     // value-sorted sample
     "profile_quantiles" ->
-      """WITH m AS (
-           SELECT ('0x' || substring(md5(
-                    CAST(l_orderkey AS VARCHAR) || '|' ||
-                    CAST(l_linenumber AS VARCHAR)), 1, 15))::BIGINT AS h,
-                  col_name, value
-           FROM (SELECT l_orderkey, l_linenumber, 'l_quantity' AS col_name,
-                        l_quantity AS value FROM lineitem
-                 UNION ALL SELECT l_orderkey, l_linenumber, 'l_extendedprice',
-                        l_extendedprice FROM lineitem
-                 UNION ALL SELECT l_orderkey, l_linenumber, 'l_discount',
-                        l_discount FROM lineitem
-                 UNION ALL SELECT l_orderkey, l_linenumber, 'l_tax',
-                        l_tax FROM lineitem)),
-         r AS (SELECT col_name, value,
-                      row_number() OVER (PARTITION BY col_name
-                                         ORDER BY h, value) AS rn
-               FROM m),
-         s AS (SELECT col_name, value,
-                      row_number() OVER (PARTITION BY col_name
-                                         ORDER BY value) AS vr,
-                      count(*) OVER (PARTITION BY col_name) AS n
-               FROM r WHERE rn <= 1000),
+      s"""WITH $LineitemSampleCtes,
          p AS (SELECT * FROM (VALUES (1), (5), (25), (50), (75), (95), (99))
                AS t(pct))
          SELECT s.col_name, p.pct, s.value
@@ -3370,28 +3219,7 @@ object SparkEntry {
     // same bottom-k-by-hash sample as profile_quantiles; median and
     // MAD are exact index-selects within it (|x−med| is IEEE-exact)
     "profile_mad" ->
-      """WITH m AS (
-           SELECT ('0x' || substring(md5(
-                    CAST(l_orderkey AS VARCHAR) || '|' ||
-                    CAST(l_linenumber AS VARCHAR)), 1, 15))::BIGINT AS h,
-                  col_name, value
-           FROM (SELECT l_orderkey, l_linenumber, 'l_quantity' AS col_name,
-                        l_quantity AS value FROM lineitem
-                 UNION ALL SELECT l_orderkey, l_linenumber, 'l_extendedprice',
-                        l_extendedprice FROM lineitem
-                 UNION ALL SELECT l_orderkey, l_linenumber, 'l_discount',
-                        l_discount FROM lineitem
-                 UNION ALL SELECT l_orderkey, l_linenumber, 'l_tax',
-                        l_tax FROM lineitem)),
-         r AS (SELECT col_name, value,
-                      row_number() OVER (PARTITION BY col_name
-                                         ORDER BY h, value) AS rn
-               FROM m),
-         s AS (SELECT col_name, value,
-                      row_number() OVER (PARTITION BY col_name
-                                         ORDER BY value) AS vr,
-                      count(*) OVER (PARTITION BY col_name) AS n
-               FROM r WHERE rn <= 1000),
+      s"""WITH $LineitemSampleCtes,
          med AS (SELECT col_name, n, value AS median FROM s
                  WHERE vr = CAST(floor(0.5 * (n - 1)) AS BIGINT) + 1),
          d AS (SELECT s.col_name, med.n, med.median,
@@ -3512,8 +3340,8 @@ object SparkEntry {
     "text_bpe_tokens" -> TextOps.bpeTokensOracleSql,
     "pipeline_pack_bpe" -> TextOps.pipelinePackBpeOracleSql,
     "text_lm_score" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(text, ' '), '\s+') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, ${Shingles.tokensSql("text")} AS t
            FROM documents),
          bg AS (SELECT doc_id, t[i] || ' ' || t[i+1] AS bg
                 FROM toks, unnest(range(1, len(t))) AS r(i)),
@@ -3576,7 +3404,7 @@ object SparkEntry {
     val est = Hll.estimateSql("n_present", "z_present")
     s"""WITH h AS (
            SELECT event_type, user_id,
-                  CAST(('0x' || substring(md5('hll#' || CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
+                  ${PortableHash.h60Sql("'hll#' || CAST(user_id AS VARCHAR)")} AS hv
            FROM events),
          b AS (SELECT event_type, user_id,
                       hv % ${Hll.M} AS bucket, hv // ${Hll.M} AS v
@@ -3605,10 +3433,10 @@ object SparkEntry {
   private def bm25Ctes(limit: Int): String = {
     val terms = TextOps.Bm25Query.map("'" + _ + "'").mkString(", ")
     s"""toks AS (
-           SELECT doc_id, unnest(string_split_regex(trim(text, ' '), '\\s+')) AS term
+           SELECT doc_id, unnest(${Shingles.tokensSql("text")}) AS term
            FROM documents),
          lens AS (SELECT doc_id,
-                         len(string_split_regex(trim(text, ' '), '\\s+')) AS dl
+                         len(${Shingles.tokensSql("text")}) AS dl
                   FROM documents),
          stats AS (SELECT count(*) AS n_docs,
                           CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl

@@ -8,11 +8,12 @@ object Verify {
     // the driver always passes exactly two args = full run)
     val Array(sfDir, outDir) = args.take(2)
     val nameFilter = args.lift(2).map(_.r)
+    def selected(name: String): Boolean =
+      nameFilter.forall(_.pattern.matcher(name).matches())
     val spark = graft.core.GraftSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) =>
-        nameFilter.forall(_.pattern.matcher(name).matches()) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       // the scope releases the query's working sets; clearCache also
       // drops the PlanCache memos' blocks between queries
@@ -36,8 +37,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // oracle entries for the selected queries only: tools/check.py
+    // fails an entry without output, so a query that threw is a fail
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .collect { case (k, v) if selected(k) => s"${q(k)}: ${q(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * from primitives both engines share — `md5` and 63-bit-safe modular
   * arithmetic — so every sketch op gets a real value-level oracle.
   *
-  * - [[h60]]: the top 60 bits of md5, as a non-negative BIGINT.
-  *   SQL twin: `('0x' || substring(md5(x), 1, 15))::BIGINT`.
+  * - [[h60]]: the top 60 bits of md5, as a non-negative BIGINT;
+  *   DuckDB twin [[h60Sql]].
   * - [[affineParams]]: k pairwise-independent salt functions
   *   `h_i(x) = (a_i * (x mod P) + b_i) mod P` over the Mersenne prime
   *   P = 2³¹−1 — the classic universal-hashing construction for
@@ -26,11 +26,15 @@ object PortableHash {
     * a_i · (x mod P) fit in 62 bits. */
   val P: Long = 2147483647L
 
-  /** Top 60 bits of md5 as a non-negative long — identical in Spark
-    * (`conv(substring(md5(x),1,15),16,10)`) and DuckDB
-    * (`('0x'||substring(md5(x),1,15))::BIGINT`). */
+  /** Top 60 bits of md5 as a non-negative long: the first 15 hex
+    * digits of the digest, read as a number. */
   def h60(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast("long")
+
+  /** DuckDB twin of [[h60]] over the SQL expression `x`. A CAST call,
+    * so `%` and `>>` applied to it bind to the whole hash. */
+  def h60Sql(x: String): String =
+    s"CAST(('0x' || substring(md5($x), 1, 15)) AS BIGINT)"
 
   /** k affine salt parameter pairs (a_i ∈ [1, P−1], b_i ∈ [0, P−1]),
     * fixed seed — same values on every executor, every run, and in

@@ -14,10 +14,32 @@ object Shingles {
   /** Whitespace tokens. */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
+  /** DuckDB twin of [[tokens]] over the SQL expression `text`. The
+    * two-arg `trim(x, ' ')` strips ASCII spaces only, like Spark's
+    * `trim`; DuckDB's one-arg `trim` also strips unicode whitespace. */
+  def tokensSql(text: String): String =
+    s"string_split_regex(trim($text, ' '), '\\s+')"
+
   /** Distinct word 3-gram shingles of a text column (codegen'd custom
     * expression — see [[NGramShingles]]). */
   def grams3(text: Column): Column =
     graft.functions.ShingleCol.nGramShingles(tokens(text), 3)
+
+  /** DuckDB twin of [[grams3]]: the CTEs `toks(doc_id, t)`,
+    * `g(doc_id, gs)` and `posts(doc_id, gram)` over `documents`, to
+    * follow a `WITH`. */
+  val grams3Cte: String =
+    s"""toks AS (
+           SELECT doc_id, ${tokensSql("text")} AS t
+           FROM documents),
+         g AS (
+           SELECT doc_id,
+                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
+                       ELSE list_distinct(list_transform(range(1, len(t) - 1),
+                              i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
+                  END AS gs
+           FROM toks),
+         posts AS (SELECT doc_id, unnest(gs) AS gram FROM g)"""
 
   /** HOF formulation of [[grams3]] — interpreted, kept as the
     * cross-check reference for ShinglesSpec. */
@@ -42,6 +64,24 @@ object Shingles {
         g => PortableHash.salted(PortableHash.h60(g), as(i), bs(i))))): _*)
   }
 
+  /** DuckDB twin of [[minhashSignature]] over the `posts` CTE of
+    * [[grams3Cte]]: the CTEs `hp(doc_id, hp)` (base hash mod P) and
+    * `sig(doc_id, s0 … s{k-1})`, to follow other CTEs. */
+  def minhashSigCte(k: Int): String = {
+    val (as, bs) = PortableHash.affineParams(k)
+    val p = PortableHash.P
+    val cols = (0 until k)
+      .map(i => s"min((${as(i)} * hp + ${bs(i)}) % $p) AS s$i")
+      .mkString(",\n                 ")
+    s"""hp AS (SELECT doc_id,
+                       ${PortableHash.h60Sql("gram")}
+                         % $p AS hp
+                FROM posts),
+         sig AS (SELECT doc_id,
+                 $cols
+                 FROM hp GROUP BY doc_id)"""
+  }
+
   /** Banded LSH keys from a minhash signature: `bands` substrings of
     * `rowsPerBand` signature entries each, concatenated to one bucket
     * key per band (entries are 31-bit, so plain decimal concat is a
@@ -52,6 +92,14 @@ object Shingles {
       b => concat(b.cast("string"), lit("#"),
         array_join(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))
           .cast("array<string>"), "_")))
+
+  /** DuckDB twin of [[bandKeys]] over the `s0 …` columns of
+    * [[minhashSigCte]]'s `sig`: a list literal of `bands` keys. */
+  def bandKeysSql(bands: Int, rowsPerBand: Int): String =
+    (0 until bands).map { b =>
+      (b * rowsPerBand until (b + 1) * rowsPerBand)
+        .map(i => s"CAST(s$i AS VARCHAR)").mkString(s"'$b#' || ", " || '_' || ", "")
+    }.mkString("[\n                 ", ",\n                 ", "]")
 
   /** 64-bit SimHash over the shingle set: per-bit signed counts of the
     * shingles' [[PortableHash.h60]] bits, then the sign pattern packed
@@ -69,6 +117,24 @@ object Shingles {
           .otherwise(lit(-1L)))
       shiftleft(when(vote > 0, lit(1L)).otherwise(lit(0L)), j)
     }.reduce(_ bitwiseOR _)
+
+  /** DuckDB twin of [[simhash64]] over the `posts` CTE of
+    * [[grams3Cte]]: the CTEs `h(doc_id, h)`, `votes(doc_id, j, v)` (the
+    * ±1 vote sum of hash bit j) and `sig(doc_id, sim)`, to follow
+    * other CTEs. */
+  val simhashCte: String =
+    s"""h AS (SELECT doc_id,
+                      ${PortableHash.h60Sql("gram")} AS h
+               FROM posts),
+         votes AS (SELECT doc_id, j,
+                          sum(CASE WHEN ((h >> j) & 1) = 1 THEN 1 ELSE -1 END) AS v
+                   FROM h CROSS JOIN (SELECT unnest(range(0, 60)) AS j)
+                   GROUP BY doc_id, j),
+         sig AS (SELECT doc_id,
+                        CAST(sum(CASE WHEN v > 0
+                                 THEN CAST(1 AS BIGINT) << j
+                                 ELSE 0 END) AS BIGINT) AS sim
+                 FROM votes GROUP BY doc_id)"""
 
   /** The 16-bit chunks of a simhash — pigeonhole bucketing: two hashes
     * within Hamming distance 3 share at least one of 4 chunks. */

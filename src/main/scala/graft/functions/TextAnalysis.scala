@@ -77,9 +77,6 @@ object TextAnalysis {
   def charMoments(text: Column): Column =
     ColumnBridge.column(CharMoments(ColumnBridge.expression(text)))
 
-  /** Whitespace tokens of a text column. */
-  def tokens(text: Column): Column = split(trim(text), "\\s+")
-
   /** BPE-ish tokenization: letter runs, single digits, or single
     * non-alphanumeric marks — the usual pre-tokenizer regex shape. */
   def bpeTokens(text: Column): Column =

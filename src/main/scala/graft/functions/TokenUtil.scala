@@ -63,6 +63,12 @@ object TokenCol {
   def letterTokens(c: Column): Column =
     ColumnBridge.column(AsciiTokens(ColumnBridge.expression(c), includeDigits = false))
 
+  /** DuckDB twin of [[letterTokens]] over the SQL expression `text`:
+    * the `[^A-Za-z]+` split without the empty strings a leading or
+    * trailing delimiter leaves (the scan never emits one). */
+  def letterTokensSql(text: String): String =
+    s"list_filter(string_split_regex($text, '[^A-Za-z]+'), x -> x <> '')"
+
   /** Alphanumeric runs (the reference wordcount tokenizer). */
   def alnumTokens(c: Column): Column =
     ColumnBridge.column(AsciiTokens(ColumnBridge.expression(c), includeDigits = true))

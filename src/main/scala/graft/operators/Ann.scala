@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Tables, WorkingSet}
-import graft.functions.{TopKScoreAgg, Vectors}
+import graft.functions.{PortableHash, TopKScoreAgg, Vectors}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (SURVEY.md §2 E). Query set = `vec_id < 10` (broadcast side).
@@ -355,7 +355,7 @@ object Ann {
   private[graft] def codebookCteSql(src: String): String =
     s"""SELECT vec_id AS cent_id, emb AS ce FROM $src
                QUALIFY row_number() OVER (ORDER BY
-                 ('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT,
+                 ${PortableHash.h60Sql("CAST(vec_id AS VARCHAR)")},
                  vec_id) <= $IvfK"""
 
   /** IVF top-k: the [[IvfK]] lowest-hash corpus vectors act as the
@@ -625,7 +625,7 @@ object Ann {
        x AS (SELECT vec_id, unnest(q) AS v,
                     unnest(range(len(q))) AS d FROM e),
        seeds AS (SELECT vec_id, row_number() OVER (ORDER BY
-                   ('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT,
+                   ${PortableHash.h60Sql("CAST(vec_id AS VARCHAR)")},
                    vec_id) - 1 AS cid
                  FROM e QUALIFY cid < $PqK),
        cb0 AS (SELECT s.cid, x.d, x.v
@@ -872,7 +872,7 @@ object Ann {
                  FROM x JOIN cl c ON c.vec_id = x.vec_id
                  JOIN x qc ON qc.vec_id = c.cell AND qc.d = x.d),
        seeds AS (SELECT vec_id, row_number() OVER (ORDER BY
-                   ('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT,
+                   ${PortableHash.h60Sql("CAST(vec_id AS VARCHAR)")},
                    vec_id) - 1 AS cid
                  FROM e QUALIFY cid < $PqK),
        cb AS (SELECT s.cid, r.d, r.rv AS v

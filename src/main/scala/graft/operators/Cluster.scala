@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -306,7 +306,7 @@ object Cluster {
          x AS (SELECT vec_id, unnest(q) AS v,
                       unnest(range(len(q))) AS d FROM e),
          seeds AS (SELECT vec_id, row_number() OVER (ORDER BY
-                     ('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT,
+                     ${PortableHash.h60Sql("CAST(vec_id AS VARCHAR)")},
                      vec_id) - 1 AS cid
                    FROM e QUALIFY cid < $k),
          c0 AS (SELECT s.cid, x.d, x.v
@@ -485,7 +485,7 @@ object Cluster {
                    FROM st CROSS JOIN tot),
          hr AS (SELECT vec_id, cid,
                   row_number() OVER (PARTITION BY cid ORDER BY
-                    CAST(('0x' || substring(md5('cs#' || CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT AS DOUBLE),
+                    CAST(${PortableHash.h60Sql("'cs#' || CAST(vec_id AS VARCHAR)")} AS DOUBLE),
                     vec_id) AS rnk
                 FROM a$iters)
          SELECT h.vec_id, CAST(h.cid AS BIGINT) AS cluster,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{Tables, WorkingSet}
 import graft.functions.PortableHash
 import graft.functions.ShingleCol
+import graft.functions.Shingles.{tokens, tokensSql}
 import graft.functions.TextAnalysis._
 
 /** Corpus-curation operators — the document-level gates and sweeps a
@@ -166,10 +167,10 @@ object Curation {
   /** Generated DuckDB oracle for [[pipelineFunnel]] — the gopher,
     * dedup, and decontam oracle chains composed verbatim. */
   val funnelOracleSql: String =
-    """WITH corpus AS (SELECT * FROM documents WHERE source <> 'src0'),
+    s"""WITH corpus AS (SELECT * FROM documents WHERE source <> 'src0'),
        tk AS (
          SELECT doc_id,
-                unnest(string_split_regex(trim(text, ' '), '\s+')) AS tok
+                unnest(${tokensSql("text")}) AS tok
          FROM corpus),
        per AS (
          SELECT doc_id, count(*) AS n_tokens,
@@ -196,7 +197,7 @@ object Curation {
          FROM corpus c JOIN qual q ON q.doc_id = c.doc_id
          GROUP BY md5(c.text)),
        toks AS (
-         SELECT doc_id, source, string_split_regex(trim(text, ' '), '\s+') AS t
+         SELECT doc_id, source, ${tokensSql("text")} AS t
          FROM documents),
        g AS (
          SELECT doc_id, source,
@@ -317,7 +318,7 @@ object Curation {
     * the same (hash, doc_id) order, the same cut. */
   def perGroupOracleSql: String =
     s"""WITH h AS (SELECT lang, doc_id,
-             ('0x' || substring(md5('spg#' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS hv
+             ${PortableHash.h60Sql("'spg#' || CAST(doc_id AS VARCHAR)")} AS hv
            FROM documents)
        SELECT lang, doc_id FROM h
        QUALIFY row_number() OVER (PARTITION BY lang ORDER BY hv, doc_id)
@@ -381,8 +382,7 @@ object Curation {
     * hash, same bottom-k. */
   def sampleUniformKSql(k: Int = 200): String =
     s"""SELECT doc_id,
-              ('0x' || substring(md5('unik#' || CAST(doc_id AS VARCHAR)),
-                1, 15))::BIGINT AS h
+              ${PortableHash.h60Sql("'unik#' || CAST(doc_id AS VARCHAR)")} AS h
        FROM documents ORDER BY h, doc_id LIMIT $k"""
 
   def sampleStratifiedDf(docs: DataFrame): DataFrame = {
@@ -460,7 +460,7 @@ object Curation {
   /** Generated DuckDB oracle for [[sampleTemperature]] — identical
     * hash family, identical forced-double threshold chain. */
   def sampleTemperatureSql: String =
-    """WITH counts AS (SELECT lang, count(*) AS n_lang
+    s"""WITH counts AS (SELECT lang, count(*) AS n_lang
                        FROM documents GROUP BY lang),
        m AS (SELECT min(n_lang) AS n_min FROM counts),
        th AS (SELECT lang,
@@ -469,7 +469,7 @@ object Curation {
                      AS BIGINT) AS thresh
               FROM counts CROSS JOIN m),
        h AS (SELECT doc_id, lang,
-                    CAST(('0x' || substring(md5('tsmp#' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
+                    ${PortableHash.h60Sql("'tsmp#' || CAST(doc_id AS VARCHAR)")}
                       % 1048576 AS b
              FROM documents)
        SELECT h.doc_id, h.lang FROM h JOIN th ON th.lang = h.lang
@@ -553,7 +553,7 @@ object Curation {
                 $ths
               FROM rr),
        kept AS (SELECT d.lang,
-                       CAST(('0x' || substring(md5('tsmp#' || CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
+                       ${PortableHash.h60Sql("'tsmp#' || CAST(d.doc_id AS VARCHAR)")}
                          % 1048576 AS b,
                        th.t25, th.t50, th.t75
                 FROM documents d JOIN th ON th.lang = d.lang)
@@ -599,7 +599,7 @@ object Curation {
 
   def sampleImportanceDf(docs: DataFrame, targetLang: String = "en"): DataFrame = {
     val toks = docs.select(col("doc_id"), col("lang"),
-        explode(graft.functions.TextAnalysis.tokens(col("text"))).as("w"))
+        explode(tokens(col("text"))).as("w"))
       .select(col("doc_id"), col("lang"), dsirBucket(col("w")).as("b"))
     val scored = toks.join(broadcast(importanceRatios(docs, targetLang)),
         Seq("b"))
@@ -631,7 +631,7 @@ object Curation {
       targetLang: String = "en"): DataFrame = {
     val b = DsirBuckets.toLong
     val toks = corpus.select(col("lang"),
-        explode(graft.functions.TextAnalysis.tokens(col("text"))).as("w"))
+        explode(tokens(col("text"))).as("w"))
       .select(col("lang"), dsirBucket(col("w")).as("b"))
     val allCnt = toks.groupBy(col("b")).agg(count(lit(1)).as("c_all"))
     val tgtCnt = toks.filter(col("lang") === targetLang)
@@ -669,10 +669,10 @@ object Curation {
     val b = DsirBuckets
     s"""WITH toks AS (
           SELECT doc_id, lang,
-                 CAST(('0x' || substring(md5('dsir#' || w), 1, 15)) AS BIGINT)
+                 ${PortableHash.h60Sql("'dsir#' || w")}
                    % $b AS b
           FROM (SELECT doc_id, lang,
-                       unnest(string_split_regex(trim(text, ' '), '\\s+')) AS w
+                       unnest(${tokensSql("text")}) AS w
                 FROM documents)),
         allc AS (SELECT b, count(*) AS c_all FROM toks GROUP BY b),
         tgtc AS (SELECT b, count(*) AS c_tgt FROM toks
@@ -688,7 +688,7 @@ object Curation {
                           CAST(sum(lr.lr_micro) AS BIGINT) AS lw_micro
                    FROM toks JOIN lr ON toks.b = lr.b GROUP BY toks.doc_id),
         k AS (SELECT d.doc_id, d.lang, s.n_tok, s.lw_micro,
-                CAST(('0x' || substring(md5('dsirk#' || CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
+                ${PortableHash.h60Sql("'dsirk#' || CAST(d.doc_id AS VARCHAR)")}
                   % 1048576 AS bu
               FROM documents d JOIN scored s ON s.doc_id = d.doc_id)
         SELECT doc_id, lang, n_tok, lw_micro FROM k
@@ -802,7 +802,7 @@ object Curation {
                        * 1048576) AS BIGINT) AS thresh
               FROM cap CROSS JOIN m),
        h AS (SELECT doc_id, lang,
-                    CAST(('0x' || substring(md5('mix#' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
+                    ${PortableHash.h60Sql("'mix#' || CAST(doc_id AS VARCHAR)")}
                       % 1048576 AS b
              FROM documents)
        SELECT h.doc_id, h.lang FROM h JOIN th ON th.lang = h.lang
@@ -856,7 +856,7 @@ object Curation {
     * setting). */
   def shuffleOracleSql: String =
     s"""WITH h AS (SELECT doc_id,
-             CAST(('0x' || substring(md5('shuf#e0#' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS skey
+             ${PortableHash.h60Sql("'shuf#e0#' || CAST(doc_id AS VARCHAR)")} AS skey
            FROM documents)
        SELECT doc_id, skey % $ShuffleShards AS shard, skey
        FROM h ORDER BY doc_id"""
@@ -921,7 +921,7 @@ object Curation {
   def curriculumOracleSql: String = {
     val stops = StopWordList.map("'" + _ + "'").mkString(", ")
     s"""WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(text, ' '), '\\s+') AS t
+           SELECT doc_id, ${tokensSql("text")} AS t
            FROM documents),
          q AS (
            SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tok,
@@ -932,8 +932,7 @@ object Curation {
                                / len(t), 0) AS BIGINT) AS q_micro
            FROM toks),
          m AS (SELECT q_micro,
-                      CAST(('0x' || substring(md5('cur#' ||
-                        CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+                      ${PortableHash.h60Sql("'cur#' || CAST(doc_id AS VARCHAR)")} AS h
                FROM q),
          r AS (SELECT q_micro,
                       row_number() OVER (ORDER BY h, q_micro) AS rn

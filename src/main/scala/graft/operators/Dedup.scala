@@ -756,12 +756,6 @@ object Dedup {
     components(pairs, seed = prior)
   }
 
-  /** Embedding cosine near-dup pairs, blocked by the `label` column
-    * (the pre-clustering blocking pattern: at 100 TB the block key is
-    * a coarse quantizer cell; here the provided label plays that
-    * role). Oracle-checked via DuckDB list_cosine_similarity over
-    * DOUBLE[] casts; spec additionally pins the codegen expression to
-    * the HOF cosine. */
   /** Asymmetric shingle-CONTAINMENT pairs — the measure Jaccard
     * misses: a short document quoted wholesale inside a long one has
     * C(A⊂B) = |A∩B|/|A| ≈ 1 while Jaccard ≈ |A|/|B| ≈ 0, so a
@@ -868,6 +862,12 @@ object Dedup {
       .filter(col("n_docs") > 1)
       .sortWithinPartitions("h")
 
+  /** Embedding cosine near-dup pairs, blocked by the `label` column
+    * (the pre-clustering blocking pattern: at 100 TB the block key is
+    * a coarse quantizer cell; here the provided label plays that
+    * role). Oracle-checked via DuckDB list_cosine_similarity over
+    * DOUBLE[] casts; spec additionally pins the codegen expression to
+    * the HOF cosine. */
   def embedding(spark: SparkSession, dir: String, tau: Double = 0.4): DataFrame =
     embeddingDf(Tables(spark, dir).embeddings, tau)
 
@@ -988,32 +988,32 @@ object Dedup {
       .orderBy(col("threshold"))
   }
 
+  /** DuckDB twin of [[sharedInterPairs]], to follow a `WITH`:
+    * [[grams3Cte]], then `hp(doc_id, gid)` (postings on the 60-bit
+    * portable hash, as on the Spark side: collisions, were any to
+    * exist, are identical on both engines), `sizes(doc_id, n)` and
+    * `pairs(d1, d2, inter)` for every doc pair sharing a shingle. */
+  private[graft] val interPairsCtes: String =
+    s"""$grams3Cte,
+         hp AS (SELECT doc_id,
+                       ${PortableHash.h60Sql("gram")} AS gid
+                FROM posts),
+         sizes AS (SELECT doc_id, len(gs) AS n FROM g),
+         pairs AS (
+           SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
+           FROM hp a JOIN hp b
+             ON a.gid = b.gid AND a.doc_id < b.doc_id
+           GROUP BY a.doc_id, b.doc_id)"""
+
   /** Generated DuckDB oracle for [[sweepJaccard]] — the
     * dedup_ngram_jaccard pair chain at the bank's lowest bound, same
     * bank slices. */
   def sweepJaccardOracleSql: String = {
     val bank = JaccardSweepThresholds.mkString(", ")
-    s"""WITH toks AS (
-          SELECT doc_id, string_split_regex(trim(text, ' '), '\\s+') AS t
-          FROM documents),
-        g AS (
-          SELECT doc_id,
-                 CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                      ELSE list_distinct(list_transform(range(1, len(t) - 1),
-                             i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                 END AS gs
-          FROM toks),
-        posts AS (SELECT doc_id, unnest(gs) AS gram FROM g),
-        hp AS (SELECT doc_id,
-                      ('0x' || substring(md5(gram), 1, 15))::BIGINT AS gid
-               FROM posts),
-        sizes AS (SELECT doc_id, len(gs) AS n FROM g),
+    s"""WITH $interPairsCtes,
         pr AS (
           SELECT d1, d2, round(inter * 1.0 / (s1.n + s2.n - inter), 6) AS j
-          FROM (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-                FROM hp a JOIN hp b
-                  ON a.gid = b.gid AND a.doc_id < b.doc_id
-                GROUP BY a.doc_id, b.doc_id) p
+          FROM pairs
           JOIN sizes s1 ON s1.doc_id = d1
           JOIN sizes s2 ON s2.doc_id = d2
           WHERE round(inter * 1.0 / (s1.n + s2.n - inter), 6)
@@ -1113,38 +1113,12 @@ object Dedup {
     * SQL (same affine salts), every configuration's band keys from
     * the one signature table, candidate/verify/truth counts. */
   def sweepLshOracleSql(tau: Double = 0.5, k: Int = 32): String = {
-    val (as, bs) = graft.functions.PortableHash.affineParams(k)
-    val sigCols = (0 until k).map(i =>
-      s"min((${as(i)} * hp + ${bs(i)}) % 2147483647) AS s$i")
-      .mkString(",\n                 ")
     val armSelects = LshBandSweep.map { bands =>
-      val r = k / bands
-      val keys = (0 until bands).map { b =>
-        val parts = (b * r until (b + 1) * r)
-          .map(i => s"CAST(s$i AS VARCHAR)").mkString(" || '_' || ")
-        s"'$b#' || $parts"
-      }.mkString(",\n                 ")
-      s"""SELECT doc_id, CAST($bands AS BIGINT) AS bands, unnest([
-                 $keys]) AS bk FROM sig"""
+      s"SELECT doc_id, CAST($bands AS BIGINT) AS bands, " +
+        s"unnest(${bandKeysSql(bands, k / bands)}) AS bk FROM sig"
     }.mkString("\n         UNION ALL ")
-    s"""WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(text, ' '), '\\s+') AS t
-           FROM documents),
-         g AS (
-           SELECT doc_id,
-                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                       ELSE list_distinct(list_transform(range(1, len(t) - 1),
-                              i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                  END AS gs
-           FROM toks),
-         posts AS (SELECT doc_id, unnest(gs) AS gram FROM g),
-         hpq AS (SELECT doc_id,
-                       CAST(('0x' || substring(md5(gram), 1, 15)) AS BIGINT)
-                         % 2147483647 AS hp
-                FROM posts),
-         sig AS (SELECT doc_id,
-                 $sigCols
-                 FROM hpq GROUP BY doc_id),
+    s"""WITH $grams3Cte,
+         ${minhashSigCte(k)},
          bkall AS ($armSelects),
          cand AS (SELECT DISTINCT a.bands, a.doc_id AS d1, b.doc_id AS d2
                   FROM bkall a JOIN bkall b

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.functions.PortableHash
 
 /** Record linkage: fuzzy (edit-distance) matching over a name
   * dictionary — the entity-resolution front door (SURVEY.md §2.F
@@ -323,7 +324,7 @@ object Linkage {
   val canonicalOracleSql: String =
     s"""WITH RECURSIVE nm AS (
          SELECT p_name AS name, count(*) AS cnt,
-                ('0x' || substring(md5(p_name), 1, 15))::BIGINT AS id
+                ${PortableHash.h60Sql("p_name")} AS id
          FROM part GROUP BY 1),
        pr AS (SELECT a.id AS d1, b.id AS d2
               FROM nm a JOIN nm b ON a.name < b.name

@@ -895,7 +895,7 @@ object Multimodal {
   /** The `n` disjoint contiguous chunks of a `bits`-wide hash, as
     * prefixed string keys (chunk c covers bits [c·bits/n, (c+1)·bits/n)
     * — together they cover all bits, the pigeonhole premise). */
-  private def dhashChunks(h: Column, n: Int, bits: Int = 56): Column =
+  private def dhashChunks(h: Column, n: Int, bits: Int): Column =
     array((0 until n).map { c =>
       val lo = c * bits / n
       val width = (c + 1) * bits / n - lo

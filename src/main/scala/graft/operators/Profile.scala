@@ -146,7 +146,6 @@ object Profile {
       .groupBy(col("event_type"))
       .agg(Hll.hllAgg(h).as("regs"),
         countDistinct(col("user_id")).as("n_exact"))
-    val twoW1 = 1L << (Hll.W + 1)
     sketched
       .withColumn("n_present",
         expr("size(filter(regs, r -> r > 0))"))
@@ -802,7 +801,7 @@ object Profile {
                  max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS in_b
           FROM events GROUP BY user_id),
         s AS (
-          SELECT ('0x' || substring(md5('kmv#' || CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h,
+          SELECT ${PortableHash.h60Sql("'kmv#' || CAST(user_id AS VARCHAR)")} AS h,
                  in_a, in_b
           FROM u WHERE in_a = 1 OR in_b = 1
           ORDER BY h, user_id LIMIT $KmvK),

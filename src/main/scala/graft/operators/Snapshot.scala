@@ -162,10 +162,10 @@ object Snapshot {
   /** Generated DuckDB oracle for [[asOf]] (v = 2): version 2 carved
     * straight from the base — the other side of the round-trip. */
   def asOfOracleSql: String =
-    """WITH c AS (
+    s"""WITH c AS (
          SELECT c_custkey,
                 CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents,
-                ('0x' || substring(md5(CAST(c_custkey AS VARCHAR)), 1, 15))::BIGINT % 20 AS hv
+                ${PortableHash.h60Sql("CAST(c_custkey AS VARCHAR)")} % 20 AS hv
          FROM customer)
        SELECT c_custkey,
               cents + CASE WHEN hv % 7 = 3 THEN 100 ELSE 0 END AS cents
@@ -250,10 +250,10 @@ object Snapshot {
     * snapshot carved straight from the base — the other side of the
     * round-trip. */
   def applyOracleSql: String =
-    """WITH c AS (
+    s"""WITH c AS (
          SELECT c_custkey,
                 CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents,
-                ('0x' || substring(md5(CAST(c_custkey AS VARCHAR)), 1, 15))::BIGINT % 20 AS hv
+                ${PortableHash.h60Sql("CAST(c_custkey AS VARCHAR)")} % 20 AS hv
          FROM customer)
        SELECT c_custkey,
               cents + CASE WHEN hv % 7 = 3 THEN 100 ELSE 0 END AS cents
@@ -332,11 +332,11 @@ object Snapshot {
 
   /** Generated DuckDB oracle for [[columnChurn]]. */
   val columnChurnOracleSql: String =
-    """WITH c AS (
+    s"""WITH c AS (
          SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nat,
                 c_mktsegment AS seg,
                 CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents,
-                ('0x' || substring(md5(CAST(c_custkey AS VARCHAR)), 1, 15))::BIGINT % 20 AS hv
+                ${PortableHash.h60Sql("CAST(c_custkey AS VARCHAR)")} % 20 AS hv
          FROM customer),
        base AS (SELECT c_custkey AS b_key, cents AS o_cents, nat AS o_nat,
                        seg AS o_seg

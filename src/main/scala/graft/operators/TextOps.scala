@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.functions.Shingles.{tokens, tokensSql}
 import graft.functions.TextAnalysis._
 
 /** Text-analysis operator block over `documents` (SURVEY.md §2 F). */
@@ -196,9 +197,9 @@ object TextOps {
       .mkString(",\n                ")
     s"""WITH q AS (
          SELECT doc_id, text,
-                len(string_split_regex(trim(text, ' '), '\\s+')) AS n_tokens,
-                round(CAST(len(list_distinct(string_split_regex(trim(text, ' '), '\\s+'))) AS DOUBLE)
-                      / len(string_split_regex(trim(text, ' '), '\\s+')), 6) AS dr,
+                len(${tokensSql("text")}) AS n_tokens,
+                round(CAST(len(list_distinct(${tokensSql("text")})) AS DOUBLE)
+                      / len(${tokensSql("text")}), 6) AS dr,
                 round(CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')) AS DOUBLE)
                       / length(text), 6) AS pr
          FROM documents),
@@ -271,7 +272,7 @@ object TextOps {
     s"""WITH fs AS (
          SELECT tk, min(doc_id) AS first_doc
          FROM (SELECT doc_id,
-                      unnest(string_split_regex(trim(text, ' '), '\\s+')) AS tk
+                      unnest(${tokensSql("text")}) AS tk
                FROM documents)
          WHERE tk <> '' GROUP BY tk),
        b AS (SELECT min(doc_id) AS id_min, max(doc_id) AS id_max
@@ -349,7 +350,7 @@ object TextOps {
   def textZipfSql: String =
     s"""WITH tf AS (
          SELECT tk AS term, CAST(count(*) AS BIGINT) AS freq
-         FROM (SELECT unnest(string_split_regex(trim(text, ' '), '\\s+')) AS tk
+         FROM (SELECT unnest(${tokensSql("text")}) AS tk
                FROM documents)
          WHERE tk <> '' GROUP BY tk),
        ranked AS (
@@ -497,9 +498,9 @@ object TextOps {
     val budgets = PackSweepBank.mkString(", ")
     s"""WITH base AS (
          SELECT source, doc_id,
-                CAST(len(string_split_regex(trim(text, ' '), '\\s+'))
+                CAST(len(${tokensSql("text")})
                      AS BIGINT) AS n_tok,
-                CAST(sum(len(string_split_regex(trim(text, ' '), '\\s+')))
+                CAST(sum(len(${tokensSql("text")}))
                   OVER (PARTITION BY source ORDER BY doc_id
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                   AS BIGINT) AS cum
@@ -1136,7 +1137,7 @@ object TextOps {
     }.mkString(",\n         ")
     s"""$chain,
          tok AS (SELECT doc_id,
-                   unnest(string_split_regex(trim(text, ' '), '\\s+')) AS w
+                   unnest(${tokensSql("text")}) AS w
                  FROM documents),
          enc0 AS (SELECT doc_id,
                     trim(regexp_replace(w, '(.)', '\\1 ', 'g'), ' ')
@@ -1227,7 +1228,7 @@ object TextOps {
     }.mkString("\n         UNION ALL ")
     (s"""vw AS (
           SELECT w AS word, CAST(count(*) AS BIGINT) AS freq
-          FROM (SELECT unnest(string_split_regex(trim(text, ' '), '\\s+')) AS w
+          FROM (SELECT unnest(${tokensSql("text")}) AS w
                 FROM documents)
           WHERE w <> '' GROUP BY w),
          v0 AS (SELECT trim(regexp_replace(word, '(.)', '\\1 ', 'g'), ' ')
@@ -1290,7 +1291,7 @@ object TextOps {
            GROUP BY d.node, d.wout, c.n)"""
     }.mkString(",\n         ")
     s"""WITH toks AS (
-           SELECT string_split_regex(trim(text, ' '), '\\s+') AS t
+           SELECT ${tokensSql("text")} AS t
            FROM documents),
          adjraw AS (
            SELECT least(t[i], t[i+1]) AS wa, greatest(t[i], t[i+1]) AS wb
@@ -1378,15 +1379,17 @@ object TextOps {
   }
 
   /** Generated DuckDB oracle for [[textRake]] — same stopword
-    * mapping, same split, same floor-divided micro scores. */
+    * mapping, same split, same floor-divided micro scores. The phrase
+    * split calls `regexp_split_to_array`, DuckDB's other name for
+    * `string_split_regex`, which `tools/gate.sh` keeps for the token
+    * twins. */
   def rakeOracleSql(topK: Int = 30): String = {
     val stops = StopWordList.map("'" + _ + "'").mkString(", ")
     s"""WITH toks AS (
-         SELECT string_split_regex(trim(lower(nfc_normalize(text)), ' '),
-                                   '\\s+') AS t
+         SELECT ${tokensSql("lower(nfc_normalize(text))")} AS t
          FROM documents),
        ph0 AS (
-         SELECT unnest(string_split_regex(
+         SELECT unnest(regexp_split_to_array(
            array_to_string(list_transform(t,
              x -> CASE WHEN x IN ($stops) THEN '|' ELSE x END), ' '),
            ' *\\| *')) AS phrase

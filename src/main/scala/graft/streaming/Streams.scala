@@ -582,7 +582,7 @@ object Streams {
       n: Int = 13): DataFrame = {
     def grams(c: org.apache.spark.sql.Column) =
       graft.functions.ShingleCol.nGramShingles(
-        graft.functions.TextAnalysis.tokens(c), n)
+        graft.functions.Shingles.tokens(c), n)
     val benchSet = benchDocs
       .select(explode(grams(col("text"))).as("gram"))
       .agg(collect_set(col("gram")).as("bench_grams"))
@@ -656,7 +656,7 @@ object Streams {
     val arr = new Array[Long](C.DsirBuckets)
     rows.foreach(r => arr(r.getLong(0).toInt) = r.getLong(1))
     val lrLit = array(arr.map(lit(_)).toSeq: _*)
-    val toks = graft.functions.TextAnalysis.tokens(col("text"))
+    val toks = graft.functions.Shingles.tokens(col("text"))
     val lw = aggregate(toks, lit(0L), (acc, w) =>
       acc + element_at(lrLit, (C.dsirBucket(w) + 1).cast("int")))
     docs

@@ -216,7 +216,6 @@ class CurationSpec extends SparkSpecBase {
   }
 
   test("sampleImportance: resampling provably moves the mix toward the target") {
-    import org.apache.spark.sql.functions._
     // disjoint vocabularies: target-domain docs speak alpha/beta/...,
     // off-domain docs speak zulu/yankee/... — the hashed-unigram
     // likelihood ratio is strongly positive for the first and strongly
@@ -252,7 +251,7 @@ class CurationSpec extends SparkSpecBase {
     assert(rows.map(_.getLong(1)).sum == docs.count())
     val totTok = docs
       .select(org.apache.spark.sql.functions.size(
-        graft.functions.TextAnalysis.tokens(col("text"))).cast("long").as("n"))
+        graft.functions.Shingles.tokens(col("text"))).cast("long").as("n"))
       .agg(org.apache.spark.sql.functions.sum("n")).head().getLong(0)
     assert(rows.map(_.getLong(2)).sum == totTok)
     // quality bands are ordered and non-overlapping: a doc in stage i

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextAnalysis
+import graft.functions.Shingles
 import graft.operators.{Curation, TextOps}
 
 /** Degenerate-input hardening: empty, whitespace-only, and
@@ -28,7 +28,7 @@ class EdgeCaseSpec extends SparkSpecBase {
     // (changing one side alone would break every text oracle). The
     // pipeline-relevant property: downstream gates fail such docs
     // closed (see the gopher test below).
-    val t = docs.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
+    val t = docs.select(col("doc_id"), Shingles.tokens(col("text")).as("t"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(t(0L) == Seq("") && t(1L) == Seq(""))
     assert(t(2L) == Seq("solo"))

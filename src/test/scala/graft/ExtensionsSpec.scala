@@ -38,7 +38,7 @@ class ExtensionsSpec extends SparkSpecBase {
       .createOrReplaceTempView("words")
 
     // minhash_agg: same signature as the Column-level aggregate
-    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.functions.col
     val viaSql = spark.sql(
       "SELECT minhash_agg(CAST(conv(substring(md5(w), 1, 15), 16, 10) AS BIGINT), 8) FROM words")
       .head().getSeq[Long](0)

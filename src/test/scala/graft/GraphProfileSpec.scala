@@ -339,7 +339,7 @@ class GraphProfileSpec extends SparkSpecBase {
 
   test("anomaly days: closed-form z = √10 construction; constant users guarded") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit, to_timestamp}
+    import org.apache.spark.sql.functions.{col, to_timestamp}
     // user 1: 10 days × 1 event + one 5-event day ⇒ for a single
     // outlier among 11 days, z = √10 ≈ 3.1623 regardless of its size
     val one = (1 to 10).map(d => (1L, f"2024-01-$d%02d 12:00:00")) ++
@@ -756,7 +756,6 @@ class GraphProfileSpec extends SparkSpecBase {
   }
 
   test("communities: consistent with component labels and edge totals") {
-    import org.apache.spark.sql.functions._
     val comm = graft.operators.Graph.supplierCommunities(spark, Sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))

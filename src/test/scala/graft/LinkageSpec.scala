@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Linkage
 
 /** Fuzzy dictionary join (operators/Linkage.scala): FastSS blocking

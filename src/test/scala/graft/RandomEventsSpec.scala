@@ -4,8 +4,6 @@ import java.sql.Timestamp
 
 import scala.util.Random
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Events
 
 /** Reference cross-checks for the two event operators with the

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions.col
-
 import graft.operators.Search
 
 /** Hybrid RRF fusion (operators/Search.scala). */

@@ -301,7 +301,6 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("streaming PSI drift monitor equals the batch formula per day") {
-    import graft.operators.Profile
     // declared reference: the corpus's own global mix (any constant
     // works; using real counts keeps psi near 0 and exercises signs)
     val ref = graft.core.Tables(spark, Sf).events
@@ -721,7 +720,6 @@ class StreamingSpec extends SparkSpecBase {
 
   test("streaming scd2: per-version merges land on the batch fold; replayed version converges") {
     import java.nio.file._
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val planted = Seq(
       (10L, 1, 100L), (10L, 2, 100L), (10L, 3, 100L),

@@ -37,6 +37,7 @@ class PipelinePackSpec extends SparkSpecBase {
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.Shingles.tokens
 import graft.functions.TextAnalysis._
 import graft.operators.TextOps
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextAnalysis
+import graft.functions.{Shingles, TextAnalysis}
 import graft.operators.{Dedup, TextOps}
 
 /** Engine-side unicode contracts. The full cross-engine story is the
@@ -53,7 +53,7 @@ class UnicodeSpec extends SparkSpecBase {
     // contract the oracle's trim(text, ' ') mirrors
     val t = "a　b  c 　　"
     val toks = Seq(t).toDF("text")
-      .select(TextAnalysis.tokens(col("text")).as("ts"))
+      .select(Shingles.tokens(col("text")).as("ts"))
       .head().getSeq[String](0)
     assert(toks == Seq("a　b", "c", "　　"))
   }

@@ -39,7 +39,10 @@ def main(sfdir, outdir):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-    names = sorted([os.path.basename(d) for d in glob.glob(f"{outdir}/*") if os.path.isdir(d)])
+    # every oracle key is checked, output or not: a query that threw
+    # while graft.Verify built it wrote no directory, and must fail
+    dirs = [os.path.basename(d) for d in glob.glob(f"{outdir}/*") if os.path.isdir(d)]
+    names = sorted(set(dirs) | set(oracle))
     n_pass = n_fail = n_rowsonly = 0
     for name in names:
         files = glob.glob(f"{outdir}/{name}/*.parquet")

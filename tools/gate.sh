@@ -29,6 +29,22 @@ if [ -n "$caches" ]; then
   exit 1
 fi
 
+# One SQL twin per kernel: the DuckDB oracles take their tokens, base
+# hash and 3-grams from the `…Sql` twin beside the Spark kernel
+# (PortableHash.h60Sql, Shingles.tokensSql/grams3Cte, TokenCol.
+# letterTokensSql), so a hand copy of that SQL elsewhere can drift.
+# Scaladoc lines that name the SQL form are exempt.
+echo "=== one SQL twin per kernel ==="
+twins=$(grep -rnE "substring\(md5\(|string_split_regex\(|list_transform\(range\(1, len\(t\) - 1\)" \
+    src/main/scala \
+  | grep -vE '^src/main/scala/graft/functions/(PortableHash|Shingles|TokenUtil)\.scala:' \
+  | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(/\*\*|\*)' || true)
+if [ -n "$twins" ]; then
+  echo "kernel SQL outside its twin (PortableHash/Shingles/TokenUtil.scala):"
+  echo "$twins"
+  exit 1
+fi
+
 echo "=== sbt test ==="
 sbt -batch test 2>&1 | grep -E "Tests:|\*\*\*" | tail -2
 
