@@ -157,7 +157,7 @@ object GraftFunctions {
       shinglesBuilder _),
     // the one-loop signature kernels, so an SQL-only user can run the
     // whole LSH/simhash dedup pipeline from plain SQL (see
-    // SparkEntry's dedup_minhash_lsh_sql — gated against the same
+    // Dedup's dedup_minhash_lsh_sql — gated against the same
     // DuckDB oracle as the DataFrame twin)
     (FunctionIdentifier("minhash_sig"),
       new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_sig"),

@@ -37,6 +37,24 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
+  /** SQL-first entry path: registers every table as a temp view plus
+    * graft's custom expressions ([[graft.GraftFunctions.register]],
+    * idempotent), then runs the query text through `spark.sql` — what
+    * an SQL-only user's session looks like. The `*_sql` queries go
+    * through here and are gated against the SAME DuckDB oracle as
+    * their DataFrame twins, so the SQL surface can't drift from the
+    * library one. */
+  def runSql(spark: SparkSession, dir: String, sql: String): DataFrame = {
+    val t = Tables(spark, dir)
+    Seq("region" -> t.region, "nation" -> t.nation, "customer" -> t.customer,
+      "supplier" -> t.supplier, "part" -> t.part, "orders" -> t.orders,
+      "lineitem" -> t.lineitem, "events" -> t.events,
+      "documents" -> t.documents, "embeddings" -> t.embeddings)
+      .foreach { case (n, df) => df.createOrReplaceTempView(n) }
+    graft.GraftFunctions.register(spark)
+    spark.sql(sql)
+  }
+
   /** Normalize a timestamp column to session-local TimestampType,
     * whatever the file encoding handed us — the ONE switch batch
     * ([[Tables]] accessors) and streaming

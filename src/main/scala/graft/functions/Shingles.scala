@@ -25,6 +25,20 @@ object Shingles {
   def grams3(text: Column): Column =
     graft.functions.ShingleCol.nGramShingles(tokens(text), 3)
 
+  /** DuckDB twin of [[ShingleCol.nGramShingles]] over the token-list
+    * column `t` (`n` ≥ 2): the word n-grams in order, or the one
+    * all-tokens shingle of a doc shorter than `n` tokens; the set of
+    * them when `distinct`. */
+  def nGramsSql(t: String, n: Int, distinct: Boolean): String = {
+    val gram = (0 until n).map(k => if (k == 0) s"$t[i]" else s"$t[i+$k]")
+      .mkString(" || ' ' || ")
+    val last = if (n == 2) s"len($t)" else s"len($t) - ${n - 2}"
+    val grams = s"list_transform(range(1, $last), i -> $gram)"
+    s"""CASE WHEN len($t) < $n THEN [array_to_string($t, ' ')]
+       ELSE ${if (distinct) s"list_distinct($grams)" else grams}
+       END"""
+  }
+
   /** DuckDB twin of [[grams3]]: the CTEs `toks(doc_id, t)`,
     * `g(doc_id, gs)` and `posts(doc_id, gram)` over `documents`, to
     * follow a `WITH`. */
@@ -33,11 +47,7 @@ object Shingles {
            SELECT doc_id, ${tokensSql("text")} AS t
            FROM documents),
          g AS (
-           SELECT doc_id,
-                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                       ELSE list_distinct(list_transform(range(1, len(t) - 1),
-                              i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                  END AS gs
+           SELECT doc_id, ${nGramsSql("t", 3, distinct = true)} AS gs
            FROM toks),
          posts AS (SELECT doc_id, unnest(gs) AS gram FROM g)"""
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, WorkingSet}
+import graft.core.{Query, Tables, WorkingSet}
 import graft.functions.{PortableHash, TopKScoreAgg, Vectors}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -27,7 +27,7 @@ import graft.functions.{PortableHash, TopKScoreAgg, Vectors}
 object Ann {
 
   private val NumQueries = 10
-  // public: oracle generators (SparkEntry's annSweepKSql) interpolate
+  // public: oracle generators (annSweepKSqlOver below) interpolate
   // the SAME constant, so a TopK edit moves both sides together
   // instead of silently diverging from a hard-coded literal bank
   val TopK = 5
@@ -365,7 +365,7 @@ object Ann {
     * assignment is a write-time bucketing ([[buildIvfIndex]]); the
     * plan shape (broadcast codebook, cell-key join) is identical.
     * Recall asserted in AnnSpec; oracle-checked (the codebook, argmax
-    * and probe rules are pure SQL — see SparkEntry). */
+    * and probe rules are pure SQL — see `ivfCtes`). */
   def ivf(spark: SparkSession, dir: String, nprobe: Int = NProbe,
       k: Int = IvfK): DataFrame = {
     val bc = bcast(spark, codebook(spark, dir, k))
@@ -1289,4 +1289,406 @@ object Ann {
         lit(null).cast("long").as("nn_rank"), col("rr_micro"))
     per.unionByName(total).orderBy(col("qid"))
   }
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    Query("ann_bruteforce", bruteforce, BruteforceTopkSql),
+    Query("ann_bruteforce_sql", (s, d) => Tables.runSql(s, d, BruteforceSparkSql),
+      BruteforceTopkSql),
+    // exact MIPS: same scan, dot-product kernel — both engines sum
+    // the DOUBLE-cast float products in index order
+    Query("ann_mips", mips,
+      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe
+                    FROM embeddings WHERE vec_id < 10),
+         scored AS (
+           SELECT q.qid, e.vec_id,
+                  round(list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qe),
+                        6) AS dot
+           FROM embeddings e CROSS JOIN q),
+         ranked AS (
+           SELECT qid, vec_id, dot,
+                  row_number() OVER (PARTITION BY qid
+                    ORDER BY dot DESC, vec_id) AS rank
+           FROM scored)
+         SELECT qid, rank, vec_id, dot FROM ranked
+         WHERE rank <= 5 ORDER BY qid, rank"""),
+    // exact filtered search: the label predicate applies BEFORE
+    // scoring on both sides, so top-k never starves below k
+    Query("ann_filtered", filtered,
+      """WITH q AS (SELECT vec_id AS qid, embedding AS qe, label AS qlabel
+                    FROM embeddings WHERE vec_id < 10),
+         scored AS (
+           SELECT q.qid, e.vec_id,
+                  round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+                        CAST(q.qe AS DOUBLE[])), 6) AS cosine
+           FROM embeddings e JOIN q ON e.label = q.qlabel),
+         ranked AS (
+           SELECT qid, vec_id, cosine,
+                  row_number() OVER (PARTITION BY qid
+                    ORDER BY cosine DESC, vec_id) AS rank
+           FROM scored)
+         SELECT qid, rank, vec_id, cosine FROM ranked
+         WHERE rank <= 5 ORDER BY qid, rank"""),
+    // the ivf chain with the label predicate INSIDE the probed cells
+    Query("ann_filtered_ivf", (s, d) => filteredIvf(s, d),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, label
+                    FROM embeddings),
+         c AS (${codebookCteSql("e")}),
+         cells AS (
+           SELECT vec_id, emb, label, cell FROM (
+             SELECT e.vec_id, e.emb, e.label, c.cent_id AS cell,
+                    row_number() OVER (PARTITION BY e.vec_id
+                      ORDER BY list_cosine_similarity(e.emb, c.ce) DESC,
+                               c.cent_id) AS rn
+             FROM e CROSS JOIN c) WHERE rn = 1),
+         q AS (SELECT vec_id AS qid, emb AS qe, label AS qlabel
+               FROM e WHERE vec_id < 10),
+         probes AS (
+           SELECT qid, qe, qlabel, cell FROM (
+             SELECT q.qid, q.qe, q.qlabel, c.cent_id AS cell,
+                    row_number() OVER (PARTITION BY q.qid
+                      ORDER BY list_cosine_similarity(q.qe, c.ce) DESC,
+                               c.cent_id) AS rn
+             FROM q CROSS JOIN c) WHERE rn <= 8),
+         scored AS (
+           SELECT DISTINCT p.qid, s.vec_id,
+                  round(list_cosine_similarity(s.emb, p.qe), 6) AS cosine
+           FROM cells s JOIN probes p ON p.cell = s.cell
+           WHERE s.label = p.qlabel),
+         ranked AS (
+           SELECT qid, vec_id, cosine,
+                  row_number() OVER (PARTITION BY qid
+                    ORDER BY cosine DESC, vec_id) AS rank
+           FROM scored)
+         SELECT qid, rank, vec_id, cosine FROM ranked
+         WHERE rank <= 5 ORDER BY qid, rank"""),
+    // Random-hyperplane LSH with the hyperplanes inlined as DOUBLE
+    // literals (the exact double values of Ann.planes' floats): same
+    // sign bits, same buckets, same Hamming-≤2 multiprobe ring, same
+    // candidate set, exact cosine top-5.
+    Query("ann_lsh", lsh, annLshSql),
+    // recall/MRR readout of ann_lsh vs the brute-force ground truth:
+    // the two proven CTE chains composed; metrics are id-join
+    // arithmetic with the reciprocal rank micro-quantized (exact
+    // BIGINT summary sum)
+    Query("ann_eval", evalLsh, annEvalSql),
+    // the harness over the IVF ranking: same truth + metrics tail
+    Query("ann_eval_ivf", evalIvf, annEvalIvfSql),
+    // recall@k bank over ONE joined ranking frame (k = 1..5)
+    Query("ann_sweep_k", sweepK, annSweepKSql),
+    // the same recall@k bank over the serving-tier IVF ranking
+    Query("ann_sweep_k_ivf", sweepKIvf, annSweepKIvfSql),
+    Query("ann_sweep_nprobe", sweepNprobe, sweepNprobeOracleSql),
+    // IVF is pure SQL end-to-end: deterministic codebook (the IvfK
+    // lowest-portable-hash vectors), nearest-cell argmax (csim desc,
+    // cent_id asc — the same tie-break as the Spark argmax over the
+    // broadcast codebook), probes, exact cosine top-5 over the cells.
+    Query("ann_ivf", (s, d) => ivf(s, d),
+      s"""WITH $ivfCtes
+         SELECT qid, rank, vec_id, cosine FROM ranked
+         WHERE rank <= 5 ORDER BY qid, rank"""),
+    // int8 quantization + 10× margin + exact float rerank provably
+    // recovers the exact top-5 on this corpus (AnnSpec measures
+    // recall@5 = 1.0; the margin dwarfs the ~1e-2 quantization noise
+    // on cosine) — so the brute-force top-k IS its oracle.
+    Query("ann_quantized", quantized, BruteforceTopkSql),
+    // full-pipeline PQ oracle (not the bruteforce shortcut): the
+    // approximate path is integer-exact end to end, so codes, ADC
+    // ordering, and the rerank all hash-match by construction rather
+    // than by recall luck
+    Query("ann_pq", pq, pqOracleSql),
+    // the trained twin comes from the SAME generator at PqTrainRounds,
+    // so the two oracles replay one codebook-trajectory definition
+    Query("ann_pq_trained", (s, d) => pqTrained(s, d), pqTrainedOracleSql),
+    // two-level IVF-PQ: coarse cosine cells + integer residual codes,
+    // probed-cell ADC, exact rerank — all integer-exact end to end
+    Query("ann_ivf_pq", (s, d) => ivfPq(s, d), ivfPqOracleSql),
+    // Per-(label, dim) means over the embedding corpus; DOUBLE[] cast
+    // on both sides so the accumulation arithmetic matches.
+    Query("emb_centroids", centroidStats,
+      """SELECT label, i - 1 AS dim, count(*) AS n,
+                round(avg(CAST(embedding AS DOUBLE[])[i]), 6) AS mean_v
+         FROM embeddings CROSS JOIN (SELECT unnest(range(1, 65)) AS i)
+         GROUP BY label, dim ORDER BY label, dim"""),
+    // Bucketed KNN self-join: deterministic given the planes, so the
+    // bucket rule is the semantics and the oracle checks it exactly.
+    Query("ann_knn_join", (s, d) => knnJoin(s, d), annKnnJoinSql),
+    Query("ann_range", (s, d) => rangeSearch(s, d),
+      """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
+                      WHERE vec_id < 10),
+         scored AS (
+           SELECT q.qid, e.vec_id,
+                  round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+                        CAST(q.qe AS DOUBLE[])), 6) AS cosine
+           FROM embeddings e CROSS JOIN q
+           WHERE e.vec_id <> q.qid)
+         SELECT qid, vec_id, cosine FROM scored
+         WHERE cosine >= 0.15 ORDER BY qid, vec_id"""),
+  )
+
+  private val BruteforceTopkSql =
+    """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
+                    WHERE vec_id < 10),
+         scored AS (
+           SELECT q.qid, e.vec_id,
+                  round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+                        CAST(q.qe AS DOUBLE[])), 6) AS cosine
+           FROM embeddings e CROSS JOIN q),
+         ranked AS (
+           SELECT qid, vec_id, cosine,
+                  row_number() OVER (PARTITION BY qid
+                    ORDER BY cosine DESC, vec_id) AS rank
+           FROM scored)
+         SELECT qid, rank, vec_id, cosine FROM ranked
+         WHERE rank <= 5 ORDER BY qid, rank"""
+
+  /** Shared LSH-bucket CTE prefix (`e`/`b`/`ck`), generated from the
+    * same plane constants the Spark operators use: per-vector
+    * DOUBLE[] cast, the 4 per-table 8-sign-bit bucket ints, and the
+    * 4 "t#bucket" corpus keys. */
+  private lazy val lshBucketCte: String = {
+    def planeLit(p: Array[Float]): String =
+      p.map(_.toDouble.toString).mkString("[", ", ", "]")
+    def bucketExpr(t: Int): String =
+      (0 until 8).map { b =>
+        s"CASE WHEN list_cosine_similarity(emb, ${planeLit(planes(t * 8 + b))}) > 0 THEN ${1 << b} ELSE 0 END"
+      }.mkString("\n                  + ")
+    val bucketCols = (0 until 4)
+      .map(t => s"${bucketExpr(t)} AS b$t").mkString(",\n                ")
+    val corpusKeys = (0 until 4)
+      .map(t => s"'$t#' || CAST(b$t AS VARCHAR)").mkString(", ")
+    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
+                   FROM embeddings),
+         b AS (SELECT vec_id,
+                $bucketCols
+               FROM e),
+         ck AS (SELECT vec_id, unnest([$corpusKeys]) AS k FROM b)"""
+  }
+
+  /** ann_lsh oracle, generated from the same plane constants and probe
+    * masks the Spark operator uses. */
+  private lazy val annLshSql: String = {
+    val probeKeys = (0 until 4)
+      .map(t => s"'$t#' || CAST(xor(b$t, m) AS VARCHAR)").mkString(", ")
+    val masks = probeMasks.mkString("[", ", ", "]")
+    s"""WITH $lshBucketCte,
+         pm AS (SELECT unnest($masks) AS m),
+         pk AS (SELECT qid, unnest([$probeKeys]) AS k
+                FROM (SELECT vec_id AS qid, b0, b1, b2, b3 FROM b
+                      WHERE vec_id < 10)
+                CROSS JOIN pm),
+         cand AS (SELECT DISTINCT pk.qid, ck.vec_id
+                  FROM ck JOIN pk ON ck.k = pk.k),
+         scored AS (
+           SELECT c.qid, c.vec_id,
+                  round(list_cosine_similarity(ec.emb, eq.emb), 6) AS cosine
+           FROM cand c
+           JOIN e ec ON ec.vec_id = c.vec_id
+           JOIN e eq ON eq.vec_id = c.qid),
+         ranked AS (
+           SELECT qid, vec_id, cosine,
+                  row_number() OVER (PARTITION BY qid
+                    ORDER BY cosine DESC, vec_id) AS rank
+           FROM scored)
+         SELECT qid, rank, vec_id, cosine FROM ranked
+         WHERE rank <= 5 ORDER BY qid, rank"""
+  }
+
+  /** The ann_ivf CTE chain ending at `ranked` — shared by the ann_ivf
+    * oracle and the IVF eval oracle (one SQL statement of truth,
+    * same constants as the Spark operator: hash-ordered codebook of
+    * [[IvfK]] cells via the shared
+    * [[codebookCteSql]] fragment, nprobe 8,
+    * query set < 10). */
+  private val ivfCtes: String =
+    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
+                    FROM embeddings),
+         c AS (${codebookCteSql("e")}),
+         cells AS (
+           SELECT vec_id, emb, cell FROM (
+             SELECT e.vec_id, e.emb, c.cent_id AS cell,
+                    row_number() OVER (PARTITION BY e.vec_id
+                      ORDER BY list_cosine_similarity(e.emb, c.ce) DESC,
+                               c.cent_id) AS rn
+             FROM e CROSS JOIN c) WHERE rn = 1),
+         q AS (SELECT vec_id AS qid, emb AS qe FROM e WHERE vec_id < 10),
+         probes AS (
+           SELECT qid, qe, cell FROM (
+             SELECT q.qid, q.qe, c.cent_id AS cell,
+                    row_number() OVER (PARTITION BY q.qid
+                      ORDER BY list_cosine_similarity(q.qe, c.ce) DESC,
+                               c.cent_id) AS rn
+             FROM q CROSS JOIN c) WHERE rn <= 8),
+         scored AS (
+           SELECT DISTINCT p.qid, s.vec_id,
+                  round(list_cosine_similarity(s.emb, p.qe), 6) AS cosine
+           FROM cells s JOIN probes p ON p.cell = s.cell),
+         ranked AS (
+           SELECT qid, vec_id, cosine,
+                  row_number() OVER (PARTITION BY qid
+                    ORDER BY cosine DESC, vec_id) AS rank
+           FROM scored)"""
+
+  /** Brute-force truth CTEs (`scored_b` + `t`) over an existing `e`
+    * CTE — shared by every eval oracle. */
+  private val bruteTruthCtes: String =
+    """scored_b AS (
+           SELECT q.qid, c.vec_id,
+                  round(list_cosine_similarity(c.emb, q.emb), 6) AS cosine
+           FROM e c CROSS JOIN
+             (SELECT vec_id AS qid, emb FROM e WHERE vec_id < 10) q),
+         t AS (
+           SELECT qid, vec_id, rank FROM (
+             SELECT qid, vec_id,
+                    row_number() OVER (PARTITION BY qid
+                      ORDER BY cosine DESC, vec_id) AS rank
+             FROM scored_b) WHERE rank <= 5)"""
+
+  /** Shared eval tail over CTEs `al` (approx top-5) and `t` (truth
+    * top-5): overlap/recall/reciprocal-rank metrics — id joins only,
+    * the reciprocal rank micro-quantized so the summary MRR
+    * numerator is an exact BIGINT sum. ONE statement of truth for
+    * every ranking the harness scores. */
+  private val evalTailSql: String =
+    """kq AS (SELECT qid, CAST(count(*) AS BIGINT) AS k_truth
+                FROM t GROUP BY 1),
+         ov AS (SELECT t.qid, CAST(count(*) AS BIGINT) AS n_overlap
+                FROM t JOIN al ON al.qid = t.qid AND al.vec_id = t.vec_id
+                GROUP BY 1),
+         nn2 AS (SELECT qid, vec_id FROM t WHERE rank = 2),
+         nr AS (SELECT nn2.qid, CAST(al.rank AS BIGINT) AS nn_rank
+                FROM nn2 LEFT JOIN al
+                  ON al.qid = nn2.qid AND al.vec_id = nn2.vec_id),
+         per AS (
+           SELECT kq.qid,
+                  coalesce(ov.n_overlap, CAST(0 AS BIGINT)) AS n_overlap,
+                  round(CAST(coalesce(ov.n_overlap, 0) AS DOUBLE)
+                        / CAST(kq.k_truth AS DOUBLE), 6) AS recall,
+                  nr.nn_rank,
+                  coalesce(CAST(round(1e6 / nr.nn_rank, 0) AS BIGINT),
+                           CAST(0 AS BIGINT)) AS rr_micro,
+                  kq.k_truth
+           FROM kq LEFT JOIN ov ON ov.qid = kq.qid
+                   LEFT JOIN nr ON nr.qid = kq.qid)
+         SELECT qid, n_overlap, recall, nn_rank, rr_micro FROM per
+         UNION ALL
+         SELECT CAST(-1 AS BIGINT), CAST(sum(n_overlap) AS BIGINT),
+                round(CAST(sum(n_overlap) AS DOUBLE)
+                      / CAST(sum(k_truth) AS DOUBLE), 6),
+                CAST(NULL AS BIGINT), CAST(sum(rr_micro) AS BIGINT)
+         FROM per
+         ORDER BY qid"""
+
+  /** ann_sweep_k oracle family: the truth chain + a caller-chosen
+    * approx ranking composed as CTEs, one conditional-count arm per
+    * k over the single joined frame — the same one-pass bank the
+    * Spark side runs. The k bank interpolates [[TopK]]
+    * (the constant the Spark side derives its sequence from), so a
+    * TopK edit moves oracle and operator together. */
+  private def annSweepKSqlOver(approxSql: String): String =
+    s"""WITH truth_r AS ($BruteforceTopkSql),
+         approx_r AS ($approxSql),
+         j AS (SELECT t.qid, t.rank AS trank, a.rank AS arank
+               FROM truth_r t LEFT JOIN approx_r a
+                 ON a.qid = t.qid AND a.vec_id = t.vec_id),
+         f AS (SELECT j.*, ks.k
+               FROM j CROSS JOIN
+                 (SELECT unnest(range(1, ${TopK + 1}))
+                    AS k) ks)
+       SELECT CAST(k AS BIGINT) AS k,
+              CAST(sum(CASE WHEN trank <= k AND arank IS NOT NULL
+                             AND arank <= k THEN 1 ELSE 0 END) AS BIGINT)
+                AS n_hit,
+              CAST(sum(CASE WHEN trank <= k THEN 1 ELSE 0 END) AS BIGINT)
+                AS n_truth,
+              round(CAST(sum(CASE WHEN trank <= k AND arank IS NOT NULL
+                              AND arank <= k THEN 1 ELSE 0 END) AS DOUBLE)
+                    / CAST(sum(CASE WHEN trank <= k THEN 1 ELSE 0 END)
+                           AS DOUBLE), 6) AS recall
+       FROM f GROUP BY k ORDER BY k"""
+
+  private lazy val annSweepKSql: String = annSweepKSqlOver(annLshSql)
+
+  /** ann_sweep_k_ivf oracle: the same bank over the SERVING-TIER ivf
+    * ranking (the nested WITH scopes the ivf CTE names locally, so
+    * they can't collide with the truth chain's). */
+  private lazy val annSweepKIvfSql: String = annSweepKSqlOver(
+    s"""WITH $ivfCtes
+        SELECT qid, rank, vec_id, cosine FROM ranked
+        WHERE rank <= ${TopK}""")
+
+  /** ann_eval oracle: the ann_lsh chain, the brute-force chain, and
+    * the shared metrics tail composed. */
+  private lazy val annEvalSql: String = {
+    val probeKeys = (0 until 4)
+      .map(t => s"'$t#' || CAST(xor(b$t, m) AS VARCHAR)").mkString(", ")
+    val masks = probeMasks.mkString("[", ", ", "]")
+    s"""WITH $lshBucketCte,
+         pm AS (SELECT unnest($masks) AS m),
+         pk AS (SELECT qid, unnest([$probeKeys]) AS k
+                FROM (SELECT vec_id AS qid, b0, b1, b2, b3 FROM b
+                      WHERE vec_id < 10)
+                CROSS JOIN pm),
+         cand AS (SELECT DISTINCT pk.qid, ck.vec_id
+                  FROM ck JOIN pk ON ck.k = pk.k),
+         scored_l AS (
+           SELECT c.qid, c.vec_id,
+                  round(list_cosine_similarity(ec.emb, eq.emb), 6) AS cosine
+           FROM cand c
+           JOIN e ec ON ec.vec_id = c.vec_id
+           JOIN e eq ON eq.vec_id = c.qid),
+         al AS (
+           SELECT qid, vec_id, rank FROM (
+             SELECT qid, vec_id,
+                    row_number() OVER (PARTITION BY qid
+                      ORDER BY cosine DESC, vec_id) AS rank
+             FROM scored_l) WHERE rank <= 5),
+         $bruteTruthCtes,
+         $evalTailSql"""
+  }
+
+  /** ann_eval_ivf oracle: the ann_ivf chain + the same truth and
+    * metrics tail. */
+  private lazy val annEvalIvfSql: String =
+    s"""WITH $ivfCtes,
+         al AS (SELECT qid, vec_id, rank FROM ranked WHERE rank <= 5),
+         $bruteTruthCtes,
+         $evalTailSql"""
+
+  /** ann_knn_join oracle: same bucket CTE, self-joined. */
+  private lazy val annKnnJoinSql: String =
+    s"""WITH $lshBucketCte,
+         cand AS (SELECT DISTINCT a.vec_id AS qid, b.vec_id AS vid
+                  FROM ck a JOIN ck b
+                    ON a.k = b.k AND a.vec_id <> b.vec_id),
+         scored AS (
+           SELECT c.qid, c.vid AS vec_id,
+                  round(list_cosine_similarity(ea.emb, eb.emb), 6) AS cosine
+           FROM cand c
+           JOIN e ea ON ea.vec_id = c.qid
+           JOIN e eb ON eb.vec_id = c.vid),
+         ranked AS (
+           SELECT qid, vec_id, cosine,
+                  row_number() OVER (PARTITION BY qid
+                    ORDER BY cosine DESC, vec_id) AS rank
+           FROM scored)
+         SELECT qid, rank, vec_id, cosine FROM ranked
+         WHERE rank <= 3 ORDER BY qid, rank"""
+
+  /** [[bruteforce]] in plain SQL: broadcast the
+    * 10-query side, score with the registered `cosine_sim`, keep
+    * top-5 per query with the registered bounded-heap
+    * `topk_by_score` aggregate — never a corpus-wide sort. */
+  private val BruteforceSparkSql =
+    """WITH q AS (SELECT vec_id AS qid, embedding AS qe
+                  FROM embeddings WHERE vec_id < 10),
+         scored AS (SELECT /*+ BROADCAST(q) */ q.qid, e.vec_id,
+                           round(cosine_sim(e.embedding, q.qe), 6) AS cosine
+                    FROM embeddings e CROSS JOIN q),
+         tk AS (SELECT qid, topk_by_score(cosine, vec_id, 5) AS top
+                FROM scored GROUP BY qid)
+       SELECT qid, CAST(pos + 1 AS INT) AS rank,
+              col.id AS vec_id, col.score AS cosine
+       FROM tk LATERAL VIEW posexplode(top) t AS pos, col
+       ORDER BY qid, rank"""
 }

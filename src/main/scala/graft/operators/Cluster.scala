@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.core.{Tables, WorkingSet}
+import graft.core.{Query, Tables, WorkingSet}
 import graft.functions.PortableHash
 
 /** Nearest-centroid assignment over QUANTIZED (integer) vectors as
@@ -629,4 +629,25 @@ object Cluster {
          SELECT CAST(f.j AS INT) AS dim_idx, CAST(f.v * sg.s AS BIGINT) AS v
          FROM v$rounds f, sg ORDER BY dim_idx"""
   }
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    // generated unrolled-CTE Lloyd's rounds (the PageRank trick):
+    // same quantization, seeds, and truncating-integer updates
+    Query("emb_kmeans", (s, d) => embKmeans(s, d), kmeansOracleSql()),
+    // per-cluster simplified silhouette in integer micro-units over
+    // the same unrolled Lloyd's chain (d3 already holds all n×k
+    // final-round distances)
+    Query("emb_kmeans_eval", (s, d) => embKmeansEval(s, d), kmeansEvalOracleSql()),
+    // power iteration on the second-moment matrix: exact-integer
+    // matvec + L-infinity renormalize rounds unrolled in HUGEINT
+    Query("emb_pca", embPca, embPcaOracleSql()),
+    // resume(2 cold + 2 warm) is BIT-identical to the straight 3-round
+    // run (the warm phase's first assignment replays the cold run's
+    // last), so the oracle IS the cold query's generated unroll at the
+    // combined round count — the strongest possible resume statement
+    Query("emb_kmeans_resume", (s, d) => embKmeansResume(s, d), kmeansOracleSql(8, 3)),
+    // same CTE chain + DOUBLE quota arithmetic + bottom-m-by-hash
+    Query("emb_coreset", (s, d) => embCoreset(s, d), coresetOracleSql()),
+  )
 }

@@ -3,10 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, WorkingSet}
+import graft.core.{Query, Tables, WorkingSet}
 import graft.functions.PortableHash
 import graft.functions.ShingleCol
-import graft.functions.Shingles.{tokens, tokensSql}
+import graft.functions.Shingles.{nGramsSql, tokens, tokensSql}
 import graft.functions.TextAnalysis._
 
 /** Corpus-curation operators — the document-level gates and sweeps a
@@ -200,11 +200,7 @@ object Curation {
          SELECT doc_id, source, ${tokensSql("text")} AS t
          FROM documents),
        g AS (
-         SELECT doc_id, source,
-                CASE WHEN len(t) < 13 THEN [array_to_string(t, ' ')]
-                     ELSE list_distinct(list_transform(range(1, len(t) - 11),
-                            i -> array_to_string(t[i:i+12], ' ')))
-                END AS gs
+         SELECT doc_id, source, ${nGramsSql("t", 13, distinct = true)} AS gs
          FROM toks),
        bench AS (SELECT DISTINCT unnest(gs) AS gram FROM g
                  WHERE source = 'src0'),
@@ -953,5 +949,155 @@ object Curation {
                 CAST(sum(n_tok) AS BIGINT) AS budget_tokens,
                 min(q_micro) AS q_min, max(q_micro) AS q_max
          FROM st GROUP BY stage ORDER BY stage"""
+  }
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    // Non-distinct bigram list (the duplicate count IS the signal);
+    // same degenerate len<2 rule as the shingle expression.
+    Query("text_repetition", textRepetition,
+      s"""WITH toks AS (
+           SELECT doc_id, ${tokensSql("text")} AS t
+           FROM documents),
+         g AS (
+           SELECT doc_id, ${nGramsSql("t", 2, distinct = false)} AS bgs
+           FROM toks)
+         SELECT doc_id, len(bgs) AS n_bigrams,
+                len(list_distinct(bgs)) AS n_distinct,
+                round(1.0 - len(list_distinct(bgs)) * 1.0 / len(bgs), 6)
+                  AS rep_ratio
+         FROM g ORDER BY doc_id"""),
+    // Flags compare against the 6dp-rounded metrics on both engines,
+    // so gate decisions can't flip on accumulation order.
+    Query("text_gopher", textGopher,
+      s"""WITH tk AS (
+           SELECT doc_id,
+                  unnest(${tokensSql("text")}) AS tok
+           FROM documents),
+         per AS (
+           SELECT doc_id, count(*) AS n_tokens,
+                  sum(length(tok)) AS tok_chars,
+                  count(DISTINCT CASE WHEN tok IN
+                    ('the','a','of','and','to','in','is','on','for','with')
+                    THEN tok END) AS n_stop
+           FROM tk GROUP BY doc_id),
+         m AS (
+           SELECT d.doc_id, per.n_tokens,
+                  round(per.tok_chars * 1.0 / per.n_tokens, 6) AS avg_word_len,
+                  CASE WHEN length(d.text) = 0 THEN 0.0
+                       ELSE round(CAST(length(d.text) - length(regexp_replace(d.text, '[^A-Za-z0-9 ]', '', 'g')) AS DOUBLE)
+                                  / length(d.text), 6) END AS punct_ratio,
+                  per.n_stop
+           FROM documents d JOIN per ON per.doc_id = d.doc_id)
+         SELECT doc_id, n_tokens, avg_word_len, punct_ratio, n_stop,
+                n_tokens BETWEEN 20 AND 1000 AS ok_len,
+                avg_word_len BETWEEN 2.0 AND 10.0 AS ok_word_len,
+                punct_ratio <= 0.2 AS ok_symbol,
+                n_stop >= 2 AS ok_stop,
+                (n_tokens BETWEEN 20 AND 1000)
+                  AND (avg_word_len BETWEEN 2.0 AND 10.0)
+                  AND punct_ratio <= 0.2 AND n_stop >= 2 AS keep
+         FROM m ORDER BY doc_id"""),
+    // Distinct 13-gram overlap vs the src0 "benchmark" documents (the
+    // GPT-3/Gopher decontamination window) — same shingle rule as the
+    // Spark expression (degenerate len<13 → one all-tokens shingle).
+    Query("pipeline_decontam", (s, d) => pipelineDecontam(s, d),
+      s"""WITH toks AS (
+           SELECT doc_id, source, ${tokensSql("text")} AS t
+           FROM documents),
+         g AS (
+           SELECT doc_id, source, ${nGramsSql("t", 13, distinct = true)} AS gs
+           FROM toks),
+         bench AS (SELECT DISTINCT unnest(gs) AS gram FROM g
+                   WHERE source = 'src0'),
+         posts AS (SELECT doc_id, unnest(gs) AS gram FROM g
+                   WHERE source <> 'src0'),
+         hits AS (SELECT p.doc_id, count(*) AS n_hits
+                  FROM posts p JOIN bench b ON p.gram = b.gram
+                  GROUP BY p.doc_id)
+         SELECT d.doc_id, d.source,
+                coalesce(h.n_hits, 0) AS n_hits,
+                coalesce(h.n_hits, 0) > 0 AS contaminated
+         FROM (SELECT doc_id, source FROM documents WHERE source <> 'src0') d
+         LEFT JOIN hits h ON h.doc_id = d.doc_id
+         ORDER BY d.doc_id"""),
+    // Integer thresholds (floor div) + the portable md5-60bit hash —
+    // the sample membership is bit-identical across engines.
+    Query("sample_stratified", sampleStratified,
+      s"""WITH counts AS (SELECT lang, count(*) AS n_lang FROM documents
+                         GROUP BY lang),
+         m AS (SELECT min(n_lang) AS min_n FROM counts),
+         th AS (SELECT lang, (min_n * 1048576) // n_lang AS thresh
+                FROM counts CROSS JOIN m),
+         h AS (SELECT doc_id, lang,
+                      ${PortableHash.h60Sql("'smp#' || CAST(doc_id AS VARCHAR)")}
+                        % 1048576 AS b
+               FROM documents)
+         SELECT h.doc_id, h.lang FROM h JOIN th ON th.lang = h.lang
+         WHERE h.b < th.thresh ORDER BY h.doc_id"""),
+    // α=0.5 temperature rebalance: forced-double sqrt threshold chain
+    // (IEEE-correctly-rounded ops in declared order ⇒ identical
+    // integer thresholds), then the portable-hash keep gate
+    Query("sample_temperature", sampleTemperature, sampleTemperatureSql),
+    // α bank from sqrt compositions only (general pow is not
+    // correctly rounded and would hash-diverge); one pass, ≤3×langs
+    Query("sample_temperature_sweep", sampleTemperatureSweep,
+      sampleTemperatureSweepSql),
+    // Weight-proportional hash gate: keep iff hash mod 2^20 is below
+    // floor(w * 2^20) — DOUBLE forced before every division/floor so
+    // both engines derive the identical integer threshold.
+    Query("sample_weighted", sampleWeighted,
+      s"""SELECT doc_id,
+                round(least(CAST(1 AS DOUBLE), CAST(length(text) AS DOUBLE) / 500.0), 6) AS weight
+         FROM documents
+         WHERE ${PortableHash.h60Sql("'wsmp#' || CAST(doc_id AS VARCHAR)")} % 1048576
+               < CAST(floor(least(CAST(1 AS DOUBLE), CAST(length(text) AS DOUBLE) / 500.0) * 1048576) AS BIGINT)
+         ORDER BY doc_id"""),
+    Query("sample_uniform_k", (s, d) => sampleUniformK(s, d), sampleUniformKSql()),
+    // Generated from Curation.MixTargetsPpm (operator and oracle
+    // share the mix by construction): BIGINT water-line capacity,
+    // forced-DOUBLE fraction in the identical IEEE op order, the
+    // same portable-hash membership gate.
+    Query("pipeline_mix", pipelineMix, mixOracleSql),
+    Query("pipeline_funnel", (s, d) => pipelineFunnel(s, d), funnelOracleSql),
+    Query("pipeline_shuffle", pipelineShuffle, shuffleOracleSql),
+    // decile stages from the portable bottom-k sample (the
+    // profile_quantiles rank rule at pct = 10·i) over a declared
+    // integer quality composite — no NTILE window over the corpus
+    Query("pipeline_curriculum", pipelineCurriculum, curriculumOracleSql),
+    // per-group bottom-k sample: same hash, same (hash, id) order,
+    // same cut — the window formulation is the oracle, the bounded
+    // aggregate is the plan
+    Query("sample_per_group", samplePerGroup, perGroupOracleSql),
+    // DSIR importance resampling: hashed-unigram likelihood ratios in
+    // exact micro-nats, integer log-u keep gate (no exp/float
+    // boundary anywhere) — generated from the same constants
+    Query("sample_importance", sampleImportance, importanceOracleSql),
+    // Generated from the same Curation.PiiPatterns strings, applied
+    // in the same order; DuckDB needs the explicit 'g' flag to match
+    // Spark's replace-all default.
+    Query("pipeline_pii", pipelinePii, piiSql),
+  )
+
+  /** pipeline_pii oracle, generated from [[PiiPatterns]] so
+    * the two sides can never drift. */
+  private def piiSql: String = {
+    // progressive counting mirror: pattern i counts on the text
+    // already redacted by patterns 0..i-1, exactly like the Spark side
+    val stages = PiiPatterns.scanLeft("text") {
+      case (acc, (_, p, repl)) => s"regexp_replace($acc, '$p', '$repl', 'g')"
+    }
+    val counts = PiiPatterns.zipWithIndex.map { case ((n, p, _), i) =>
+      s"len(regexp_extract_all(${stages(i)}, '$p')) AS n_$n"
+    }.mkString(",\n                ")
+    val clean = stages.last
+    val hasPii = PiiPatterns
+      .map { case (n, _, _) => s"n_$n > 0" }.mkString(" OR ")
+    s"""WITH c AS (SELECT doc_id,
+                $counts,
+                $clean AS clean
+         FROM documents)
+       SELECT doc_id, n_email, n_ip, n_phone, clean, ($hasPii) AS has_pii
+       FROM c ORDER BY doc_id"""
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Fixpoint, Tables, WorkingSet}
+import graft.core.{Fixpoint, Query, Tables, WorkingSet}
 import graft.functions.PortableHash
 import graft.functions.Shingles._
 import graft.functions.Vectors
@@ -1264,4 +1264,358 @@ object Dedup {
       .filter(col("cosine") >= tau)
       .sortWithinPartitions("v1", "v2")
   }
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    // per-source duplication ppm — two map-side aggregates
+    Query("dedup_report", dedupReport, dedupReportSql),
+    // the near-dup pair set attributed to unordered source pairs —
+    // diagonal = within-feed dup, off-diagonal = feed copies feed
+    Query("dedup_cross_source", dedupCrossSource,
+      s"""WITH p AS ($NgramJaccardPairsSql)
+         SELECT least(da.source, db.source) AS source_a,
+                greatest(da.source, db.source) AS source_b,
+                CAST(count(*) AS BIGINT) AS n_pairs
+         FROM p JOIN documents da ON da.doc_id = p.d1
+                JOIN documents db ON db.doc_id = p.d2
+         GROUP BY 1, 2 ORDER BY 1, 2"""),
+    Query("dedup_exact", exact,
+      """SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n_dups
+         FROM documents GROUP BY md5(text) ORDER BY h"""),
+    // SQL-surface twins (see the *SparkSql vals): the same operator
+    // semantics typed as plain SQL, gated against the SAME oracle text
+    // as the DataFrame operator — twin drift hash-fails
+    Query("dedup_exact_sql", (s, d) => Tables.runSql(s, d, DedupExactSparkSql),
+      """SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n_dups
+         FROM documents GROUP BY md5(text) ORDER BY h"""),
+    Query("dedup_minhash_lsh_sql", (s, d) => Tables.runSql(s, d, MinhashLshSparkSql),
+      minhashLshSql),
+    Query("dedup_simhash_sql", (s, d) => Tables.runSql(s, d, SimhashSparkSql), simhashSql),
+    // NFC + utf8proc-lower (the normalize_text twin) + ASCII \s+
+    // collapse, then the same exact grouping
+    Query("dedup_normalized", exactNormalized,
+      """SELECT md5(trim(regexp_replace(lower(nfc_normalize(text)),
+                '\s+', ' ', 'g'), ' ')) AS h,
+                min(doc_id) AS keep_id, count(*) AS n_dups
+         FROM documents
+         GROUP BY 1 ORDER BY h"""),
+    // maxDf passed explicitly: the 100 TB operating configuration of
+    // the capped candidate generation (public default is exact/uncapped)
+    Query("dedup_ngram_jaccard", (s, d) => ngramJaccard(s, d, maxDf = 1000), NgramJaccardPairsSql),
+    // MinHash-LSH over the portable hash family: identical 32-entry
+    // signatures (md5-60bit base, affine salts over 2³¹−1, literal
+    // parameters below), identical "band#v_v_v_v" bucket keys, exact
+    // Jaccard verify on candidates.
+    Query("dedup_minhash_lsh", (s, d) => minhashLsh(s, d), minhashLshSql),
+    Query("dedup_incremental", (s, d) => incremental(s, d), dedupIncrementalSql),
+    // SimHash over the portable 60-bit base hash: bit-identical
+    // signatures (votes per bit, sign-packed), 4×16-bit chunk
+    // buckets, bit_count(xor) Hamming verify.
+    Query("dedup_simhash", (s, d) => simhash(s, d), simhashSql),
+    // one loosest-threshold candidate pass serves the whole radius bank
+    Query("dedup_sweep_hamming", sweepHamming, sweepHammingSql),
+    Query("dedup_embedding", (s, d) => embedding(s, d),
+      """SELECT a.vec_id AS v1, b.vec_id AS v2,
+                round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                      CAST(b.embedding AS DOUBLE[])), 6) AS cosine
+         FROM embeddings a JOIN embeddings b
+           ON a.label = b.label AND a.vec_id < b.vec_id
+         WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                     CAST(b.embedding AS DOUBLE[])), 6) >= 0.4
+         ORDER BY v1, v2"""),
+    // threshold-tuning readout: one pair pass at the bank's lowest
+    // bound, tighter thresholds sliced row-locally; absent → 0
+    Query("dedup_sweep", sweep, sweepOracleSql),
+    Query("dedup_sweep_jaccard", sweepJaccard, sweepJaccardOracleSql),
+    Query("dedup_sweep_lsh", (s, d) => sweepLsh(s, d), sweepLshOracleSql()),
+    // the k-means CTE chain is the SAME statement the emb_kmeans
+    // oracle uses — the clustering trajectory has one source of truth
+    Query("dedup_semantic", (s, d) => semantic(s, d), {
+      s"""WITH ${Cluster.kmeansAssignCtes()},
+         ec AS (SELECT em.vec_id, em.embedding, a.cid
+                FROM embeddings em JOIN a3 a ON em.vec_id = a.vec_id)
+         SELECT a.vec_id AS v1, b.vec_id AS v2,
+                CAST(a.cid AS BIGINT) AS cluster,
+                round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                      CAST(b.embedding AS DOUBLE[])), 6) AS cosine
+         FROM ec a JOIN ec b
+           ON a.cid = b.cid AND a.vec_id < b.vec_id
+         WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                     CAST(b.embedding AS DOUBLE[])), 6) >= 0.4
+         ORDER BY v1, v2"""
+    }),
+    // same content-defined anchors (base-31 polynomial of the 4-gram
+    // at each position, mod 17 = 0 — coprime modulus, see
+    // Dedup.substringSpans; first term widened to BIGINT so astral
+    // code points can't overflow INT32) and the same 64-char window
+    // hash
+    Query("dedup_substring", (s, d) => substringSpans(s, d),
+      """WITH docs AS (SELECT doc_id, text, length(text) AS len,
+                       [ascii(x) FOR x IN string_split(text, '')] AS codes
+                       FROM documents WHERE length(text) >= 64),
+         a AS (SELECT doc_id, CAST(p AS INT) AS p, text
+               FROM docs, unnest(range(1, len - 64 + 2)) AS t(p)
+               WHERE (CAST(codes[CAST(p AS INT)] AS BIGINT) * 29791
+                    + codes[CAST(p AS INT) + 1] * 961
+                    + codes[CAST(p AS INT) + 2] * 31
+                    + codes[CAST(p AS INT) + 3]) % 17 = 0),
+         w AS (SELECT doc_id, md5(substring(text, p, 64)) AS h FROM a)
+         SELECT h, count(DISTINCT doc_id) AS n_docs, min(doc_id) AS keep_id
+         FROM w GROUP BY h HAVING count(DISTINCT doc_id) > 1
+         ORDER BY h"""),
+    // same postings-hash pair derivation as dedup_ngram_jaccard; only
+    // the scoring differs (both per-side containments, max-gated)
+    Query("dedup_containment", (s, d) => containment(s, d),
+      s"""WITH ${interPairsCtes}
+         SELECT d1, d2, inter,
+                round(inter * 1.0 / s1.n, 6) AS cont_d1_in_d2,
+                round(inter * 1.0 / s2.n, 6) AS cont_d2_in_d1
+         FROM pairs
+         JOIN sizes s1 ON s1.doc_id = d1
+         JOIN sizes s2 ON s2.doc_id = d2
+         WHERE greatest(round(inter * 1.0 / s1.n, 6),
+                        round(inter * 1.0 / s2.n, 6)) >= 0.6
+         ORDER BY d1, d2"""),
+    // Recursive-CTE transitive closure over the same pair set the
+    // Spark side derives (tiny clusters → closure stays small).
+    Query("dedup_components", (s, d) => ngramComponents(s, d), dedupComponentsSql),
+    Query("dedup_keep_best", (s, d) => keepBest(s, d), dedupKeepBestSql),
+    // SAME oracle text as dedup_components: the resume query's
+    // warm-started propagation must land on the identical fixed point
+    // — the hash match IS the resume-correctness proof
+    Query("dedup_components_resume", (s, d) => ngramComponentsResumed(s, d), dedupComponentsSql),
+    // EXACT all-pairs ground truth at τ=0.5 — the Spark side only
+    // ever sees prefix-filtered candidates (rarest-first global
+    // order, first |s|−⌈τ|s|⌉+1 shingles), so the hash match IS the
+    // prefix-bound completeness proof
+    Query("dedup_prefix_filter", (s, d) => prefixJaccard(s, d),
+      s"""WITH ${interPairsCtes}
+         SELECT d1, d2, inter,
+                round(inter * 1.0 / (s1.n + s2.n - inter), 6) AS jaccard
+         FROM pairs
+         JOIN sizes s1 ON s1.doc_id = d1
+         JOIN sizes s2 ON s2.doc_id = d2
+         WHERE round(inter * 1.0 / (s1.n + s2.n - inter), 6) >= 0.5
+         ORDER BY d1, d2"""),
+  )
+
+  /** The dedup_ngram_jaccard oracle statement — shared verbatim by
+    * the pair query and the cross-source attribution built on it. */
+  private val NgramJaccardPairsSql: String =
+    s"""WITH ${interPairsCtes}
+         SELECT d1, d2, inter,
+                round(inter * 1.0 / (s1.n + s2.n - inter), 6) AS jaccard
+         FROM pairs
+         JOIN sizes s1 ON s1.doc_id = d1
+         JOIN sizes s2 ON s2.doc_id = d2
+         WHERE inter * 1.0 / (s1.n + s2.n - inter) >= 0.1
+         ORDER BY d1, d2"""
+
+  /** dedup_minhash_lsh oracle, generated from the same affine salt
+    * parameters as [[graft.functions.MinHashAgg]]. */
+  private lazy val minhashLshSql: String =
+    s"""WITH ${grams3Cte},
+         ${minhashSigCte(32)},
+         bk AS (SELECT doc_id, unnest(${bandKeysSql(8, 4)}) AS bk FROM sig),
+         cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
+                  FROM bk a JOIN bk b
+                    ON a.bk = b.bk AND a.doc_id < b.doc_id),
+         sizes AS (SELECT doc_id, len(gs) AS n FROM g),
+         inter AS (SELECT c.d1, c.d2, count(*) AS inter
+                   FROM cand c
+                   JOIN posts p1 ON p1.doc_id = c.d1
+                   JOIN posts p2 ON p2.doc_id = c.d2 AND p2.gram = p1.gram
+                   GROUP BY c.d1, c.d2)
+         SELECT i.d1, i.d2,
+                round(i.inter * 1.0 / (s1.n + s2.n - i.inter), 6) AS jaccard
+         FROM inter i
+         JOIN sizes s1 ON s1.doc_id = i.d1
+         JOIN sizes s2 ON s2.doc_id = i.d2
+         WHERE round(i.inter * 1.0 / (s1.n + s2.n - i.inter), 6) >= 0.5
+         ORDER BY d1, d2"""
+
+  /** dedup_incremental oracle: same generated signature/band-key
+    * machinery as [[minhashLshSql]], with the asymmetric
+    * fresh-probes-existing candidate join and a per-fresh-doc
+    * best-match verdict. */
+  private lazy val dedupIncrementalSql: String =
+    s"""WITH ${grams3Cte},
+         ${minhashSigCte(32)},
+         bk AS (SELECT doc_id, unnest(${bandKeysSql(8, 4)}) AS bk FROM sig),
+         cand AS (SELECT DISTINCT f.doc_id AS dn, e.doc_id AS de
+                  FROM bk f JOIN bk e ON f.bk = e.bk
+                  WHERE f.doc_id % 10 = 0 AND e.doc_id % 10 <> 0),
+         sizes AS (SELECT doc_id, len(gs) AS n FROM g),
+         inter AS (SELECT c.dn, c.de, count(*) AS inter
+                   FROM cand c
+                   JOIN posts p1 ON p1.doc_id = c.dn
+                   JOIN posts p2 ON p2.doc_id = c.de AND p2.gram = p1.gram
+                   GROUP BY c.dn, c.de),
+         scored AS (SELECT i.dn, i.de,
+                           round(i.inter * 1.0 / (s1.n + s2.n - i.inter), 6) AS j
+                    FROM inter i
+                    JOIN sizes s1 ON s1.doc_id = i.dn
+                    JOIN sizes s2 ON s2.doc_id = i.de
+                    WHERE round(i.inter * 1.0 / (s1.n + s2.n - i.inter), 6) >= 0.5),
+         best AS (SELECT dn, de, j,
+                         row_number() OVER (PARTITION BY dn
+                           ORDER BY j DESC, de ASC) AS rn
+                  FROM scored)
+         SELECT d.doc_id,
+                b.de IS NOT NULL AS is_dup,
+                coalesce(b.de, -1) AS best_match,
+                coalesce(b.j, 0.0) AS best_jaccard
+         FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 0) d
+         LEFT JOIN (SELECT dn, de, j FROM best WHERE rn = 1) b
+           ON b.dn = d.doc_id
+         ORDER BY d.doc_id"""
+
+  /** dedup_simhash oracle: the portable 60-bit base hash makes the
+    * signature pure SQL (votes per bit position, sign-packed). */
+  private val simhashSql: String =
+    s"""WITH ${grams3Cte},
+         ${simhashCte},
+         chunks AS (SELECT doc_id, sim,
+                           CAST(c AS VARCHAR) || '#' ||
+                             CAST(((sim >> (16 * c)) & 65535) AS VARCHAR) AS ck
+                    FROM sig CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS c)),
+         pairs AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
+                          bit_count(xor(a.sim, b.sim)) AS hamming
+                   FROM chunks a JOIN chunks b
+                     ON a.ck = b.ck AND a.doc_id < b.doc_id)
+         SELECT d1, d2, hamming FROM pairs
+         WHERE hamming <= 3 ORDER BY d1, d2"""
+
+  /** dedup_sweep_hamming oracle: the simhash sig chain, candidates
+    * once at the loosest (5×12-bit pigeonhole) threshold, one
+    * conditional arm per tolerance. */
+  private lazy val sweepHammingSql: String =
+    s"""WITH ${grams3Cte},
+         ${simhashCte},
+         chunks AS (SELECT doc_id, sim,
+                           CAST(c AS VARCHAR) || '#' ||
+                             CAST(((sim >> (12 * c)) & 4095) AS VARCHAR) AS ck
+                    FROM sig CROSS JOIN (SELECT unnest([0, 1, 2, 3, 4]) AS c)),
+         pairs AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
+                          bit_count(xor(a.sim, b.sim)) AS hamming
+                   FROM chunks a JOIN chunks b
+                     ON a.ck = b.ck AND a.doc_id < b.doc_id),
+         bank AS (SELECT unnest([1, 2, 3, 4]) AS max_hamming)
+       SELECT CAST(bank.max_hamming AS BIGINT) AS max_hamming,
+              CAST(count(p.d1) AS BIGINT) AS n_pairs
+       FROM bank LEFT JOIN pairs p ON p.hamming <= bank.max_hamming
+       GROUP BY bank.max_hamming ORDER BY max_hamming"""
+
+  /** The n-gram-LSH near-dup graph + transitive closure as a CTE
+    * prefix ending at `comp` = (doc_id, component) — shared by the
+    * components oracle and the keep-best oracle so the clustering
+    * trajectory has one SQL statement of truth. */
+  private lazy val dedupComponentsCtes: String =
+    s"""WITH RECURSIVE ${interPairsCtes},
+         near AS (
+           SELECT d1, d2 FROM pairs
+           JOIN sizes s1 ON s1.doc_id = d1
+           JOIN sizes s2 ON s2.doc_id = d2
+           WHERE round(inter * 1.0 / (s1.n + s2.n - inter), 6) >= 0.1),
+         edges AS (SELECT d1 AS a, d2 AS b FROM near
+                   UNION SELECT d2, d1 FROM near),
+         reach(a, b) AS (
+           SELECT a, b FROM edges
+           UNION
+           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+         comp AS (
+           SELECT a AS doc_id, least(a, min(b)) AS component
+           FROM reach GROUP BY a)"""
+
+  /** dedup_components oracle: recursive-CTE transitive closure over
+    * the same near-dup pair set the Spark side derives (tiny clusters
+    * → closure stays small). Shared VERBATIM with
+    * `dedup_components_resume`: the warm-started loop must land on
+    * the identical fixed point, so one oracle text gates both. */
+  private lazy val dedupComponentsSql: String =
+    dedupComponentsCtes +
+      "\n         SELECT doc_id, component FROM comp ORDER BY doc_id"
+
+  /** Keep-best oracle: the same closure, then byte-length argmax per
+    * cluster (strlen = UTF-8 BYTES in DuckDB ≡ Spark octet_length —
+    * the codepoint/code-unit divergence the unicode gate exists to
+    * catch is avoided by construction). */
+  private lazy val dedupKeepBestSql: String =
+    dedupComponentsCtes + """,
+         base AS (SELECT doc_id, CAST(strlen(text) AS BIGINT) AS blen
+                  FROM documents),
+         lab AS (SELECT b.doc_id,
+                        coalesce(c.component, b.doc_id) AS component,
+                        b.blen
+                 FROM base b LEFT JOIN comp c ON c.doc_id = b.doc_id),
+         cs AS (SELECT component, CAST(count(*) AS BIGINT) AS csize
+                FROM lab GROUP BY 1),
+         keep AS (SELECT component, doc_id, blen FROM lab
+                  QUALIFY row_number() OVER (PARTITION BY component
+                    ORDER BY blen DESC, doc_id) = 1)
+         SELECT k.component, k.doc_id, k.blen, cs.csize
+         FROM keep k JOIN cs USING (component) ORDER BY component"""
+
+  /** [[exact]] in plain SQL. */
+  private val DedupExactSparkSql =
+    """SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n_dups
+       FROM documents GROUP BY md5(text)"""
+
+  /** [[minhashLsh]] in plain SQL: the one-loop
+    * signature kernel via the registered `minhash_sig`, the same
+    * literal band layout (k=32, 8 bands × 4 rows, "band#v_v_v_v"
+    * keys), bucket self-join, exact-Jaccard verify at τ=0.5. The
+    * bucket join is the only corpus-scale shuffle, same as the
+    * DataFrame plan. */
+  private lazy val MinhashLshSparkSql: String = {
+    val bandKeys = (0 until 8).map { b =>
+      val parts = (b * 4 until (b + 1) * 4)
+        .map(i => s"CAST(element_at(sig, ${i + 1}) AS STRING)")
+        .mkString(", ")
+      s"concat('$b#', concat_ws('_', $parts))"
+    }.mkString(",\n                       ")
+    s"""WITH g AS (SELECT doc_id,
+                          ngram_shingles(split(trim(text), '\\\\s+'), 3)
+                            AS grams
+                   FROM documents),
+         s AS (SELECT doc_id, minhash_sig(grams, 32) AS sig
+               FROM g WHERE size(grams) > 0),
+         bk AS (SELECT doc_id,
+                       explode(array($bandKeys)) AS bk
+                FROM s),
+         cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
+                  FROM bk a JOIN bk b
+                    ON a.bk = b.bk AND a.doc_id < b.doc_id),
+         scored AS (SELECT c.d1, c.d2,
+                           round(CAST(size(array_intersect(g1.grams, g2.grams)) AS DOUBLE)
+                                 / CAST(size(array_union(g1.grams, g2.grams)) AS DOUBLE),
+                                 6) AS jaccard
+                    FROM cand c
+                    JOIN g g1 ON c.d1 = g1.doc_id
+                    JOIN g g2 ON c.d2 = g2.doc_id)
+       SELECT d1, d2, jaccard FROM scored WHERE jaccard >= 0.5"""
+  }
+
+  /** [[simhash]] in plain SQL: the registered
+    * one-loop `simhash_sig` kernel, the same 4×16-bit chunk buckets
+    * (pigeonhole: any pair within Hamming 3 shares a chunk), and a
+    * codegen'd `bit_count(xor)` verify. */
+  private val SimhashSparkSql =
+    """WITH g AS (SELECT doc_id,
+                         ngram_shingles(split(trim(text), '\\s+'), 3) AS grams
+                  FROM documents),
+         s AS (SELECT doc_id, simhash_sig(grams) AS sim
+               FROM g WHERE size(grams) > 0),
+         ck AS (SELECT doc_id, sim,
+                       explode(array(
+                         concat('0#', CAST(shiftright(sim, 0) & 65535 AS STRING)),
+                         concat('1#', CAST(shiftright(sim, 16) & 65535 AS STRING)),
+                         concat('2#', CAST(shiftright(sim, 32) & 65535 AS STRING)),
+                         concat('3#', CAST(shiftright(sim, 48) & 65535 AS STRING)))) AS ck
+                FROM s),
+         cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
+                         bit_count(a.sim ^ b.sim) AS hamming
+                  FROM ck a JOIN ck b
+                    ON a.ck = b.ck AND a.doc_id < b.doc_id)
+       SELECT d1, d2, hamming FROM cand WHERE hamming <= 3"""
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, WorkingSet}
+import graft.core.{Query, Tables, WorkingSet}
 
 /** Events / time-series operator block (SURVEY.md §2 C).
   *
@@ -1561,4 +1561,623 @@ object Events {
                     / CAST((SELECT num FROM nums WHERE lag = 0) AS DOUBLE), 6)
                 AS acf
        FROM nums ORDER BY lag"""
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    Query("q_funnel", qFunnel,
+      """WITH v AS (SELECT user_id, event_id, ts FROM events
+                    WHERE event_type = 'view'),
+         c AS (SELECT user_id, ts FROM events WHERE event_type = 'click'),
+         p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
+         vc AS (SELECT v.user_id, v.event_id, min(c.ts) AS click_ts
+                FROM v JOIN c ON c.user_id = v.user_id
+                  AND c.ts > v.ts AND c.ts <= v.ts + INTERVAL 30 MINUTE
+                GROUP BY v.user_id, v.event_id),
+         vcp AS (SELECT vc.user_id, vc.event_id
+                 FROM vc JOIN p ON p.user_id = vc.user_id
+                   AND p.ts > vc.click_ts
+                   AND p.ts <= vc.click_ts + INTERVAL 30 MINUTE
+                 GROUP BY vc.user_id, vc.event_id),
+         nv AS (SELECT user_id, count(*) AS n_views FROM v GROUP BY user_id),
+         nc AS (SELECT user_id, count(*) AS n_clicked FROM vc GROUP BY user_id),
+         nf AS (SELECT user_id, count(*) AS n_full FROM vcp GROUP BY user_id)
+         SELECT nv.user_id, nv.n_views,
+                coalesce(nc.n_clicked, 0) AS n_clicked,
+                coalesce(nf.n_full, 0) AS n_full
+         FROM nv LEFT JOIN nc ON nc.user_id = nv.user_id
+                 LEFT JOIN nf ON nf.user_id = nv.user_id
+         ORDER BY nv.user_id"""),
+    Query("q_event_window", qEventWindow,
+      """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour, event_type,
+                count(*) AS n, sum(CAST(round((value) * 100, 0) AS BIGINT)) / 100.0 AS total
+         FROM events GROUP BY hour, event_type ORDER BY hour, event_type"""),
+    Query("q_event_topusers", qEventTopusers,
+      """SELECT user_id, count(*) AS n_purchases,
+                sum(CAST(round((value) * 100, 0) AS BIGINT)) / 100.0 AS spend
+         FROM events WHERE event_type = 'purchase'
+         GROUP BY user_id ORDER BY spend DESC, user_id LIMIT 20"""),
+    Query("q_json_extract", qJsonExtract,
+      """SELECT event_type,
+                round(avg(CAST(json_extract_string(props, '$.k') AS BIGINT)), 6) AS avg_k,
+                max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
+         FROM events GROUP BY event_type ORDER BY event_type"""),
+    Query("q_sessionize", qSessionize, SessionizeOracleSql),
+    // the SQL-surface twin is gated against the SAME oracle text
+    Query("q_sessionize_sql", (s, d) => Tables.runSql(s, d, SessionizeSparkSql),
+      SessionizeOracleSql),
+    Query("q_asof_join", qAsofJoin,
+      """SELECT e.event_id AS error_id, e.user_id,
+                p.event_id AS last_purchase_id
+         FROM (SELECT * FROM events WHERE event_type = 'error') e
+         ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
+           ON e.user_id = p.user_id AND e.ts >= p.ts
+         ORDER BY error_id"""),
+    // bidirectional nearest: the same union+window construction
+    // evaluated by the second engine (DuckDB has no native nearest
+    // join); exact integer-microsecond deltas, prev wins ties
+    Query("q_nearest_join", qNearestJoin,
+      """WITH b AS (
+           SELECT user_id, ts, 0 AS side, event_id AS purchase_id,
+                  CAST(NULL AS BIGINT) AS error_id
+           FROM events WHERE event_type = 'purchase'
+           UNION ALL
+           SELECT user_id, ts, 1, CAST(NULL AS BIGINT), event_id
+           FROM events WHERE event_type = 'error'),
+         w AS (
+           SELECT error_id, user_id, side, epoch_us(ts) AS us,
+                  last_value(purchase_id IGNORE NULLS) OVER wb AS prev_pid,
+                  last_value(CASE WHEN purchase_id IS NOT NULL
+                             THEN epoch_us(ts) END IGNORE NULLS) OVER wb AS prev_us,
+                  first_value(purchase_id IGNORE NULLS) OVER wf AS next_pid,
+                  first_value(CASE WHEN purchase_id IS NOT NULL
+                              THEN epoch_us(ts) END IGNORE NULLS) OVER wf AS next_us
+           FROM b
+           WINDOW
+             wb AS (PARTITION BY user_id
+                    ORDER BY ts, side, coalesce(purchase_id, error_id)
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+             wf AS (PARTITION BY user_id
+                    ORDER BY ts, side, coalesce(purchase_id, error_id)
+                    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
+         SELECT error_id, user_id,
+                CASE WHEN prev_pid IS NULL THEN next_pid
+                     WHEN next_pid IS NULL THEN prev_pid
+                     WHEN us - prev_us <= next_us - us THEN prev_pid
+                     ELSE next_pid END AS nearest_purchase_id,
+                CASE WHEN prev_pid IS NULL THEN next_us - us
+                     WHEN next_pid IS NULL THEN us - prev_us
+                     WHEN us - prev_us <= next_us - us THEN us - prev_us
+                     ELSE next_us - us END AS delta_us
+         FROM w WHERE side = 1 ORDER BY error_id"""),
+    // weekday from pure epoch-day arithmetic ((d+3) mod 7 + 1,
+    // Monday=1) — no engine calendar function whose week-start
+    // convention could fork; index in exact micro-units
+    Query("events_seasonality", eventsSeasonality,
+      """WITH daily AS (
+           SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS d,
+                  count(*) AS n
+           FROM events GROUP BY 1),
+         dw AS (SELECT (d + 3) % 7 + 1 AS dow_iso, n FROM daily),
+         p AS (SELECT dow_iso, CAST(count(*) AS BIGINT) AS n_days,
+                      CAST(sum(n) AS BIGINT) AS n_events
+               FROM dw GROUP BY 1),
+         t AS (SELECT CAST(sum(n_days) AS BIGINT) AS dd,
+                      CAST(sum(n_events) AS BIGINT) AS ss FROM p)
+         SELECT dow_iso, n_days, n_events,
+                CAST(round(1e6 * CAST(n_events * dd AS DOUBLE)
+                           / CAST(n_days * ss AS DOUBLE), 0) AS BIGINT)
+                  AS index_micro
+         FROM p CROSS JOIN t ORDER BY dow_iso"""),
+    // STL decomposition of daily revenue: zero-filled spine, centered
+    // 7-day integer trend, per-dow seasonal as mean(cents)-mean(trend)
+    // (both divisions on non-negative milli sums — the truncate-vs-
+    // floor rule), residual by subtraction; inner days only
+    Query("events_stl", eventsStl,
+      """WITH daily AS (
+           SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
+                  CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
+                       AS BIGINT) AS cents
+           FROM events WHERE event_type = 'purchase' GROUP BY 1),
+         sp AS (SELECT min(day) AS dmin, max(day) AS dmax FROM daily),
+         spine AS (SELECT unnest(range(dmin, dmax + 1)) AS day FROM sp),
+         filled AS (SELECT spine.day, coalesce(d.cents, 0) AS cents
+                    FROM spine LEFT JOIN daily d ON d.day = spine.day),
+         tr AS (SELECT day, cents,
+                  CAST(sum(cents) OVER (ORDER BY day
+                    RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT)
+                    // 7 AS trend_cents
+                FROM filled),
+         inn AS (SELECT t.day, t.cents, t.trend_cents, t.day % 7 AS dow
+                 FROM tr t CROSS JOIN sp
+                 WHERE t.day >= sp.dmin + 3 AND t.day <= sp.dmax - 3),
+         seas AS (SELECT dow,
+                    CAST((1000 * sum(cents)) // count(*)
+                      - (1000 * sum(trend_cents)) // count(*) AS BIGINT)
+                      AS seasonal_milli
+                  FROM inn GROUP BY 1)
+         SELECT i.day, i.cents, i.trend_cents, i.dow, s.seasonal_milli,
+                CAST(1000 * i.cents - 1000 * i.trend_cents
+                     - s.seasonal_milli AS BIGINT) AS resid_milli
+         FROM inn i JOIN seas s ON s.dow = i.dow
+         ORDER BY i.day"""),
+    // pre-scaled integer deviations, HUGEINT lag products (the Spark
+    // side's DECIMAL(38,0) twin), one final double division
+    Query("events_acf", (s, d) => eventsAcf(s, d), acfOracleSql()),
+    // two-series CCF: same spine/deviation/HUGEINT chain, ONE forced-
+    // double normalization num/sqrt(denx·deny) in identical op order
+    Query("events_ccf", (s, d) => eventsCcf(s, d), ccfOracleSql()),
+    // no-censoring empirical survival: the K-M product telescopes to
+    // an exact integer ratio under a fixed observation window
+    Query("events_survival", eventsSurvival, survivalOracleSql),
+    // triple smoothing: the holt shift recurrence + a 7-slot seasonal
+    // register carried as a list column through the recursive CTE
+    Query("events_holt_winters", eventsHoltWinters, holtWintersOracleSql),
+    // terminal-state projection: f_{T+h} = l + h·b + s_{T+h−7}
+    Query("events_forecast_hw", eventsForecastHw, forecastHwOracleSql),
+    // STL residuals vs median + k*MAD — both robust statistics are
+    // rank SELECTIONS on (value, day), no division anywhere
+    Query("events_anomaly_stl", (s, d) => eventsAnomalyStl(s, d),
+      """WITH daily AS (
+           SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
+                  CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
+                       AS BIGINT) AS cents
+           FROM events WHERE event_type = 'purchase' GROUP BY 1),
+         sp AS (SELECT min(day) AS dmin, max(day) AS dmax FROM daily),
+         spine AS (SELECT unnest(range(dmin, dmax + 1)) AS day FROM sp),
+         filled AS (SELECT spine.day, coalesce(d.cents, 0) AS cents
+                    FROM spine LEFT JOIN daily d ON d.day = spine.day),
+         tr AS (SELECT day, cents,
+                  CAST(sum(cents) OVER (ORDER BY day
+                    RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT)
+                    // 7 AS trend_cents
+                FROM filled),
+         inn AS (SELECT t.day, t.cents, t.trend_cents, t.day % 7 AS dow
+                 FROM tr t CROSS JOIN sp
+                 WHERE t.day >= sp.dmin + 3 AND t.day <= sp.dmax - 3),
+         seas AS (SELECT dow,
+                    CAST((1000 * sum(cents)) // count(*)
+                      - (1000 * sum(trend_cents)) // count(*) AS BIGINT)
+                      AS seasonal_milli
+                  FROM inn GROUP BY 1),
+         r AS (SELECT i.day, i.cents,
+                      CAST(1000 * i.cents - 1000 * i.trend_cents
+                           - s.seasonal_milli AS BIGINT) AS resid_milli
+               FROM inn i JOIN seas s ON s.dow = i.dow),
+         mr AS (SELECT (count(*) + 1) // 2 AS mrank FROM r),
+         med AS (SELECT resid_milli AS med_milli FROM
+                 (SELECT resid_milli,
+                         row_number() OVER (ORDER BY resid_milli, day) AS rn
+                  FROM r) CROSS JOIN mr WHERE rn = mrank),
+         dev AS (SELECT r.day, r.cents, r.resid_milli, med.med_milli,
+                        abs(r.resid_milli - med.med_milli) AS adev
+                 FROM r CROSS JOIN med),
+         mad AS (SELECT adev AS mad_milli FROM
+                 (SELECT adev, day,
+                         row_number() OVER (ORDER BY adev, day) AS rn
+                  FROM dev) CROSS JOIN mr WHERE rn = mrank)
+         SELECT d.day, d.cents, d.resid_milli, d.med_milli, mad.mad_milli,
+                (abs(d.resid_milli - d.med_milli) > 3 * mad.mad_milli)
+                  AS is_anomaly
+         FROM dev d CROSS JOIN mad ORDER BY d.day"""),
+    // gaps-and-islands: day - row_number() island key over distinct
+    // (user, day); one missed day breaks the streak
+    Query("q_islands", qIslands,
+      """WITH ud AS (
+           SELECT DISTINCT user_id,
+                  CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day
+           FROM events),
+         isl AS (SELECT user_id, day,
+                        day - row_number() OVER (PARTITION BY user_id
+                          ORDER BY day) AS island
+                 FROM ud)
+         SELECT user_id, min(day) AS start_day, max(day) AS end_day,
+                CAST(count(*) AS BIGINT) AS len_days
+         FROM isl GROUP BY user_id, island
+         ORDER BY user_id, start_day"""),
+    // the same union + last_value IGNORE NULLS formulation (not ASOF
+    // JOIN: its equal-timestamp pick is unspecified; the window's
+    // (ts, side, id) order is deterministic in both engines)
+    Query("events_attribution", qAttribution,
+      """WITH u AS (
+           SELECT user_id, ts, 0 AS side, event_id AS touch_id,
+                  event_type AS touch_type,
+                  NULL::BIGINT AS purchase_id, NULL::DOUBLE AS value
+           FROM events WHERE event_type IN ('click', 'view')
+           UNION ALL
+           SELECT user_id, ts, 1, NULL, NULL, event_id, value
+           FROM events WHERE event_type = 'purchase'),
+         x AS (
+           SELECT *,
+                  last_value(touch_id IGNORE NULLS) OVER w AS lt_id,
+                  last_value(touch_type IGNORE NULLS) OVER w AS lt_type,
+                  last_value(CASE WHEN side = 0 THEN ts END IGNORE NULLS)
+                    OVER w AS lt_ts
+           FROM u
+           WINDOW w AS (PARTITION BY user_id
+                        ORDER BY ts, side, coalesce(touch_id, purchase_id)
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+         y AS (SELECT *, lt_ts IS NOT NULL
+                          AND lt_ts >= ts - INTERVAL 24 HOUR AS fresh
+               FROM x WHERE side = 1)
+         SELECT purchase_id, user_id,
+                CASE WHEN fresh THEN lt_id END AS touch_id,
+                CASE WHEN fresh THEN lt_type ELSE 'direct' END AS channel,
+                CASE WHEN fresh THEN CAST(floor(epoch(ts)) AS BIGINT)
+                                     - CAST(floor(epoch(lt_ts)) AS BIGINT)
+                END AS secs_since_touch,
+                value
+         FROM y ORDER BY purchase_id"""),
+    Query("q_range_join", qRangeJoin,
+      """SELECT p.event_id AS purchase_id, e.event_id AS error_id,
+                p.user_id
+         FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+         JOIN (SELECT * FROM events WHERE event_type = 'error') e
+           ON p.user_id = e.user_id
+          AND e.ts >= p.ts
+          AND e.ts <= p.ts + INTERVAL 30 MINUTE
+         ORDER BY purchase_id, error_id"""),
+    Query("q_gap_fill", qGapFill,
+      """WITH daily AS (
+           SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+                  count(*) AS n_events,
+                  CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS spent_cents
+           FROM events GROUP BY 1, 2),
+         cal AS (SELECT user_id AS cal_user,
+                        unnest(generate_series(min(day), max(day),
+                                               INTERVAL 1 DAY)) AS day
+                 FROM daily GROUP BY user_id)
+         SELECT c.cal_user AS user_id, c.day,
+                coalesce(d.n_events, 0) AS n_events,
+                coalesce(d.spent_cents, 0) / 100.0 AS spent,
+                (last_value(d.spent_cents IGNORE NULLS)
+                   OVER (PARTITION BY c.cal_user ORDER BY c.day
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+                  / 100.0 AS carried
+         FROM cal c LEFT JOIN daily d
+           ON c.cal_user = d.user_id AND c.day = d.day
+         ORDER BY 1, 2"""),
+    // Same exact-moment z-score: (c·m − Σc) / √(m·Σc² − (Σc)²), all
+    // inputs exact HUGEINT/DECIMAL integers, σ=0 guarded to z=0.
+    Query("q_anomaly_days", qAnomalyDays,
+      """WITH daily AS (
+           SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+                  count(*) AS cnt
+           FROM events GROUP BY user_id, day),
+         mo AS (SELECT user_id AS m_user,
+                       CAST(count(*) AS HUGEINT) AS m,
+                       sum(CAST(cnt AS HUGEINT)) AS sc,
+                       sum(CAST(cnt AS HUGEINT) * CAST(cnt AS HUGEINT)) AS scc
+                FROM daily GROUP BY user_id),
+         z AS (SELECT d.user_id, d.day, d.cnt,
+                      CASE WHEN mo.m * mo.scc - mo.sc * mo.sc = 0
+                           THEN CAST(0 AS DOUBLE)
+                           ELSE round(
+                             CAST(CAST(d.cnt AS HUGEINT) * mo.m - mo.sc AS DOUBLE)
+                             / sqrt(CAST(mo.m * mo.scc - mo.sc * mo.sc AS DOUBLE)), 4)
+                      END AS z
+               FROM daily d JOIN mo ON mo.m_user = d.user_id)
+         SELECT user_id, day, cnt, z, abs(z) > 3.0 AS is_anomaly
+         FROM z ORDER BY user_id, day"""),
+    // distinct (user, day) + min-day cohort join ≡ the collect_set
+    // formulation: exploded sets are distinct by construction
+    Query("events_retention", qRetention, RetentionOracleSql),
+    // the SQL-surface twin is gated against the SAME oracle text
+    Query("events_retention_sql", (s, d) => Tables.runSql(s, d, RetentionSparkSql),
+      RetentionOracleSql),
+    // retention's revenue sibling: same first-active-day cohort,
+    // exact cents, truncating integer LTV division on both engines
+    Query("events_ltv", eventsLtv,
+      """WITH c AS (SELECT user_id,
+                           CAST(min(date_trunc('day', ts)) AS TIMESTAMP) AS cohort_day
+                    FROM events GROUP BY 1),
+         s AS (SELECT cohort_day, CAST(count(*) AS BIGINT) AS cohort_size
+               FROM c GROUP BY 1),
+         p AS (SELECT e.user_id,
+                      CAST(date_trunc('day', e.ts) AS TIMESTAMP) AS day,
+                      CAST(round(e.value * 100, 0) AS BIGINT) AS cents
+               FROM events e WHERE e.event_type = 'purchase'),
+         r AS (SELECT c.cohort_day,
+                      CAST(date_diff('day', c.cohort_day, p.day) AS INT) AS day_offset,
+                      CAST(sum(p.cents) AS BIGINT) AS rev_cents,
+                      CAST(count(DISTINCT p.user_id) AS BIGINT) AS n_buyers
+               FROM p JOIN c ON c.user_id = p.user_id GROUP BY 1, 2),
+         cum AS (SELECT cohort_day, day_offset, n_buyers, rev_cents,
+                        CAST(sum(rev_cents) OVER (PARTITION BY cohort_day
+                          ORDER BY day_offset) AS BIGINT) AS cum_rev_cents
+                 FROM r)
+         SELECT cum.cohort_day, day_offset, n_buyers, rev_cents,
+                cum_rev_cents, s.cohort_size,
+                cum_rev_cents // s.cohort_size AS ltv_cents_per_user
+         FROM cum JOIN s ON s.cohort_day = cum.cohort_day
+         ORDER BY cum.cohort_day, day_offset"""),
+    // DAU/WAU/MAU by ONE offset-tagged observation fan-out: each
+    // distinct (user, day) announces itself to its <=30 future days
+    // carrying the offset; per (day, user) keep the smallest offset,
+    // then every horizon is a conditional count. Exact epoch-day
+    // arithmetic; a dmin..dmax spine guarantees every in-span day a
+    // row (quiet days — even inside a >30-day gap — report 0)
+    Query("events_active_users", eventsActiveUsers,
+      """WITH ud AS (
+           SELECT DISTINCT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS d,
+                  user_id
+           FROM events),
+         sp AS (SELECT min(d) AS dmin, max(d) AS dmax FROM ud),
+         spine AS (SELECT unnest(range(dmin, dmax + 1)) AS day FROM sp),
+         obs AS (SELECT day, user_id, min(day - d) AS off
+                 FROM (SELECT user_id, d, unnest(range(d, d + 30)) AS day
+                       FROM ud)
+                 CROSS JOIN sp WHERE day <= sp.dmax GROUP BY day, user_id),
+         c AS (SELECT day,
+                      CAST(sum(CASE WHEN off < 1 THEN 1 ELSE 0 END) AS BIGINT) AS dau,
+                      CAST(sum(CASE WHEN off < 7 THEN 1 ELSE 0 END) AS BIGINT) AS wau,
+                      CAST(sum(CASE WHEN off < 30 THEN 1 ELSE 0 END) AS BIGINT) AS mau
+               FROM obs GROUP BY day)
+         SELECT spine.day, coalesce(c.dau, 0) AS dau,
+                coalesce(c.wau, 0) AS wau, coalesce(c.mau, 0) AS mau
+         FROM spine LEFT JOIN c ON c.day = spine.day
+         ORDER BY spine.day"""),
+    // the DAU/MAU ratio on the same exact rolling distincts — one
+    // final rounded division, zero-MAU days report 0
+    Query("events_stickiness", eventsStickiness,
+      """WITH ud AS (
+           SELECT DISTINCT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS d,
+                  user_id
+           FROM events),
+         sp AS (SELECT min(d) AS dmin, max(d) AS dmax FROM ud),
+         spine AS (SELECT unnest(range(dmin, dmax + 1)) AS day FROM sp),
+         obs AS (SELECT day, user_id, min(day - d) AS off
+                 FROM (SELECT user_id, d, unnest(range(d, d + 30)) AS day
+                       FROM ud)
+                 CROSS JOIN sp WHERE day <= sp.dmax GROUP BY day, user_id),
+         c AS (SELECT day,
+                      CAST(sum(CASE WHEN off < 1 THEN 1 ELSE 0 END) AS BIGINT) AS dau,
+                      CAST(sum(CASE WHEN off < 30 THEN 1 ELSE 0 END) AS BIGINT) AS mau
+               FROM obs GROUP BY day)
+         SELECT spine.day, coalesce(c.dau, 0) AS dau,
+                coalesce(c.mau, 0) AS mau,
+                CASE WHEN coalesce(c.mau, 0) = 0 THEN 0.0
+                     ELSE round(CAST(coalesce(c.dau, 0) AS DOUBLE)
+                                / coalesce(c.mau, 0), 6) END AS stickiness
+         FROM spine LEFT JOIN c ON c.day = spine.day
+         ORDER BY spine.day"""),
+    // sessionize chain + integer-rank quantile selections
+    Query("events_session_stats", sessionStats,
+      sessionStatsOracleSql),
+    Query("events_cumulative_users", cumulativeUsers,
+      cumulativeUsersOracleSql),
+    // the shift-smoothing recurrence as a native recursive CTE vs the
+    // Spark side's single-partition ordered fold over the bounded spine
+    Query("events_holt", eventsHolt, holtOracleSql),
+    // identical integer-day RANGE frames per user
+    Query("events_features", eventsFeatures, featuresOracleSql),
+    // integer ppm division keeps the probability column
+    // hash-matchable (DuckDB `//` ≡ Spark `DIV` on non-negatives)
+    Query("events_markov", qMarkov,
+      """WITH x AS (
+           SELECT user_id, event_type AS from_type,
+                  lead(event_type) OVER (PARTITION BY user_id
+                                         ORDER BY ts, event_id) AS to_type
+           FROM events),
+         t AS (SELECT from_type, to_type, count(*) AS n
+               FROM x WHERE to_type IS NOT NULL GROUP BY 1, 2),
+         s AS (SELECT from_type AS t_from, sum(n) AS tot FROM t GROUP BY 1)
+         SELECT t.from_type, t.to_type, t.n,
+                CAST((t.n * 1000000) // s.tot AS BIGINT) AS p_ppm
+         FROM t JOIN s ON t.from_type = s.t_from
+         ORDER BY from_type, to_type"""),
+    // denominators cleared (D_i = n*S_i - i*S_n) so the CUSUM argmax
+    // and truncating milli-means are exact integers on both engines
+    Query("events_changepoint", qChangepoint,
+      """WITH daily AS (
+           SELECT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+                  count(*) AS c
+           FROM events GROUP BY 1, 2),
+         scored AS (
+           SELECT event_type, day, c,
+                  row_number() OVER w AS i,
+                  CAST(sum(c) OVER w AS BIGINT) AS s,
+                  CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
+                  CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS sn
+           FROM daily
+           WINDOW w AS (PARTITION BY event_type ORDER BY day
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+         d AS (SELECT *, n * s - i * sn AS dd FROM scored)
+         SELECT event_type, day AS split_day, n AS n_days,
+                abs(dd) AS dmax,
+                CAST((1000 * s) // i AS BIGINT) AS mean_before_milli,
+                CASE WHEN i = n THEN NULL
+                     ELSE CAST((1000 * (sn - s)) // (n - i) AS BIGINT)
+                END AS mean_after_milli
+         FROM d
+         QUALIFY row_number() OVER (PARTITION BY event_type
+                                    ORDER BY abs(dd) DESC, day) = 1
+         ORDER BY event_type"""),
+    // fixed scoring bands (not data-driven ntiles) keep the operator
+    // map-shaped; exact cents and whole-day diffs on both engines
+    Query("events_rfm", qRfm,
+      """WITH mx AS (SELECT date_trunc('day', max(ts)) AS max_day FROM events),
+         p AS (SELECT user_id, date_trunc('day', max(ts)) AS last_day,
+                      count(*) AS f,
+                      CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
+                           AS BIGINT) AS m_cents
+               FROM events WHERE event_type = 'purchase' GROUP BY user_id),
+         s AS (SELECT user_id,
+                      CAST(date_diff('day', last_day, max_day) AS BIGINT)
+                        AS r_days,
+                      f, m_cents
+               FROM p CROSS JOIN mx)
+         SELECT user_id, r_days, f, m_cents,
+                CASE WHEN r_days <= 0 THEN 5 WHEN r_days <= 2 THEN 4
+                     WHEN r_days <= 5 THEN 3 WHEN r_days <= 10 THEN 2
+                     ELSE 1 END AS r_score,
+                CASE WHEN f >= 20 THEN 5 WHEN f >= 15 THEN 4
+                     WHEN f >= 10 THEN 3 WHEN f >= 5 THEN 2
+                     ELSE 1 END AS f_score,
+                CASE WHEN m_cents >= 100000 THEN 5 WHEN m_cents >= 75000 THEN 4
+                     WHEN m_cents >= 50000 THEN 3 WHEN m_cents >= 25000 THEN 2
+                     ELSE 1 END AS m_score,
+                CAST((CASE WHEN r_days <= 0 THEN 5 WHEN r_days <= 2 THEN 4
+                           WHEN r_days <= 5 THEN 3 WHEN r_days <= 10 THEN 2
+                           ELSE 1 END) * 100
+                     + (CASE WHEN f >= 20 THEN 5 WHEN f >= 15 THEN 4
+                             WHEN f >= 10 THEN 3 WHEN f >= 5 THEN 2
+                             ELSE 1 END) * 10
+                     + (CASE WHEN m_cents >= 100000 THEN 5
+                             WHEN m_cents >= 75000 THEN 4
+                             WHEN m_cents >= 50000 THEN 3
+                             WHEN m_cents >= 25000 THEN 2
+                             ELSE 1 END) AS INT) AS rfm
+         FROM s ORDER BY user_id"""),
+    // ordered string_agg ≡ the sorted-struct collect: both assemble
+    // the first-3 path in (ts, event_id) order
+    Query("events_paths", (s, d) => qPaths(s, d),
+      """WITH r AS (
+           SELECT user_id, event_type,
+                  row_number() OVER (PARTITION BY user_id
+                                     ORDER BY ts, event_id) AS rn
+           FROM events),
+         p AS (SELECT user_id,
+                      string_agg(event_type, '>' ORDER BY rn) AS path
+               FROM r WHERE rn <= 3 GROUP BY user_id)
+         SELECT path, count(*) AS n_users
+         FROM p GROUP BY path
+         ORDER BY n_users DESC, path LIMIT 20"""),
+    // engine-free weekday: day = epoch_s // 86400, dow = day % 7
+    // (0 = Thursday) — no locale/week-start convention to diverge
+    Query("events_forecast", qForecast,
+      """WITH d AS (SELECT event_type,
+                  CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
+                  count(*) AS cnt
+           FROM events GROUP BY 1, 2)
+         SELECT event_type, day % 7 AS dow, count(*) AS n_days,
+                CAST(sum(cnt) AS BIGINT) AS total_events,
+                CAST((1000 * sum(cnt)) // count(*) AS BIGINT) AS forecast_milli
+         FROM d GROUP BY 1, 2 ORDER BY 1, 2"""),
+    // gap-filled twin: absent days count as zeros; days ≡ r (mod 7)
+    // in [a, b] via the closed form (b−r)//7 − (a−r+6)//7 + 1 — no
+    // calendar explosion on either engine
+    Query("events_forecast_filled", qForecastFilled,
+      """WITH d AS (SELECT event_type,
+                  CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
+                  count(*) AS cnt
+           FROM events GROUP BY 1, 2),
+         s AS (SELECT event_type, min(day) AS a, max(day) AS b
+               FROM d GROUP BY 1),
+         r AS (SELECT unnest(range(7)) AS dow),
+         pd AS (SELECT s.event_type, r.dow,
+                  (s.b - r.dow) // 7 - (s.a - r.dow + 6) // 7 + 1
+                    AS n_days_span
+                FROM s CROSS JOIN r),
+         agg AS (SELECT event_type, day % 7 AS dow,
+                   count(*) AS n_days_present,
+                   CAST(sum(cnt) AS BIGINT) AS total_events
+                 FROM d GROUP BY 1, 2)
+         SELECT pd.event_type, pd.dow,
+                coalesce(agg.n_days_present, 0) AS n_days_present,
+                coalesce(agg.total_events, 0) AS total_events,
+                pd.n_days_span,
+                CAST((1000 * coalesce(agg.total_events, 0)) // pd.n_days_span
+                  AS BIGINT) AS forecast_milli
+         FROM pd LEFT JOIN agg
+           ON pd.event_type = agg.event_type AND pd.dow = agg.dow
+         WHERE pd.n_days_span > 0
+         ORDER BY 1, 2"""),
+    // backtest: trailing-week holdout, fit on the rest, per-type MAE
+    // in exact milli-units; only the non-negative abs total is ever
+    // divided (div ≡ // only on non-negatives), signed bias stays a
+    // total
+    Query("events_forecast_eval", qForecastEval,
+      """WITH d AS (SELECT event_type,
+                  CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
+                  count(*) AS cnt
+           FROM events GROUP BY 1, 2),
+         g AS (SELECT max(day) - 6 AS s FROM d),
+         f AS (SELECT event_type, day % 7 AS dow,
+                      CAST((1000 * sum(cnt)) // count(*) AS BIGINT) AS forecast_milli
+               FROM d, g WHERE day < s GROUP BY 1, 2),
+         t AS (SELECT d.event_type, d.cnt, f.forecast_milli
+               FROM d, g, f
+               WHERE d.day >= g.s AND f.event_type = d.event_type
+                 AND f.dow = d.day % 7)
+         SELECT event_type, CAST(count(*) AS BIGINT) AS n_test_days,
+                CAST(sum(abs(1000 * cnt - forecast_milli)) AS BIGINT)
+                  AS total_abs_err_milli,
+                CAST(sum(abs(1000 * cnt - forecast_milli)) AS BIGINT)
+                  // count(*) AS mae_milli,
+                CAST(sum(1000 * cnt - forecast_milli) AS BIGINT)
+                  AS total_err_milli
+         FROM t GROUP BY event_type ORDER BY event_type"""),
+  )
+
+  /** [[qSessionize]] in plain SQL: the lag +
+    * running-sum session-boundary idiom over the identical
+    * (ts, event_id) window order and the 1800 s gap. */
+  private val SessionizeSparkSql =
+    """WITH x AS (
+           SELECT user_id, ts, event_id,
+                  lag(ts) OVER (PARTITION BY user_id
+                                ORDER BY ts, event_id) AS prev_ts
+           FROM events),
+         y AS (
+           SELECT user_id, ts,
+                  sum(CASE WHEN prev_ts IS NULL
+                           OR CAST(ts AS DOUBLE) - CAST(prev_ts AS DOUBLE)
+                              > 1800
+                           THEN 1 ELSE 0 END)
+                    OVER (PARTITION BY user_id ORDER BY ts, event_id
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                    AS session_id
+           FROM x)
+       SELECT user_id, session_id, count(*) AS n_events,
+              CAST(floor(min(CAST(ts AS DOUBLE))) AS BIGINT) AS start_s,
+              CAST(floor(max(CAST(ts AS DOUBLE))) AS BIGINT) AS end_s
+       FROM y GROUP BY user_id, session_id
+       ORDER BY user_id, session_id"""
+
+  /** [[qRetention]] in plain SQL: the cohort
+    * self-join formulation an SQL user writes (the DataFrame twin's
+    * sorted-set element_at is a library idiom; distinct (user, day)
+    * → min-day cohort → (cohort, offset) roll-up is the same
+    * algebra, and the rows must hash-match it exactly). */
+  private val RetentionSparkSql =
+    """WITH ud AS (SELECT DISTINCT user_id, date_trunc('DAY', ts) AS day
+                   FROM events),
+         c AS (SELECT user_id, min(day) AS cohort_day FROM ud GROUP BY 1)
+       SELECT c.cohort_day,
+              CAST(datediff(u.day, c.cohort_day) AS INT) AS day_offset,
+              count(*) AS n_users
+       FROM ud u JOIN c ON u.user_id = c.user_id
+       GROUP BY 1, 2 ORDER BY 1, 2"""
+
+  /** q_sessionize oracle (shared verbatim with the `_sql` twin). */
+  private val SessionizeOracleSql =
+    """WITH x AS (
+           SELECT user_id, ts, event_id,
+                  lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+           FROM events),
+         y AS (
+           SELECT user_id, ts,
+                  CAST(sum(CASE WHEN prev_ts IS NULL
+                           OR epoch(ts) - epoch(prev_ts) > 1800
+                           THEN 1 ELSE 0 END)
+                    OVER (PARTITION BY user_id ORDER BY ts, event_id
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                    AS BIGINT) AS session_id
+           FROM x)
+         SELECT user_id, session_id, count(*) AS n_events,
+                CAST(floor(min(epoch(ts))) AS BIGINT) AS start_s,
+                CAST(floor(max(epoch(ts))) AS BIGINT) AS end_s
+         FROM y GROUP BY user_id, session_id ORDER BY user_id, session_id"""
+
+  /** events_retention oracle (shared verbatim with the `_sql` twin). */
+  private val RetentionOracleSql =
+    """WITH ud AS (SELECT DISTINCT user_id,
+                          CAST(date_trunc('day', ts) AS TIMESTAMP) AS day
+                   FROM events),
+         c AS (SELECT user_id, min(day) AS cohort_day FROM ud GROUP BY 1)
+         SELECT c.cohort_day,
+                CAST(date_diff('day', c.cohort_day, u.day) AS INT) AS day_offset,
+                count(*) AS n_users
+         FROM ud u JOIN c ON u.user_id = c.user_id
+         GROUP BY 1, 2 ORDER BY 1, 2"""
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Fixpoint, Tables, WorkingSet}
+import graft.core.{Fixpoint, Query, Tables, WorkingSet}
 
 /** Iterative graph analytics beyond connected components (which
   * lives with its dedup consumer in [[Dedup.components]]).
@@ -1706,4 +1706,239 @@ object Graph {
          FROM e$rounds e LEFT JOIN sf s ON s.u = e.u AND s.v = e.v
          ORDER BY e.u, e.v"""
   }
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    Query("graph_pagerank", (s, d) => pagerank(s, d), pagerankSql),
+    Query("graph_pagerank_weighted", (s, d) => pagerankWeighted(s, d), pagerankWeightedSql),
+    Query("graph_hits", (s, d) => hits(s, d), hitsOracleSql()),
+    // SAME oracle text as graph_pagerank: 3 cold rounds + a 2-round
+    // warm resume from the full round-3 vector must be bit-identical
+    // to 5 straight rounds — the hash match IS the resume proof
+    Query("graph_pagerank_resume", (s, d) => pagerankResume(s, d), pagerankSql),
+    // id-ordered 3-way self-join: orientation in the Spark plan only
+    // changes where each triangle is FOUND, never the per-node census
+    Query("graph_triangles", supplierTriangles,
+      s"""WITH ${coOrderedCtes("e", "l_suppkey", 5)},
+         t AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
+               FROM e e1 JOIN e e2 ON e1.v = e2.u
+               JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
+         n AS (SELECT a AS suppkey FROM t UNION ALL
+               SELECT b FROM t UNION ALL SELECT c FROM t)
+         SELECT suppkey, count(*) AS n_tri FROM n
+         GROUP BY suppkey ORDER BY suppkey"""),
+    // same co-supply edges + degree join, exact BIGINT moment sums
+    // (DuckDB's HUGEINT sums cast back), and the identical one-shot
+    // double Pearson expression — NULL on a variance-free graph
+    Query("graph_assortativity", assortativity,
+      s"""WITH ${coOrderedCtes("e", "l_suppkey", 5)},
+         d AS (SELECT n, CAST(count(*) AS BIGINT) AS deg
+               FROM (SELECT u AS n FROM e UNION ALL SELECT v FROM e)
+               GROUP BY n),
+         j AS (SELECT du.deg AS du, dv.deg AS dv
+               FROM e JOIN d du ON du.n = e.u JOIN d dv ON dv.n = e.v),
+         s AS (SELECT CAST(count(*) AS BIGINT) AS m,
+                      CAST(sum(du + dv) AS BIGINT) AS s_deg,
+                      CAST(sum(du * du + dv * dv) AS BIGINT) AS s_deg2,
+                      CAST(sum(du * dv * 2) AS BIGINT) AS s_degprod
+               FROM j)
+         SELECT m * 2 AS n, s_deg, s_deg2, s_degprod,
+                round(CASE WHEN CAST(m * 2 AS DOUBLE) * CAST(s_deg2 AS DOUBLE)
+                                - CAST(s_deg AS DOUBLE) * CAST(s_deg AS DOUBLE) = 0
+                           THEN NULL
+                           ELSE (CAST(m * 2 AS DOUBLE) * CAST(s_degprod AS DOUBLE)
+                                 - CAST(s_deg AS DOUBLE) * CAST(s_deg AS DOUBLE))
+                                / (CAST(m * 2 AS DOUBLE) * CAST(s_deg2 AS DOUBLE)
+                                   - CAST(s_deg AS DOUBLE) * CAST(s_deg AS DOUBLE)) END,
+                      6) AS assortativity
+         FROM s"""),
+    // triangles census + degrees, wedge-normalized in exact ppm;
+    // deg >= 2 rows only, triangle-free nodes report 0
+    Query("graph_clustering", clustering,
+      s"""WITH ${coOrderedCtes("e", "l_suppkey", 5)},
+         t AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
+               FROM e e1 JOIN e e2 ON e1.v = e2.u
+               JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
+         n AS (SELECT a AS suppkey FROM t UNION ALL
+               SELECT b FROM t UNION ALL SELECT c FROM t),
+         tri AS (SELECT suppkey, CAST(count(*) AS BIGINT) AS n_tri
+                 FROM n GROUP BY suppkey),
+         d AS (SELECT nn, CAST(count(*) AS BIGINT) AS deg
+               FROM (SELECT u AS nn FROM e UNION ALL SELECT v FROM e)
+               GROUP BY nn)
+         SELECT d.nn AS suppkey, d.deg,
+                coalesce(tri.n_tri, 0) AS n_tri,
+                CAST((2000000 * coalesce(tri.n_tri, 0))
+                     // (d.deg * (d.deg - 1)) AS BIGINT) AS cc_ppm
+         FROM d LEFT JOIN tri ON tri.suppkey = d.nn
+         WHERE d.deg >= 2 ORDER BY suppkey"""),
+    // part co-purchase edges (co-ordered >= 2); wedge pairs from the
+    // id-ordered neighbor self-join (≡ the Spark side's sorted-array
+    // pair generation), per-wedge truncating 10^6 // deg(z) for
+    // resource allocation, anti-join drops existing edges, top-100
+    // by (jaccard, cn, u, v)
+    Query("graph_linkpred", (s, d) => linkPrediction(s, d),
+      s"""WITH ${coOrderedCtes("e", "l_partkey", 2)},
+         nb AS (SELECT u AS n, v AS m FROM e UNION ALL SELECT v, u FROM e),
+         d AS (SELECT n, CAST(count(*) AS BIGINT) AS deg FROM nb GROUP BY n),
+         w AS (SELECT a.m AS u, b.m AS v, a.n AS z
+               FROM nb a JOIN nb b ON a.n = b.n AND a.m < b.m),
+         s AS (SELECT w.u, w.v, CAST(count(*) AS BIGINT) AS cn,
+                      CAST(sum(1000000 // d.deg) AS BIGINT) AS ra_ppm
+               FROM w JOIN d ON d.n = w.z GROUP BY 1, 2),
+         c AS (SELECT s.* FROM s LEFT JOIN e
+                 ON e.u = s.u AND e.v = s.v WHERE e.u IS NULL)
+         SELECT c.u, c.v, c.cn,
+                CAST(1000000 * c.cn // (du.deg + dv.deg - c.cn) AS BIGINT)
+                  AS jac_ppm,
+                c.ra_ppm
+         FROM c JOIN d du ON du.n = c.u JOIN d dv ON dv.n = c.v
+         ORDER BY jac_ppm DESC, cn DESC, u, v LIMIT 100"""),
+    // same thresholded co-purchase pairs; truncating integer ppm for
+    // support/confidence, one rounded double for lift
+    Query("basket_rules", (s, d) => basketRules(s, d),
+      s"""WITH ${coOrderedCtes("e", "l_partkey", 2)},
+         pc AS (SELECT l_partkey AS p, CAST(count(*) AS BIGINT) AS np
+                FROM sl GROUP BY 1),
+         nb AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n
+                FROM lineitem),
+         d AS (SELECT u AS ant, v AS cons, w FROM e
+               UNION ALL SELECT v, u, w FROM e)
+         SELECT d.ant, d.cons, d.w AS n_both, pa.np AS n_ant,
+                pb.np AS n_cons, nb.n AS n_baskets,
+                CAST(1000000 * d.w // nb.n AS BIGINT) AS support_ppm,
+                CAST(1000000 * d.w // pa.np AS BIGINT) AS conf_ppm,
+                round(CAST(d.w AS DOUBLE) * CAST(nb.n AS DOUBLE)
+                      / (CAST(pa.np AS DOUBLE) * CAST(pb.np AS DOUBLE)), 6)
+                  AS lift
+         FROM d JOIN pc pa ON pa.p = d.ant
+                JOIN pc pb ON pb.p = d.cons CROSS JOIN nb
+         ORDER BY ant, cons"""),
+    // same co-supply edge derivation as graph_triangles, then a
+    // recursive-CTE transitive closure labels each supplier with the
+    // min reachable suppkey — the oracle for the generic min-label
+    // propagation loop on its second input (reach is bounded by
+    // |component|² rows, fine at the gate SF)
+    Query("graph_components", (s, d) => supplierComponents(s, d),
+      s"""WITH RECURSIVE ${coOrderedCtes("e0", "l_suppkey", 5)},
+         edges AS (SELECT u AS a, v AS b FROM e0
+                   UNION SELECT v, u FROM e0),
+         reach(a, b) AS (
+           SELECT a, b FROM edges
+           UNION
+           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+         comp AS (
+           SELECT a AS suppkey, least(a, min(b)) AS component
+           FROM reach GROUP BY a)
+         SELECT suppkey, component FROM comp ORDER BY suppkey"""),
+    Query("graph_communities", (s, d) => supplierCommunities(s, d),
+      s"""WITH RECURSIVE ${coOrderedCtes("e0", "l_suppkey", 5)},
+         edges AS (SELECT u AS a, v AS b FROM e0
+                   UNION SELECT v, u FROM e0),
+         reach(a, b) AS (
+           SELECT a, b FROM edges
+           UNION
+           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+         comp AS (
+           SELECT a AS node, least(a, min(b)) AS component
+           FROM reach GROUP BY a),
+         ns AS (SELECT component, count(*) AS n_members
+                FROM comp GROUP BY 1),
+         es AS (SELECT c.component, count(*) AS n_edges,
+                       CAST(sum(e0.w) AS BIGINT) AS internal_weight
+                FROM e0 JOIN comp c ON e0.u = c.node GROUP BY 1)
+         SELECT ns.component, ns.n_members, es.n_edges,
+                es.internal_weight,
+                CAST((2000000 * es.n_edges)
+                     // (ns.n_members * (ns.n_members - 1)) AS BIGINT)
+                  AS density_ppm
+         FROM ns JOIN es ON ns.component = es.component
+         ORDER BY ns.component"""),
+    // the same closure replayed per threshold level over one
+    // materialized base edge set (generated, so sweep and oracle
+    // share the threshold list by construction)
+    Query("graph_communities_sweep", (s, d) => supplierCommunitySweep(s, d),
+      communitySweepOracleSql()),
+    // same transitive closure as graph_components, weights kept into
+    // the per-community aggregate; integer density in ppm
+    // the τ=5 partition scored on the τ=3 graph — HUGEINT numerator
+    // mirrors the Spark DECIMAL(38,0), singleton coalesce identical
+    Query("graph_modularity", (s, d) => modularity(s, d), modularityOracleSql()),
+    Query("graph_degree_dist", (s, d) => degreeDist(s, d), degreeDistOracleSql()),
+    // the SQL twin is gated against the VERBATIM same oracle text
+    Query("graph_degree_dist_sql", (s, d) => Tables.runSql(s, d, DegreeDistSparkSql),
+      degreeDistOracleSql()),
+    Query("graph_sssp", (s, d) => sssp(s, d), ssspOracleSql()),
+    // mutual-top-m sparsification: same co-supply CTE as the triangle
+    // family, (w desc, id) rank rule on both sides
+    Query("graph_backbone", backbone, backboneOracleSql()),
+    // synchronous support peel unrolled (extra rounds idempotent);
+    // final support recomputed on the surviving subgraph
+    Query("graph_ktruss", ktruss, ktrussOracleSql()),
+    Query("graph_coreness", (s, d) => coreness(s, d), corenessOracleSql()),
+    // generated unrolled synchronous peel (idempotent past stability)
+    Query("graph_kcore", (s, d) => kcore(s, d), kcoreOracleSql()),
+    Query("graph_kcore_weighted", (s, d) => kcoreWeighted(s, d), kcoreWeightedOracleSql()),
+  )
+
+  /** graph_pagerank oracle: the fixed-point integer formulation makes
+    * every iteration pure SQL — unrolled here as chained CTEs (one
+    * per round), since the arithmetic is integer-exact on both
+    * engines (`div`/`//` truncation on non-negative values). */
+  private lazy val pagerankSql: String = pagerankOracle(weighted = false)
+
+  /** graph_pagerank_weighted oracle: per-edge (pr · w) // wout —
+    * truncation applied per edge BEFORE the sum in both engines, so
+    * the chain stays hash-exact. The unweighted chain is this one at
+    * w ≡ 1, where wout is the out-degree. */
+  private lazy val pagerankWeightedSql: String = pagerankOracle(weighted = true)
+
+  private def pagerankOracle(weighted: Boolean): String = {
+    val iters = 5
+    val chain = (1 to iters).map { i =>
+      s"""pr$i AS (SELECT d.node, d.wout,
+             (${Scale} * 15 // 100) // c.n
+               + (${Damping} * sum((p.pr * e.w) // p.wout)) // 100 AS pr
+           FROM pr${i - 1} p JOIN edges e ON p.node = e.src
+             JOIN deg d ON e.dst = d.node
+             CROSS JOIN const c
+           GROUP BY d.node, d.wout, c.n)"""
+    }.mkString(",\n         ")
+    s"""WITH pairs AS (SELECT
+             'C' || CAST(o_custkey AS VARCHAR) AS c,
+             'S' || CAST(l_suppkey AS VARCHAR) AS s,
+             ${if (weighted) "count(*)" else "1"} AS w
+           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+           GROUP BY 1, 2),
+         edges AS (SELECT c AS src, s AS dst, w FROM pairs
+                   UNION ALL SELECT s AS src, c AS dst, w FROM pairs),
+         deg AS (SELECT src AS node, sum(w) AS wout FROM edges GROUP BY src),
+         const AS (SELECT count(*) AS n FROM deg),
+         pr0 AS (SELECT node, wout, ${Scale} // n AS pr
+                 FROM deg CROSS JOIN const),
+         $chain
+         SELECT node, CAST(pr AS BIGINT) AS pr FROM pr$iters
+         ORDER BY pr DESC, node LIMIT 100"""
+  }
+
+  /** [[degreeDist]] in plain SQL — the
+    * graph-family entry of the SQL-only tier: the co-supply edge
+    * base (DISTINCT (order, supplier) pairs self-joined, ≥ 3 shared
+    * orders) and the two grouped aggregates, verbatim the algebra of
+    * the DataFrame twin and hash-gated against its IDENTICAL oracle.
+    * (The DataFrame twin additionally reuses the PlanCache-memoized
+    * edge base across the graph family — a library optimization the
+    * SQL surface doesn't need for correctness.) */
+  private val DegreeDistSparkSql =
+    """WITH sl AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
+         e0 AS (SELECT a.l_suppkey AS u, b.l_suppkey AS v
+                FROM sl a JOIN sl b ON a.l_orderkey = b.l_orderkey
+                 AND a.l_suppkey < b.l_suppkey
+                GROUP BY a.l_suppkey, b.l_suppkey HAVING count(*) >= 3),
+         d AS (SELECT n, count(*) AS degree
+               FROM (SELECT u AS n FROM e0
+                     UNION ALL SELECT v AS n FROM e0) t
+               GROUP BY n)
+       SELECT degree, count(*) AS n_nodes
+       FROM d GROUP BY degree ORDER BY degree"""
 }

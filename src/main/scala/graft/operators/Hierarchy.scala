@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Fixpoint, Tables, WorkingSet}
+import graft.core.{Fixpoint, Query, Tables, WorkingSet}
 
 /** Recursive hierarchy flattening — root and depth for every node of
   * a parent-pointer tree (SURVEY.md §2.B extension; reference scope:
@@ -142,4 +142,14 @@ object Hierarchy {
        SELECT node, CAST(arg_max(cur, depth) AS BIGINT) AS root,
               CAST(max(depth) AS BIGINT) AS depth
        FROM walk GROUP BY node ORDER BY node"""
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    // the naive O(depth) recursive walk vs the Spark side's
+    // O(log depth) pointer doubling — the hash match proves the
+    // doubled composition lands on the identical closure
+    Query("q_hierarchy", hierarchy, hierarchyOracleSql),
+    Query("q_hierarchy_rollup", hierarchyRollup,
+      hierarchyRollupOracleSql),
+  )
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Query, Tables}
 
 /** Multi-dimensional data layout — z-order (Morton) clustering, the
   * storage-side twin of predicate pushdown: interleaving the bits of
@@ -128,4 +128,12 @@ object Layout {
               min(x) AS min_custkey, max(x) AS max_custkey,
               min(y) AS min_day, max(y) AS max_day
        FROM z GROUP BY file_id ORDER BY file_id"""
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    // z-order manifest: bucket, interleave, and file expressions all
+    // render from one Scala source into both dialects — integer math
+    // on non-negatives, so div ≡ // and the manifest hash-matches
+    Query("pipeline_zorder", zorderManifest, zorderOracleSql),
+  )
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Query, Tables}
 import graft.functions.PortableHash
 
 /** Record linkage: fuzzy (edit-distance) matching over a name
@@ -351,4 +351,38 @@ object Linkage {
        FROM lab l JOIN best b ON b.component = l.component
                   JOIN st ON st.component = l.component
        ORDER BY l.name"""
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    // Naive all-pairs at the dictionary level IS the ground truth:
+    // the Spark side only ever sees FastSS deletion-variant-blocked
+    // candidates, so the hash match proves the blocking complete
+    // (the q_salted_join contract). Dictionary-bounded: 64 distinct
+    // part names at every SF.
+    Query("er_fuzzy_names", fuzzyNames, FuzzyNamesSql),
+    // SAME ground-truth oracle text: the q-gram-blocked surface must
+    // land on the identical pair set, so the hash match proves the
+    // positional count filter (+ short-name fallback) complete — the
+    // dedup_components_resume shared-oracle contract
+    Query("er_qgram_names", qgramNames, FuzzyNamesSql),
+    // τ bank over the verified pair set, candidates once at τ=max;
+    // the naive all-pairs oracle doubles as the completeness proof
+    Query("er_tau_sweep", erTauSweep, tauSweepOracleSql),
+    Query("er_canonical", canonicalNames, canonicalOracleSql),
+  )
+
+  /** Naive all-pairs levenshtein at the dictionary level — ground
+    * truth by construction, shared by BOTH blocked linkage surfaces
+    * (FastSS deletion variants and positional q-gram count filter):
+    * each hash match proves that blocking complete. Dictionary-
+    * bounded: 64 distinct part names at every SF. */
+  private val FuzzyNamesSql =
+    s"""WITH nm AS (SELECT p_name AS name, count(*) AS cnt
+                   FROM part GROUP BY 1)
+       SELECT a.name AS name_a, b.name AS name_b,
+              CAST(levenshtein(a.name, b.name) AS BIGINT) AS dist,
+              a.cnt AS cnt_a, b.cnt AS cnt_b
+       FROM nm a JOIN nm b ON a.name < b.name
+       WHERE levenshtein(a.name, b.name) <= ${Tau}
+       ORDER BY name_a, name_b"""
 }

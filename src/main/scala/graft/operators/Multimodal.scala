@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Query, Tables}
 
 /** Multimodal column plumbing (SURVEY.md §2 G): media as opaque
   * `binary` payloads + typed metadata, decoded partition-wise in
@@ -1014,4 +1014,45 @@ object Multimodal {
               GROUP BY hb.doc_id)
        SELECT sig, count(*) AS n_docs, min(doc_id) AS keep_id
        FROM sg GROUP BY sig HAVING count(*) > 1 ORDER BY sig"""
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    // REAL decode: per-format metadata over the BMP/PNG-mixed corpus,
+    // a real container walk + per-frame decode, an EXECUTED
+    // checksummed resample, exact pixel moments, and
+    // histogram-signature near-dup over decoded pixels. Each oracle
+    // recomputes what the codec MUST yield from the planted
+    // geometry/pixels (generated from Multimodal's single source of
+    // truth), so a header-parse, container-walk, resample, or moment
+    // bug on either side fails the hash.
+    Query("mm_meta_stats", metaStatsMixed, metaStatsMixedOracleSql),
+    Query("mm_frame_sample", frameSampleReal, frameSampleRealOracleSql),
+    Query("mm_resize", resizeReal, resizeRealOracleSql),
+    Query("mm_features", pixelMomentsReal, pixelMomentsRealOracleSql),
+    Query("mm_dedup", nearDupMedia, nearDupMediaOracleSql),
+    // REAL-decode pair: the Spark side renders genuine BMP bytes and
+    // decodes them with javax.imageio; these oracles recompute what
+    // the decode MUST yield from the planted geometry (generated from
+    // Multimodal's single source of truth — BMP is lossless, so a
+    // stride/padding/row-order bug on either side fails the hash).
+    Query("mm_decode_meta", decodeMetaReal, decodeMetaRealOracleSql),
+    Query("mm_decode_hist", pixelHistReal, pixelHistRealOracleSql),
+    // decode → 8x8 nearest-neighbor thumbnail → 56-bit dHash, all on
+    // genuine decoded pixels; oracle rebuilds every comparison bit
+    // through the same integer resample mapping
+    Query("mm_dhash", mediaDhash, mediaDhashOracleSql),
+    Query("mm_phash", mediaPhash, mediaPhashOracleSql),
+    Query("mm_ahash", mediaAhash, mediaAhashOracleSql),
+    Query("mm_dedup_real", nearDupDhash, nearDupDhashOracleSql),
+    Query("mm_dedup_hamming", (s, d) => nearDupHamming(s, d), nearDupHammingOracleSql),
+    // the same chain over a half-BMP/half-PNG corpus — the hash gate
+    // itself proves the PNG decode path (lossless ⇒ same oracle)
+    // the mixed BMP/PNG corpus is gated against the IDENTICAL
+    // planted-pixel oracles — lossless decode means format-invariant
+    // rows, so a PNG-path bug hash-fails at the oracle gate
+    Query("mm_dedup_hamming_mixed", (s, d) => nearDupHammingMixed(s, d), nearDupHammingOracleSql),
+    Query("mm_decode_hist_mixed", pixelHistRealMixed, pixelHistRealOracleSql),
+    Query("mm_dedup_phash", (s, d) => nearDupPhash(s, d), nearDupPhashOracleSql),
+    Query("mm_dedup_ahash", (s, d) => nearDupAhash(s, d), nearDupAhashOracleSql),
+  )
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, WorkingSet}
+import graft.core.{Query, Tables, WorkingSet}
 import graft.functions.{Hll, PortableHash}
 
 /** Data-profiling operator block: the "what is in this table" sweep
@@ -1488,4 +1488,279 @@ object Profile {
               2 * cents > 5 * q3_cents - 3 * q1_cents AS is_high
        FROM daily CROSS JOIN q1 CROSS JOIN q3
        ORDER BY day"""
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    // generated from the same FdPairs list the Spark sweep uses
+    Query("profile_fd", fdProfile, fdOracleSql),
+    // generated from the same MiPairs list; per-factor micro-nat log
+    // quantization (the collocations PMI rule) keeps the cell sums
+    // exact BIGINTs in both engines
+    Query("profile_mi", miProfile, miOracleSql),
+    // same column list and ppm literals; the chi-square quantizes
+    // each term to micro-units so the 9-term sum is order-proof
+    Query("profile_benford", benfordProfile, benfordOracleSql),
+    // PSI drift: same split constant and micro-nat ln quantization;
+    // per-type terms micro-quantized before the total so the sum is
+    // exact BIGINT on both engines
+    Query("profile_psi", psiProfile, psiOracleSql),
+    // the SQL twin is gated against the VERBATIM same oracle text
+    Query("profile_psi_sql", (s, d) => Tables.runSql(s, d, PsiSparkSql), psiOracleSql),
+    // quantized two-sample KS on the shared HDR bucket grid: exact
+    // BIGINT D numerator, one final double division
+    Query("profile_ks", ksProfile, ksOracleSql),
+    Query("profile_jsd", jsdProfile, jsdOracleSql),
+    Query("profile_checks", checksProfile, checksOracleSql),
+    // Tukey fences as cleared-fraction integer compares on rank-
+    // selected quartiles — no float boundary
+    Query("profile_outliers", profileOutliers, profileOutliersSql),
+    // (O−E)²/E with every fraction cleared through n²: deterministic
+    // integer micro-units per cell + the __total__ sum row
+    Query("profile_chi2", profileChi2, profileChi2Sql),
+    // the chi2 oracle as a CTE + the identical forced-double
+    // effect-size tail (cast -> /1e6 -> /n -> /df -> sqrt -> round 6)
+    Query("profile_cramers_v", profileCramersV, profileCramersVSql),
+    Query("profile_cat_entropy", catEntropy, catEntropySql),
+    Query("profile_topk_values", (s, d) => topValues(s, d), topValuesSql()),
+    Query("profile_seq_gaps", seqProfile, seqOracleSql),
+    // generated from the same CASE chains the Spark plan runs — the
+    // bucket/rank/midpoint rules have one Scala source of truth
+    Query("profile_qsketch", qsketchProfile, qsketchOracleSql),
+    // KMV overlap: the oracle rebuilds the identical bottom-k sketch
+    // from the same portable hash and derives the same exact-in-DOUBLE
+    // estimator — an approximate operator under the exact hash gate.
+    Query("profile_kmv_overlap", kmvOverlap, kmvOverlapOracleSql),
+    // per-key-column count histogram folded to max/distinct/total;
+    // all-integer ppm ratios (div ≡ // on non-negatives)
+    Query("profile_skew", skewProfile,
+      """WITH m AS (
+           SELECT 'l_orderkey' AS key_col, l_orderkey AS k FROM lineitem
+           UNION ALL
+           SELECT 'l_partkey', l_partkey FROM lineitem
+           UNION ALL
+           SELECT 'l_suppkey', l_suppkey FROM lineitem),
+         c AS (SELECT key_col, k, count(*) AS cnt FROM m GROUP BY 1, 2),
+         f AS (SELECT key_col,
+                      CAST(sum(cnt) AS BIGINT) AS n_rows,
+                      CAST(count(*) AS BIGINT) AS n_distinct,
+                      CAST(max(cnt) AS BIGINT) AS max_cnt
+               FROM c GROUP BY key_col)
+         SELECT key_col, n_rows, n_distinct, max_cnt,
+                max_cnt * 1000000 // n_rows AS hot_share_ppm,
+                max_cnt * n_distinct * 1000000 // n_rows AS skew_ratio_ppm
+         FROM f ORDER BY key_col"""),
+    // same bottom-k-by-hash sample as profile_quantiles; median and
+    // MAD are exact index-selects within it (|x−med| is IEEE-exact)
+    Query("profile_mad", (s, d) => madProfile(s, d),
+      s"""WITH $LineitemSampleCtes,
+         med AS (SELECT col_name, n, value AS median FROM s
+                 WHERE vr = CAST(floor(0.5 * (n - 1)) AS BIGINT) + 1),
+         d AS (SELECT s.col_name, med.n, med.median,
+                      abs(s.value - med.median) AS dev
+               FROM s JOIN med ON s.col_name = med.col_name),
+         dr AS (SELECT col_name, n, median, dev,
+                       row_number() OVER (PARTITION BY col_name
+                                          ORDER BY dev) AS dvr
+                FROM d)
+         SELECT col_name, CAST(n AS BIGINT) AS n_sample, median,
+                dev AS mad
+         FROM dr WHERE dvr = CAST(floor(0.5 * (n - 1)) AS BIGINT) + 1
+         ORDER BY col_name"""),
+    Query("profile_numeric", numericProfile,
+      """WITH m AS (
+           SELECT 'l_quantity' AS col_name, l_quantity AS value FROM lineitem
+           UNION ALL SELECT 'l_extendedprice', l_extendedprice FROM lineitem
+           UNION ALL SELECT 'l_discount', l_discount FROM lineitem
+           UNION ALL SELECT 'l_tax', l_tax FROM lineitem)
+         SELECT col_name, count(value) AS n,
+                count(DISTINCT value) AS n_distinct,
+                round(min(value), 4) AS min_value,
+                round(max(value), 4) AS max_value,
+                round(CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
+                      / 100.0 / count(value), 6) AS mean
+         FROM m GROUP BY col_name ORDER BY col_name"""),
+    // HLL oracle: rebuilds every register with one group-by-max over
+    // the same portable hash, then derives the identical estimate —
+    // rank rule and estimate formula are generated from the SAME
+    // Hll.rankCaseSql/estimateSql strings the library uses.
+    Query("profile_hll_users", hllUsers, hllUsersSql),
+    // Mode rule mirrored exactly: max(struct(cnt, value)) ≡
+    // ORDER BY cnt DESC, value DESC LIMIT 1 per column.
+    Query("profile_strings", stringProfile,
+      """WITH m AS (
+           SELECT 'p_name' AS col_name, p_name AS value FROM part
+           UNION ALL SELECT 'p_brand', p_brand FROM part
+           UNION ALL SELECT 'p_type', p_type FROM part),
+         base AS (
+           SELECT col_name,
+                  count(value) AS n,
+                  count(DISTINCT value) AS n_distinct,
+                  CAST(sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
+                  min(length(value)) AS min_len,
+                  max(length(value)) AS max_len,
+                  round(CAST(sum(length(value)) AS DOUBLE) / count(value), 4) AS avg_len
+           FROM m GROUP BY col_name),
+         cnts AS (
+           SELECT col_name, value, count(*) AS cnt
+           FROM m WHERE value IS NOT NULL GROUP BY col_name, value),
+         tops AS (
+           SELECT col_name, value AS top_value, cnt AS top_cnt,
+                  row_number() OVER (PARTITION BY col_name
+                    ORDER BY cnt DESC, value DESC) AS rn
+           FROM cnts)
+         SELECT b.col_name, b.n, b.n_distinct, b.n_null, b.min_len,
+                b.max_len, b.avg_len, t.top_value, t.top_cnt
+         FROM base b JOIN tops t ON t.col_name = b.col_name AND t.rn = 1
+         ORDER BY b.col_name"""),
+    // Exact-integer co-moments (HUGEINT twin of DECIMAL(38,0)) make
+    // a normally order-dependent float statistic hash-matchable.
+    Query("profile_corr", corrProfile, corrSql),
+    // identical bottom-k sample: rank by the shared portable row hash
+    // (ties broken by value — value ties across the k boundary leave
+    // the sample MULTISET unchanged), then exact index picks from the
+    // value-sorted sample
+    Query("profile_quantiles", (s, d) => quantileProfile(s, d),
+      s"""WITH $LineitemSampleCtes,
+         p AS (SELECT * FROM (VALUES (1), (5), (25), (50), (75), (95), (99))
+               AS t(pct))
+         SELECT s.col_name, p.pct, s.value
+         FROM s JOIN p
+           ON s.vr = CAST(floor(p.pct / 100.0 * (s.n - 1)) AS BIGINT) + 1
+         ORDER BY col_name, pct"""),
+    // identical IEEE double bucket arithmetic; max clamps into the
+    // last bucket, constant columns collapse to bucket 0
+    Query("profile_histogram", (s, d) => histogramProfile(s, d),
+      """WITH m AS (
+           SELECT 'l_quantity' AS col_name, l_quantity AS value FROM lineitem
+           UNION ALL SELECT 'l_extendedprice', l_extendedprice FROM lineitem
+           UNION ALL SELECT 'l_discount', l_discount FROM lineitem
+           UNION ALL SELECT 'l_tax', l_tax FROM lineitem),
+         b AS (SELECT col_name, min(value) AS lo, max(value) AS hi
+               FROM m GROUP BY 1)
+         SELECT m.col_name,
+                CAST(CASE WHEN b.hi = b.lo THEN 0
+                     ELSE least(floor((m.value - b.lo) * 16 / (b.hi - b.lo)),
+                                15) END AS INT) AS bucket,
+                count(*) AS cnt
+         FROM m JOIN b ON m.col_name = b.col_name
+         GROUP BY 1, 2 ORDER BY 1, 2"""),
+  )
+
+  /** [[psiProfile]] in plain SQL — the
+    * profile-family entry of the SQL-only tier: same split constant,
+    * same micro-nat quantization and declared op order (DOUBLE share
+    * difference × BIGINT micro-log-ratio, one final round), same
+    * NULL contract for single-sided types, same `__total__` row.
+    * The 1-row totals CTE rides a broadcast hint exactly like the
+    * DataFrame twin's `broadcast(tot)`. */
+  private val PsiSparkSql = {
+    val split = PsiSplitTs
+    s"""WITH c AS (
+          SELECT event_type,
+                 sum(CASE WHEN ts < TIMESTAMP '$split' THEN 1 ELSE 0 END) AS n_ref,
+                 sum(CASE WHEN ts >= TIMESTAMP '$split' THEN 1 ELSE 0 END) AS n_cur
+          FROM events GROUP BY event_type),
+        t AS (SELECT sum(n_ref) AS nr, sum(n_cur) AS nc FROM c),
+        s AS (
+          SELECT /*+ BROADCAST(t) */ c.event_type, c.n_ref, c.n_cur,
+                 CAST(round(
+                   (CAST(c.n_ref AS DOUBLE) / t.nr - CAST(c.n_cur AS DOUBLE) / t.nc)
+                   * (CASE WHEN c.n_ref > 0 AND c.n_cur > 0 THEN
+                        CAST(round(ln(CAST(c.n_ref * t.nc AS DOUBLE)
+                                      / CAST(c.n_cur * t.nr AS DOUBLE)) * 1e6, 0) AS BIGINT)
+                      END), 0) AS BIGINT) AS psi_micro
+          FROM c CROSS JOIN t)
+        SELECT event_type, n_ref, n_cur, psi_micro,
+               round(CAST(psi_micro AS DOUBLE) / 1e6, 6) AS psi
+        FROM s
+        UNION ALL
+        SELECT /*+ BROADCAST(t) */ '__total__', t.nr, t.nc, x.sm,
+               round(CAST(x.sm AS DOUBLE) / 1e6, 6)
+        FROM t CROSS JOIN (SELECT sum(psi_micro) AS sm FROM s) x
+        ORDER BY event_type"""
+  }
+
+  /** The bottom-k-by-hash sample shared by profile_quantiles and
+    * profile_mad: per lineitem column, the 1000 rows with the smallest
+    * portable row hash (`s`: col_name, value, value rank `vr`, `n`). */
+  private val LineitemSampleCtes: String =
+    s"""m AS (
+           SELECT ${PortableHash.h60Sql(
+                    "CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)")} AS h,
+                  col_name, value
+           FROM (SELECT l_orderkey, l_linenumber, 'l_quantity' AS col_name,
+                        l_quantity AS value FROM lineitem
+                 UNION ALL SELECT l_orderkey, l_linenumber, 'l_extendedprice',
+                        l_extendedprice FROM lineitem
+                 UNION ALL SELECT l_orderkey, l_linenumber, 'l_discount',
+                        l_discount FROM lineitem
+                 UNION ALL SELECT l_orderkey, l_linenumber, 'l_tax',
+                        l_tax FROM lineitem)),
+         r AS (SELECT col_name, value,
+                      row_number() OVER (PARTITION BY col_name
+                                         ORDER BY h, value) AS rn
+               FROM m),
+         s AS (SELECT col_name, value,
+                      row_number() OVER (PARTITION BY col_name
+                                         ORDER BY value) AS vr,
+                      count(*) OVER (PARTITION BY col_name) AS n
+               FROM r WHERE rn <= 1000)"""
+
+  /** profile_corr oracle: the same exact integer co-moments in
+    * HUGEINT (DuckDB's int128 twin of Spark's DECIMAL(38,0)), the
+    * same textbook formula, pair labels generated from one list. */
+  private def corrSql: String = {
+    val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+    val centsCols = cols.map(c =>
+      s"CAST(round($c * 100, 0) AS BIGINT) AS c_$c").mkString(",\n                ")
+    val sums = (
+      cols.map(c => s"sum(CAST(c_$c AS HUGEINT)) AS s_$c") ++
+        cols.map(c => s"sum(CAST(c_$c AS HUGEINT) * CAST(c_$c AS HUGEINT)) AS ss_$c") ++
+        cols.combinations(2).map { case Seq(a, b) =>
+          s"sum(CAST(c_$a AS HUGEINT) * CAST(c_$b AS HUGEINT)) AS sp_${a}_$b"
+        }).mkString(",\n                ")
+    val rows = cols.combinations(2).map { case Seq(a, b) =>
+      s"""SELECT '$a' AS col_x, '$b' AS col_y,
+              round(CAST(n * sp_${a}_$b - s_$a * s_$b AS DOUBLE)
+                / sqrt(CAST(n * ss_$a - s_$a * s_$a AS DOUBLE)
+                       * CAST(n * ss_$b - s_$b * s_$b AS DOUBLE)), 6) AS corr
+         FROM a"""
+    }.mkString("\n         UNION ALL\n         ")
+    s"""WITH c AS (SELECT
+                $centsCols
+           FROM lineitem),
+         a AS (SELECT CAST(count(*) AS HUGEINT) AS n,
+                $sums
+               FROM c)
+         $rows
+         ORDER BY col_x, col_y"""
+  }
+
+  /** profile_hll_users oracle: registers via group-by-max over the
+    * portable hash, estimate via the shared dialect-portable formula
+    * ([[graft.functions.Hll]]). */
+  private def hllUsersSql: String = {
+    val rank = Hll.rankCaseSql("v")
+    val est = Hll.estimateSql("n_present", "z_present")
+    s"""WITH h AS (
+           SELECT event_type, user_id,
+                  ${PortableHash.h60Sql("'hll#' || CAST(user_id AS VARCHAR)")} AS hv
+           FROM events),
+         b AS (SELECT event_type, user_id,
+                      hv % ${Hll.M} AS bucket, hv // ${Hll.M} AS v
+               FROM h),
+         r AS (SELECT event_type, bucket, max($rank) AS reg
+               FROM b GROUP BY event_type, bucket),
+         a AS (SELECT event_type, count(*) AS n_present,
+                      CAST(sum(CAST(1 AS BIGINT) << CAST(${Hll.W + 1} - reg AS INT)) AS BIGINT) AS z_present
+               FROM r GROUP BY event_type),
+         x AS (SELECT event_type, count(DISTINCT user_id) AS n_exact
+               FROM events GROUP BY event_type)
+         SELECT a.event_type, x.n_exact,
+                round($est, 2) AS est_distinct,
+                round(abs(($est) - x.n_exact) / x.n_exact, 4) AS rel_err,
+                CAST(${Hll.M} - a.n_present AS BIGINT) AS v_zero
+         FROM a JOIN x ON x.event_type = a.event_type
+         ORDER BY a.event_type"""
+  }
 }

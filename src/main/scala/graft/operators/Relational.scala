@@ -4,11 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Query, Tables}
 
 /** Relational / analytic operator block (SURVEY.md §2 B).
   *
-  * Conventions shared with the DuckDB oracles in SparkEntry:
+  * Conventions shared with the DuckDB oracles in [[queries]]:
   *  - money sums go through [[moneySum]] (exact integer cents) and
   *    averages are rounded, so aggregation-order noise can't flip a
   *    hash;
@@ -912,4 +912,488 @@ object Relational {
         round(min(col("o_totalprice")), 2).as("worst_price"))
       .orderBy("o_orderstatus")
   }
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    Query("q1_agg", q1Agg, Q1AggSql),
+    Query("q1_sql", (s, d) => Tables.runSql(s, d, Q1AggSql), Q1AggSql),
+    Query("q3_join_topk", q3JoinTopk,
+      """SELECT l_orderkey,
+                sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100, 0) AS BIGINT)) / 100.0 AS revenue,
+                o_orderdate, o_orderpriority
+         FROM customer, orders, lineitem
+         WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
+           AND l_orderkey = o_orderkey
+           AND o_orderdate < TIMESTAMP '1998-01-01'
+           AND l_shipdate > TIMESTAMP '1998-01-01'
+         GROUP BY l_orderkey, o_orderdate, o_orderpriority
+         ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10"""),
+    Query("q5_multijoin", q5Multijoin,
+      """SELECT n_name,
+                sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100, 0) AS BIGINT)) / 100.0 AS revenue
+         FROM customer, orders, lineitem, supplier, nation, region
+         WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+           AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+           AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
+           AND r_name = 'ASIA'
+           AND o_orderdate >= TIMESTAMP '1996-01-01'
+           AND o_orderdate < TIMESTAMP '1997-01-01'
+         GROUP BY n_name ORDER BY revenue DESC, n_name"""),
+    Query("q6_filter_agg", q6FilterAgg,
+      """SELECT sum(CAST(round((l_extendedprice * l_discount) * 100, 0) AS BIGINT)) / 100.0 AS revenue
+         FROM lineitem
+         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+           AND l_shipdate < TIMESTAMP '1997-01-01'
+           AND l_discount >= CAST(0.03 AS DOUBLE)
+           AND l_discount <= CAST(0.07 AS DOUBLE)
+           AND l_quantity < 24"""),
+    Query("q_topk_orders", qTopkOrders,
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+         ORDER BY o_totalprice DESC, o_orderkey LIMIT 20"""),
+    Query("q_group_having", qGroupHaving,
+      """SELECT o_custkey, count(*) AS n_orders,
+                sum(CAST(round((o_totalprice) * 100, 0) AS BIGINT)) / 100.0 AS spend
+         FROM orders GROUP BY o_custkey HAVING count(*) >= 5
+         ORDER BY o_custkey"""),
+    Query("q_distinct_agg", qDistinctAgg,
+      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
+                count(DISTINCT l_suppkey) AS n_supps
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
+    Query("q_window_rank", qWindowRank,
+      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
+           SELECT o_custkey, o_orderkey, o_totalprice,
+                  row_number() OVER (PARTITION BY o_custkey
+                    ORDER BY o_totalprice DESC, o_orderkey) AS rn
+           FROM orders)
+         WHERE rn <= 3 ORDER BY o_custkey, rn"""),
+    Query("q_window_running", qWindowRunning,
+      """SELECT o_custkey, o_orderkey,
+                round(sum(o_totalprice) OVER (PARTITION BY o_custkey
+                  ORDER BY o_orderdate, o_orderkey
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
+                  AS running_spend
+         FROM orders ORDER BY o_custkey, o_orderkey"""),
+    Query("q_window_range", qWindowRange,
+      """SELECT o_custkey, o_orderkey,
+                CAST(floor(epoch(o_orderdate)) AS BIGINT) AS epoch_s,
+                round(sum(o_totalprice) OVER (PARTITION BY o_custkey
+                  ORDER BY CAST(floor(epoch(o_orderdate)) AS BIGINT)
+                  RANGE BETWEEN 2592000 PRECEDING AND CURRENT ROW), 2)
+                  AS spend_30d
+         FROM orders ORDER BY o_custkey, o_orderkey"""),
+    Query("q_return_ratio", qReturnRatio,
+      """SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
+                round(CAST(sum(CASE WHEN l_returnflag = 'R'
+                         THEN CAST(round(l_extendedprice * 100, 0) AS BIGINT)
+                         ELSE 0 END) AS DOUBLE)
+                      / CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
+                         AS DOUBLE), 6) AS return_share,
+                count(*) AS n
+         FROM lineitem GROUP BY month ORDER BY month"""),
+    Query("q_semi_join", qSemiJoin,
+      """SELECT c_custkey, c_name FROM customer
+         WHERE EXISTS (SELECT 1 FROM orders
+                       WHERE o_custkey = c_custkey
+                         AND o_orderpriority = '1-URGENT')
+         ORDER BY c_custkey"""),
+    Query("q_anti_join", qAntiJoin,
+      """SELECT c_custkey, c_name FROM customer
+         WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+         ORDER BY c_custkey"""),
+    Query("q_union_agg", qUnionAgg,
+      """SELECT o_orderstatus, bucket, count(*) AS n FROM (
+           SELECT o_orderstatus, 'high' AS bucket FROM orders
+           WHERE o_totalprice > 400000
+           UNION ALL
+           SELECT o_orderstatus, 'low' AS bucket FROM orders
+           WHERE o_totalprice < 50000)
+         GROUP BY o_orderstatus, bucket ORDER BY o_orderstatus, bucket"""),
+    Query("q_rollup", qRollup,
+      """SELECT l_returnflag, l_linestatus,
+                round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
+         FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
+         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""),
+    Query("q_grouping_sets", qGroupingSets,
+      """SELECT l_returnflag, l_linestatus,
+                round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
+         FROM lineitem
+         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
+         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""),
+    // the PLAIN join: a hash match proves the salted join is
+    // value-invisible
+    Query("q_salted_join", qSaltedJoin,
+      """SELECT c_mktsegment, count(*) AS n_orders,
+                sum(CAST(round((o_totalprice) * 100, 0) AS BIGINT)) / 100.0 AS spend
+         FROM orders JOIN customer ON o_custkey = c_custkey
+         GROUP BY c_mktsegment ORDER BY c_mktsegment"""),
+    Query("q_pivot", qPivot,
+      """SELECT o_orderstatus,
+                sum(CAST(round((CASE WHEN o_orderpriority = '1-URGENT' THEN o_totalprice ELSE 0 END) * 100, 0) AS BIGINT)) / 100.0 AS urgent,
+                sum(CAST(round((CASE WHEN o_orderpriority = '2-HIGH' THEN o_totalprice ELSE 0 END) * 100, 0) AS BIGINT)) / 100.0 AS high,
+                sum(CAST(round((CASE WHEN o_orderpriority = '3-MEDIUM' THEN o_totalprice ELSE 0 END) * 100, 0) AS BIGINT)) / 100.0 AS medium,
+                sum(CAST(round((CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN o_totalprice ELSE 0 END) * 100, 0) AS BIGINT)) / 100.0 AS notspec,
+                sum(CAST(round((CASE WHEN o_orderpriority = '5-LOW' THEN o_totalprice ELSE 0 END) * 100, 0) AS BIGINT)) / 100.0 AS low
+         FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"""),
+    Query("q_case_agg", qCaseAgg,
+      """SELECT CASE WHEN o_totalprice < 100000 THEN 'small'
+                     WHEN o_totalprice < 300000 THEN 'medium'
+                     ELSE 'large' END AS size_bucket,
+                count(*) AS n, sum(CAST(round((o_totalprice) * 100, 0) AS BIGINT)) / 100.0 AS total
+         FROM orders GROUP BY size_bucket ORDER BY size_bucket"""),
+    Query("q_month_revenue", qMonthRevenue,
+      """SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
+                sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100, 0) AS BIGINT)) / 100.0 AS revenue
+         FROM lineitem GROUP BY month ORDER BY month"""),
+    Query("q_string_funcs", qStringFuncs,
+      """SELECT p_brand, upper(p_type) AS type_u,
+                substring(p_name, 1, 8) AS name8, count(*) AS n
+         FROM part WHERE p_name LIKE '%a%'
+         GROUP BY p_brand, type_u, name8 ORDER BY p_brand, type_u, name8"""),
+    Query("q_percentiles", qPercentiles,
+      """SELECT o_orderstatus,
+                round(quantile_cont(o_totalprice, 0.25), 4) AS p25,
+                round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
+                round(quantile_cont(o_totalprice, 0.75), 4) AS p75
+         FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"""),
+    Query("q7_nation_volume", q7NationVolume,
+      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+                sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100, 0) AS BIGINT)) / 100.0 AS revenue
+         FROM lineitem, orders, supplier, customer, nation n1, nation n2
+         WHERE l_orderkey = o_orderkey AND l_suppkey = s_suppkey
+           AND o_custkey = c_custkey AND s_nationkey = n1.n_nationkey
+           AND c_nationkey = n2.n_nationkey
+           AND n1.n_name <> n2.n_name
+           AND l_shipdate >= TIMESTAMP '1997-01-01'
+           AND l_shipdate < TIMESTAMP '1998-01-01'
+         GROUP BY supp_nation, cust_nation
+         ORDER BY supp_nation, cust_nation"""),
+    Query("q10_returned", q10Returned,
+      """SELECT c_custkey, c_name,
+                sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100, 0) AS BIGINT)) / 100.0 AS revenue
+         FROM lineitem, orders, customer
+         WHERE l_returnflag = 'R' AND l_orderkey = o_orderkey
+           AND o_custkey = c_custkey
+           AND o_orderdate >= TIMESTAMP '1997-01-01'
+           AND o_orderdate < TIMESTAMP '1997-07-01'
+         GROUP BY c_custkey, c_name
+         ORDER BY revenue DESC, c_custkey LIMIT 20"""),
+    Query("q18_big_orders", q18BigOrders,
+      """SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
+                round(sum(l_quantity), 2) AS total_qty
+         FROM customer, orders, lineitem
+         WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
+                              GROUP BY l_orderkey
+                              HAVING sum(l_quantity) > 300)
+           AND c_custkey = o_custkey AND o_orderkey = l_orderkey
+         GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
+         ORDER BY o_totalprice DESC, o_orderkey LIMIT 20"""),
+    Query("q_correlated_sub", qCorrelatedSub,
+      """SELECT p_brand, p_partkey, p_name, p_retailprice FROM part p
+         WHERE p_retailprice = (SELECT max(p2.p_retailprice) FROM part p2
+                                WHERE p2.p_brand = p.p_brand)
+         ORDER BY p_brand, p_partkey"""),
+    Query("q_in_sub", qInSub,
+      """SELECT o_orderkey, round(o_totalprice, 2) AS o_totalprice FROM orders
+         WHERE o_custkey IN (SELECT c_custkey FROM customer
+                             WHERE c_acctbal > 9000)
+         ORDER BY o_orderkey"""),
+    Query("q_cube", qCube,
+      """SELECT l_returnflag, l_linestatus,
+                round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
+         FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
+         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""),
+    Query("q_window_lead", qWindowLead,
+      """SELECT o_custkey, o_orderkey,
+                CAST(floor(epoch(lead(o_orderdate) OVER (PARTITION BY o_custkey
+                       ORDER BY o_orderdate, o_orderkey))) AS BIGINT)
+                - CAST(floor(epoch(o_orderdate)) AS BIGINT) AS gap_s
+         FROM orders ORDER BY o_custkey, o_orderkey"""),
+    Query("q14_promo", q14Promo,
+      """SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
+                sum(CASE WHEN p_type = 'PROMO'
+                    THEN CAST(round((l_extendedprice * (1 - l_discount)) * 100, 0) AS BIGINT)
+                    ELSE 0 END) / 100.0 AS promo_revenue,
+                sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100, 0) AS BIGINT)) / 100.0 AS total_revenue,
+                round(CAST(sum(CASE WHEN p_type = 'PROMO'
+                         THEN CAST(round((l_extendedprice * (1 - l_discount)) * 100, 0) AS BIGINT)
+                         ELSE 0 END) AS DOUBLE)
+                      / CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100, 0) AS BIGINT))
+                         AS DOUBLE), 6) AS promo_share
+         FROM lineitem JOIN part ON l_partkey = p_partkey
+         GROUP BY month ORDER BY month"""),
+    Query("q_ntile", qNtile,
+      """SELECT o_custkey, o_orderkey, o_totalprice,
+                ntile(4) OVER (PARTITION BY o_custkey
+                  ORDER BY o_totalprice, o_orderkey) AS quartile,
+                round(percent_rank() OVER (PARTITION BY o_custkey
+                  ORDER BY o_totalprice, o_orderkey), 6) AS pr
+         FROM orders ORDER BY o_custkey, o_orderkey"""),
+    // composite sort value packed into one BIGINT — see
+    // Relational.qMinmaxBy for the bounds argument
+    Query("q_minmax_by", qMinmaxBy,
+      """SELECT o_orderstatus,
+                arg_max(o_orderkey,
+                  CAST(round(o_totalprice * 100, 0) AS BIGINT) * 2147483648 + o_orderkey)
+                  AS best_key,
+                round(max(o_totalprice), 2) AS best_price,
+                arg_min(o_orderkey,
+                  CAST(round(o_totalprice * 100, 0) AS BIGINT) * 2147483648 + o_orderkey)
+                  AS worst_key,
+                round(min(o_totalprice), 2) AS worst_price
+         FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"""),
+    Query("q15_top_supplier", q15TopSupplier,
+      """WITH rev AS (
+           SELECT l_suppkey,
+                  CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100, 0) AS BIGINT)) AS BIGINT) AS rev_cents
+           FROM lineitem
+           WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+             AND l_shipdate < TIMESTAMP '1996-04-01'
+           GROUP BY l_suppkey)
+         SELECT s_suppkey, s_name, rev_cents / 100.0 AS total_revenue
+         FROM rev JOIN supplier ON l_suppkey = s_suppkey
+         WHERE rev_cents = (SELECT max(rev_cents) FROM rev)
+         ORDER BY s_suppkey"""),
+    Query("q4_priority", q4Priority,
+      """SELECT o_orderpriority, count(*) AS order_count
+         FROM orders
+         WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+           AND o_orderdate < TIMESTAMP '1996-07-01'
+           AND EXISTS (SELECT 1 FROM lineitem
+                       WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
+         GROUP BY o_orderpriority ORDER BY o_orderpriority"""),
+    Query("q13_cust_dist", q13CustDist,
+      """WITH per_cust AS (
+           SELECT c_custkey, count(o_orderkey) AS c_count
+           FROM customer LEFT JOIN orders
+             ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
+           GROUP BY c_custkey)
+         SELECT c_count, count(*) AS custdist FROM per_cust
+         GROUP BY c_count ORDER BY custdist DESC, c_count DESC"""),
+    Query("q17_avg_qty", q17AvgQty,
+      """WITH li AS (
+           SELECT l_partkey, l_quantity, l_extendedprice
+           FROM lineitem JOIN part ON l_partkey = p_partkey
+           WHERE p_brand = 'Brand#5'),
+         aq AS (SELECT l_partkey AS ap_partkey, avg(l_quantity) AS avg_qty
+                FROM li GROUP BY l_partkey)
+         SELECT round(CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT)
+                      / 700.0, 4) AS avg_yearly
+         FROM li JOIN aq ON l_partkey = ap_partkey
+         WHERE l_quantity < 0.2 * avg_qty"""),
+    Query("q19_or_pred", q19OrPred,
+      """SELECT sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100, 0) AS BIGINT)) / 100.0 AS revenue
+         FROM lineitem JOIN part ON l_partkey = p_partkey
+         WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10
+                AND l_quantity BETWEEN 1 AND 11)
+            OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 20
+                AND l_quantity BETWEEN 10 AND 20)
+            OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 30
+                AND l_quantity BETWEEN 20 AND 30)"""),
+    // threshold as integer cross-multiplication (bal_cents·n >
+    // sum_cents) — the scalar average never becomes a float on either
+    // engine
+    Query("q22_no_orders", q22NoOrders,
+      """WITH avg_pos AS (
+           SELECT CAST(sum(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents,
+                  count(*) AS n_pos
+           FROM customer WHERE c_acctbal > 0)
+         SELECT c_nationkey, count(*) AS numcust,
+                sum(CAST(round(c_acctbal * 100, 0) AS BIGINT)) / 100.0 AS totacctbal
+         FROM customer CROSS JOIN avg_pos
+         WHERE CAST(round(c_acctbal * 100, 0) AS BIGINT) * n_pos > sum_cents
+           AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
+                           AND o_orderdate >= TIMESTAMP '2000-06-01')
+         GROUP BY c_nationkey ORDER BY c_nationkey"""),
+    // Q2 shape: supply cost = min observed unit price (no partsupp
+    // table); correlated min spelled as groupBy-min + join on both
+    // engines
+    Query("q2_min_cost", q2MinCost,
+      """WITH supply AS (
+           SELECT l_partkey, l_suppkey,
+                  min(CAST(round(l_extendedprice / l_quantity * 100, 0) AS BIGINT)) AS cost_cents
+           FROM lineitem GROUP BY 1, 2),
+         eu AS (
+           SELECT s_suppkey, s_name, s_acctbal, n_name
+           FROM supplier JOIN nation ON s_nationkey = n_nationkey
+                         JOIN region ON n_regionkey = r_regionkey
+           WHERE r_name = 'EUROPE'),
+         cand AS (
+           SELECT p_partkey, s_name, s_acctbal, n_name, cost_cents
+           FROM part JOIN supply ON p_partkey = l_partkey
+                     JOIN eu ON l_suppkey = s_suppkey
+           WHERE p_type = 'LARGE'),
+         best AS (SELECT p_partkey AS bp, min(cost_cents) AS best_cents
+                  FROM cand GROUP BY 1)
+         SELECT s_acctbal, s_name, n_name, p_partkey,
+                round(cost_cents / 100.0, 2) AS supply_cost
+         FROM cand JOIN best ON p_partkey = bp AND cost_cents = best_cents
+         ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100"""),
+    Query("q8_market_share", q8MarketShare,
+      """WITH an AS (
+           SELECT year(o_orderdate) AS yr,
+                  CAST(round(l_extendedprice * (1 - l_discount) * 100, 0) AS BIGINT) AS vol_cents,
+                  n2.n_name AS supp_nation
+           FROM lineitem
+           JOIN orders ON l_orderkey = o_orderkey
+           JOIN customer ON o_custkey = c_custkey
+           JOIN nation n1 ON c_nationkey = n1.n_nationkey
+           JOIN region ON n1.n_regionkey = r_regionkey
+           JOIN supplier ON l_suppkey = s_suppkey
+           JOIN nation n2 ON s_nationkey = n2.n_nationkey
+           JOIN part ON l_partkey = p_partkey
+           WHERE r_name = 'AMERICA' AND p_type = 'STANDARD'
+             AND o_orderdate BETWEEN TIMESTAMP '1995-01-01' AND TIMESTAMP '1996-12-31')
+         SELECT yr,
+                round(CAST(sum(CASE WHEN supp_nation = 'NATION_5' THEN vol_cents ELSE 0 END) AS DOUBLE)
+                      / CAST(sum(vol_cents) AS DOUBLE), 6) AS mkt_share
+         FROM an GROUP BY yr ORDER BY yr"""),
+    // Q9 shape: supply cost stand-in = 50% of p_retailprice per unit
+    Query("q9_profit", q9Profit,
+      """SELECT nation, o_year,
+                round(CAST(sum(amount_cents) AS BIGINT) / 100.0, 2) AS sum_profit
+         FROM (SELECT n_name AS nation, year(o_orderdate) AS o_year,
+                      CAST(round(l_extendedprice * (1 - l_discount) * 100, 0) AS BIGINT)
+                      - CAST(round(p_retailprice * l_quantity * 50, 0) AS BIGINT) AS amount_cents
+               FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+                 JOIN part ON l_partkey = p_partkey
+                 JOIN orders ON l_orderkey = o_orderkey
+                 JOIN nation ON s_nationkey = n_nationkey
+               WHERE p_name LIKE '%red%') t
+         GROUP BY nation, o_year ORDER BY nation, o_year DESC"""),
+    // Q11 shape: exact integer cross-multiplication threshold
+    Query("q11_important_parts", q11ImportantParts,
+      """WITH v AS (
+           SELECT l_partkey,
+                  CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT) AS val_cents
+           FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+             JOIN nation ON s_nationkey = n_nationkey
+           WHERE n_name = 'NATION_3' GROUP BY 1),
+         tot AS (SELECT CAST(sum(val_cents) AS BIGINT) AS tot_cents FROM v)
+         SELECT l_partkey AS p_partkey, round(val_cents / 100.0, 2) AS value
+         FROM v, tot WHERE val_cents * 1000 > tot_cents * 3
+         ORDER BY value DESC, p_partkey"""),
+    // Q12 shape: late = shipped > 45 days after order date (no
+    // commit/receipt dates in the testdata)
+    Query("q12_late_lines", q12LateLines,
+      """SELECT l_returnflag,
+                CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+                CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         WHERE l_shipdate > o_orderdate + INTERVAL 45 DAY
+         GROUP BY l_returnflag ORDER BY l_returnflag"""),
+    Query("q16_supplier_cnt", q16SupplierCnt,
+      """SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
+         FROM lineitem JOIN part ON l_partkey = p_partkey
+         WHERE p_brand <> 'Brand#5' AND p_type <> 'PROMO'
+           AND p_size IN (1, 4, 9, 14, 19, 24, 29, 34)
+           AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+         GROUP BY 1, 2, 3
+         ORDER BY supplier_cnt DESC, p_brand, p_type, p_size"""),
+    // Q20 shape: excess share = more than half a part's 1998 volume
+    Query("q20_excess_suppliers", q20ExcessSuppliers,
+      """WITH sq AS (
+           SELECT l_suppkey, l_partkey, sum(l_quantity) AS sup_qty
+           FROM lineitem JOIN part ON l_partkey = p_partkey
+           WHERE p_type = 'SMALL'
+             AND l_shipdate >= TIMESTAMP '1998-01-01'
+             AND l_shipdate < TIMESTAMP '1999-01-01'
+           GROUP BY 1, 2),
+         pt AS (SELECT l_partkey AS pk, sum(sup_qty) AS part_qty FROM sq GROUP BY 1)
+         SELECT s_name, n_name
+         FROM supplier JOIN nation ON s_nationkey = n_nationkey
+         WHERE s_suppkey IN (SELECT l_suppkey FROM sq JOIN pt ON l_partkey = pk
+                             WHERE sup_qty * 2 > part_qty)
+         ORDER BY s_name"""),
+    // Q21 shape: lateness on l_shipdate (no receipt/commit dates)
+    Query("q21_waiting", q21Waiting,
+      """WITH l AS (SELECT l_orderkey, l_suppkey, l_shipdate
+                    FROM lineitem JOIN orders
+                      ON l_orderkey = o_orderkey AND o_orderstatus = 'F')
+         SELECT s_name, count(*) AS numwait
+         FROM l l1 JOIN supplier ON l1.l_suppkey = s_suppkey
+         WHERE EXISTS (SELECT 1 FROM l l2
+                       WHERE l2.l_orderkey = l1.l_orderkey
+                         AND l2.l_suppkey <> l1.l_suppkey)
+           AND NOT EXISTS (SELECT 1 FROM l l3
+                           WHERE l3.l_orderkey = l1.l_orderkey
+                             AND l3.l_suppkey <> l1.l_suppkey
+                             AND l3.l_shipdate >= l1.l_shipdate)
+         GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 100"""),
+    // UNION ALL melt of the pivot — semantically UNPIVOT, spelled
+    // portably
+    Query("q_unpivot", qUnpivot,
+      """WITH w AS (
+           SELECT o_orderstatus,
+                  sum(CAST(round((CASE WHEN o_orderpriority = '1-URGENT' THEN o_totalprice ELSE 0 END) * 100, 0) AS BIGINT)) / 100.0 AS urgent,
+                  sum(CAST(round((CASE WHEN o_orderpriority = '2-HIGH' THEN o_totalprice ELSE 0 END) * 100, 0) AS BIGINT)) / 100.0 AS high,
+                  sum(CAST(round((CASE WHEN o_orderpriority = '3-MEDIUM' THEN o_totalprice ELSE 0 END) * 100, 0) AS BIGINT)) / 100.0 AS medium,
+                  sum(CAST(round((CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN o_totalprice ELSE 0 END) * 100, 0) AS BIGINT)) / 100.0 AS notspec,
+                  sum(CAST(round((CASE WHEN o_orderpriority = '5-LOW' THEN o_totalprice ELSE 0 END) * 100, 0) AS BIGINT)) / 100.0 AS low
+           FROM orders GROUP BY o_orderstatus)
+         SELECT o_orderstatus, priority, spend FROM (
+           SELECT o_orderstatus, 'urgent' AS priority, urgent AS spend FROM w
+           UNION ALL SELECT o_orderstatus, 'high', high FROM w
+           UNION ALL SELECT o_orderstatus, 'medium', medium FROM w
+           UNION ALL SELECT o_orderstatus, 'notspec', notspec FROM w
+           UNION ALL SELECT o_orderstatus, 'low', low FROM w)
+         ORDER BY o_orderstatus, priority"""),
+    Query("q_first_last", qFirstLast,
+      """SELECT o_custkey, o_orderkey,
+                first_value(o_orderkey) OVER w AS cheapest_key,
+                last_value(o_orderkey) OVER w AS priciest_key,
+                nth_value(o_orderkey, 2) OVER w AS second_key
+         FROM orders
+         WINDOW w AS (PARTITION BY o_custkey
+                      ORDER BY o_totalprice, o_orderkey
+                      ROWS BETWEEN UNBOUNDED PRECEDING
+                        AND UNBOUNDED FOLLOWING)
+         ORDER BY o_custkey, o_orderkey"""),
+    // the PLAIN semi-join: a hash match proves the bloom prefilter is
+    // value-invisible (no false negatives; false positives removed by
+    // the exact join)
+    Query("q_bloom_join", qBloomJoin,
+      """SELECT o_orderkey, o_custkey FROM orders
+         WHERE o_custkey IN (SELECT c_custkey FROM customer
+                             WHERE c_acctbal > 9500)
+         ORDER BY o_orderkey"""),
+    Query("q_set_ops", qSetOps,
+      """WITH y97 AS (SELECT DISTINCT o_custkey FROM orders
+                      WHERE year(o_orderdate) = 1997),
+         y98 AS (SELECT DISTINCT o_custkey FROM orders
+                 WHERE year(o_orderdate) = 1998)
+         SELECT o_custkey, 'retained' AS cohort
+         FROM (SELECT o_custkey FROM y97 INTERSECT
+               SELECT o_custkey FROM y98)
+         UNION ALL
+         SELECT o_custkey, 'churned'
+         FROM (SELECT o_custkey FROM y97 EXCEPT SELECT o_custkey FROM y98)
+         UNION ALL
+         SELECT o_custkey, 'acquired'
+         FROM (SELECT o_custkey FROM y98 EXCEPT SELECT o_custkey FROM y97)
+         ORDER BY cohort, o_custkey"""),
+  )
+
+  /** The Q1 oracle is written in the dialect-portable subset BOTH
+    * engines parse — `q1_sql` feeds this exact text to `spark.sql`
+    * (over registered views) while the oracle check runs it in DuckDB, so
+    * one string is simultaneously the query and its own oracle.
+    *
+    * Type portability constraint: the money sums CAST to DOUBLE
+    * *before* the `/ 100.0` — `BIGINT / 100.0` types DECIMAL(27,6)
+    * in Spark but DOUBLE in DuckDB, which serializes `x.600000` vs
+    * `x.6` and fails the value-hash compare even though the
+    * numbers are equal. DOUBLE ÷ decimal-literal is DOUBLE in both. */
+  private val Q1AggSql: String =
+    """SELECT l_returnflag, l_linestatus,
+              round(sum(l_quantity), 2) AS sum_qty,
+              CAST(sum(CAST(round((l_extendedprice) * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_base_price,
+              CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_disc_price,
+              CAST(sum(CAST(round((l_extendedprice * (1 - l_discount) * (1 + l_tax)) * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_charge,
+              round(avg(l_quantity), 4) AS avg_qty,
+              round(avg(l_extendedprice), 4) AS avg_price,
+              round(avg(l_discount), 4) AS avg_disc,
+              count(*) AS count_order
+       FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-12-01'
+       GROUP BY l_returnflag, l_linestatus
+       ORDER BY l_returnflag, l_linestatus"""
 }

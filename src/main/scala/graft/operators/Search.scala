@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Query, Tables}
 import graft.functions.{TopKScoreAgg, Vectors}
 
 /** Hybrid retrieval: reciprocal-rank fusion of the sparse (BM25) and
@@ -89,5 +89,42 @@ object Search {
       .limit(topK)
       .select(col("doc_id"), col("r_text"), col("r_vec"),
         round(col("rrf_raw"), 6).as("rrf"))
+  }
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    // RRF fusion of the two rank lists above/below: ranks come from
+    // already-hash-proven score surfaces, the fused score is a
+    // two-term DOUBLE sum of exact-integer reciprocals.
+    Query("search_hybrid", (s, d) => hybrid(s, d), searchHybridSql),
+  )
+
+  /** search_hybrid oracle: RRF fusion of the BM25 CTE chain and the
+    * cosine ranking (the ann_bruteforce scoring surface) for
+    * the fixed dense query vec_id 0. The reciprocal terms are forced
+    * DOUBLE — a bare `1.0 / n` is DECIMAL division in DuckDB (the
+    * q1_sql lesson) — and ordering is on the unrounded fused sum with
+    * a doc_id tie-break, exactly like the Spark side. */
+  private def searchHybridSql: String = {
+    s"""WITH ${TextOps.bm25Ctes(NCand)},
+         bmr AS (SELECT doc_id,
+                   row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r_text
+                 FROM bm),
+         qv AS (SELECT embedding AS qe FROM embeddings
+                WHERE vec_id = $QueryVecId),
+         sc AS (SELECT e.vec_id AS doc_id,
+                  round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+                        CAST(qv.qe AS DOUBLE[])), 6) AS cosine
+                FROM embeddings e CROSS JOIN qv),
+         vr AS (SELECT doc_id,
+                  row_number() OVER (ORDER BY cosine DESC, doc_id) AS r_vec
+                FROM sc QUALIFY r_vec <= $NCand),
+         f AS (SELECT coalesce(b.doc_id, v.doc_id) AS doc_id,
+                      b.r_text, v.r_vec,
+                      coalesce(CAST(1 AS DOUBLE) / ($RrfK + b.r_text), 0)
+                    + coalesce(CAST(1 AS DOUBLE) / ($RrfK + v.r_vec), 0) AS rrf_raw
+               FROM bmr b FULL OUTER JOIN vr v ON b.doc_id = v.doc_id)
+         SELECT doc_id, r_text, r_vec, round(rrf_raw, 6) AS rrf
+         FROM f ORDER BY rrf_raw DESC, doc_id LIMIT $TopK"""
   }
 }

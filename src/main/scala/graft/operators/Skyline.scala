@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Query, Tables}
 
 /** Pareto frontier (skyline) — rows not dominated in ANY dimension:
   * the multi-objective selection primitive (pick documents maximizing
@@ -70,4 +70,23 @@ object Skyline {
       .sortWithinPartitions(col("_2").desc, col("_3").desc)
       .mapPartitions(sweep)
   }
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    // quadratic NOT-EXISTS dominance is fine as an oracle at sf0.01;
+    // the Spark side is the two-phase local-prune skyline
+    Query("q_skyline", qSkyline,
+      """WITH agg AS (
+           SELECT o_custkey,
+                  CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
+                       // count(*) AS BIGINT) AS avg_cents,
+                  count(*) AS n_orders
+           FROM orders GROUP BY 1)
+         SELECT o_custkey, avg_cents, n_orders FROM agg a
+         WHERE NOT EXISTS (
+           SELECT 1 FROM agg b
+           WHERE b.avg_cents >= a.avg_cents AND b.n_orders >= a.n_orders
+             AND (b.avg_cents > a.avg_cents OR b.n_orders > a.n_orders))
+         ORDER BY avg_cents DESC, n_orders DESC, o_custkey"""),
+  )
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Query, Tables}
 import graft.functions.PortableHash
 
 /** Snapshot differencing — the change-data-capture primitive of an
@@ -28,15 +28,23 @@ object Snapshot {
 
   private val Buckets = 20
 
-  /** The carved customer row set both snapshot consumers slice from:
-    * key, group key (nation), exact-cents balance, and the portable
-    * hash bucket that decides each key's CDC fate. */
-  private def carve(spark: SparkSession, dir: String): DataFrame =
+  /** The carved customer row set every snapshot version slices from:
+    * key, the caller's extra `cols`, exact-cents balance, and the
+    * portable hash bucket that decides each key's CDC fate. */
+  private def carve(spark: SparkSession, dir: String, cols: Column*): DataFrame =
     Tables(spark, dir).customer
-      .select(col("c_custkey"), col("c_nationkey"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("cents"),
+      .select(col("c_custkey") +: cols :+
+        round(col("c_acctbal") * 100, 0).cast("long").as("cents") :+
         pmod(PortableHash.h60(col("c_custkey").cast("string")),
-          lit(Buckets.toLong)).as("hv"))
+          lit(Buckets.toLong)).as("hv"): _*)
+
+  /** DuckDB twin of [[carve]] over `customer`: the same columns, with
+    * the caller's extra `cols` as SQL select items. */
+  def carveSql(cols: String*): String =
+    s"""SELECT ${("c_custkey" +: cols).mkString(", ")},
+                CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents,
+                ${PortableHash.h60Sql("CAST(c_custkey AS VARCHAR)")} % $Buckets AS hv
+         FROM customer"""
 
   /** SCD-2 dimension-history build — the warehouse step downstream of
     * CDC: fold a SEQUENCE of keyed snapshots into one validity-interval
@@ -163,10 +171,7 @@ object Snapshot {
     * straight from the base — the other side of the round-trip. */
   def asOfOracleSql: String =
     s"""WITH c AS (
-         SELECT c_custkey,
-                CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents,
-                ${PortableHash.h60Sql("CAST(c_custkey AS VARCHAR)")} % 20 AS hv
-         FROM customer)
+         ${carveSql()})
        SELECT c_custkey,
               cents + CASE WHEN hv % 7 = 3 THEN 100 ELSE 0 END AS cents
        FROM c WHERE hv != 1 AND hv != 5 ORDER BY c_custkey"""
@@ -251,10 +256,7 @@ object Snapshot {
     * round-trip. */
   def applyOracleSql: String =
     s"""WITH c AS (
-         SELECT c_custkey,
-                CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents,
-                ${PortableHash.h60Sql("CAST(c_custkey AS VARCHAR)")} % 20 AS hv
-         FROM customer)
+         ${carveSql()})
        SELECT c_custkey,
               cents + CASE WHEN hv % 7 = 3 THEN 100 ELSE 0 END AS cents
        FROM c WHERE hv != 1 ORDER BY c_custkey"""
@@ -292,12 +294,8 @@ object Snapshot {
     * and stack-unpivoted — adding a column = adding a counter, the
     * checksProfile contract. */
   def columnChurn(spark: SparkSession, dir: String): DataFrame = {
-    val cust = Tables(spark, dir).customer
-      .select(col("c_custkey"), col("c_nationkey").cast("long").as("nat"),
-        col("c_mktsegment").as("seg"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("cents"),
-        pmod(PortableHash.h60(col("c_custkey").cast("string")),
-          lit(Buckets.toLong)).as("hv"))
+    val cust = carve(spark, dir, col("c_nationkey").cast("long").as("nat"),
+      col("c_mktsegment").as("seg"))
     val base = cust.filter(col("hv") =!= 0)
       .select(col("c_custkey").as("b_key"), col("cents").as("o_cents"),
         col("nat").as("o_nat"), col("seg").as("o_seg"))
@@ -333,11 +331,7 @@ object Snapshot {
   /** Generated DuckDB oracle for [[columnChurn]]. */
   val columnChurnOracleSql: String =
     s"""WITH c AS (
-         SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nat,
-                c_mktsegment AS seg,
-                CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents,
-                ${PortableHash.h60Sql("CAST(c_custkey AS VARCHAR)")} % 20 AS hv
-         FROM customer),
+         ${carveSql("CAST(c_nationkey AS BIGINT) AS nat", "c_mktsegment AS seg")}),
        base AS (SELECT c_custkey AS b_key, cents AS o_cents, nat AS o_nat,
                        seg AS o_seg
                 FROM c WHERE hv != 0),
@@ -400,7 +394,7 @@ object Snapshot {
     * not a scan; the refresh path never reads the base snapshot. */
   private[graft] def standingView(spark: SparkSession, dir: String)
       : DataFrame =
-    carve(spark, dir).filter(col("hv") =!= 0)
+    carve(spark, dir, col("c_nationkey")).filter(col("hv") =!= 0)
       .groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("n_cust"), sum(col("cents")).as("sum_cents"))
 
@@ -409,7 +403,7 @@ object Snapshot {
     * connector delivers, and what [[graft.streaming.Streams]]'s IVM
     * twin consumes as a stream. */
   private[graft] def cdcRows(spark: SparkSession, dir: String): DataFrame = {
-    val cust = carve(spark, dir)
+    val cust = carve(spark, dir, col("c_nationkey"))
     val base = cust.filter(col("hv") =!= 0)
       .select(col("c_custkey").as("b_key"), col("c_nationkey").as("b_nat"),
         col("cents").as("old_cents"))
@@ -451,4 +445,93 @@ object Snapshot {
           coalesce(col("d_cents"), lit(0L))).as("sum_cents"))
       .filter(col("n_cust") > 0)
       .orderBy(col("c_nationkey"))
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    // both snapshots rebuilt from the same portable-hash carve the
+    // Spark side uses, so the diff is value-identical
+    Query("snapshot_diff", snapshotDiff,
+      s"""WITH c AS (
+           ${carveSql()}),
+         base AS (SELECT c_custkey AS b_key, cents AS old_cents
+                  FROM c WHERE hv != 0),
+         curr AS (SELECT c_custkey AS n_key,
+                         CASE WHEN hv % 7 = 3 THEN cents + 100
+                              ELSE cents END AS new_cents
+                  FROM c WHERE hv != 1)
+         SELECT coalesce(b_key, n_key) AS c_custkey,
+                CASE WHEN b_key IS NULL THEN 'insert'
+                     WHEN n_key IS NULL THEN 'delete'
+                     WHEN old_cents != new_cents THEN 'update' END AS change,
+                old_cents, new_cents
+         FROM base FULL OUTER JOIN curr ON b_key = n_key
+         WHERE (b_key IS NULL OR n_key IS NULL OR old_cents != new_cents)
+         ORDER BY c_custkey"""),
+    // which columns move between versions — one full-outer join, one
+    // stacked conditional aggregate
+    Query("snapshot_column_churn", columnChurn,
+      columnChurnOracleSql),
+    // same carved versions, same gaps-and-islands fold: lag flags a
+    // new interval on first-row / version-gap / value-change, the
+    // running flag sum is the island id, min/max version per island
+    // become the validity stamps
+    Query("snapshot_scd2", scd2,
+      s"""WITH c AS (
+           ${carveSql()}),
+         rows_ AS (
+           SELECT c_custkey, 1 AS ver, cents FROM c WHERE hv != 0
+           UNION ALL
+           SELECT c_custkey, 2,
+                  cents + CASE WHEN hv % 7 = 3 THEN 100 ELSE 0 END
+           FROM c WHERE hv != 1 AND hv != 5
+           UNION ALL
+           SELECT c_custkey, 3,
+                  cents + CASE WHEN hv % 7 = 3 THEN 100 ELSE 0 END
+                        + CASE WHEN hv % 5 = 4 THEN 50 ELSE 0 END
+           FROM c WHERE hv != 1 AND hv != 2),
+         f AS (SELECT c_custkey, ver, cents,
+                      CASE WHEN lag(ver) OVER w IS NULL
+                             OR ver != lag(ver) OVER w + 1
+                             OR cents != lag(cents) OVER w
+                           THEN 1 ELSE 0 END AS newint
+               FROM rows_
+               WINDOW w AS (PARTITION BY c_custkey ORDER BY ver)),
+         isl AS (SELECT c_custkey, ver, cents,
+                        sum(newint) OVER (PARTITION BY c_custkey
+                          ORDER BY ver ROWS UNBOUNDED PRECEDING) AS isl
+                 FROM f),
+         runs AS (SELECT c_custkey, isl,
+                         CAST(min(cents) AS BIGINT) AS cents,
+                         CAST(min(ver) AS BIGINT) AS valid_from,
+                         max(ver) AS last_ver
+                  FROM isl GROUP BY 1, 2)
+         SELECT c_custkey, cents, valid_from,
+                CASE WHEN last_ver = 3 THEN NULL
+                     ELSE CAST(last_ver + 1 AS BIGINT) END AS valid_to,
+                CAST(last_ver = 3 AS INT) AS is_current
+         FROM runs ORDER BY c_custkey, valid_from"""),
+    // IVM contract probed from the other side: Spark folds the CDC
+    // delta into yesterday's aggregate; the oracle recomputes the
+    // aggregate from the NEW snapshot directly. A hash match means
+    // fold(old_agg, delta) == agg(new) — the incremental refresh is
+    // indistinguishable from a full rescan.
+    Query("snapshot_agg_delta", aggDelta,
+      s"""WITH c AS (
+           ${carveSql("c_nationkey")}),
+         curr AS (SELECT c_nationkey,
+                         CASE WHEN hv % 7 = 3 THEN cents + 100
+                              ELSE cents END AS new_cents
+                  FROM c WHERE hv != 1)
+         SELECT c_nationkey, count(*) AS n_cust,
+                CAST(sum(new_cents) AS BIGINT) AS sum_cents
+         FROM curr GROUP BY c_nationkey ORDER BY c_nationkey"""),
+    // time-travel round-trip contract: Spark reconstructs version 2
+    // from the SCD-2 validity intervals; the oracle carves version 2
+    // directly from the base — match ⇔ reconstruct ≡ snapshot_v
+    Query("snapshot_asof", (s, d) => asOf(s, d), asOfOracleSql),
+    // merge round-trip: the oracle carves the post-merge snapshot
+    // directly from the base, so the hash match proves
+    // apply(base, diff(base, v2)) == v2
+    Query("snapshot_apply", applyDiff, applyOracleSql),
+  )
 }

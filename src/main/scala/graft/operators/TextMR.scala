@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
-import graft.functions.TokenCol
+import graft.core.{Query, Tables}
+import graft.functions.{PortableHash, TokenCol}
 
 /** The reference framework's own workload surface (SURVEY.md §2 A),
   * re-expressed as declarative plans.
@@ -162,4 +162,88 @@ object TextMR {
         array_join(transform(array_sort(collect_list(col("doc_id"))),
           _.cast("string")), ",").as("postings"))
       .orderBy("word")
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    Query("mr_wordcount", wordcount,
+      s"""SELECT word, count(*) AS cnt
+         FROM (SELECT unnest(${TokenCol.letterTokensSql("text")}) AS word
+               FROM documents)
+         GROUP BY word ORDER BY word"""),
+    Query("mr_grep_count", grepCount,
+      """SELECT source, count(*) AS n_match FROM documents
+         WHERE text LIKE '%join%' GROUP BY source ORDER BY source"""),
+    Query("mr_inverted_index", invertedIndex,
+      s"""WITH wd AS (
+           SELECT DISTINCT word, doc_id
+           FROM (SELECT unnest(${TokenCol.letterTokensSql("text")}) AS word,
+                        doc_id FROM documents))
+         SELECT word, count(*) AS df,
+                string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS postings
+         FROM wd GROUP BY word ORDER BY word"""),
+    // full per-source wordcount + window: the heavy-hitters aggregate
+    // is exact while capacity >= per-source vocabulary, so the hash
+    // must match the exhaustive computation
+    Query("mr_topwords", (s, d) => topWords(s, d),
+      s"""WITH w AS (
+           SELECT source,
+                  unnest(${TokenCol.letterTokensSql("text")}) AS word
+           FROM documents),
+         c AS (SELECT source, word, count(*) AS cnt FROM w
+               GROUP BY source, word),
+         r AS (SELECT source, word, cnt,
+                      row_number() OVER (PARTITION BY source
+                        ORDER BY cnt DESC, word) AS rank
+               FROM c)
+         SELECT source, rank, word, cnt FROM r
+         WHERE rank <= 10 ORDER BY source, rank"""),
+    Query("mr_cms_freq", (s, d) => cmsFreq(s, d), cmsFreqSql),
+    // canonical Misra-Gries summary at capacity 8: theta = the 9th
+    // largest exact count (0 if vocabulary <= 8), survivors = counts
+    // above it with lower bound cnt - theta — a pure multiset function,
+    // so the window-rank replay hash-matches at any partitioning
+    Query("mr_heavyhitters", (s, d) => heavyHitters(s, d),
+      s"""WITH w AS (SELECT unnest(${TokenCol.letterTokensSql("text")}) AS word
+                    FROM documents),
+         c AS (SELECT word, count(*) AS cnt FROM w GROUP BY word),
+         r AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, word) AS rk
+               FROM c),
+         t AS (SELECT CAST(coalesce(max(CASE WHEN rk = 9 THEN cnt END), 0)
+                        AS BIGINT) AS theta FROM r)
+         SELECT word, cnt, cnt - theta AS lo_bound, theta
+         FROM c CROSS JOIN t WHERE cnt > theta
+         ORDER BY cnt DESC, word"""),
+  )
+
+  /** mr_cms_freq oracle: a Count-Min counter's content is "sum of
+    * counts of every token in the bucket", so DuckDB rebuilds the
+    * d×w matrix with d group-bys over the same affine-salt
+    * arithmetic (literals below) and takes the same min. */
+  private lazy val cmsFreqSql: String = {
+    val depth = 4
+    val width = 64
+    val (a, b) = graft.functions.PortableHash.affineParams(depth)
+    val p = graft.functions.PortableHash.P
+    val bucketCols = (0 until depth).map(i =>
+      s"(((${a(i)} * hp + ${b(i)}) % $p) % $width) AS b$i").mkString(",\n                ")
+    val counterCtes = (0 until depth).map(i =>
+      s"c$i AS (SELECT b$i AS bk, CAST(sum(cnt) AS BIGINT) AS c FROM bkt GROUP BY b$i)")
+      .mkString(",\n         ")
+    val joins = (0 until depth).map(i => s"JOIN c$i ON bkt.b$i = c$i.bk")
+      .mkString("\n           ")
+    val least = (0 until depth).map(i => s"c$i.c").mkString(", ")
+    s"""WITH w AS (SELECT unnest(${TokenCol.letterTokensSql("text")}) AS word
+                   FROM documents),
+         t AS (SELECT word, count(*) AS cnt FROM w GROUP BY word),
+         h AS (SELECT word, cnt,
+                      ${PortableHash.h60Sql("word")} % $p AS hp
+               FROM t),
+         bkt AS (SELECT word, cnt,
+                $bucketCols
+                 FROM h),
+         $counterCtes
+         SELECT word, cnt, least($least) AS est
+         FROM bkt $joins
+         ORDER BY word"""
+  }
 }

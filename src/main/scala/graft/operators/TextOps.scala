@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
-import graft.functions.Shingles.{tokens, tokensSql}
+import graft.core.{Query, Tables}
+import graft.functions.Shingles.{nGramsSql, tokens, tokensSql}
 import graft.functions.TextAnalysis._
 
 /** Text-analysis operator block over `documents` (SURVEY.md §2 F). */
@@ -1415,4 +1415,353 @@ object TextOps {
        FROM scored
        ORDER BY score_micro DESC, phrase LIMIT $topK"""
   }
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    // Heaps-law curve from (type → first_doc) + value-fraction cuts —
+    // no corpus sort, no cumulative distinct
+    Query("profile_vocab_growth", profileVocabGrowth, vocabGrowthSql),
+    // micro-nat quantized log-log least squares over the top-100
+    // frequency head; HUGEINT sums, one forced-double division per
+    // coefficient
+    Query("text_zipf", textZipf, textZipfSql),
+    Query("text_quality", textQuality,
+      s"""SELECT doc_id, length(text) AS n_chars_m,
+                len(${tokensSql("text")}) AS n_tokens,
+                round(CAST(list_sum(list_transform(${tokensSql("text")}, t -> length(t))) AS DOUBLE)
+                      / len(${tokensSql("text")}), 6) AS avg_tok_len,
+                round(CAST(len(list_filter(${tokensSql("text")},
+                        t -> t IN ('the','a','of','and','to','in','is','on','for','with'))) AS DOUBLE)
+                      / len(${tokensSql("text")}), 6) AS stopword_ratio,
+                round(CAST(len(list_distinct(${tokensSql("text")})) AS DOUBLE)
+                      / len(${tokensSql("text")}), 6) AS distinct_ratio,
+                CASE WHEN length(text) = 0 THEN 0.0
+                     ELSE round(CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')) AS DOUBLE)
+                                / length(text), 6) END AS punct_ratio
+         FROM documents ORDER BY doc_id"""),
+    // milli-unit integer Flesch: DuckDB // ≡ Spark DIV on the
+    // non-negative counts, so the score column hash-matches exactly
+    Query("text_readability", textReadability,
+      s"""WITH c AS (
+           SELECT doc_id,
+                  greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS n_sentences,
+                  len(${tokensSql("text")}) AS n_words,
+                  len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[aeiouy]+')) AS n_syllables
+           FROM documents)
+         SELECT doc_id,
+                CAST(n_sentences AS BIGINT) AS n_sentences,
+                CAST(n_words AS BIGINT) AS n_words,
+                CAST(n_syllables AS BIGINT) AS n_syllables,
+                CAST((1000 * n_words) // n_sentences AS BIGINT) AS wps_milli,
+                CAST((1000 * n_syllables) // n_words AS BIGINT) AS spw_milli,
+                CAST(206835 - (1015 * n_words) // n_sentences
+                     - (84600 * n_syllables) // n_words AS BIGINT) AS flesch_milli
+         FROM c ORDER BY doc_id"""),
+    // PMI decomposes into a linear combination of per-count logs;
+    // each ln quantizes once to micro-nats (counts ≥ 1 → ln ≥ 0, so
+    // half-up and half-away rounding agree), then exact BIGINT adds
+    Query("text_collocations", textCollocations,
+      s"""WITH toks AS (
+           SELECT doc_id, ${tokensSql("text")} AS t
+           FROM documents),
+         uni AS (SELECT w, count(*) AS c1
+                 FROM (SELECT unnest(t) AS w FROM toks) GROUP BY w),
+         n1 AS (SELECT CAST(sum(c1) AS BIGINT) AS n1 FROM uni),
+         g AS (SELECT ${nGramsSql("t", 2, distinct = false)} AS bgs
+               FROM toks),
+         b AS (SELECT bg, count(*) AS c2
+               FROM (SELECT unnest(bgs) AS bg FROM g)
+               WHERE bg LIKE '% %' GROUP BY bg),
+         n2 AS (SELECT CAST(sum(c2) AS BIGINT) AS n2 FROM b),
+         sel AS (SELECT b.bg, b.c2, ua.c1 AS ca, ub.c1 AS cb
+                 FROM b
+                 JOIN uni ua ON ua.w = string_split(b.bg, ' ')[1]
+                 JOIN uni ub ON ub.w = string_split(b.bg, ' ')[2]
+                 WHERE b.c2 >= 5)
+         SELECT bg, c2,
+                CAST(round(ln(CAST(c2 AS DOUBLE)) * 1000000, 0) AS BIGINT)
+                - CAST(round(ln(CAST(n2 AS DOUBLE)) * 1000000, 0) AS BIGINT)
+                - CAST(round(ln(CAST(ca AS DOUBLE)) * 1000000, 0) AS BIGINT)
+                - CAST(round(ln(CAST(cb AS DOUBLE)) * 1000000, 0) AS BIGINT)
+                + 2 * CAST(round(ln(CAST(n1 AS DOUBLE)) * 1000000, 0) AS BIGINT)
+                  AS pmi_micro
+         FROM sel CROSS JOIN n1 CROSS JOIN n2
+         ORDER BY pmi_micro DESC, bg LIMIT 50"""),
+    Query("text_tokens", textTokens,
+      s"""SELECT doc_id,
+                len(${tokensSql("text")}) AS ws_tokens,
+                len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS re_tokens
+         FROM documents ORDER BY doc_id"""),
+    Query("text_fingerprint", textFingerprint,
+      """SELECT doc_id,
+                md5(translate(regexp_replace(trim(text, ' '), '\s+', ' ', 'g'), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')) AS fp
+         FROM documents ORDER BY doc_id"""),
+    Query("pipeline_clean", pipelineClean,
+      s"""WITH q AS (
+           SELECT doc_id, text,
+                  len(${tokensSql("text")}) AS n_tokens,
+                  round(CAST(len(list_distinct(${tokensSql("text")})) AS DOUBLE)
+                        / len(${tokensSql("text")}), 6) AS dr,
+                  round(CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')) AS DOUBLE)
+                        / length(text), 6) AS pr
+           FROM documents)
+         SELECT min(doc_id) AS keep_id,
+                md5(translate(regexp_replace(trim(text, ' '), '\\s+', ' ', 'g'), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')) AS fp,
+                count(*) AS n_dups, min(n_tokens) AS n_tokens
+         FROM q WHERE n_tokens >= 20 AND dr >= 0.3 AND pr <= 0.3
+         GROUP BY fp ORDER BY keep_id"""),
+    // the cleaning gate's threshold bank: pipeline_clean's exact
+    // gate/fingerprint fragments, all thresholds from one pass
+    Query("pipeline_clean_sweep", pipelineCleanSweep,
+      pipelineCleanSweepSql),
+    // context-length bank: every budget derives map-side from ONE
+    // per-source running-sum window
+    Query("pipeline_pack_sweep", pipelinePackSweep,
+      pipelinePackSweepSql),
+    // NFC + SIMPLE casefold: utf8proc lower is the 1:1 UnicodeData
+    // mapping, the same semantics as the Spark kernel's per-codepoint
+    // Character.toLowerCase (İ → i, never i + combining dot); NFC
+    // first on both sides; trim is explicit-ASCII (the one-arg trap)
+    Query("text_normalize", textNormalize,
+      """WITH n AS (
+           SELECT doc_id, text,
+                  regexp_replace(trim(lower(nfc_normalize(text)), ' '),
+                                 '\s+', ' ', 'g') AS norm_text
+           FROM documents)
+         SELECT doc_id, norm_text,
+                length(text) AS n_before,
+                length(norm_text) AS n_after,
+                CAST(norm_text <> text AS INT) AS changed
+         FROM n ORDER BY doc_id"""),
+    // Same 16-bit-limb bucket arithmetic as TextOps.splitAssignment —
+    // equal to (doc_id * 2654435761) % 2^32 but overflow-free for
+    // doc_id beyond ~3.5e9 on both engines.
+    Query("pipeline_split", pipelineSplit,
+      """WITH b AS (
+           SELECT doc_id,
+                  (2654435761 * ((doc_id % 4294967296) % 65536)
+                   + ((2654435761 * ((doc_id % 4294967296) // 65536)) % 65536)
+                     * 65536) % 4294967296 AS bucket
+           FROM documents),
+         s AS (
+           SELECT doc_id,
+                  CASE WHEN bucket < 3435973836 THEN 'train'
+                       WHEN bucket < 3865470565 THEN 'val'
+                       ELSE 'test' END AS split
+           FROM b)
+         SELECT split, count(*) AS n, min(doc_id) AS min_id,
+                max(doc_id) AS max_id
+         FROM s GROUP BY split ORDER BY split"""),
+    // Running token total per source, pack = starting offset / budget.
+    Query("pipeline_pack", (s, d) => pipelinePack(s, d),
+      s"""WITH t AS (
+           SELECT source, doc_id,
+                  CAST(len(${tokensSql("text")}) AS BIGINT) AS n_tok
+           FROM documents),
+         c AS (
+           SELECT source, doc_id, n_tok,
+                  CAST(sum(n_tok) OVER (PARTITION BY source
+                    ORDER BY doc_id
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                    AS BIGINT) AS cum
+           FROM t),
+         p AS (
+           SELECT source, doc_id, n_tok,
+                  (cum - n_tok) // 2048 AS pack_id
+           FROM c)
+         SELECT source, pack_id, count(*) AS n_docs,
+                CAST(sum(n_tok) AS BIGINT) AS tokens,
+                min(doc_id) AS first_doc, max(doc_id) AS last_doc
+         FROM p GROUP BY source, pack_id ORDER BY source, pack_id"""),
+    Query("pipeline_pack_bpe", (s, d) => pipelinePackBpe(s, d), pipelinePackBpeOracleSql),
+    Query("text_langid", textLangid, {
+      val lexRows = Profiles.toSeq.sortBy(_._1)
+        .flatMap { case (l, ws) => ws.map(w => s"('$l', '$w')") }
+        .mkString(", ")
+      s"""WITH lex(lang, word) AS (SELECT * FROM (VALUES $lexRows) AS v(lang, word)),
+         toks AS (SELECT doc_id,
+                         unnest(${tokensSql("translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')")}) AS tok
+                  FROM documents),
+         n AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id),
+         hits AS (SELECT t.doc_id, l.lang, count(*) AS h
+                  FROM toks t JOIN lex l ON t.tok = l.word
+                  GROUP BY t.doc_id, l.lang),
+         langs AS (SELECT DISTINCT lang FROM lex),
+         scored AS (
+           SELECT d.doc_id, langs.lang,
+                  coalesce(h.h, 0) / CAST(n.n AS DOUBLE) AS score
+           FROM (SELECT doc_id FROM documents) d
+           CROSS JOIN langs
+           JOIN n ON n.doc_id = d.doc_id
+           LEFT JOIN hits h ON h.doc_id = d.doc_id AND h.lang = langs.lang),
+         ranked AS (
+           SELECT doc_id, lang, score,
+                  row_number() OVER (PARTITION BY doc_id
+                    ORDER BY score DESC, lang DESC) AS rn
+           FROM scored)
+         SELECT doc_id, lang AS pred_lang, round(score, 6) AS score
+         FROM ranked WHERE rn = 1 ORDER BY doc_id"""
+    }),
+    // word co-occurrence graph + the unrolled weighted-PageRank
+    // integer chain (the graph_pagerank_weighted formulation)
+    Query("text_textrank", textTextrank, textrankOracleSql),
+    Query("text_lm_score", textLmScore,
+      s"""WITH toks AS (
+           SELECT doc_id, ${tokensSql("text")} AS t
+           FROM documents),
+         bg AS (SELECT doc_id, t[i] || ' ' || t[i+1] AS bg
+                FROM toks, unnest(range(1, len(t))) AS r(i)),
+         cnt2 AS (SELECT bg, count(*) AS c2 FROM bg GROUP BY bg),
+         cnt1 AS (SELECT bg, c2,
+                         sum(c2) OVER (PARTITION BY split_part(bg, ' ', 1)) AS c1
+                  FROM cnt2),
+         model AS (SELECT bg,
+                          CAST(round(ln(CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE)) * 1000000, 0) AS BIGINT) AS lp_micro
+                   FROM cnt1),
+         scored AS (SELECT b.doc_id, count(*) AS n_bigrams,
+                           CAST(sum(m.lp_micro) AS BIGINT) AS nat_micro
+                    FROM bg b JOIN model m ON m.bg = b.bg
+                    GROUP BY b.doc_id)
+         SELECT d.doc_id,
+                coalesce(s.n_bigrams, 0) AS n_bigrams,
+                coalesce(s.nat_micro, 0) AS nat_micro,
+                round(CAST(coalesce(s.nat_micro, 0) AS DOUBLE) / 1000000.0
+                      / greatest(coalesce(s.n_bigrams, 0), 1), 6) AS avg_logprob
+         FROM documents d LEFT JOIN scored s ON s.doc_id = d.doc_id
+         ORDER BY d.doc_id"""),
+    Query("text_rake", (s, d) => textRake(s, d), rakeOracleSql()),
+    // BPE merge learning: 8-round unrolled exact-integer trajectory,
+    // (cnt DESC, a, b) tie order, triple-replace greedy merge — the
+    // CTE chain is generated from the same constants as the operator
+    Query("text_bpe_merges", textBpeMerges, bpeOracleSql),
+    // the encode side: post-merge subword frequency table off the
+    // same generated trajectory (final vocab state exploded)
+    Query("text_bpe_vocab", textBpeVocab, bpeVocabOracleSql),
+    // the apply side: per-doc subword counts under the learned
+    // merges; the oracle replays learn AND encode (computed winners
+    // feed per-round corpus re-encodings via 1-row cross joins)
+    Query("text_bpe_tokens", textBpeTokens, bpeTokensOracleSql),
+    // Same micro-nat fixed-point model as the Spark side: the bigram
+    // model quantizes ln(c2/c1) ONCE per entry, per-doc sums are
+    // exact BIGINT arithmetic (order-independent on both engines).
+    // same micro-nat ln quantization: each ln computed once, rounded
+    // to an integer, exact integer sums after that
+    Query("text_entropy", textEntropy,
+      """WITH docs AS (SELECT doc_id, text, length(text) AS len
+                       FROM documents),
+         ch AS (SELECT doc_id, substring(text, CAST(p AS INT), 1) AS c
+                FROM docs, unnest(range(1, len + 1)) AS t(p)
+                WHERE len > 0),
+         cc AS (SELECT doc_id, c, count(*) AS cnt FROM ch GROUP BY 1, 2),
+         agg AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n,
+                        CAST(sum(cnt * CAST(round(ln(cnt) * 1000000, 0)
+                                            AS BIGINT)) AS BIGINT) AS s_micro
+                 FROM cc GROUP BY 1)
+         SELECT d.doc_id, coalesce(a.n, 0) AS n_chars,
+                round(CASE WHEN coalesce(a.n, 0) = 0 THEN 0.0
+                      ELSE (CAST(round(ln(a.n) * 1000000, 0) AS BIGINT)
+                            - a.s_micro * 1.0 / a.n) / 1000000.0
+                      END, 6) AS entropy_nats
+         FROM docs d LEFT JOIN agg a ON d.doc_id = a.doc_id
+         ORDER BY d.doc_id"""),
+    // Micro-nat idf quantized once per term; (doc, term) scores are
+    // exact tf·idf_micro BIGINTs, so the top-3 selection on
+    // (score, term) is engine-reproducible.
+    Query("text_tfidf", (s, d) => textTfidf(s, d), TfidfOracleSql),
+    // the SQL-surface twin is gated against the SAME oracle text
+    Query("text_tfidf_sql", (s, d) => Tables.runSql(s, d, TfidfSparkSql), TfidfOracleSql),
+    // Okapi BM25 (k1=1.2, b=0.75, smooth idf) for the fixed query —
+    // every per-term score is deterministic IEEE arithmetic over
+    // exact integers (DOUBLE forced early: DuckDB's exact DECIMAL
+    // literals would otherwise diverge from Spark's double math),
+    // quantized to micro-units so the per-doc sum is exact BIGINT.
+    Query("text_bm25", (s, d) => textBm25(s, d), bm25Sql),
+  )
+
+  /** [[textTfidf]] in plain SQL: the same
+    * whitespace tokenization (`split(trim(text), '\s+')` — the
+    * [[graft.functions.Shingles.tokens]] kernel spelled out), the
+    * same micro-nat idf quantized ONCE per term, per-doc top-3 by
+    * (score desc, term). */
+  private val TfidfSparkSql =
+    """WITH toks AS (
+           SELECT doc_id, explode(split(trim(text), '\\s+')) AS term
+           FROM documents),
+         tf AS (SELECT doc_id, term, count(*) AS tf
+                FROM toks GROUP BY doc_id, term),
+         dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+         n AS (SELECT count(*) AS n_docs FROM documents),
+         s AS (SELECT t.doc_id, t.term, t.tf, d.df,
+                      t.tf * CAST(round(ln((n_docs + 1.0) / (d.df + 1.0))
+                                        * 1000000, 0) AS BIGINT)
+                        AS score_scaled
+               FROM tf t JOIN dft d ON d.term = t.term CROSS JOIN n),
+         r AS (SELECT doc_id, term, tf, df, score_scaled,
+                      row_number() OVER (PARTITION BY doc_id
+                        ORDER BY score_scaled DESC, term) AS rn
+               FROM s)
+       SELECT doc_id, term, tf, df,
+              round(CAST(score_scaled AS DOUBLE) / 1000000.0, 6) AS tfidf,
+              rn
+       FROM r WHERE rn <= 3 ORDER BY doc_id, rn"""
+
+  /** text_tfidf oracle (shared verbatim with the `_sql` twin). */
+  private val TfidfOracleSql =
+    s"""WITH toks AS (
+           SELECT doc_id, unnest(${tokensSql("text")}) AS term
+           FROM documents),
+         tf AS (SELECT doc_id, term, count(*) AS tf
+                FROM toks GROUP BY doc_id, term),
+         dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+         n AS (SELECT count(*) AS n_docs FROM documents),
+         s AS (SELECT t.doc_id, t.term, t.tf, d.df,
+                      t.tf * CAST(round(ln(CAST(n_docs + 1 AS DOUBLE) / CAST(d.df + 1 AS DOUBLE)) * 1000000, 0) AS BIGINT) AS score_scaled
+               FROM tf t JOIN dft d ON d.term = t.term CROSS JOIN n),
+         r AS (SELECT doc_id, term, tf, df, score_scaled,
+                      row_number() OVER (PARTITION BY doc_id
+                        ORDER BY score_scaled DESC, term) AS rn
+               FROM s)
+         SELECT doc_id, term, tf, df,
+                round(CAST(score_scaled AS DOUBLE) / 1000000.0, 6) AS tfidf, rn
+         FROM r WHERE rn <= 3 ORDER BY doc_id, rn"""
+
+  /** Shared BM25 CTE chain (generated from the same
+    * [[Bm25Query]] term list; the arithmetic mirrors the
+    * Spark expression tree operation-for-operation), ending at CTE
+    * `bm` = top-`limit` (doc_id, n_hit_terms, bm25). Shared by the
+    * text_bm25 oracle and the search_hybrid fusion oracle so the
+    * ranking has one SQL statement of truth. */
+  private[operators] def bm25Ctes(limit: Int): String = {
+    val terms = Bm25Query.map("'" + _ + "'").mkString(", ")
+    s"""toks AS (
+           SELECT doc_id, unnest(${tokensSql("text")}) AS term
+           FROM documents),
+         lens AS (SELECT doc_id,
+                         len(${tokensSql("text")}) AS dl
+                  FROM documents),
+         stats AS (SELECT count(*) AS n_docs,
+                          CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
+                   FROM lens),
+         tf AS (SELECT doc_id, term, count(*) AS tf
+                FROM toks WHERE term IN ($terms) GROUP BY doc_id, term),
+         dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+         s AS (SELECT t.doc_id,
+                      CAST(round(
+                        (CAST(CAST(round(ln(CAST(st.n_docs + 1 AS DOUBLE) / CAST(d.df + 1 AS DOUBLE)) * 1000000, 0) AS BIGINT) AS DOUBLE) / 1000000.0)
+                        * (CAST(t.tf AS DOUBLE) * 2.2)
+                        / (CAST(t.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(l.dl AS DOUBLE) / st.avgdl)))
+                        * 1000000.0, 0) AS BIGINT) AS score_micro
+               FROM tf t JOIN dft d ON d.term = t.term
+               JOIN lens l ON l.doc_id = t.doc_id
+               CROSS JOIN stats st),
+         bm AS (SELECT doc_id, count(*) AS n_hit_terms,
+                round(CAST(CAST(sum(score_micro) AS BIGINT) AS DOUBLE) / 1000000.0, 6) AS bm25
+         FROM s GROUP BY doc_id
+         ORDER BY bm25 DESC, doc_id LIMIT $limit)"""
+  }
+
+  private def bm25Sql: String =
+    s"""WITH ${bm25Ctes(20)}
+         SELECT doc_id, n_hit_terms, bm25 FROM bm
+         ORDER BY bm25 DESC, doc_id"""
 }

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Query
+
 /** Source/sink surface (SURVEY.md §2 H). Parquet is the primary
   * contract (driver-provided tables); CSV and JSON cover interchange.
   * All readers take an explicit schema — schema inference is a full
@@ -186,4 +188,14 @@ object IO {
       .select(col("st.doc_id").as("doc_id"), col("st.text").as("text"))
       .sortWithinPartitions("doc_id")
   }
+
+  /** This object's queries, each with its DuckDB oracle (see [[graft.core.Query]]). */
+  lazy val queries: Seq[Query] = Seq(
+    // the per-column Avro envelope (Kafka ingest hop)
+    // the PLAIN projection: a hash match proves the to_avro→from_avro
+    // codec pair is value-invisible (lossless round trip) — same
+    // argument as Relational's q_salted_join
+    Query("avro_roundtrip", avroRoundtrip,
+      "SELECT doc_id, text FROM documents ORDER BY doc_id"),
+  )
 }

@@ -30,18 +30,29 @@ if [ -n "$caches" ]; then
 fi
 
 # One SQL twin per kernel: the DuckDB oracles take their tokens, base
-# hash and 3-grams from the `…Sql` twin beside the Spark kernel
-# (PortableHash.h60Sql, Shingles.tokensSql/grams3Cte, TokenCol.
-# letterTokensSql), so a hand copy of that SQL elsewhere can drift.
-# Scaladoc lines that name the SQL form are exempt.
+# hash and word n-grams from the `…Sql` twin beside the Spark kernel
+# (PortableHash.h60Sql, Shingles.tokensSql/nGramsSql/grams3Cte,
+# TokenCol.letterTokensSql), so a hand copy of that SQL elsewhere can
+# drift. Scaladoc lines that name the SQL form are exempt.
 echo "=== one SQL twin per kernel ==="
-twins=$(grep -rnE "substring\(md5\(|string_split_regex\(|list_transform\(range\(1, len\(t\) - 1\)" \
+twins=$(grep -rnE "substring\(md5\(|string_split_regex\(|list_transform\(range\(1, len\(t\)" \
     src/main/scala \
   | grep -vE '^src/main/scala/graft/functions/(PortableHash|Shingles|TokenUtil)\.scala:' \
   | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(/\*\*|\*)' || true)
 if [ -n "$twins" ]; then
   echo "kernel SQL outside its twin (PortableHash/Shingles/TokenUtil.scala):"
   echo "$twins"
+  exit 1
+fi
+
+# One query registry: each query's build and DuckDB oracle are declared
+# together as a graft.core.Query beside its operator; SparkEntry only
+# concatenates the owners' lists, so SQL text there is a second home.
+echo "=== one query registry ==="
+entrySql=$(grep -nE '"""|SELECT' src/main/scala/graft/SparkEntry.scala || true)
+if [ -n "$entrySql" ]; then
+  echo "SQL text in SparkEntry.scala (declare it in the operator's queries):"
+  echo "$entrySql"
   exit 1
 fi
 
