@@ -1,6 +1,9 @@
 package graft.core
 
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.TokenUtil
 
 /** The reference framework's API contract, re-expressed Spark-typed.
   *
@@ -43,11 +46,14 @@ object MapReduce {
       .map(_._2)(kv)
 
   /** Convenience: word count over a Dataset of lines — the reference's
-    * flagship workload (`test.sh` / `bin/mr-wordc.o`). */
+    * flagship workload (`test.sh` / `bin/mr-wordc.o`) — with the
+    * letter tokens of [[graft.functions.TokenUtil]]'s byte scan. */
   def wordCount(lines: Dataset[String])(implicit
       spark: SparkSession): Dataset[(String, Long)] = {
     import spark.implicits._
-    run(lines)(line =>
-      line.split("[^A-Za-z]+").iterator.filter(_.nonEmpty).map(_ -> 1L))(_ + _)
+    run(lines) { line =>
+      val toks = TokenUtil.tokens(UTF8String.fromString(line), includeDigits = false)
+      Iterator.tabulate(toks.numElements())(i => toks.getUTF8String(i).toString -> 1L)
+    }(_ + _)
   }
 }

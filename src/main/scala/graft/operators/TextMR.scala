@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Query, Tables}
-import graft.functions.{PortableHash, TokenCol}
+import graft.functions.{PortableHash, TokenCol, TokenCounts}
 
 /** The reference framework's own workload surface (SURVEY.md §2 A),
   * re-expressed as declarative plans.
@@ -13,11 +13,12 @@ import graft.functions.{PortableHash, TokenCol}
   * `mr_consume` (/root/reference/mapreduce.h:120-213, test.sh): N
   * mappers split the input, emit (word, 1), one reducer merges and
   * writes `word, count` sorted alphabetically. Here the same jobs are
-  * explode → groupBy → agg DataFrame plans: the mapper fan-out is
-  * input partitioning, the kv buffer hand-off is the shuffle (with
-  * map-side partial aggregation the reference lacks), and the sorted
-  * sink is an orderBy. A typed equivalent lives in
-  * [[graft.core.MapReduce]].
+  * DataFrame plans: the mapper fan-out is input partitioning, the kv
+  * buffer hand-off is the shuffle, and the sorted sink is an orderBy.
+  * The word counts tokenize and combine in one pass per partition
+  * ([[graft.functions.TokenCounts]], the map-side combiner the
+  * reference lacks), shuffle one partial count per distinct word, and
+  * sum them. A typed equivalent lives in [[graft.core.MapReduce]].
   */
 object TextMR {
 
@@ -25,11 +26,17 @@ object TextMR {
     df.select(col("doc_id"),
       explode(TokenCol.letterTokens(col("text"))).as("word"))
 
+  /** `(word, cnt)`, `cnt` non-null: the partition-local token counts
+    * of `text`, shuffled on word and summed. */
+  private def wordCounts(df: DataFrame, text: String,
+      includeDigits: Boolean): DataFrame =
+    TokenCounts(df, col(text), includeDigits)
+      .groupBy(col("word"))
+      .agg(coalesce(sum(col("c")), lit(0L)).as("cnt"))
+
   /** Word count over all documents — the reference's flagship job. */
   def wordcount(spark: SparkSession, dir: String): DataFrame =
-    words(Tables(spark, dir).documents)
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("cnt"))
+    wordCounts(Tables(spark, dir).documents, "text", includeDigits = false)
       .orderBy("word")
 
   /** Grep-count: map = filter lines matching a pattern, reduce =
@@ -83,9 +90,8 @@ object TextMR {
     * [[graft.functions.SpaceSavingAgg]] (same bound contract,
     * spec-pinned on planted skew in SpaceSavingSpec). */
   def heavyHitters(spark: SparkSession, dir: String, c: Int = 8): DataFrame = {
-    val counts = words(Tables(spark, dir).documents)
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("cnt"))
+    val counts = wordCounts(Tables(spark, dir).documents, "text",
+      includeDigits = false)
     // (c+1)-th largest count via a limit-fed sort (TakeOrdered: each
     // partition keeps c+1 rows); word tiebreak only orders the limit's
     // contents — θ is the min COUNT among them either way
@@ -108,10 +114,8 @@ object TextMR {
     * /root/reference/output_compare/mr-wordc/ for every shipped input
     * file, including the empty and no-trailing-newline edge cases. */
   def wordcountFile(spark: SparkSession, path: String): DataFrame =
-    spark.read.textFile(path).toDF("line")
-      .select(explode(TokenCol.alnumTokens(col("line"))).as("word"))
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("cnt"))
+    wordCounts(spark.read.textFile(path).toDF("line"), "line",
+      includeDigits = true)
       .orderBy("word")
 
   /** Render [[wordcountFile]] in the reference's output format. */

@@ -1609,8 +1609,11 @@ object TextOps {
       s"""WITH toks AS (
            SELECT doc_id, ${tokensSql("text")} AS t
            FROM documents),
-         bg AS (SELECT doc_id, t[i] || ' ' || t[i+1] AS bg
-                FROM toks, unnest(range(1, len(t))) AS r(i)),
+         bg AS (SELECT doc_id, bg
+                FROM (SELECT doc_id,
+                             unnest(${nGramsSql("t", 2, distinct = false)}) AS bg
+                      FROM toks)
+                WHERE contains(bg, ' ')),
          cnt2 AS (SELECT bg, count(*) AS c2 FROM bg GROUP BY bg),
          cnt1 AS (SELECT bg, c2,
                          sum(c2) OVER (PARTITION BY split_part(bg, ' ', 1)) AS c1

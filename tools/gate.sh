@@ -35,13 +35,24 @@ fi
 # TokenCol.letterTokensSql), so a hand copy of that SQL elsewhere can
 # drift. Scaladoc lines that name the SQL form are exempt.
 echo "=== one SQL twin per kernel ==="
-twins=$(grep -rnE "substring\(md5\(|string_split_regex\(|list_transform\(range\(1, len\(t\)" \
+twins=$(grep -rnE "substring\(md5\(|string_split_regex\(|list_transform\(range\(1, len\(t\)|t\[i\] \|\| ' ' \|\| t\[i\+1\]" \
     src/main/scala \
   | grep -vE '^src/main/scala/graft/functions/(PortableHash|Shingles|TokenUtil)\.scala:' \
   | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(/\*\*|\*)' || true)
 if [ -n "$twins" ]; then
   echo "kernel SQL outside its twin (PortableHash/Shingles/TokenUtil.scala):"
   echo "$twins"
+  exit 1
+fi
+
+# One token definition: the Scala word tokenizers scan bytes with
+# TokenUtil's class test, so a java.util.regex letter split is a
+# second definition (and the path measured 40x slower).
+echo "=== one token definition ==="
+splits=$(grep -rnF 'split("[^A-Za-z' src/main/scala || true)
+if [ -n "$splits" ]; then
+  echo "regex letter split outside TokenUtil's byte scan:"
+  echo "$splits"
   exit 1
 fi
 
