@@ -146,13 +146,6 @@ object Shingles {
                                  ELSE 0 END) AS BIGINT) AS sim
                  FROM votes GROUP BY doc_id)"""
 
-  /** The 16-bit chunks of a simhash — pigeonhole bucketing: two hashes
-    * within Hamming distance 3 share at least one of 4 chunks. */
-  def simhashChunks(sim: Column): Column =
-    array((0 until 4).map(c =>
-      concat(lit(s"$c#"),
-        shiftright(sim, c * 16).bitwiseAND(lit(0xFFFFL)).cast("string"))): _*)
-
   /** Hamming distance between two longs (codegen'd bit_count). */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 

@@ -3,8 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Fixpoint, Query, Tables, WorkingSet}
-import graft.functions.PortableHash
+import graft.core.{Fixpoint, Query, SimJoin, Tables, WorkingSet}
 import graft.functions.Shingles._
 import graft.functions.Vectors
 
@@ -112,45 +111,18 @@ object Dedup {
   /** SIMHASH HAMMING-TOLERANCE SWEEP — the tuning bank for the
     * [[simhash]] near-dup gate (how many pairs does each tolerance
     * admit?): candidates are generated ONCE at the bank's LOOSEST
-    * threshold — 5 disjoint 12-bit chunks of the 60-bit signature,
-    * pigeonhole-complete for every Hamming distance ≤ 4 — and every
-    * bank member is a conditional count over the same verified pair
-    * set. The [[sweepLsh]]/nprobe discipline applied to the simhash
-    * radius knob; a per-threshold re-chunking would pay the bucket
-    * join #bank times for identical candidates. */
-  def sweepHamming(spark: SparkSession, dir: String): DataFrame = {
-    val spark0 = spark
-    import spark0.implicits._
-    val sigs = sharedGrams(spark, dir)
-      .filter(size(col("grams")) > 0)
-      .select(col("doc_id"),
-        graft.functions.SketchExprs.simhashSig(col("grams")).as("sim"))
-    val chunkCols = (0 until 5).map(c =>
-      concat(lit(s"$c#"),
-        shiftright(col("sim"), 12 * c).bitwiseAND(lit(0xFFFL))
-          .cast("string")))
-    val chunks = sigs.select(col("doc_id"), col("sim"),
-      explode(array(chunkCols: _*)).as("ck"))
-    val pairs = chunks.as("a")
-      .join(chunks.as("b"),
-        col("a.ck") === col("b.ck") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-        graft.functions.Shingles.hamming(col("a.sim"), col("b.sim"))
-          .as("hamming"))
-      .distinct()
-    val counts = pairs
-      .select(col("hamming"),
-        explode(array(HammingSweepBank.map(h => lit(h.toLong)): _*))
-          .as("max_hamming"))
-      .filter(col("hamming") <= col("max_hamming"))
-      .groupBy(col("max_hamming")).agg(count(lit(1)).as("n_pairs"))
-    // bank spine: a tolerance admitting zero pairs still emits its row
-    HammingSweepBank.map(_.toLong).toDF("max_hamming")
-      .join(counts, Seq("max_hamming"), "left")
-      .select(col("max_hamming"),
-        coalesce(col("n_pairs"), lit(0L)).as("n_pairs"))
-      .orderBy(col("max_hamming"))
-  }
+    * threshold — [[SimJoin.hammingPairs]] over 5 disjoint 12-bit
+    * chunks of the 60-bit signature, pigeonhole-complete for every
+    * Hamming distance ≤ 4 — and every bank member is a conditional
+    * count over the same verified pair set ([[SimJoin.bankCounts]]).
+    * The [[sweepLsh]]/nprobe discipline applied to the simhash radius
+    * knob; a per-threshold re-chunking would pay the bucket join
+    * #bank times for identical candidates. */
+  def sweepHamming(spark: SparkSession, dir: String): DataFrame =
+    SimJoin.bankCounts(
+      SimJoin.hammingPairs(simhashes(sharedGrams(spark, dir)),
+        HammingSweepBank.max, 60),
+      "hamming", "max_hamming", HammingSweepBank.map(_.toLong), atMost = true)
 
   def exactNormalized(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir).documents
@@ -162,6 +134,19 @@ object Dedup {
 
   private def docGrams(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), grams3(col("text")).as("grams"))
+
+  /** `(doc_id, gid)` postings of a gram table. The whole gram array is
+    * hashed in one per-doc kernel loop, THEN exploded: the postings
+    * carry the 60-bit PORTABLE HASH of each shingle as a fixed-width
+    * long (the self-join probes and the (d1, d2) aggregate measured
+    * ~1.8× faster than on strings), and no exploded row pays the
+    * md5→hex→conv Column chain (functions.GramHashes — value-identical
+    * to h60 per row). Exact: the oracle joins on the same hash, so a
+    * collision (P ≈ |grams|²/2⁶¹) affects both engines identically,
+    * and within-doc distinctness is taken before hashing. */
+  private def postsOf(g: DataFrame): DataFrame =
+    g.select(col("doc_id"),
+      explode(graft.functions.SketchExprs.gramHashes(col("grams"))).as("gid"))
 
   // ---- shared shingle derivations over the documents table ----
   // ngram-Jaccard, containment, components, and minhash all start
@@ -179,34 +164,15 @@ object Dedup {
 
   private def sharedPosts(spark: SparkSession, dir: String): DataFrame =
     shared.getOrBuild(spark, s"$dir#posts") {
-      // hash the whole gram array in one per-doc kernel loop, THEN
-      // explode: the postings stream carries fixed-width longs and
-      // never pays the per-exploded-row md5→hex→conv string chain
-      // (functions.GramHashes — value-identical to h60 per row)
-      sharedGrams(spark, dir)
-        .select(col("doc_id"),
-          explode(graft.functions.SketchExprs.gramHashes(col("grams")))
-            .as("gid"))
+      postsOf(sharedGrams(spark, dir))
     }
 
-  /** `(d1, d2, inter, n1, n2)` for every doc pair sharing ≥ 1
-    * shingle — the inverted-index self-join ngram-Jaccard,
-    * containment, and components ALL score from (only the final
-    * scoring expression and τ-gate differ per operator). */
+  /** The documents' [[SimJoin.interPairs]] — the pair base
+    * ngram-Jaccard, containment, and components ALL score from (only
+    * the final scoring expression and τ-gate differ per operator). */
   private def sharedInterPairs(spark: SparkSession, dir: String): DataFrame =
     shared.getOrBuild(spark, s"$dir#inter") {
-      val sizes = sharedGrams(spark, dir)
-        .select(col("doc_id"), size(col("grams")).as("n"))
-      val posts = sharedPosts(spark, dir)
-      posts.as("a")
-        .join(posts.as("b"),
-          col("a.gid") === col("b.gid") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-        .agg(count(lit(1)).as("inter"))
-        .join(sizes.as("s1"), col("d1") === col("s1.doc_id"))
-        .join(sizes.as("s2"), col("d2") === col("s2.doc_id"))
-        .select(col("d1"), col("d2"), col("inter"),
-          col("s1.n").as("n1"), col("s2.n").as("n2"))
+      SimJoin.interPairs(sharedGrams(spark, dir), sharedPosts(spark, dir))
     }
 
   /** Unsorted Jaccard-gated pairs from the shared base — consumed by
@@ -214,155 +180,115 @@ object Dedup {
     * a presentation sort would be destroyed immediately). */
   private def sharedJaccardPairs(spark: SparkSession, dir: String,
       tau: Double): DataFrame =
-    sharedInterPairs(spark, dir)
-      .select(col("d1"), col("d2"), col("inter"),
-        round(col("inter") / (col("n1") + col("n2") - col("inter")), 6)
-          .as("jaccard"))
-      .filter(col("jaccard") >= tau)
+    SimJoin.jaccardOf(sharedInterPairs(spark, dir), tau)
 
   /** N-gram Jaccard near-dup pairs via inverted-index self-join (see
-    * [[ngramJaccardDf]]). `maxDf` is OPT-IN (0 = exact/uncapped): the
-    * cap bounds the |postings|² blowup boilerplate shingles cause on
-    * real 100 TB web text, and Jaccard values stay exact for every
+    * [[ngramJaccardPairs]]). `maxDf` is OPT-IN (0 = exact/uncapped):
+    * the cap bounds the |postings|² blowup boilerplate shingles cause
+    * on real 100 TB web text, and Jaccard values stay exact for every
     * emitted pair, but a τ-pair whose shared shingles are ALL over-cap
     * would be silently dropped — so exact-by-default, and the capped
-    * path logs when the precondition is actually being relied on
-    * (see [[ngramJaccardPairs]]). The driver's `dedup_ngram_jaccard`
-    * entry passes `maxDf = 1000` explicitly — the 100 TB operating
-    * configuration, bit-identical to uncapped on this corpus (max
-    * shingle df 25 at sf0.1; DedupSpec proves equality both here and
-    * on a crafted boilerplate corpus with real drops).
+    * path logs when the precondition is actually being relied on. The
+    * driver's `dedup_ngram_jaccard` entry passes `maxDf = 1000`
+    * explicitly — the 100 TB operating configuration, bit-identical
+    * to uncapped on this corpus (max shingle df 25 at sf0.1;
+    * DedupSpec proves equality both here and on a crafted boilerplate
+    * corpus with real drops).
     *
     * CONTRACT: when `maxDf > 0`, *constructing* the returned frame
     * runs one bounded Spark job (a single aggregate over the cached
     * postings) to decide whether the cap actually bites — i.e. this
-    * method is not purely lazy. The probe is what buys the shared
-    * exact-pair fast path below; [[ngramJaccardDf]] is the direct
-    * formulation without the shared base (its working sets
-    * materialize at construction, like every [[WorkingSet]]). */
+    * method is not purely lazy. When it does not, the capped plan IS
+    * the exact plan, and the shared cached pair base serves it; only a
+    * corpus where boilerplate exceeds the cap pays the add-back joins,
+    * over the same shared grams and postings. */
   def ngramJaccard(spark: SparkSession, dir: String, tau: Double = 0.1,
       maxDf: Long = 0): DataFrame = {
-    // fast path through the shared pair base: when the cap doesn't
-    // bite (no shingle's df exceeds maxDf — one aggregate over the
-    // cached postings decides), the capped plan IS the exact plan,
-    // so the shared frame is value-identical by construction. Only a
-    // corpus where boilerplate actually exceeds the cap pays the
-    // full capped formulation with its add-back joins.
-    val capBites = maxDf > 0 && !sharedPosts(spark, dir)
-      .groupBy(col("gid")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf).isEmpty
-    if (capBites)
-      ngramJaccardDf(Tables(spark, dir).documents, tau, maxDf = maxDf)
-    else sharedJaccardPairs(spark, dir, tau).sortWithinPartitions("d1", "d2")
+    lazy val posts = sharedPosts(spark, dir)
+    overCap(posts, maxDf)
+      .fold(sharedJaccardPairs(spark, dir, tau))(
+        cappedJaccardPairs(sharedGrams(spark, dir), posts, _, tau))
+      .sortWithinPartitions("d1", "d2")
   }
 
   /** Presentation-sorted wrapper over [[ngramJaccardPairs]]. */
   def ngramJaccardDf(docs: DataFrame, tau: Double,
-      pruneSingletons: Boolean = false, maxDf: Long = 0): DataFrame =
-    ngramJaccardPairs(docs, tau, pruneSingletons, maxDf)
-      .sortWithinPartitions("d1", "d2")
+      maxDf: Long = 0): DataFrame =
+    ngramJaccardPairs(docs, tau, maxDf).sortWithinPartitions("d1", "d2")
 
   /** N-gram Jaccard near-dup pairs, unsorted (iterative consumers —
     * [[components]] — must not pay a global sort they immediately
-    * destroy): explode distinct shingles, join docs sharing a shingle,
-    * count shared shingles per pair, compute Jaccard from the per-doc
-    * set sizes.
+    * destroy): the shingle postings' [[SimJoin.interPairs]], scored by
+    * [[SimJoin.jaccardOf]].
     *
-    * Scale knobs, both exact on this corpus (DedupSpec):
-    * - `pruneSingletons`: df=1 shingles can't contribute a pair;
-    *   dropping them shrinks the self-join input. Always exact.
-    * - `maxDf`: shingles in more than `maxDf` docs (boilerplate) are
-    *   excluded from *candidate generation* — the |postings|² term the
-    *   self-join pays per shingle — but still counted into `inter` for
-    *   surviving candidates via a narrow add-back join, so Jaccard
-    *   values are exact. A τ-pair can only be lost if ALL its shared
-    *   shingles are over-cap; since inter ≥ τ·|union| ≥ τ·|doc set|,
-    *   that is impossible whenever each doc has fewer than τ·|its
-    *   gram set| over-cap shingles — the regime any sane cap targets
-    *   (boilerplate ≪ content). */
+    * Scale knob `maxDf`, exact on this corpus (DedupSpec): shingles in
+    * more than `maxDf` docs (boilerplate) are excluded from *candidate
+    * generation* — the |postings|² term the self-join pays per shingle
+    * — but still counted into `inter` for surviving candidates via a
+    * narrow add-back join, so Jaccard values are exact. A τ-pair can
+    * only be lost if ALL its shared shingles are over-cap; since
+    * inter ≥ τ·|union| ≥ τ·|doc set|, that is impossible whenever each
+    * doc has fewer than τ·|its gram set| over-cap shingles — the
+    * regime any sane cap targets (boilerplate ≪ content). */
   private[graft] def ngramJaccardPairs(docs: DataFrame, tau: Double,
-      pruneSingletons: Boolean = false, maxDf: Long = 0): DataFrame = {
+      maxDf: Long = 0): DataFrame = {
+    // both materialized before the self-join — otherwise the shingling
+    // subtree executes once per join side
     val g = WorkingSet(docGrams(docs))
-    val sizes = g.select(col("doc_id"), size(col("grams")).as("n"))
-    // materialized before the self-join — otherwise the shingling
-    // subtree executes once per join side. Postings carry the 60-bit
-    // PORTABLE HASH of the shingle, not the string: the self-join
-    // probes and the (d1, d2) aggregate run on fixed-width longs
-    // (measured ~1.8× on the join stage), and exactness is preserved
-    // because the oracle joins on the SAME hash — any collision (P ≈
-    // |grams|²/2⁶¹) affects both engines identically, and within-doc
-    // distinctness is taken before hashing. Hashing runs as one
-    // per-doc kernel loop over the array BEFORE the explode
-    // (functions.GramHashes), so no exploded row pays the
-    // md5→hex→conv Column chain.
-    val allPosts = g.select(col("doc_id"),
-      explode(graft.functions.SketchExprs.gramHashes(col("grams"))).as("gid"))
-    val needDfs = pruneSingletons || maxDf > 0
-    val dfs = if (needDfs) {
-      WorkingSet(allPosts.groupBy(col("gid")).agg(count(lit(1)).as("df")))
-    } else null
-    // One tiny job over the (cached, already-needed) df table decides
-    // whether the cap actually bites. When it doesn't — the common
-    // case on deduped shards — the capped plan collapses to the exact
-    // one: no candidate-gen filter, no add-back joins, identical
-    // results by construction. When it does, warn: callers are relying
-    // on the "boilerplate ≪ content" exactness precondition below.
-    val capBites = maxDf > 0 &&
-      !dfs.filter(col("df") > maxDf).isEmpty
-    if (capBites) {
-      System.err.println(s"[graft] ngramJaccard: shingles with df > $maxDf " +
-        "exist; capped candidate generation is exact only while no " +
-        "qualifying pair shares over-cap shingles EXCLUSIVELY " +
-        "(boilerplate ≪ content) — see Scaladoc")
+    val posts = WorkingSet(postsOf(g))
+    overCap(posts, maxDf)
+      .fold(SimJoin.jaccardOf(SimJoin.interPairs(g, posts), tau))(
+        cappedJaccardPairs(g, posts, _, tau))
+  }
+
+  /** The shingles (`gid`) of `posts` in more than `maxDf` docs, or
+    * None when `maxDf` is 0 or the cap does not bite — the one probe
+    * (a single aggregate) per call that decides between the exact and
+    * the capped plan. When it bites, warn: the caller is relying on
+    * the "boilerplate ≪ content" exactness precondition. */
+  private def overCap(posts: => DataFrame, maxDf: Long): Option[DataFrame] =
+    if (maxDf <= 0) None
+    else {
+      val over = posts.groupBy(col("gid")).agg(count(lit(1)).as("df"))
+        .filter(col("df") > maxDf).select(col("gid"))
+      if (over.isEmpty) None
+      else {
+        System.err.println(s"[graft] ngramJaccard: shingles with df > $maxDf " +
+          "exist; capped candidate generation is exact only while no " +
+          "qualifying pair shares over-cap shingles EXCLUSIVELY " +
+          "(boilerplate ≪ content) — see Scaladoc")
+        Some(WorkingSet(over))
+      }
     }
-    val minDf = if (pruneSingletons) 1L else 0L
-    val needFilter = pruneSingletons || capBites
-    val posts = WorkingSet(if (needFilter) {
-      val kept = dfs
-        .filter(col("df") > minDf &&
-          (if (capBites) col("df") <= maxDf else lit(true)))
-        .select("gid")
-      allPosts.join(kept, Seq("gid"), "left_semi")
-    } else allPosts)
-    val rawPairs = posts.as("a")
-      .join(posts.as("b"),
-        col("a.gid") === col("b.gid") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .agg(count(lit(1)).as("inter"))
-    // add back the over-cap shingles' contribution to `inter`, for
-    // candidate pairs only: dropped postings join the (small) pair set
-    // on doc_id — never each other — so boilerplate can't reintroduce
-    // the quadratic term. Empty (zero-cost under AQE) when no shingle
-    // exceeds the cap, as on this corpus.
-    val pairs = if (capBites) {
-      val dropped = allPosts
-        .join(dfs.filter(col("df") > maxDf).select("gid"), Seq("gid"), "left_semi")
-      val extra = rawPairs.select(col("d1"), col("d2"))
-        .join(dropped.as("da"), col("d1") === col("da.doc_id"))
-        .join(dropped.as("db"),
-          col("d2") === col("db.doc_id") && col("da.gid") === col("db.gid"))
-        .groupBy(col("d1"), col("d2"))
-        .agg(count(lit(1)).as("inter_over"))
-      rawPairs.join(extra, Seq("d1", "d2"), "left")
-        .select(col("d1"), col("d2"),
-          (col("inter") + coalesce(col("inter_over"), lit(0L))).as("inter"))
-    } else rawPairs
-    pairs
-      .join(sizes.as("s1"), col("d1") === col("s1.doc_id"))
-      .join(sizes.as("s2"), col("d2") === col("s2.doc_id"))
-      .select(col("d1"), col("d2"), col("inter"),
-        round(col("inter") / (col("s1.n") + col("s2.n") - col("inter")), 6)
-          .as("jaccard"))
-      .filter(col("jaccard") >= tau)
+
+  /** [[ngramJaccardPairs]]' capped plan: candidates from the postings
+    * outside `over`, then the over-cap shingles' contribution added
+    * back to `inter` for those candidates only — dropped postings join
+    * the (small) pair set on doc_id, never each other, so boilerplate
+    * can't reintroduce the quadratic term. */
+  private def cappedJaccardPairs(g: DataFrame, posts: DataFrame,
+      over: DataFrame, tau: Double): DataFrame = {
+    val pairs = SimJoin.interPairs(g, posts.join(over, Seq("gid"), "left_anti"))
+    val dropped = posts.join(over, Seq("gid"), "left_semi")
+    val extra = pairs.select(col("d1"), col("d2"))
+      .join(dropped.as("da"), col("d1") === col("da.doc_id"))
+      .join(dropped.as("db"),
+        col("d2") === col("db.doc_id") && col("da.gid") === col("db.gid"))
+      .groupBy(col("d1"), col("d2"))
+      .agg(count(lit(1)).as("inter_over"))
+    SimJoin.jaccardOf(pairs.join(extra, Seq("d1", "d2"), "left")
+      .select(col("d1"), col("d2"),
+        (col("inter") + coalesce(col("inter_over"), lit(0L))).as("inter"),
+        col("n1"), col("n2")), tau)
   }
 
   /** MinHash + banded LSH near-dup pairs: k=32 minhashes, 8 bands of
     * 4 rows (candidate probability ≈ 1-(1-j⁴)⁸ — steep around j≈0.5).
     * Candidates come from one shuffle on band keys; exact Jaccard
     * verification joins the shingle sets back only for candidates.
-    * The hash family is [[PortableHash]] (md5-60bit base + affine
-    * salts), so the DuckDB oracle computes the identical signatures —
-    * value-checked, not rows-only. Recall vs exact Jaccard is
+    * The hash family is [[graft.functions.PortableHash]] (md5-60bit
+    * base + affine salts), so the DuckDB oracle computes the identical
+    * signatures — value-checked, not rows-only. Recall vs exact Jaccard is
     * additionally asserted in DedupSpec. */
   def minhashLsh(spark: SparkSession, dir: String, tau: Double = 0.5,
       k: Int = 32, bands: Int = 8): DataFrame =
@@ -581,11 +507,13 @@ object Dedup {
       .sortWithinPartitions("doc_id")
   }
 
-  /** SimHash near-dup pairs: 64-bit signature, 4×16-bit chunk
-    * bucketing (pigeonhole-complete for Hamming ≤ 3), verify with
-    * bit_count(xor). Signatures use the [[PortableHash]] md5-60bit
-    * base (bits 60-63 vote to 0 on both engines), so the DuckDB
-    * oracle reproduces them bit-for-bit — value-checked. */
+  /** SimHash near-dup pairs: 64-bit signature, chunk-bucketed
+    * `maxHamming + 1` ways and verified with bit_count(xor)
+    * ([[SimJoin.hammingPairs]]: 4×16-bit chunks at the default 3,
+    * complete at every `maxHamming`). Signatures use the
+    * [[graft.functions.PortableHash]] md5-60bit base (bits 60-63 vote
+    * to 0 on both engines), so the DuckDB oracle reproduces them
+    * bit-for-bit — value-checked. */
   def simhash(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame =
     simhashDf(Tables(spark, dir).documents, maxHamming)
 
@@ -596,22 +524,16 @@ object Dedup {
     // SimHashAgg and with the 64 sum-of-vote columns, see
     // SketchAggsSpec), so signature derivation is map-side and the
     // operator's first shuffle is the chunk-bucket candidate join.
-    // one working set: both join sides read the chunks, only they read sigs
-    val sigs = docGrams(docs)
-      .filter(size(col("grams")) > 0)
-      .select(col("doc_id"),
-        graft.functions.SketchExprs.simhashSig(col("grams")).as("sim"))
-    val chunks = WorkingSet(sigs.select(col("doc_id"), col("sim"),
-      explode(simhashChunks(col("sim"))).as("ck")))
-    chunks.as("a")
-      .join(chunks.as("b"),
-        col("a.ck") === col("b.ck") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-        hamming(col("a.sim"), col("b.sim")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+    // One working set: both join sides read the signatures.
+    SimJoin.hammingPairs(WorkingSet(simhashes(docGrams(docs))), maxHamming, 64)
       .sortWithinPartitions("d1", "d2")
   }
+
+  /** `(doc_id, hash)`: the simhash signature of each nonempty gram set. */
+  private def simhashes(g: DataFrame): DataFrame =
+    g.filter(size(col("grams")) > 0)
+      .select(col("doc_id"),
+        graft.functions.SketchExprs.simhashSig(col("grams")).as("hash"))
 
   /** Connected components over near-dup pairs — the step that turns
     * pairwise similarity into dedup groups (keep the min doc_id per
@@ -760,38 +682,20 @@ object Dedup {
     * misses: a short document quoted wholesale inside a long one has
     * C(A⊂B) = |A∩B|/|A| ≈ 1 while Jaccard ≈ |A|/|B| ≈ 0, so a
     * Jaccard gate never fires (DedupSpec plants exactly this case).
-    * Same inverted-index pair derivation as [[ngramJaccardPairs]]
+    * Same [[SimJoin.interPairs]] derivation as [[ngramJaccardPairs]]
     * (postings on the 60-bit portable hash, one bucket self-join,
-    * never N²); only the final scoring differs — both directions'
-    * containment from the same `inter` count, gated on the max. */
+    * never N²); only the final scoring differs
+    * ([[SimJoin.containmentOf]]). */
   def containment(spark: SparkSession, dir: String,
       tau: Double = 0.6): DataFrame =
-    sharedInterPairs(spark, dir)
-      .select(col("d1"), col("d2"), col("inter"),
-        round(col("inter") / col("n1"), 6).as("cont_d1_in_d2"),
-        round(col("inter") / col("n2"), 6).as("cont_d2_in_d1"))
-      .filter(greatest(col("cont_d1_in_d2"), col("cont_d2_in_d1")) >= tau)
+    SimJoin.containmentOf(sharedInterPairs(spark, dir), tau)
       .sortWithinPartitions("d1", "d2")
 
   def containmentDf(docs: DataFrame, tau: Double = 0.6): DataFrame = {
     // cached: consumed by both the size projection and the postings
-    // explode — without it the shingling subtree runs twice (same
-    // discipline as ngramJaccardPairs)
+    // explode — without it the shingling subtree runs twice
     val g = WorkingSet(docGrams(docs))
-    val sizes = g.select(col("doc_id"), size(col("grams")).as("n"))
-    val posts = g.select(col("doc_id"),
-      explode(graft.functions.SketchExprs.gramHashes(col("grams"))).as("gid"))
-    posts.as("a")
-      .join(posts.as("b"),
-        col("a.gid") === col("b.gid") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .agg(count(lit(1)).as("inter"))
-      .join(sizes.as("s1"), col("d1") === col("s1.doc_id"))
-      .join(sizes.as("s2"), col("d2") === col("s2.doc_id"))
-      .select(col("d1"), col("d2"), col("inter"),
-        round(col("inter") / col("s1.n"), 6).as("cont_d1_in_d2"),
-        round(col("inter") / col("s2.n"), 6).as("cont_d2_in_d1"))
-      .filter(greatest(col("cont_d1_in_d2"), col("cont_d2_in_d1")) >= tau)
+    SimJoin.containmentOf(SimJoin.interPairs(g, postsOf(g)), tau)
       .sortWithinPartitions("d1", "d2")
   }
 
@@ -899,55 +803,26 @@ object Dedup {
   def sweep(spark: SparkSession, dir: String): DataFrame =
     sweepDf(Tables(spark, dir).embeddings)
 
-  def sweepDf(embs: DataFrame): DataFrame = {
-    val bank = embs.sparkSession.range(1)
-      .select(explode(array(SweepThresholds.map(lit): _*)).as("threshold"))
-    val tagged = embeddingDf(embs, SweepThresholds.min)
-      .select(col("v1"), col("v2"), col("cosine"),
-        explode(array(SweepThresholds.map(lit): _*)).as("threshold"))
-      .filter(col("cosine") >= col("threshold"))
-    val nPairs = tagged.groupBy(col("threshold"))
-      .agg(count(lit(1)).as("np"))
-    val nDocs = tagged
-      .select(col("threshold"), explode(array(col("v1"), col("v2"))).as("v"))
-      .groupBy(col("threshold"))
-      .agg(countDistinct(col("v")).as("nd"))
-    bank.join(nPairs, Seq("threshold"), "left")
-      .join(nDocs, Seq("threshold"), "left")
-      .select(col("threshold"),
-        coalesce(col("np"), lit(0L)).as("n_pairs"),
-        coalesce(col("nd"), lit(0L)).as("n_docs"))
-      .orderBy(col("threshold"))
-  }
+  def sweepDf(embs: DataFrame): DataFrame =
+    SimJoin.bankCounts(embeddingDf(embs, SweepThresholds.min), "cosine",
+      "threshold", SweepThresholds, atMost = false, ends = Seq("v1", "v2"))
 
-  /** Generated DuckDB oracle for [[sweep]] — same pair construction
-    * as dedup_embedding at the bank's lowest bound, same bank. */
-  def sweepOracleSql: String = {
-    val bank = SweepThresholds.mkString(", ")
-    s"""WITH pr AS (
-          SELECT a.vec_id AS v1, b.vec_id AS v2,
-                 round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                       CAST(b.embedding AS DOUBLE[])), 6) AS cosine
-          FROM embeddings a JOIN embeddings b
-            ON a.label = b.label AND a.vec_id < b.vec_id
-          WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                      CAST(b.embedding AS DOUBLE[])), 6) >= ${SweepThresholds.min}),
-        tb AS (SELECT unnest([$bank]) AS threshold),
-        tg AS (SELECT tb.threshold, pr.v1, pr.v2
-               FROM pr JOIN tb ON pr.cosine >= tb.threshold),
-        np AS (SELECT threshold, CAST(count(*) AS BIGINT) AS n_pairs
-               FROM tg GROUP BY 1),
-        nd AS (SELECT threshold, CAST(count(DISTINCT v) AS BIGINT) AS n_docs
-               FROM (SELECT threshold, v1 AS v FROM tg
-                     UNION ALL SELECT threshold, v2 FROM tg)
-               GROUP BY 1)
-        SELECT tb.threshold,
-               coalesce(np.n_pairs, 0) AS n_pairs,
-               coalesce(nd.n_docs, 0) AS n_docs
-        FROM tb LEFT JOIN np ON np.threshold = tb.threshold
-        LEFT JOIN nd ON nd.threshold = tb.threshold
-        ORDER BY tb.threshold"""
-  }
+  /** DuckDB twin of [[embeddingDf]], unsorted. */
+  private def embeddingSql(tau: Double): String =
+    s"""SELECT a.vec_id AS v1, b.vec_id AS v2,
+                round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                      CAST(b.embedding AS DOUBLE[])), 6) AS cosine
+         FROM embeddings a JOIN embeddings b
+           ON a.label = b.label AND a.vec_id < b.vec_id
+         WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                     CAST(b.embedding AS DOUBLE[])), 6) >= $tau"""
+
+  /** Generated DuckDB oracle for [[sweep]] — the dedup_embedding
+    * pairs at the bank's lowest bound, same bank. */
+  def sweepOracleSql: String =
+    s"""WITH pr AS (${embeddingSql(SweepThresholds.min)}),
+        ${SimJoin.bankCountsSql("pr", "cosine", "threshold", SweepThresholds,
+          atMost = false, ends = Seq("v1", "v2"))}"""
 
   /** Threshold bank for [[sweepJaccard]] — ascending; the lowest
     * bound is the single pair-generation pass the bank slices. The
@@ -966,74 +841,20 @@ object Dedup {
   def sweepJaccard(spark: SparkSession, dir: String): DataFrame =
     sweepJaccardDf(Tables(spark, dir).documents)
 
-  def sweepJaccardDf(docs: DataFrame): DataFrame = {
-    val bank = docs.sparkSession.range(1)
-      .select(explode(array(JaccardSweepThresholds.map(lit): _*))
-        .as("threshold"))
-    val tagged = ngramJaccardPairs(docs, JaccardSweepThresholds.min)
-      .select(col("d1"), col("d2"), col("jaccard"),
-        explode(array(JaccardSweepThresholds.map(lit): _*)).as("threshold"))
-      .filter(col("jaccard") >= col("threshold"))
-    val nPairs = tagged.groupBy(col("threshold"))
-      .agg(count(lit(1)).as("np"))
-    val nDocs = tagged
-      .select(col("threshold"), explode(array(col("d1"), col("d2"))).as("v"))
-      .groupBy(col("threshold"))
-      .agg(countDistinct(col("v")).as("nd"))
-    bank.join(nPairs, Seq("threshold"), "left")
-      .join(nDocs, Seq("threshold"), "left")
-      .select(col("threshold"),
-        coalesce(col("np"), lit(0L)).as("n_pairs"),
-        coalesce(col("nd"), lit(0L)).as("n_docs"))
-      .orderBy(col("threshold"))
-  }
-
-  /** DuckDB twin of [[sharedInterPairs]], to follow a `WITH`:
-    * [[grams3Cte]], then `hp(doc_id, gid)` (postings on the 60-bit
-    * portable hash, as on the Spark side: collisions, were any to
-    * exist, are identical on both engines), `sizes(doc_id, n)` and
-    * `pairs(d1, d2, inter)` for every doc pair sharing a shingle. */
-  private[graft] val interPairsCtes: String =
-    s"""$grams3Cte,
-         hp AS (SELECT doc_id,
-                       ${PortableHash.h60Sql("gram")} AS gid
-                FROM posts),
-         sizes AS (SELECT doc_id, len(gs) AS n FROM g),
-         pairs AS (
-           SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-           FROM hp a JOIN hp b
-             ON a.gid = b.gid AND a.doc_id < b.doc_id
-           GROUP BY a.doc_id, b.doc_id)"""
+  def sweepJaccardDf(docs: DataFrame): DataFrame =
+    SimJoin.bankCounts(ngramJaccardPairs(docs, JaccardSweepThresholds.min),
+      "jaccard", "threshold", JaccardSweepThresholds, atMost = false,
+      ends = Seq("d1", "d2"))
 
   /** Generated DuckDB oracle for [[sweepJaccard]] — the
     * dedup_ngram_jaccard pair chain at the bank's lowest bound, same
     * bank slices. */
-  def sweepJaccardOracleSql: String = {
-    val bank = JaccardSweepThresholds.mkString(", ")
-    s"""WITH $interPairsCtes,
-        pr AS (
-          SELECT d1, d2, round(inter * 1.0 / (s1.n + s2.n - inter), 6) AS j
-          FROM pairs
-          JOIN sizes s1 ON s1.doc_id = d1
-          JOIN sizes s2 ON s2.doc_id = d2
-          WHERE round(inter * 1.0 / (s1.n + s2.n - inter), 6)
-                  >= ${JaccardSweepThresholds.min}),
-        tb AS (SELECT unnest([$bank]) AS threshold),
-        tg AS (SELECT tb.threshold, pr.d1, pr.d2
-               FROM pr JOIN tb ON pr.j >= tb.threshold),
-        np AS (SELECT threshold, CAST(count(*) AS BIGINT) AS n_pairs
-               FROM tg GROUP BY 1),
-        nd AS (SELECT threshold, CAST(count(DISTINCT v) AS BIGINT) AS n_docs
-               FROM (SELECT threshold, d1 AS v FROM tg
-                     UNION ALL SELECT threshold, d2 FROM tg)
-               GROUP BY 1)
-        SELECT tb.threshold,
-               coalesce(np.n_pairs, 0) AS n_pairs,
-               coalesce(nd.n_docs, 0) AS n_docs
-        FROM tb LEFT JOIN np ON np.threshold = tb.threshold
-        LEFT JOIN nd ON nd.threshold = tb.threshold
-        ORDER BY tb.threshold"""
-  }
+  def sweepJaccardOracleSql: String =
+    s"""WITH ${SimJoin.interPairsCtes},
+        pr AS (SELECT d1, d2, ${SimJoin.jaccardSql} AS jaccard FROM pairs
+               WHERE ${SimJoin.jaccardSql} >= ${JaccardSweepThresholds.min}),
+        ${SimJoin.bankCountsSql("pr", "jaccard", "threshold",
+          JaccardSweepThresholds, atMost = false, ends = Seq("d1", "d2"))}"""
 
   /** Banding bank for [[sweepLsh]] — k = 32 minhashes split as
     * (bands, rows) = (4,8) / (8,4) / (16,2): more bands ⇒ steeper
@@ -1225,16 +1046,12 @@ object Dedup {
             least(col("a.n"), col("b.n")))
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .distinct()
-    cand
+    SimJoin.jaccardOf(cand
       .join(g.select(col("doc_id").as("d1"), col("gids").as("g1")), Seq("d1"))
       .join(g.select(col("doc_id").as("d2"), col("gids").as("g2")), Seq("d2"))
       .select(col("d1"), col("d2"),
         size(array_intersect(col("g1"), col("g2"))).cast("long").as("inter"),
-        size(col("g1")).as("n1"), size(col("g2")).as("n2"))
-      .select(col("d1"), col("d2"), col("inter"),
-        round(col("inter") / (col("n1") + col("n2") - col("inter")), 6)
-          .as("jaccard"))
-      .filter(col("jaccard") >= tau)
+        size(col("g1")).as("n1"), size(col("g2")).as("n2")), tau)
   }
 
   /** SemDeDup-shaped semantic dedup: LEARNED blocking. Where
@@ -1315,14 +1132,7 @@ object Dedup {
     // one loosest-threshold candidate pass serves the whole radius bank
     Query("dedup_sweep_hamming", sweepHamming, sweepHammingSql),
     Query("dedup_embedding", (s, d) => embedding(s, d),
-      """SELECT a.vec_id AS v1, b.vec_id AS v2,
-                round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                      CAST(b.embedding AS DOUBLE[])), 6) AS cosine
-         FROM embeddings a JOIN embeddings b
-           ON a.label = b.label AND a.vec_id < b.vec_id
-         WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                     CAST(b.embedding AS DOUBLE[])), 6) >= 0.4
-         ORDER BY v1, v2"""),
+      s"${embeddingSql(0.4)} ORDER BY v1, v2"),
     // threshold-tuning readout: one pair pass at the bank's lowest
     // bound, tighter thresholds sliced row-locally; absent → 0
     Query("dedup_sweep", sweep, sweepOracleSql),
@@ -1366,15 +1176,13 @@ object Dedup {
     // same postings-hash pair derivation as dedup_ngram_jaccard; only
     // the scoring differs (both per-side containments, max-gated)
     Query("dedup_containment", (s, d) => containment(s, d),
-      s"""WITH ${interPairsCtes}
+      s"""WITH ${SimJoin.interPairsCtes}
          SELECT d1, d2, inter,
-                round(inter * 1.0 / s1.n, 6) AS cont_d1_in_d2,
-                round(inter * 1.0 / s2.n, 6) AS cont_d2_in_d1
+                round(inter * 1.0 / n1, 6) AS cont_d1_in_d2,
+                round(inter * 1.0 / n2, 6) AS cont_d2_in_d1
          FROM pairs
-         JOIN sizes s1 ON s1.doc_id = d1
-         JOIN sizes s2 ON s2.doc_id = d2
-         WHERE greatest(round(inter * 1.0 / s1.n, 6),
-                        round(inter * 1.0 / s2.n, 6)) >= 0.6
+         WHERE greatest(round(inter * 1.0 / n1, 6),
+                        round(inter * 1.0 / n2, 6)) >= 0.6
          ORDER BY d1, d2"""),
     // Recursive-CTE transitive closure over the same pair set the
     // Spark side derives (tiny clusters → closure stays small).
@@ -1389,26 +1197,18 @@ object Dedup {
     // order, first |s|−⌈τ|s|⌉+1 shingles), so the hash match IS the
     // prefix-bound completeness proof
     Query("dedup_prefix_filter", (s, d) => prefixJaccard(s, d),
-      s"""WITH ${interPairsCtes}
-         SELECT d1, d2, inter,
-                round(inter * 1.0 / (s1.n + s2.n - inter), 6) AS jaccard
-         FROM pairs
-         JOIN sizes s1 ON s1.doc_id = d1
-         JOIN sizes s2 ON s2.doc_id = d2
-         WHERE round(inter * 1.0 / (s1.n + s2.n - inter), 6) >= 0.5
+      s"""WITH ${SimJoin.interPairsCtes}
+         SELECT d1, d2, inter, ${SimJoin.jaccardSql} AS jaccard
+         FROM pairs WHERE ${SimJoin.jaccardSql} >= 0.5
          ORDER BY d1, d2"""),
   )
 
   /** The dedup_ngram_jaccard oracle statement — shared verbatim by
     * the pair query and the cross-source attribution built on it. */
   private val NgramJaccardPairsSql: String =
-    s"""WITH ${interPairsCtes}
-         SELECT d1, d2, inter,
-                round(inter * 1.0 / (s1.n + s2.n - inter), 6) AS jaccard
-         FROM pairs
-         JOIN sizes s1 ON s1.doc_id = d1
-         JOIN sizes s2 ON s2.doc_id = d2
-         WHERE inter * 1.0 / (s1.n + s2.n - inter) >= 0.1
+    s"""WITH ${SimJoin.interPairsCtes}
+         SELECT d1, d2, inter, ${SimJoin.jaccardSql} AS jaccard
+         FROM pairs WHERE ${SimJoin.jaccardSql} >= 0.1
          ORDER BY d1, d2"""
 
   /** dedup_minhash_lsh oracle, generated from the same affine salt
@@ -1470,21 +1270,16 @@ object Dedup {
            ON b.dn = d.doc_id
          ORDER BY d.doc_id"""
 
+  /** [[simhashes]] over [[simhashCte]]'s `sig`. */
+  private val SimhashSigSql = "(SELECT doc_id, sim AS hash FROM sig)"
+
   /** dedup_simhash oracle: the portable 60-bit base hash makes the
     * signature pure SQL (votes per bit position, sign-packed). */
   private val simhashSql: String =
     s"""WITH ${grams3Cte},
          ${simhashCte},
-         chunks AS (SELECT doc_id, sim,
-                           CAST(c AS VARCHAR) || '#' ||
-                             CAST(((sim >> (16 * c)) & 65535) AS VARCHAR) AS ck
-                    FROM sig CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS c)),
-         pairs AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
-                          bit_count(xor(a.sim, b.sim)) AS hamming
-                   FROM chunks a JOIN chunks b
-                     ON a.ck = b.ck AND a.doc_id < b.doc_id)
-         SELECT d1, d2, hamming FROM pairs
-         WHERE hamming <= 3 ORDER BY d1, d2"""
+         pairs AS (${SimJoin.hammingPairsSql(SimhashSigSql, 3, 64)})
+         SELECT d1, d2, hamming FROM pairs ORDER BY d1, d2"""
 
   /** dedup_sweep_hamming oracle: the simhash sig chain, candidates
     * once at the loosest (5×12-bit pigeonhole) threshold, one
@@ -1492,31 +1287,18 @@ object Dedup {
   private lazy val sweepHammingSql: String =
     s"""WITH ${grams3Cte},
          ${simhashCte},
-         chunks AS (SELECT doc_id, sim,
-                           CAST(c AS VARCHAR) || '#' ||
-                             CAST(((sim >> (12 * c)) & 4095) AS VARCHAR) AS ck
-                    FROM sig CROSS JOIN (SELECT unnest([0, 1, 2, 3, 4]) AS c)),
-         pairs AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
-                          bit_count(xor(a.sim, b.sim)) AS hamming
-                   FROM chunks a JOIN chunks b
-                     ON a.ck = b.ck AND a.doc_id < b.doc_id),
-         bank AS (SELECT unnest([1, 2, 3, 4]) AS max_hamming)
-       SELECT CAST(bank.max_hamming AS BIGINT) AS max_hamming,
-              CAST(count(p.d1) AS BIGINT) AS n_pairs
-       FROM bank LEFT JOIN pairs p ON p.hamming <= bank.max_hamming
-       GROUP BY bank.max_hamming ORDER BY max_hamming"""
+         pairs AS (${SimJoin.hammingPairsSql(SimhashSigSql,
+           HammingSweepBank.max, 60)}),
+         ${SimJoin.bankCountsSql("pairs", "hamming", "max_hamming",
+           HammingSweepBank.map(_.toLong), atMost = true)}"""
 
   /** The n-gram-LSH near-dup graph + transitive closure as a CTE
     * prefix ending at `comp` = (doc_id, component) — shared by the
     * components oracle and the keep-best oracle so the clustering
     * trajectory has one SQL statement of truth. */
   private lazy val dedupComponentsCtes: String =
-    s"""WITH RECURSIVE ${interPairsCtes},
-         near AS (
-           SELECT d1, d2 FROM pairs
-           JOIN sizes s1 ON s1.doc_id = d1
-           JOIN sizes s2 ON s2.doc_id = d2
-           WHERE round(inter * 1.0 / (s1.n + s2.n - inter), 6) >= 0.1),
+    s"""WITH RECURSIVE ${SimJoin.interPairsCtes},
+         near AS (SELECT d1, d2 FROM pairs WHERE ${SimJoin.jaccardSql} >= 0.1),
          edges AS (SELECT d1 AS a, d2 AS b FROM near
                    UNION SELECT d2, d1 FROM near),
          reach(a, b) AS (

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Query, Tables}
+import graft.core.{Query, SimJoin, Tables}
 import graft.functions.PortableHash
 
 /** Record linkage: fuzzy (edit-distance) matching over a name
@@ -215,25 +215,14 @@ object Linkage {
     * at the bank's LOOSEST τ (every filter is τ-monotone, so the
     * τ=max candidate set contains every pair any smaller τ accepts),
     * the exact `levenshtein` verify runs once, and every bank member
-    * is a conditional count over the verified distances — the sweep
+    * is a conditional count over the verified distances
+    * ([[SimJoin.bankCounts]]) — the sweep
     * discipline (simhash radius, LSH bands, IVF nprobe) applied to
     * the record-linkage knob. Dictionary-bounded throughout. */
   def tauSweepOf(names: DataFrame,
-      taus: Seq[Int] = TauSweepBank): DataFrame = {
-    val spark0 = names.sparkSession
-    import spark0.implicits._
-    val pairs = qgramPairsOf(names, taus.max)
-      .select(col("dist"))
-    val counts = pairs
-      .select(col("dist"),
-        explode(array(taus.map(t => lit(t.toLong)): _*)).as("tau"))
-      .filter(col("dist") <= col("tau"))
-      .groupBy(col("tau")).agg(count(lit(1)).as("n_pairs"))
-    taus.map(_.toLong).toDF("tau")
-      .join(counts, Seq("tau"), "left")
-      .select(col("tau"), coalesce(col("n_pairs"), lit(0L)).as("n_pairs"))
-      .orderBy(col("tau"))
-  }
+      taus: Seq[Int] = TauSweepBank): DataFrame =
+    SimJoin.bankCounts(qgramPairsOf(names, taus.max), "dist", "tau",
+      taus.map(_.toLong), atMost = true)
 
   /** The part-name dictionary through the τ sweep. */
   def erTauSweep(spark: SparkSession, dir: String): DataFrame =
@@ -244,19 +233,14 @@ object Linkage {
   /** Generated DuckDB oracle for [[erTauSweep]] — the NAIVE all-pairs
     * ground truth bucketed per τ, so the hash match is ALSO the
     * completeness proof of the τ=max blocking at every smaller τ. */
-  def tauSweepOracleSql: String = {
-    val bank = TauSweepBank.mkString(", ")
+  def tauSweepOracleSql: String =
     s"""WITH nm AS (SELECT p_name AS name, count(*) AS cnt
                    FROM part GROUP BY 1),
        pairs AS (SELECT levenshtein(a.name, b.name) AS dist
                  FROM nm a JOIN nm b ON a.name < b.name
                  WHERE levenshtein(a.name, b.name) <= ${TauSweepBank.max}),
-       bank AS (SELECT unnest([$bank]) AS tau)
-       SELECT CAST(bank.tau AS BIGINT) AS tau,
-              CAST(count(p.dist) AS BIGINT) AS n_pairs
-       FROM bank LEFT JOIN pairs p ON p.dist <= bank.tau
-       GROUP BY bank.tau ORDER BY tau"""
-  }
+       ${SimJoin.bankCountsSql("pairs", "dist", "tau",
+         TauSweepBank.map(_.toLong), atMost = true)}"""
 
   /** The part-name dictionary through the q-gram blocking — same
     * output contract (and oracle) as [[fuzzyNames]]. */

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Query, Tables}
+import graft.core.{Query, SimJoin, Tables}
 
 /** Multimodal column plumbing (SURVEY.md §2 G): media as opaque
   * `binary` payloads + typed metadata, decoded partition-wise in
@@ -786,26 +786,12 @@ object Multimodal {
   }
 
   /** Generated DuckDB oracle for [[nearDupPhash]] — the pHash oracle
-    * chunk-bucketed and xor-verified over its 63 bits. */
-  def nearDupPhashOracleSql: String = {
-    val n = 4 // maxHamming 3 + 1
-    val chunkArms = (0 until n).map { c =>
-      val lo = c * 63 / n
-      val width = (c + 1) * 63 / n - lo
-      s"'$c#' || CAST(((phash >> $lo) & ${(1L << width) - 1}) AS VARCHAR)"
-    }.mkString(", ")
-    s"""WITH h AS (${mediaPhashOracleSql.replace("ORDER BY lf.doc_id", "")}),
-       chunks AS (SELECT doc_id, phash, unnest([$chunkArms]) AS ck FROM h),
-       pairs AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
-                        bit_count(xor(a.phash, b.phash)) AS hamming
-                 FROM chunks a JOIN chunks b
-                   ON a.ck = b.ck AND a.doc_id < b.doc_id)
-       SELECT d1, d2, hamming FROM pairs
-       WHERE hamming <= 3 ORDER BY d1, d2"""
-  }
+    * through the chunk-bucket probe over its 63 bits. */
+  def nearDupPhashOracleSql: String =
+    nearDupOracleSql(mediaPhashOracleSql, "phash", 63)
 
   /** The mean-threshold member: [[mediaAhash]] fingerprints through
-    * the same chunk-bucket probe (63 hash bits) — completing the
+    * [[SimJoin.hammingPairs]] (63 hash bits) — completing the
     * Hamming-tolerant trio (gradient dHash, frequency pHash, mean
     * aHash fail on DIFFERENT perturbations, so production pipelines
     * run all three and union the verdicts). */
@@ -816,29 +802,15 @@ object Multimodal {
         col("ahash").as("dhash")), maxHamming, bits = 63)
 
   /** Generated DuckDB oracle for [[nearDupAhash]] — the aHash oracle
-    * chunk-bucketed and xor-verified. */
-  def nearDupAhashOracleSql: String = {
-    val n = 4 // maxHamming 3 + 1
-    val chunkArms = (0 until n).map { c =>
-      val lo = c * 63 / n
-      val width = (c + 1) * 63 / n - lo
-      s"'$c#' || CAST(((ahash >> $lo) & ${(1L << width) - 1}) AS VARCHAR)"
-    }.mkString(", ")
-    s"""WITH h AS (${mediaAhashOracleSql.replace("ORDER BY doc_id", "")}),
-       chunks AS (SELECT doc_id, ahash, unnest([$chunkArms]) AS ck FROM h),
-       pairs AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
-                        bit_count(xor(a.ahash, b.ahash)) AS hamming
-                 FROM chunks a JOIN chunks b
-                   ON a.ck = b.ck AND a.doc_id < b.doc_id)
-       SELECT d1, d2, hamming FROM pairs
-       WHERE hamming <= 3 ORDER BY d1, d2"""
-  }
+    * through the chunk-bucket probe. */
+  def nearDupAhashOracleSql: String =
+    nearDupOracleSql(mediaAhashOracleSql, "ahash", 63)
 
   /** HAMMING-TOLERANT perceptual near-dup — [[nearDupDhash]] catches
     * only bit-exact fingerprints; real near-dups (recompressed,
     * slightly cropped, brightness-jittered copies) land a few bits
-    * away. Pigeonhole chunk bucketing, the [[Dedup.simhashDf]]
-    * discipline applied to the 56-bit dHash: split the hash into
+    * away. Pigeonhole chunk bucketing ([[SimJoin.hammingPairs]])
+    * applied to the 56-bit dHash: split the hash into
     * `maxHamming + 1` disjoint chunks — two hashes within Hamming ≤
     * maxHamming must agree on at least one chunk — bucket-join on
     * chunk equality, then verify candidates with one codegen'd
@@ -863,8 +835,8 @@ object Multimodal {
       mediaDhashOf(imageBlobsMixedLossless(spark, dir))
         .select(col("doc_id"), col("dhash")), maxHamming)
 
-  /** The DCT twin: [[mediaPhash]] fingerprints through the same
-    * chunk-bucket probe (63 hash bits). A dHash-tolerant AND a
+  /** The DCT twin: [[mediaPhash]] fingerprints through
+    * [[SimJoin.hammingPairs]] (63 hash bits). A dHash-tolerant AND a
     * pHash-tolerant pass together are the standard production pair —
     * gradient structure and frequency structure fail differently. */
   def nearDupPhash(spark: SparkSession, dir: String,
@@ -873,55 +845,30 @@ object Multimodal {
       mediaPhash(spark, dir).select(col("doc_id"),
         col("phash").as("dhash")), maxHamming, bits = 63)
 
-  /** The chunk-bucket probe over ANY (doc_id, dhash) table
-    * (spec surface; [[nearDupHamming]]/[[nearDupPhash]] derive the
-    * hashes inline; `bits` = fingerprint width the chunks cover). */
+  /** The chunk-bucket probe ([[SimJoin.hammingPairs]]) over ANY
+    * (doc_id, dhash) table (spec surface; [[nearDupHamming]]/
+    * [[nearDupPhash]] derive the hashes inline; `bits` = fingerprint
+    * width the chunks cover). */
   private[graft] def nearDupHammingOf(hashes: DataFrame,
-      maxHamming: Int, bits: Int = 56): DataFrame = {
-    val n = maxHamming + 1
-    val chunked = hashes.select(col("doc_id"), col("dhash"),
-      explode(dhashChunks(col("dhash"), n, bits)).as("ck"))
-    chunked.as("a")
-      .join(chunked.as("b"),
-        col("a.ck") === col("b.ck") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-        graft.functions.Shingles.hamming(col("a.dhash"), col("b.dhash"))
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+      maxHamming: Int, bits: Int = 56): DataFrame =
+    SimJoin.hammingPairs(
+      hashes.select(col("doc_id"), col("dhash").as("hash")), maxHamming, bits)
       .sortWithinPartitions("d1", "d2")
-  }
-
-  /** The `n` disjoint contiguous chunks of a `bits`-wide hash, as
-    * prefixed string keys (chunk c covers bits [c·bits/n, (c+1)·bits/n)
-    * — together they cover all bits, the pigeonhole premise). */
-  private def dhashChunks(h: Column, n: Int, bits: Int): Column =
-    array((0 until n).map { c =>
-      val lo = c * bits / n
-      val width = (c + 1) * bits / n - lo
-      concat(lit(s"$c#"),
-        shiftright(h, lo).bitwiseAND(lit((1L << width) - 1)).cast("string"))
-    }: _*)
 
   /** Generated DuckDB oracle for [[nearDupHamming]] — the dHash
-    * oracle chunk-bucketed and xor-verified (the bucket rule IS the
+    * oracle through the chunk-bucket probe (the bucket rule IS the
     * operator's semantics, so the oracle replays it). */
-  def nearDupHammingOracleSql: String = {
-    val n = 4 // maxHamming 3 + 1
-    val chunkArms = (0 until n).map { c =>
-      val lo = c * 56 / n
-      val width = (c + 1) * 56 / n - lo
-      s"'$c#' || CAST(((dhash >> $lo) & ${(1L << width) - 1}) AS VARCHAR)"
-    }.mkString(", ")
-    s"""WITH h AS (${mediaDhashOracleSql.replace("ORDER BY doc_id", "")}),
-       chunks AS (SELECT doc_id, dhash, unnest([$chunkArms]) AS ck FROM h),
-       pairs AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
-                        bit_count(xor(a.dhash, b.dhash)) AS hamming
-                 FROM chunks a JOIN chunks b
-                   ON a.ck = b.ck AND a.doc_id < b.doc_id)
-       SELECT d1, d2, hamming FROM pairs
-       WHERE hamming <= 3 ORDER BY d1, d2"""
-  }
+  def nearDupHammingOracleSql: String =
+    nearDupOracleSql(mediaDhashOracleSql, "dhash", 56)
+
+  /** The near-dup oracle at the queries' `maxHamming` 3: the
+    * fingerprint oracle `fingerprints` (columns doc_id and `hash`)
+    * through [[SimJoin.hammingPairsSql]] over `bits` bits. */
+  private def nearDupOracleSql(fingerprints: String, hash: String,
+      bits: Int): String =
+    s"""WITH h AS (SELECT doc_id, $hash AS hash FROM ($fingerprints)),
+       pairs AS (${SimJoin.hammingPairsSql("h", 3, bits)})
+       SELECT d1, d2, hamming FROM pairs ORDER BY d1, d2"""
 
   /** Generated DuckDB oracle for [[mediaDhash]]. */
   def mediaDhashOracleSql: String =

@@ -45,6 +45,27 @@ if [ -n "$twins" ]; then
   exit 1
 fi
 
+# One similarity-join kernel: the Hamming chunk probe, the postings
+# intersection and the threshold-bank count live in graft.core.SimJoin,
+# each beside its DuckDB twin, so a chunk-key self-join, an xor verify
+# or a bank-join CTE elsewhere is a second copy. Scaladoc lines are
+# exempt, and so is Dedup's SimhashSparkSql: the dedup_simhash_sql
+# query types the probe as plain Spark SQL on purpose, to gate the SQL
+# surface against the same oracle.
+echo "=== one similarity-join kernel ==="
+sqlSurface=$(awk '/val SimhashSparkSql/ {on = 1} on {print FILENAME ":" FNR ":"}
+    on && /"""$/ {on = 0}' src/main/scala/graft/operators/Dedup.scala)
+probes=$(grep -rnE 'bit_count\(xor\(|a\.ck = b\.ck|col\("a\.ck"\) === col\("b\.ck"\)|JOIN tb ON|LEFT JOIN pairs p ON' \
+    src/main/scala \
+  | grep -vE '^src/main/scala/graft/core/SimJoin\.scala:' \
+  | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(/\*\*|\*)' \
+  | grep -vF -e "${sqlSurface:-no SQL surface twin}" || true)
+if [ -n "$probes" ]; then
+  echo "similarity-join step outside core/SimJoin.scala:"
+  echo "$probes"
+  exit 1
+fi
+
 # One token definition: the Scala word tokenizers scan bytes with
 # TokenUtil's class test, so a java.util.regex letter split is a
 # second definition (and the path measured 40x slower).

@@ -105,8 +105,8 @@ done
 
 MODE="$MODE" python3 - <<'EOF'
 import json, os, sys
-quick = os.environ["MODE"] in ("quick", "basket", "graph", "graph4",
-                               "dedup8", "dedup16")
+quick = os.environ["MODE"] in ("quick", "basket", "linkage", "graph",
+                               "graph4", "dedup8", "dedup16")
 ks = {"full": (1, 2, 4), "graph4": (1, 2, 4),
       "dedup8": (1, 2, 4, 8),
       "dedup16": (1, 4, 16)}.get(os.environ["MODE"], (1, 2))
