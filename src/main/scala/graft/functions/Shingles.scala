@@ -75,7 +75,7 @@ object Shingles {
   }
 
   /** DuckDB twin of [[minhashSignature]] over the `posts` CTE of
-    * [[grams3Cte]]: the CTEs `hp(doc_id, hp)` (base hash mod P) and
+    * [[grams3Cte]]: the CTEs `mh(doc_id, hp)` (base hash mod P) and
     * `sig(doc_id, s0 … s{k-1})`, to follow other CTEs. */
   def minhashSigCte(k: Int): String = {
     val (as, bs) = PortableHash.affineParams(k)
@@ -83,13 +83,13 @@ object Shingles {
     val cols = (0 until k)
       .map(i => s"min((${as(i)} * hp + ${bs(i)}) % $p) AS s$i")
       .mkString(",\n                 ")
-    s"""hp AS (SELECT doc_id,
+    s"""mh AS (SELECT doc_id,
                        ${PortableHash.h60Sql("gram")}
                          % $p AS hp
                 FROM posts),
          sig AS (SELECT doc_id,
                  $cols
-                 FROM hp GROUP BY doc_id)"""
+                 FROM mh GROUP BY doc_id)"""
   }
 
   /** Banded LSH keys from a minhash signature: `bands` substrings of

@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 import graft.core.{Query, Tables, WorkingSet}
-import graft.functions.{PortableHash, TopKScoreAgg, Vectors}
+import graft.functions.{TopKScoreAgg, Vectors}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (SURVEY.md §2 E). Query set = `vec_id < 10` (broadcast side).
@@ -27,9 +28,9 @@ import graft.functions.{PortableHash, TopKScoreAgg, Vectors}
 object Ann {
 
   private val NumQueries = 10
-  // public: oracle generators (annSweepKSqlOver below) interpolate
-  // the SAME constant, so a TopK edit moves both sides together
-  // instead of silently diverging from a hard-coded literal bank
+  // public: every oracle generator interpolates the SAME constants
+  // (NumQueries, TopK, NProbe, …), so an edit moves both sides together
+  // instead of silently diverging from a hard-coded literal
   val TopK = 5
 
   // Derived-corpus memo (the Graph/Dedup discipline): pq, pq_trained
@@ -47,17 +48,39 @@ object Ann {
     emb(spark, dir).filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
 
-  /** Top-k rows per query by (cosine desc, vec_id asc) — bounded-heap
-    * aggregate, then posexplode back to (qid, rank, vec_id, cosine).
+  /** Top-k rows per query by (`score` desc, vec_id asc) — bounded-heap
+    * aggregate, then posexplode back to (qid, rank, vec_id, score).
     * Duplicate candidates (same vector via several buckets) are
     * dropped inside the aggregate, so callers need no `distinct()`. */
-  private def topkPerQuery(scored: DataFrame, k: Int = TopK): DataFrame =
+  private def topkPerQuery(scored: DataFrame, k: Int = TopK,
+      score: String = "cosine"): DataFrame =
     scored.groupBy(col("qid"))
-      .agg(TopKScoreAgg.topk(col("cosine"), col("vec_id"), k).as("top"))
+      .agg(TopKScoreAgg.topk(col(score), col("vec_id"), k).as("top"))
       .select(col("qid"), posexplode(col("top")))
       .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("vec_id"), col("col.score").as("cosine"))
+        col("col.id").as("vec_id"), col("col.score").as(score))
       .orderBy("qid", "rank")
+
+  /** DuckDB twin of [[topkPerQuery]]: the rows of `scored(qid, vec_id,
+    * …)` ranked per qid by `order` then vec_id, `rank` ≤ `k` (an
+    * ascending `order` is the heap over the negated score). */
+  private def topkSql(scored: String, order: String = "cosine DESC",
+      k: Int = TopK): String =
+    s"""SELECT *, row_number() OVER (PARTITION BY qid
+                   ORDER BY $order, vec_id) AS rank
+               FROM $scored QUALIFY rank <= $k"""
+
+  /** A [[topkSql]] ranking as the `(qid, rank, vec_id, score)` result
+    * of a top-k query. */
+  private def topkResultSql(scored: String, score: String = "cosine",
+      k: Int = TopK): String =
+    s"""SELECT qid, rank, vec_id, $score
+         FROM (${topkSql(scored, s"$score DESC", k)}) ORDER BY qid, rank"""
+
+  /** The query set as a DuckDB relation over `src(vec_id, …)`: the
+    * twin of [[queriesDf]]'s filter, with `cols` projected. */
+  private def queriesSql(src: String, cols: String): String =
+    s"(SELECT vec_id AS qid, $cols FROM $src WHERE vec_id < $NumQueries)"
 
   /** Exact top-k cosine neighbors: broadcast queries × corpus scan.
     * (Self-match ranks first at cosine 1.0 — kept, it's the standard
@@ -108,16 +131,11 @@ object Ann {
     val bc = bcast(spark, codebook(spark, dir))
     val e = Tables(spark, dir).embeddings
       .select(col("vec_id"), col("embedding"), col("label"))
-    val cells = e.withColumn("cell", cellOf(col("embedding"), bc))
-    val probes = e.filter(col("vec_id") < NumQueries)
+    val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("label").as("qlabel"),
-        explode(nearestCells(col("embedding"), bc, nprobe)).as("cell"))
-    val scored = cells.join(broadcast(probes), Seq("cell"))
-      .filter(col("label") === col("qlabel"))
-      .select(col("qid"), col("vec_id"),
-        round(Vectors.cosineSim(col("embedding"), col("qe")), 6).as("cosine"))
-    topkPerQuery(scored)
+        col("label").as("qlabel"))
+    topkPerQuery(probeJoin(e.withColumn("cell", cellOf(col("embedding"), bc)),
+      q, bc, nprobe).filter(col("label") === col("qlabel")))
   }
 
   /** Exact top-k MAXIMUM INNER PRODUCT search — the retrieval scoring
@@ -136,13 +154,10 @@ object Ann {
       .crossJoin(broadcast(queriesDf(spark, dir)))
       .select(col("qid"), col("vec_id"),
         round(Vectors.dotHof(col("embedding"), col("qe")), 6).as("dot"))
-    scored.groupBy(col("qid"))
-      .agg(TopKScoreAgg.topk(col("dot"), col("vec_id"), TopK).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("vec_id"), col("col.score").as("dot"))
-      .orderBy("qid", "rank")
+    topkPerQuery(scored, score = "dot")
   }
+
+  private val RangeTau = 0.15
 
   /** Range similarity search: ALL corpus vectors within cosine ≥ τ of
     * each query (the "give me everything similar enough" contract —
@@ -154,7 +169,7 @@ object Ann {
     * as the top-k paths (a τ-range probe visits its buckets, not the
     * corpus); the exact scan here is the correctness baseline. */
   def rangeSearch(spark: SparkSession, dir: String,
-      tau: Double = 0.15): DataFrame =
+      tau: Double = RangeTau): DataFrame =
     emb(spark, dir)
       .crossJoin(broadcast(queriesDf(spark, dir)))
       .filter(col("vec_id") =!= col("qid"))
@@ -236,6 +251,8 @@ object Ann {
     topkPerQuery(scored)
   }
 
+  private val KnnK = 3
+
   /** LSH-bucketed KNN self-join: every corpus vector's top-k
     * neighbors among its bucket-mates — the all-corpus
     * neighbor-table build (embedding near-dup candidates, hard-negative
@@ -244,7 +261,7 @@ object Ann {
     * aggregate. Deterministic given the planes, so fully
     * oracle-checked (unlike the query-set ops, no recall argument is
     * needed — the bucket rule IS the semantics). */
-  def knnJoin(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
+  def knnJoin(spark: SparkSession, dir: String, k: Int = KnnK): DataFrame = {
     val keyed = shared.getOrBuild(spark, s"$dir#lshkeyed") {
       withBuckets(emb(spark, dir), "embedding")
         .select(col("vec_id"), col("embedding"),
@@ -278,7 +295,7 @@ object Ann {
   private[graft] val NProbe = 8
 
   /** The coarse codebook: the [[IvfK]] lowest-portable-hash corpus
-    * vectors (the [[pqCodebooks]] seed rule — deterministic, oracle-
+    * vectors ([[Cluster.hashSeedRows]] — deterministic, oracle-
     * replayable, and an unbiased sample under the hash ordering),
     * collected to the driver. Bounded by construction: TakeOrdered
     * ships ≤ IvfK rows regardless of corpus size — at 100 TB with
@@ -286,12 +303,7 @@ object Ann {
     * generated plan is deterministic. */
   private def codebook(spark: SparkSession, dir: String,
       k: Int = IvfK): Array[(Long, Array[Float])] =
-    emb(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-        graft.functions.PortableHash.h60(col("vec_id").cast("string")).as("h"))
-      .orderBy(col("h"), col("vec_id")).limit(k)
-      .select(col("vec_id"), col("embedding"))
-      .collect()
+    Cluster.hashSeedRows(emb(spark, dir), k)
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
 
@@ -333,6 +345,19 @@ object Ann {
   private def nearestCells(v: Column, bc: CbBc, n: Int): Column =
     Vectors.nearestCells(v, bc, n)
 
+  /** The IVF probe: each query of `queries(qid, qe, …)` fans out to its
+    * `nprobe` nearest cells of `bc` (`pi` = 0-based probe rank) and
+    * meets the members of `cells(vec_id, embedding, cell, …)` there,
+    * scored by the 6dp `cosine`. The probe side is broadcast, so the
+    * corpus side never shuffles. DuckDB twin: [[ivfProbeCtes]]. */
+  private def probeJoin(cells: DataFrame, queries: DataFrame, bc: CbBc,
+      nprobe: Int): DataFrame =
+    cells.join(broadcast(queries.select(col("*"),
+        posexplode(nearestCells(col("qe"), bc, nprobe)).as(Seq("pi", "cell")))),
+        Seq("cell"))
+      .withColumn("cosine",
+        round(Vectors.cosineSim(col("embedding"), col("qe")), 6))
+
   /** Composed (built-ins only) formulations of [[cellOf]] /
     * [[nearestCells]] — the "compose existing ops" baseline, kept as
     * AnnSpec's semantic cross-check of the fused kernel. */
@@ -348,15 +373,26 @@ object Ann {
   private[graft] def codebookOf(spark: SparkSession, dir: String): Array[(Long, Array[Float])] =
     codebook(spark, dir)
 
-  /** SQL twin of [[codebook]] over a `(vec_id, emb)` relation — the
-    * hash-ordered limit-[[IvfK]] rule as ONE shared fragment, so every
-    * IVF-family oracle derives its codebook identically to the
-    * operator (and a rule edit moves all of them together). */
+  /** DuckDB twin of [[codebook]] over a `(vec_id, emb)` relation. */
   private[graft] def codebookCteSql(src: String): String =
-    s"""SELECT vec_id AS cent_id, emb AS ce FROM $src
-               QUALIFY row_number() OVER (ORDER BY
-                 ${PortableHash.h60Sql("CAST(vec_id AS VARCHAR)")},
-                 vec_id) <= $IvfK"""
+    s"SELECT vec_id AS cent_id, emb AS ce FROM (${Cluster.hashSeedsSql(src, IvfK)})"
+
+  /** DuckDB twin of [[codebook]], [[cellOf]] and [[nearestCells]] over
+    * CTEs `vecs(vec_id, emb, …)` and `queries(qid, qe, …)`: the codebook
+    * `c(cent_id, ce)` ([[codebookCteSql]]), `cells` = each vector
+    * with its nearest `cell`, and `probes` = each query with its
+    * `nprobe` nearest cells, `rn` = 1-based probe rank (cosine desc,
+    * cent_id asc — the kernel's tie-break). */
+  private def ivfProbeCtes(vecs: String, queries: String,
+      nprobe: Int = NProbe): String = {
+    def nearest(src: String, key: String, v: String, n: Int): String =
+      s"""SELECT s.*, c.cent_id AS cell, row_number() OVER (PARTITION BY s.$key
+                 ORDER BY list_cosine_similarity(s.$v, c.ce) DESC, c.cent_id) AS rn
+               FROM $src s CROSS JOIN c QUALIFY rn <= $n"""
+    s"""c AS (${codebookCteSql(vecs)}),
+         cells AS (${nearest(vecs, "vec_id", "emb", 1)}),
+         probes AS (${nearest(queries, "qid", "qe", nprobe)})"""
+  }
 
   /** IVF top-k: the [[IvfK]] lowest-hash corpus vectors act as the
     * coarse codebook; each vector is assigned to its nearest centroid
@@ -369,27 +405,19 @@ object Ann {
   def ivf(spark: SparkSession, dir: String, nprobe: Int = NProbe,
       k: Int = IvfK): DataFrame = {
     val bc = bcast(spark, codebook(spark, dir, k))
-    val cells = emb(spark, dir)
-      .withColumn("cell", cellOf(col("embedding"), bc))
-    val probes = queriesDf(spark, dir)
-      .select(col("qid"), col("qe"),
-        explode(nearestCells(col("qe"), bc, nprobe)).as("cell"))
-    val scored = cells.join(broadcast(probes), Seq("cell"))
-      .select(col("qid"), col("vec_id"),
-        round(Vectors.cosineSim(col("embedding"), col("qe")), 6).as("cosine"))
-    topkPerQuery(scored)
+    topkPerQuery(probeJoin(
+      emb(spark, dir).withColumn("cell", cellOf(col("embedding"), bc)),
+      queriesDf(spark, dir), bc, nprobe))
   }
 
   /** Quantized search: int8-quantize the corpus (4× storage density —
     * the write-time representation at 100 TB), score candidates on
-    * the dequantized codes, keep a 10× candidate margin via the same
-    * bounded top-k aggregate (map-side, so the corpus×query score set
-    * never crosses an exchange), then rerank exactly on the original
-    * floats. Quantization noise (~1e-2 on cosine) only has to keep
-    * true neighbors inside the margin, not rank them — AnnSpec asserts
-    * recall vs [[bruteforce]]. */
+    * the dequantized codes, keep a 10× candidate margin and rerank
+    * exactly on the original floats ([[rerankExact]]). Quantization
+    * noise (~1e-2 on cosine) only has to keep true neighbors inside
+    * the margin, not rank them — AnnSpec asserts recall vs
+    * [[bruteforce]]. */
   def quantized(spark: SparkSession, dir: String): DataFrame = {
-    val rerankMargin = TopK * 10
     val corpus = shared.getOrBuild(spark, s"$dir#int8corp") {
       emb(spark, dir)
         .withColumn("scale", Vectors.quantScale(col("embedding")))
@@ -398,21 +426,31 @@ object Ann {
         // keep the floats here for the exact rerank join below
     }
     val q = queriesDf(spark, dir)
-    val candidates = corpus
+    val approx = corpus
       .crossJoin(broadcast(q))
       .select(col("qid"), col("vec_id"),
         Vectors.cosineSim(
-          Vectors.dequantize(col("codes"), col("scale")), col("qe")).as("qcos"))
-      .groupBy(col("qid"))
-      .agg(TopKScoreAgg.topk(col("qcos"), col("vec_id"), rerankMargin).as("top"))
+          Vectors.dequantize(col("codes"), col("scale")), col("qe")).as("score"))
+    rerankExact(approx, TopK * 10, corpus.select(col("vec_id"), col("embedding")), q)
+  }
+
+  /** Margin-then-exact rerank, the serving tail of [[quantized]], [[pq]]
+    * and [[ivfPq]]: keep each query's `margin` best candidates of
+    * `approx(qid, vec_id, score)` (higher = nearer) through the bounded
+    * top-k aggregate — map-side, so the corpus×query score set never
+    * crosses an exchange — then rescore them by exact cosine against
+    * the floats of `vectors(vec_id, embedding)` and keep the top-k. */
+  private def rerankExact(approx: DataFrame, margin: Int,
+      vectors: DataFrame, queries: DataFrame): DataFrame = {
+    val cand = approx.groupBy(col("qid"))
+      .agg(TopKScoreAgg.topk(col("score"), col("vec_id"), margin).as("top"))
       .select(col("qid"), explode(col("top")).as("e"))
       .select(col("qid"), col("e.id").as("vec_id"))
-    val exact = candidates
-      .join(corpus.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(broadcast(q), Seq("qid"))
+    topkPerQuery(cand
+      .join(vectors, Seq("vec_id"))
+      .join(broadcast(queries), Seq("qid"))
       .select(col("qid"), col("vec_id"),
-        round(Vectors.cosineSim(col("embedding"), col("qe")), 6).as("cosine"))
-    topkPerQuery(exact)
+        round(Vectors.cosineSim(col("embedding"), col("qe")), 6).as("cosine")))
   }
 
   // --- product quantization ----------------------------------------
@@ -470,41 +508,35 @@ object Ann {
       rounds: Int = PqTrainRounds): DataFrame =
     pqSearch(spark, dir, rounds)
 
-  /** Per-subspace 4-bit code columns `c0..c{M−1}` against an explicit
-    * codebook — the encode step, shared by search and training. */
-  private def pqEncode(qcorp: DataFrame,
-      subCents: Array[Array[Array[Long]]]): DataFrame = {
-    var coded = qcorp
-    for (s <- 0 until PqM)
-      coded = coded.withColumn(s"c$s",
-        Cluster.assignCol(slice(col("q"), s * PqDsub + 1, PqDsub), subCents(s))
-          .getField("cid"))
-    coded
-  }
+  /** Per-subspace 4-bit code columns `c0..c{M−1}` of the integer
+    * vector column `v` against an explicit codebook — the encode step
+    * shared by search, training and the IVF-PQ residuals. */
+  private[graft] def pqEncode(df: DataFrame, v: String,
+      subCents: Array[Array[Array[Long]]]): DataFrame =
+    df.select(col("*") +: (0 until PqM).map(s =>
+      Cluster.assignCol(slice(col(v), s * PqDsub + 1, PqDsub), subCents(s))
+        .getField("cid").as(s"c$s")): _*)
 
-  /** Subspace codebooks: hash-seeded round 0, then `rounds − 1`
-    * truncating-integer Lloyd updates. One update = one encode pass +
-    * one (cell, dim) grouped sum over ALL subspaces together (the
-    * global dim index carries the subspace, so the k·dim update rows
-    * come back from a single map-side-combined aggregate; ≤ PqK·dim
-    * driver rows per round — the bounded codebook round-trip). Empty
-    * cells keep their centroid, division truncates toward zero —
-    * byte-for-byte the [[Cluster.kmeansLoop]] discipline, so the
-    * generated oracle replays the identical trajectory. */
+  /** Subspace codebooks of `qcorp(vec_id, q)`: hash-seeded round 0,
+    * then `rounds − 1` truncating-integer Lloyd updates. One update =
+    * one encode pass + one (cell, dim) grouped sum over ALL subspaces
+    * together (the global dim index carries the subspace, so the k·dim
+    * update rows come back from a single map-side-combined aggregate;
+    * ≤ PqK·dim driver rows per round — the bounded codebook
+    * round-trip). Empty cells keep their centroid, division truncates
+    * toward zero — byte-for-byte the [[Cluster.kmeansLoop]]
+    * discipline, so the generated oracle ([[Cluster.lloydCtes]] per
+    * subspace) replays the identical trajectory. */
   private[graft] def pqCodebooks(qcorp: DataFrame,
       rounds: Int): Array[Array[Array[Long]]] = {
-    val seedRows = qcorp
-      .select(col("vec_id"), col("q"),
-        graft.functions.PortableHash.h60(col("vec_id").cast("string")).as("h"))
-      .orderBy(col("h"), col("vec_id")).limit(PqK)
-      .select(col("q")).collect().map(_.getSeq[Long](0).toArray)
+    val seedRows = Cluster.hashSeeds(qcorp, PqK)
     val dim = seedRows.head.length
     require(dim == PqM * PqDsub,
       s"PQ codebook layout expects dim ${PqM * PqDsub}, got $dim")
     var subCents: Array[Array[Array[Long]]] = Array.tabulate(PqM)(s =>
       seedRows.map(v => v.slice(s * PqDsub, (s + 1) * PqDsub)))
     for (_ <- 1 until rounds) {
-      val sums = pqEncode(qcorp, subCents)
+      val sums = pqEncode(qcorp, "q", subCents)
         .select(array((0 until PqM).map(s => col(s"c$s")): _*).as("cids"),
           posexplode(col("q")).as(Seq("d", "v")))
         .select(
@@ -529,58 +561,69 @@ object Ann {
     val qcorp = shared.getOrBuild(spark, s"$dir#qcorp") {
       Cluster.quantized(emb(spark, dir)) }
     val subCents = pqCodebooks(qcorp, rounds)
-    val coded = pqEncode(qcorp, subCents)
-    // ADC via per-query distance TABLES (the classic PQ serving
-    // layout): the reconstruction distance decomposes exactly per
-    // subspace — Σ_d (q_d − recon_d)² = Σ_s Σ_{d∈s} (q_d − cb_s[c][d])²
-    // — so precompute, per (query, subspace, centroid), the partial
-    // integer distance: NumQueries × PqM × PqK longs, a bounded
-    // driver round-trip of the codebook-collect class. The
-    // per-(query, vector) score then collapses from a dim-wide
-    // interpreted zip_with/aggregate lambda over the materialized
-    // reconstruction into PqM codegen'd element_at lookups (guide §4:
-    // prefer codegen expressions over per-row lambda evaluation in
-    // the hot path — measured 83-147 CPU-seconds per bench rep before
-    // this change at sf0.1). Long addition is associative and the
-    // partials are the same products in the same precision, so pqdist
-    // is bit-identical and the generated oracle is untouched.
-    val qRows = Cluster.quantized(queriesDf(spark, dir)
+    val probes = Cluster.quantized(queriesDf(spark, dir)
         .select(col("qid").as("vec_id"), col("qe").as("embedding")))
-      .select(col("vec_id"), col("q")).collect()
-    val qTabs: Seq[(Long, Seq[Seq[Long]])] = qRows.toSeq.map { r =>
-      val qv = r.getSeq[Long](1).toArray
-      val tabs: Seq[Seq[Long]] = (0 until PqM).map { s =>
-        subCents(s).toSeq.map { c =>
-          var acc = 0L
-          var j = 0
-          while (j < PqDsub) {
-            val d = qv(s * PqDsub + j) - c(j); acc += d * d; j += 1
-          }
-          acc
-        }
+      .select(col("vec_id").as("qid"), col("q").as("v"))
+    adcSearch(spark, dir, pqEncode(qcorp, "q", subCents).drop("q"), probes,
+      subCents, nprobe = 1)
+  }
+
+  /** ADC distance table of one probe vector `v` (a quantized query, or
+    * its residual against a probed cell), flat at `s·PqK + c`: the
+    * partial squared distance Σ_j (v[s·PqDsub + j] − subCents(s)(c)(j))².
+    * The reconstruction distance decomposes exactly per subspace, so a
+    * coded vector's ADC distance is [[adcDistance]]'s PqM lookups. */
+  private[graft] def adcTable(v: Array[Long],
+      subCents: Array[Array[Array[Long]]]): Array[Long] = {
+    val t = new Array[Long](PqM * PqK)
+    for (s <- 0 until PqM; c <- subCents(s).indices) {
+      var acc = 0L
+      var j = 0
+      while (j < PqDsub) {
+        val d = v(s * PqDsub + j) - subCents(s)(c)(j); acc += d * d; j += 1
       }
-      (r.getLong(0), tabs)
+      t(s * PqK + c) = acc
     }
-    import spark.implicits._
-    val qtab = qTabs.toDF("qid", "tabs")
-    val pqdist = (0 until PqM).map(s =>
-        element_at(element_at(col("tabs"), s + 1), col(s"c$s") + 1))
+    t
+  }
+
+  /** Σ_s tabs[s·PqK + c_s] over the code columns `c0..c{M−1}` — the
+    * per-(probe, vector) ADC distance as PqM codegen'd lookups into an
+    * [[adcTable]] column. */
+  private[graft] def adcDistance(tabs: Column): Column =
+    (0 until PqM).map(s => element_at(tabs, col(s"c$s") + (s * PqK + 1)))
       .reduce(_ + _)
-    val cand = coded
-      .select(col("vec_id") +: (0 until PqM).map(s => col(s"c$s")): _*)
-      .crossJoin(broadcast(qtab))
-      .select(col("qid"), col("vec_id"), pqdist.as("pqdist"))
-      .groupBy(col("qid"))
-      .agg(TopKScoreAgg.topk(-col("pqdist").cast("double"), col("vec_id"),
-        PqMargin).as("top"))
-      .select(col("qid"), explode(col("top")).as("e"))
-      .select(col("qid"), col("e.id").as("vec_id"))
-    val exact = cand
-      .join(emb(spark, dir), Seq("vec_id"))
-      .join(broadcast(queriesDf(spark, dir)), Seq("qid"))
+
+  /** The PQ serving path shared by [[pq]] and [[ivfPq]]. `probes` are
+    * `(qid, v)` or `(qid, cell, v)` — a quantized query, or its
+    * residual against each probed cell — and `codes` the
+    * `(vec_id, [cell,] c0..c{M−1})` code table, joined on the probe's
+    * key columns. The probes are collected, each into one flat
+    * [[adcTable]] — BOUNDED: probe rows ≤ NumQueries × nprobe, required
+    * below — and broadcast back, so scoring a vector is [[adcDistance]]'s
+    * PqM codegen'd lookups instead of an interpreted dim-wide
+    * zip_with/aggregate fold over a materialized reconstruction
+    * (guide §4 — measured 83-147 CPU-seconds per bench rep before the
+    * tables at sf0.1). Same Long products in the same precision, so the
+    * distance is bit-identical to the oracle's Σ(v − recon)². The
+    * [[PqMargin]] nearest then go through [[rerankExact]]. */
+  private def adcSearch(spark: SparkSession, dir: String, codes: DataFrame,
+      probes: DataFrame, subCents: Array[Array[Array[Long]]],
+      nprobe: Int): DataFrame = {
+    val rows = probes.collect()
+    require(rows.length <= NumQueries * nprobe,
+      s"ADC probe rows ${rows.length} exceed NumQueries × nprobe = " +
+        s"${NumQueries * nprobe}")
+    val keys = probes.schema.fields.init
+    val tabs = rows.toSeq.map(r => Row.fromSeq(r.toSeq.init :+
+      adcTable(r.getSeq[Long](keys.length).toArray, subCents).toSeq))
+    val ptab = broadcast(spark.createDataFrame(java.util.Arrays.asList(tabs: _*),
+      StructType(keys.toSeq :+ StructField("tabs", ArrayType(LongType)))))
+    val on = keys.map(_.name).filter(_ != "qid").toSeq
+    val approx = (if (on.isEmpty) codes.crossJoin(ptab) else codes.join(ptab, on))
       .select(col("qid"), col("vec_id"),
-        round(Vectors.cosineSim(col("embedding"), col("qe")), 6).as("cosine"))
-    topkPerQuery(exact)
+        (-adcDistance(col("tabs")).cast("double")).as("score"))
+    rerankExact(approx, PqMargin, emb(spark, dir), queriesDf(spark, dir))
   }
 
   /** Generated DuckDB oracle for [[pq]]: the identical quantization,
@@ -592,73 +635,41 @@ object Ann {
     * and untrained oracles cannot drift. */
   def pqTrainedOracleSql: String = pqOracleSqlWith(PqTrainRounds)
 
-  /** The codebook-trajectory CTEs: cb0 = hash-seed slices, then per
-    * round an assignment (per-(vec, subspace) argmin, first-minimum
-    * tie-break ≡ ORDER BY dist, cid) and a truncating-mean update
-    * with empty cells keeping their centroid (coalesce) — the
-    * [[Cluster.kmeansAssignCtes]] shape with the global dim index
-    * carrying the subspace. */
-  private def pqOracleSqlWith(rounds: Int): String = {
-    val updates = (1 until rounds).map { r =>
-      s"""sd$r AS (SELECT x.vec_id, x.d // $PqDsub AS s, cb.cid,
-                     CAST(sum((x.v - cb.v) * (x.v - cb.v)) AS BIGINT) AS dist
-              FROM x JOIN cb${r - 1} cb ON x.d = cb.d GROUP BY 1, 2, 3),
-       codes$r AS (SELECT vec_id, s, cid FROM sd$r
-              QUALIFY row_number() OVER (PARTITION BY vec_id, s
-                                         ORDER BY dist, cid) = 1),
-       u$r AS (SELECT c.cid, x.d,
-                     CAST(sum(x.v) // count(*) AS BIGINT) AS v
-              FROM codes$r c JOIN x ON c.vec_id = x.vec_id
-               AND x.d // $PqDsub = c.s GROUP BY 1, 2),
-       cb$r AS (SELECT p.cid, p.d, coalesce(u.v, p.v) AS v
-              FROM cb${r - 1} p LEFT JOIN u$r u
-                ON p.cid = u.cid AND p.d = u.d),
-       """
-    }.mkString
-    val fin = rounds - 1 // the codebook the final codes refer to
-    s"""WITH e AS (SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 x -> CASE WHEN isnan(x) OR abs(x) >= 128
-                      THEN CAST(error('pq: non-finite or out-of-range embedding component') AS BIGINT)
-                      ELSE CAST(floor(x * ${Cluster.Scale}) AS BIGINT) END) AS q
-             FROM embeddings),
-       x AS (SELECT vec_id, unnest(q) AS v,
-                    unnest(range(len(q))) AS d FROM e),
-       seeds AS (SELECT vec_id, row_number() OVER (ORDER BY
-                   ${PortableHash.h60Sql("CAST(vec_id AS VARCHAR)")},
-                   vec_id) - 1 AS cid
-                 FROM e QUALIFY cid < $PqK),
-       cb0 AS (SELECT s.cid, x.d, x.v
-              FROM seeds s JOIN x ON s.vec_id = x.vec_id),
-       ${updates}sd AS (SELECT x.vec_id, x.d // $PqDsub AS s, cb.cid,
-                     CAST(sum((x.v - cb.v) * (x.v - cb.v)) AS BIGINT) AS dist
-              FROM x JOIN cb$fin cb ON x.d = cb.d GROUP BY 1, 2, 3),
-       codes AS (SELECT vec_id, s, cid FROM sd
-              QUALIFY row_number() OVER (PARTITION BY vec_id, s
-                                         ORDER BY dist, cid) = 1),
-       recon AS (SELECT c.vec_id, cb.d, cb.v
-              FROM codes c JOIN cb$fin cb ON cb.cid = c.cid
-               AND cb.d // $PqDsub = c.s),
-       adc AS (SELECT xq.vec_id AS qid, r.vec_id,
-                      CAST(sum((xq.v - r.v) * (xq.v - r.v)) AS BIGINT) AS pqdist
-               FROM (SELECT * FROM x WHERE vec_id < $NumQueries) xq
-               JOIN recon r ON xq.d = r.d GROUP BY 1, 2),
-       cand AS (SELECT qid, vec_id FROM adc
-              QUALIFY row_number() OVER (PARTITION BY qid
-                ORDER BY CAST(pqdist AS DOUBLE), vec_id) <= $PqMargin),
+  /** The codebook trajectory is [[Cluster.lloydCtes]] run per subspace
+    * (the global dim index carries the subspace); the probes are the
+    * queries' own components. */
+  private def pqOracleSqlWith(rounds: Int): String =
+    s"""WITH ${Cluster.quantizedCtes},
+       ${Cluster.lloydCtes(PqK, rounds, dsub = PqDsub)},
+       ${adcRerankSql(rounds, s"${queriesSql("x", "d, v")} p", byCell = false)}"""
+
+  /** DuckDB twin of [[adcSearch]], to follow [[Cluster.lloydCtes]]'s
+    * subspace chain of `rounds` rounds: `recon` = each vector's
+    * reconstruction from its codes, the integer ADC of every probe
+    * component row `p(qid, [cell,] d, v)` (with `byCell`, only against
+    * the probed cell's members in `cells`), the [[PqMargin]] cut and the
+    * exact-cosine rerank ([[rerankExact]]). */
+  private def adcRerankSql(rounds: Int, probes: String,
+      byCell: Boolean): String = {
+    val (members, onMember) =
+      if (byCell) (" JOIN cells m ON m.cell = p.cell", " AND r.vec_id = m.vec_id")
+      else ("", "")
+    s"""recon AS (SELECT a.vec_id, c.d, c.v
+              FROM a$rounds a JOIN c${rounds - 1} c ON c.cid = a.cid
+               AND c.d // $PqDsub = a.s),
+       adc AS (SELECT p.qid, r.vec_id,
+                      CAST(sum((p.v - r.v) * (p.v - r.v)) AS BIGINT) AS d2
+               FROM $probes$members
+               JOIN recon r ON r.d = p.d$onMember GROUP BY 1, 2),
+       cand AS (${topkSql("adc", "CAST(d2 AS DOUBLE)", PqMargin)}),
        scored AS (SELECT c.qid, c.vec_id,
                     round(list_cosine_similarity(
                       CAST(e2.embedding AS DOUBLE[]),
                       CAST(q2.embedding AS DOUBLE[])), 6) AS cosine
               FROM cand c
               JOIN embeddings e2 ON e2.vec_id = c.vec_id
-              JOIN embeddings q2 ON q2.vec_id = c.qid),
-       ranked AS (SELECT qid, vec_id, cosine,
-                    row_number() OVER (PARTITION BY qid
-                      ORDER BY cosine DESC, vec_id) AS rank
-              FROM scored)
-       SELECT qid, rank, vec_id, cosine FROM ranked
-       WHERE rank <= $TopK ORDER BY qid, rank"""
+              JOIN embeddings q2 ON q2.vec_id = c.qid)
+       ${topkResultSql("scored")}"""
   }
 
   /** IVF-PQ: the two-level composition production ANN engines ship —
@@ -683,34 +694,29 @@ object Ann {
     * Long bound at [[Cluster.MaxDim]]. */
   def ivfPq(spark: SparkSession, dir: String,
       nprobe: Int = NProbe): DataFrame = {
-    val (codes, subCents) = ivfPqCoded(spark, dir)
-    ivfPqSearch(spark, dir, codes, subCents, nprobe)
+    val cb = codebook(spark, dir) // one collect serves encode and probe
+    val (codes, subCents) = ivfPqCoded(spark, dir, cb)
+    ivfPqSearch(spark, dir, cb, codes, subCents, nprobe)
   }
 
-  /** Build products of the IVF-PQ index: the per-vector
-    * (vec_id, cell, c0..c{M−1}) code table and the subspace
-    * codebooks. */
   /** The quantized coarse centroids as a broadcast-join frame —
     * floor-2²⁰ of the float codebook, the same rule the corpus rows
     * quantize through. */
   private def qcFrame(spark: SparkSession,
       cb: Array[(Long, Array[Float])]): DataFrame = {
-    val qcSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cell",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("qc",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType))))
-    val qcRows: Seq[org.apache.spark.sql.Row] = cb.toSeq.map { case (cid, v) =>
-      org.apache.spark.sql.Row(cid,
-        v.toSeq.map(x => math.floor(x.toDouble * Cluster.Scale).toLong))
+    val qcSchema = StructType(Seq(StructField("cell", LongType),
+      StructField("qc", ArrayType(LongType))))
+    val qcRows: Seq[Row] = cb.toSeq.map { case (cid, v) =>
+      Row(cid, v.toSeq.map(x => math.floor(x.toDouble * Cluster.Scale).toLong))
     }
     spark.createDataFrame(java.util.Arrays.asList(qcRows: _*), qcSchema)
   }
 
-  private def ivfPqCoded(spark: SparkSession,
-      dir: String): (DataFrame, Array[Array[Array[Long]]]) = {
-    val cb = codebook(spark, dir)
+  /** Build products of the IVF-PQ index over the coarse codebook
+    * `cb`: the per-vector (vec_id, cell, c0..c{M−1}) code table and the
+    * subspace codebooks. */
+  private def ivfPqCoded(spark: SparkSession, dir: String,
+      cb: Array[(Long, Array[Float])]): (DataFrame, Array[Array[Array[Long]]]) = {
     val qcDf = qcFrame(spark, cb)
     val cells = emb(spark, dir)
       .select(col("vec_id"), cellOf(col("embedding"), bcast(spark, cb)).as("cell"))
@@ -719,84 +725,29 @@ object Ann {
         .join(cells, "vec_id")
         .join(broadcast(qcDf), "cell")
         .withColumn("r", expr("zip_with(q, qc, (a, b) -> a - b)")) }
-    val seedRes = corp
-      .select(col("vec_id"), col("r"),
-        graft.functions.PortableHash.h60(col("vec_id").cast("string")).as("h"))
-      .orderBy(col("h"), col("vec_id")).limit(PqK)
-      .select(col("r")).collect().map(_.getSeq[Long](0).toArray)
-    require(seedRes.head.length == PqM * PqDsub,
-      s"IVF-PQ layout expects dim ${PqM * PqDsub}, got ${seedRes.head.length}")
-    val subCents: Array[Array[Array[Long]]] = Array.tabulate(PqM)(s =>
-      seedRes.map(v => v.slice(s * PqDsub, (s + 1) * PqDsub)))
-    var coded = corp
-    for (s <- 0 until PqM)
-      coded = coded.withColumn(s"c$s",
-        Cluster.assignCol(slice(col("r"), s * PqDsub + 1, PqDsub), subCents(s))
-          .getField("cid"))
-    (coded.select(col("vec_id") +: col("cell") +:
-      (0 until PqM).map(s => col(s"c$s")): _*), subCents)
+    val subCents = pqCodebooks(corp.select(col("vec_id"), col("r").as("q")), 1)
+    (pqEncode(corp.select(col("vec_id"), col("cell"), col("r")), "r", subCents)
+      .drop("r"), subCents)
   }
 
   /** The probe path over a (vec_id, cell, c0..c{M−1}) code table —
-    * shared by the inline query and the pre-built index. ADC runs
-    * through per-(query, probed-cell) distance TABLES exactly like
-    * [[pqSearch]]: the residual reconstruction distance decomposes
-    * per subspace, the (qid, cell, rq) probe set is NumQueries ×
-    * nprobe rows (a bounded driver round-trip of the codebook-collect
-    * class), and the per-(probe, vector) score is PqM codegen'd
-    * element_at lookups instead of an interpreted dim-wide
-    * zip_with/aggregate fold over a materialized reconstruction
-    * column. Same Long products in the same precision ⇒ d2 is
-    * bit-identical and the generated oracle is untouched. */
+    * shared by the inline query and the pre-built index: each query's
+    * residual against each of its `nprobe` probed cells is one
+    * [[adcSearch]] probe row. */
   private def ivfPqSearch(spark: SparkSession, dir: String,
-      codes: DataFrame, subCents: Array[Array[Array[Long]]],
-      nprobe: Int): DataFrame = {
-    val cb = codebook(spark, dir)
-    val qcDf = qcFrame(spark, cb)
+      cb: Array[(Long, Array[Float])], codes: DataFrame,
+      subCents: Array[Array[Array[Long]]], nprobe: Int): DataFrame = {
     val qq = Cluster.quantized(queriesDf(spark, dir)
         .select(col("qid").as("vec_id"), col("qe").as("embedding")))
       .select(col("vec_id").as("qid"), col("q").as("qq"))
-    val probeRows = queriesDf(spark, dir)
+    val probes = queriesDf(spark, dir)
       .select(col("qid"),
         explode(nearestCells(col("qe"), bcast(spark, cb), nprobe)).as("cell"))
       .join(qq, "qid")
-      .join(broadcast(qcDf), "cell")
+      .join(broadcast(qcFrame(spark, cb)), "cell")
       .select(col("qid"), col("cell"),
-        expr("zip_with(qq, qc, (a, b) -> a - b)").as("rq"))
-      .collect()
-    val probeTabs: Seq[(Long, Long, Seq[Seq[Long]])] =
-      probeRows.toSeq.map { r =>
-        val rq = r.getSeq[Long](2).toArray
-        val tabs: Seq[Seq[Long]] = (0 until PqM).map { s =>
-          subCents(s).toSeq.map { c =>
-            var acc = 0L
-            var j = 0
-            while (j < PqDsub) {
-              val d = rq(s * PqDsub + j) - c(j); acc += d * d; j += 1
-            }
-            acc
-          }
-        }
-        (r.getLong(0), r.getLong(1), tabs)
-      }
-    import spark.implicits._
-    val ptab = probeTabs.toDF("qid", "cell", "tabs")
-    val d2 = (0 until PqM).map(s =>
-        element_at(element_at(col("tabs"), s + 1), col(s"c$s") + 1))
-      .reduce(_ + _)
-    val cand = codes.join(broadcast(ptab), Seq("cell"))
-      .select(col("qid"), col("vec_id"), d2.as("d2"))
-      .groupBy(col("qid"))
-      .agg(TopKScoreAgg.topk(-col("d2").cast("double"), col("vec_id"),
-        PqMargin).as("top"))
-      .select(col("qid"), explode(col("top")).as("e"))
-      .select(col("qid"), col("e.id").as("vec_id"))
-    val exact = cand
-      .join(emb(spark, dir), Seq("vec_id"))
-      .join(broadcast(queriesDf(spark, dir)), Seq("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(Vectors.cosineSim(col("embedding"), col("qe")), 6).as("cosine"))
-    topkPerQuery(exact)
+        expr("zip_with(qq, qc, (a, b) -> a - b)").as("v"))
+    adcSearch(spark, dir, codes, probes, subCents, nprobe)
   }
 
   /** Write-time IVF-PQ index: the code table laid out PARTITIONED BY
@@ -808,20 +759,14 @@ object Ann {
     * by the rerank's semi-join. */
   def buildIvfPqIndex(spark: SparkSession, dir: String,
       indexPath: String): Unit = {
-    val (codes, subCents) = ivfPqCoded(spark, dir)
+    val (codes, subCents) = ivfPqCoded(spark, dir, codebook(spark, dir))
     codes.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$indexPath/codes")
-    val rows: Seq[org.apache.spark.sql.Row] = for {
+    val rows: Seq[Row] = for {
       s <- 0 until PqM; cid <- 0 until PqK
-    } yield org.apache.spark.sql.Row(s, cid, subCents(s)(cid).toSeq)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("s",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("cid",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("vals",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType))))
+    } yield Row(s, cid, subCents(s)(cid).toSeq)
+    val schema = StructType(Seq(StructField("s", IntegerType),
+      StructField("cid", IntegerType), StructField("vals", ArrayType(LongType))))
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/codebook")
   }
@@ -842,82 +787,36 @@ object Ann {
       subCents(r.getInt(0))(r.getInt(1)) = r.getSeq[Long](2).toArray
     }
     val codes = spark.read.parquet(s"$indexPath/codes")
-    ivfPqSearch(spark, dir, codes, subCents, nprobe)
+    ivfPqSearch(spark, dir, codebook(spark, dir), codes, subCents, nprobe)
   }
 
   /** Generated DuckDB oracle for [[ivfPq]] — the identical coarse
-    * cells ([[ivf]]'s argmax rule), integer residuals (centroids are
-    * corpus vectors, so their quantized components come from the same
-    * `x` CTE), hash-seed residual codebook, per-subspace argmin
-    * codes, probed-cell residual ADC, and exact-cosine rerank. */
-  def ivfPqOracleSql: String =
+    * cells and probes ([[ivfProbeCtes]]), integer residuals (centroids
+    * are corpus vectors, so their quantized components come from the
+    * same `x` CTE), the hash-seeded residual codebook and its
+    * per-subspace argmin codes ([[Cluster.lloydCtes]], one round), and
+    * the probed-cell residual ADC and exact rerank ([[adcRerankSql]]). */
+  def ivfPqOracleSql: String = {
+    // `src`'s quantized vectors minus their cell centroid's, one row
+    // per component: subtracted as lists first, because a join of the
+    // long-form components spills gigabytes at sf0.1 when DuckDB
+    // orders it by the dimension alone
+    def residuals(src: String, key: String): String =
+      s"""SELECT $key, cell, unnest(range(len(r))) AS d, unnest(r) AS v
+               FROM (SELECT s.$key, s.cell, list_transform(range(1, len(ev.q) + 1),
+                             i -> ev.q[i] - ec.q[i]) AS r
+                     FROM $src s JOIN e ev ON ev.vec_id = s.$key
+                     JOIN e ec ON ec.vec_id = s.cell)"""
     s"""WITH ef AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                     FROM embeddings),
-       cf AS (${codebookCteSql("ef")}),
-       cl AS (SELECT vec_id, cell FROM (
-                SELECT ef.vec_id, cf.cent_id AS cell,
-                       row_number() OVER (PARTITION BY ef.vec_id
-                         ORDER BY list_cosine_similarity(ef.emb, cf.ce) DESC,
-                                  cf.cent_id) AS rn
-                FROM ef CROSS JOIN cf) WHERE rn = 1),
-       e AS (SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 x -> CASE WHEN isnan(x) OR abs(x) >= 128
-                      THEN CAST(error('ivfpq: non-finite or out-of-range embedding component') AS BIGINT)
-                      ELSE CAST(floor(x * ${Cluster.Scale}) AS BIGINT) END) AS q
-             FROM embeddings),
-       x AS (SELECT vec_id, unnest(q) AS v,
-                    unnest(range(len(q))) AS d FROM e),
-       resid AS (SELECT x.vec_id, c.cell, x.d, x.v - qc.v AS rv
-                 FROM x JOIN cl c ON c.vec_id = x.vec_id
-                 JOIN x qc ON qc.vec_id = c.cell AND qc.d = x.d),
-       seeds AS (SELECT vec_id, row_number() OVER (ORDER BY
-                   ${PortableHash.h60Sql("CAST(vec_id AS VARCHAR)")},
-                   vec_id) - 1 AS cid
-                 FROM e QUALIFY cid < $PqK),
-       cb AS (SELECT s.cid, r.d, r.rv AS v
-              FROM seeds s JOIN resid r ON r.vec_id = s.vec_id),
-       sd AS (SELECT r.vec_id, r.d // $PqDsub AS s, cb.cid,
-                     CAST(sum((r.rv - cb.v) * (r.rv - cb.v)) AS BIGINT) AS dist
-              FROM resid r JOIN cb ON r.d = cb.d GROUP BY 1, 2, 3),
-       codes AS (SELECT vec_id, s, cid FROM sd
-              QUALIFY row_number() OVER (PARTITION BY vec_id, s
-                                         ORDER BY dist, cid) = 1),
-       recon AS (SELECT c.vec_id, cb.d, cb.v
-              FROM codes c JOIN cb ON cb.cid = c.cid
-               AND cb.d // $PqDsub = c.s),
-       qf AS (SELECT vec_id AS qid, emb AS qe FROM ef
-              WHERE vec_id < $NumQueries),
-       probes AS (SELECT qid, cell FROM (
-                SELECT qf.qid, cf.cent_id AS cell,
-                       row_number() OVER (PARTITION BY qf.qid
-                         ORDER BY list_cosine_similarity(qf.qe, cf.ce) DESC,
-                                  cf.cent_id) AS rn
-                FROM qf CROSS JOIN cf) WHERE rn <= $NProbe),
-       rq AS (SELECT p.qid, p.cell, x.d, x.v - qc.v AS rv
-              FROM probes p JOIN x ON x.vec_id = p.qid
-              JOIN x qc ON qc.vec_id = p.cell AND qc.d = x.d),
-       adc AS (SELECT rq.qid, m.vec_id,
-                      CAST(sum((rq.rv - re.v) * (rq.rv - re.v)) AS BIGINT) AS d2
-               FROM rq JOIN cl m ON m.cell = rq.cell
-               JOIN recon re ON re.vec_id = m.vec_id AND re.d = rq.d
-               GROUP BY 1, 2),
-       cand AS (SELECT qid, vec_id FROM adc
-              QUALIFY row_number() OVER (PARTITION BY qid
-                ORDER BY CAST(d2 AS DOUBLE), vec_id) <= $PqMargin),
-       scored AS (SELECT c.qid, c.vec_id,
-                    round(list_cosine_similarity(
-                      CAST(e2.embedding AS DOUBLE[]),
-                      CAST(q2.embedding AS DOUBLE[])), 6) AS cosine
-              FROM cand c
-              JOIN embeddings e2 ON e2.vec_id = c.vec_id
-              JOIN embeddings q2 ON q2.vec_id = c.qid),
-       ranked AS (SELECT qid, vec_id, cosine,
-                    row_number() OVER (PARTITION BY qid
-                      ORDER BY cosine DESC, vec_id) AS rank
-              FROM scored)
-       SELECT qid, rank, vec_id, cosine FROM ranked
-       WHERE rank <= $TopK ORDER BY qid, rank"""
+       qf AS ${queriesSql("ef", "emb AS qe")},
+       ${ivfProbeCtes("ef", "qf")},
+       ${Cluster.quantizedCtes},
+       resid AS (${residuals("cells", "vec_id")}),
+       ${Cluster.lloydCtes(PqK, 1, "resid", PqDsub)},
+       rq AS (${residuals("probes", "qid")}),
+       ${adcRerankSql(1, "rq p", byCell = true)}"""
+  }
 
   /** Per-(label, dimension) embedding statistics — the input a coarse
     * quantizer / codebook trainer consumes (and the standard sanity
@@ -1035,15 +934,9 @@ object Ann {
     * batch ranking. */
   private[graft] def probeIvfFrame(idx: DataFrame,
       cb: Array[(Long, Array[Float])], queries: DataFrame,
-      nprobe: Int = NProbe): DataFrame = {
-    val probes = queries.select(col("qid"), col("qe"),
-      explode(nearestCells(col("qe"), bcast(idx.sparkSession, cb), nprobe))
-        .as("cell"))
-    val scored = idx.join(broadcast(probes), Seq("cell"))
-      .select(col("qid"), col("vec_id"),
-        round(Vectors.cosineSim(col("embedding"), col("qe")), 6).as("cosine"))
-    topkPerQuery(scored)
-  }
+      nprobe: Int = NProbe): DataFrame =
+    topkPerQuery(probeJoin(idx, queries.select(col("qid"), col("qe")),
+      bcast(idx.sparkSession, cb), nprobe))
 
   // --- retrieval evaluation ------------------------------------------
 
@@ -1051,18 +944,6 @@ object Ann {
     * candidate pass runs at the bank's LARGEST count. */
   val NProbeSweep: Seq[Int] = Seq(1, 2, 4, 8)
 
-  /** NPROBE SWEEP — the tuning readout behind "how many cells must we
-    * probe": recall@k and the MRR numerator at every probe count in
-    * the bank, against the exact brute-force truth, from ONE
-    * candidate-generation pass at the bank's largest count. Each
-    * candidate is tagged with the probe rank of its cell (a corpus
-    * vector lives in exactly one cell, so the tag is unique per
-    * query); smaller probe counts are row-local slices, re-ranked by
-    * the bounded per-(bank, query) top-k heap — the sweep discipline
-    * ([[Dedup.sweep]]) applied to retrieval. A probe count that
-    * reaches nothing for a query still counts in the denominator
-    * (truth-spine rule, [[evalOf]]'s r10 lesson). Output = |bank|
-    * rows at any corpus size. */
   /** RECALL@k CURVE for the LSH index from ONE pass per side — the
     * k-axis twin of [[sweepNprobe]]'s nprobe axis (ann_eval reads a
     * single operating point; a serving team sizes k from the whole
@@ -1106,17 +987,25 @@ object Ann {
       .orderBy(col("k"))
   }
 
+  /** NPROBE SWEEP — the tuning readout behind "how many cells must we
+    * probe": recall@k and the MRR numerator at every probe count in
+    * the bank, against the exact brute-force truth, from ONE
+    * candidate-generation pass at the bank's largest count. Each
+    * candidate is tagged with the probe rank of its cell (a corpus
+    * vector lives in exactly one cell, so the tag is unique per
+    * query); smaller probe counts are row-local slices, re-ranked by
+    * the bounded per-(bank, query) top-k heap — the sweep discipline
+    * ([[Dedup.sweep]]) applied to retrieval. A probe count that
+    * reaches nothing for a query still counts in the denominator
+    * (truth-spine rule, [[evalOf]]'s r10 lesson). Output = |bank|
+    * rows at any corpus size. */
   def sweepNprobe(spark: SparkSession, dir: String): DataFrame = {
     val bc = bcast(spark, codebook(spark, dir))
-    val cells = emb(spark, dir)
-      .withColumn("cell", cellOf(col("embedding"), bc))
-    val probes = queriesDf(spark, dir)
-      .select(col("qid"), col("qe"),
-        posexplode(nearestCells(col("qe"), bc, NProbeSweep.max))
-          .as(Seq("pi", "cell")))
-    val scored = cells.join(broadcast(probes), Seq("cell"))
+    val scored = probeJoin(
+        emb(spark, dir).withColumn("cell", cellOf(col("embedding"), bc)),
+        queriesDf(spark, dir), bc, NProbeSweep.max)
       .select(col("qid"), col("vec_id"), (col("pi") + 1).as("preach"),
-        round(Vectors.cosineSim(col("embedding"), col("qe")), 6).as("cosine"))
+        col("cosine"))
     val approx = scored
       .select(col("qid"), col("vec_id"), col("cosine"), col("preach"),
         explode(array(NProbeSweep.map(k => lit(k.toLong)): _*)).as("nprobe"))
@@ -1157,52 +1046,27 @@ object Ann {
     val arms = NProbeSweep.map { k =>
       s"""SELECT CAST($k AS BIGINT) AS nprobe,
             (SELECT CAST(count(*) AS BIGINT)
-             FROM t JOIN (SELECT qid, vec_id FROM
-                 (SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-                    ORDER BY cosine DESC, vec_id) AS rank
-                  FROM scored_sw WHERE preach <= $k) WHERE rank <= 5) a
+             FROM t JOIN a$k a
                ON a.qid = t.qid AND a.vec_id = t.vec_id) AS n_overlap,
             (SELECT CAST(coalesce(sum(CAST(round(1e6 / a.rank, 0)
                  AS BIGINT)), 0) AS BIGINT)
              FROM (SELECT qid, vec_id FROM t WHERE rank = 2) nn2
-             JOIN (SELECT qid, vec_id, rank FROM
-                 (SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-                    ORDER BY cosine DESC, vec_id) AS rank
-                  FROM scored_sw WHERE preach <= $k) WHERE rank <= 5) a
+             JOIN a$k a
                ON a.qid = nn2.qid AND a.vec_id = nn2.vec_id) AS rr_micro"""
     }.mkString("\n         UNION ALL ")
+    val approx = NProbeSweep.map(k =>
+      s"a$k AS (${topkSql(s"(SELECT * FROM scored_sw WHERE preach <= $k)")})")
+      .mkString(",\n         ")
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                     FROM embeddings),
-         c AS (${codebookCteSql("e")}),
-         cells AS (
-           SELECT vec_id, emb, cell FROM (
-             SELECT e.vec_id, e.emb, c.cent_id AS cell,
-                    row_number() OVER (PARTITION BY e.vec_id
-                      ORDER BY list_cosine_similarity(e.emb, c.ce) DESC,
-                               c.cent_id) AS rn
-             FROM e CROSS JOIN c) WHERE rn = 1),
-         q AS (SELECT vec_id AS qid, emb AS qe FROM e WHERE vec_id < 10),
-         pr AS (
-           SELECT qid, qe, cell, rn AS preach FROM (
-             SELECT q.qid, q.qe, c.cent_id AS cell,
-                    row_number() OVER (PARTITION BY q.qid
-                      ORDER BY list_cosine_similarity(q.qe, c.ce) DESC,
-                               c.cent_id) AS rn
-             FROM q CROSS JOIN c) WHERE rn <= ${NProbeSweep.max}),
+         q AS ${queriesSql("e", "emb AS qe")},
+         ${ivfProbeCtes("e", "q", NProbeSweep.max)},
          scored_sw AS MATERIALIZED (
-           SELECT p.qid, s.vec_id, p.preach,
+           SELECT p.qid, s.vec_id, p.rn AS preach,
                   round(list_cosine_similarity(s.emb, p.qe), 6) AS cosine
-           FROM cells s JOIN pr p ON p.cell = s.cell),
-         scored_b AS (
-           SELECT q.qid, cc.vec_id,
-                  round(list_cosine_similarity(cc.emb, q.qe), 6) AS cosine
-           FROM e cc CROSS JOIN q),
-         t AS MATERIALIZED (
-           SELECT qid, vec_id, rank FROM (
-             SELECT qid, vec_id,
-                    row_number() OVER (PARTITION BY qid
-                      ORDER BY cosine DESC, vec_id) AS rank
-             FROM scored_b) WHERE rank <= 5),
+           FROM cells s JOIN probes p ON p.cell = s.cell),
+         $approx,
+         $bruteTruthCtes,
          ks AS (SELECT CAST(count(*) AS BIGINT) AS k_sum FROM t),
          m AS ($arms)
          SELECT m.nprobe, m.n_overlap,
@@ -1298,74 +1162,39 @@ object Ann {
     // exact MIPS: same scan, dot-product kernel — both engines sum
     // the DOUBLE-cast float products in index order
     Query("ann_mips", mips,
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe
-                    FROM embeddings WHERE vec_id < 10),
+      s"""WITH q AS ${queriesSql("embeddings", "CAST(embedding AS DOUBLE[]) AS qe")},
          scored AS (
            SELECT q.qid, e.vec_id,
                   round(list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qe),
                         6) AS dot
-           FROM embeddings e CROSS JOIN q),
-         ranked AS (
-           SELECT qid, vec_id, dot,
-                  row_number() OVER (PARTITION BY qid
-                    ORDER BY dot DESC, vec_id) AS rank
-           FROM scored)
-         SELECT qid, rank, vec_id, dot FROM ranked
-         WHERE rank <= 5 ORDER BY qid, rank"""),
+           FROM embeddings e CROSS JOIN q)
+         ${topkResultSql("scored", "dot")}"""),
     // exact filtered search: the label predicate applies BEFORE
     // scoring on both sides, so top-k never starves below k
     Query("ann_filtered", filtered,
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qe, label AS qlabel
-                    FROM embeddings WHERE vec_id < 10),
+      s"""WITH q AS ${queriesSql("embeddings", "embedding AS qe, label AS qlabel")},
          scored AS (
            SELECT q.qid, e.vec_id,
                   round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
                         CAST(q.qe AS DOUBLE[])), 6) AS cosine
-           FROM embeddings e JOIN q ON e.label = q.qlabel),
-         ranked AS (
-           SELECT qid, vec_id, cosine,
-                  row_number() OVER (PARTITION BY qid
-                    ORDER BY cosine DESC, vec_id) AS rank
-           FROM scored)
-         SELECT qid, rank, vec_id, cosine FROM ranked
-         WHERE rank <= 5 ORDER BY qid, rank"""),
+           FROM embeddings e JOIN q ON e.label = q.qlabel)
+         ${topkResultSql("scored")}"""),
     // the ivf chain with the label predicate INSIDE the probed cells
     Query("ann_filtered_ivf", (s, d) => filteredIvf(s, d),
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, label
                     FROM embeddings),
-         c AS (${codebookCteSql("e")}),
-         cells AS (
-           SELECT vec_id, emb, label, cell FROM (
-             SELECT e.vec_id, e.emb, e.label, c.cent_id AS cell,
-                    row_number() OVER (PARTITION BY e.vec_id
-                      ORDER BY list_cosine_similarity(e.emb, c.ce) DESC,
-                               c.cent_id) AS rn
-             FROM e CROSS JOIN c) WHERE rn = 1),
-         q AS (SELECT vec_id AS qid, emb AS qe, label AS qlabel
-               FROM e WHERE vec_id < 10),
-         probes AS (
-           SELECT qid, qe, qlabel, cell FROM (
-             SELECT q.qid, q.qe, q.qlabel, c.cent_id AS cell,
-                    row_number() OVER (PARTITION BY q.qid
-                      ORDER BY list_cosine_similarity(q.qe, c.ce) DESC,
-                               c.cent_id) AS rn
-             FROM q CROSS JOIN c) WHERE rn <= 8),
+         q AS ${queriesSql("e", "emb AS qe, label AS qlabel")},
+         ${ivfProbeCtes("e", "q")},
          scored AS (
            SELECT DISTINCT p.qid, s.vec_id,
                   round(list_cosine_similarity(s.emb, p.qe), 6) AS cosine
            FROM cells s JOIN probes p ON p.cell = s.cell
-           WHERE s.label = p.qlabel),
-         ranked AS (
-           SELECT qid, vec_id, cosine,
-                  row_number() OVER (PARTITION BY qid
-                    ORDER BY cosine DESC, vec_id) AS rank
-           FROM scored)
-         SELECT qid, rank, vec_id, cosine FROM ranked
-         WHERE rank <= 5 ORDER BY qid, rank"""),
+           WHERE s.label = p.qlabel)
+         ${topkResultSql("scored")}"""),
     // Random-hyperplane LSH with the hyperplanes inlined as DOUBLE
     // literals (the exact double values of Ann.planes' floats): same
     // sign bits, same buckets, same Hamming-≤2 multiprobe ring, same
-    // candidate set, exact cosine top-5.
+    // candidate set, exact cosine top-k.
     Query("ann_lsh", lsh, annLshSql),
     // recall/MRR readout of ann_lsh vs the brute-force ground truth:
     // the two proven CTE chains composed; metrics are id-join
@@ -1374,7 +1203,7 @@ object Ann {
     Query("ann_eval", evalLsh, annEvalSql),
     // the harness over the IVF ranking: same truth + metrics tail
     Query("ann_eval_ivf", evalIvf, annEvalIvfSql),
-    // recall@k bank over ONE joined ranking frame (k = 1..5)
+    // recall@k bank over ONE joined ranking frame (k = 1..TopK)
     Query("ann_sweep_k", sweepK, annSweepKSql),
     // the same recall@k bank over the serving-tier IVF ranking
     Query("ann_sweep_k_ivf", sweepKIvf, annSweepKIvfSql),
@@ -1382,11 +1211,8 @@ object Ann {
     // IVF is pure SQL end-to-end: deterministic codebook (the IvfK
     // lowest-portable-hash vectors), nearest-cell argmax (csim desc,
     // cent_id asc — the same tie-break as the Spark argmax over the
-    // broadcast codebook), probes, exact cosine top-5 over the cells.
-    Query("ann_ivf", (s, d) => ivf(s, d),
-      s"""WITH $ivfCtes
-         SELECT qid, rank, vec_id, cosine FROM ranked
-         WHERE rank <= 5 ORDER BY qid, rank"""),
+    // broadcast codebook), probes, exact cosine top-k over the cells.
+    Query("ann_ivf", (s, d) => ivf(s, d), annIvfSql),
     // int8 quantization + 10× margin + exact float rerank provably
     // recovers the exact top-5 on this corpus (AnnSpec measures
     // recall@5 = 1.0; the margin dwarfs the ~1e-2 quantization noise
@@ -1406,16 +1232,15 @@ object Ann {
     // Per-(label, dim) means over the embedding corpus; DOUBLE[] cast
     // on both sides so the accumulation arithmetic matches.
     Query("emb_centroids", centroidStats,
-      """SELECT label, i - 1 AS dim, count(*) AS n,
+      s"""SELECT label, i - 1 AS dim, count(*) AS n,
                 round(avg(CAST(embedding AS DOUBLE[])[i]), 6) AS mean_v
-         FROM embeddings CROSS JOIN (SELECT unnest(range(1, 65)) AS i)
+         FROM embeddings CROSS JOIN (SELECT unnest(range(1, ${Dim + 1})) AS i)
          GROUP BY label, dim ORDER BY label, dim"""),
     // Bucketed KNN self-join: deterministic given the planes, so the
     // bucket rule is the semantics and the oracle checks it exactly.
     Query("ann_knn_join", (s, d) => knnJoin(s, d), annKnnJoinSql),
     Query("ann_range", (s, d) => rangeSearch(s, d),
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-                      WHERE vec_id < 10),
+      s"""WITH q AS ${queriesSql("embeddings", "embedding AS qe")},
          scored AS (
            SELECT q.qid, e.vec_id,
                   round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
@@ -1423,39 +1248,39 @@ object Ann {
            FROM embeddings e CROSS JOIN q
            WHERE e.vec_id <> q.qid)
          SELECT qid, vec_id, cosine FROM scored
-         WHERE cosine >= 0.15 ORDER BY qid, vec_id"""),
+         WHERE cosine >= $RangeTau ORDER BY qid, vec_id"""),
   )
 
-  private val BruteforceTopkSql =
-    """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-                    WHERE vec_id < 10),
-         scored AS (
-           SELECT q.qid, e.vec_id,
-                  round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                        CAST(q.qe AS DOUBLE[])), 6) AS cosine
-           FROM embeddings e CROSS JOIN q),
-         ranked AS (
-           SELECT qid, vec_id, cosine,
-                  row_number() OVER (PARTITION BY qid
-                    ORDER BY cosine DESC, vec_id) AS rank
-           FROM scored)
-         SELECT qid, rank, vec_id, cosine FROM ranked
-         WHERE rank <= 5 ORDER BY qid, rank"""
+  /** Brute-force truth CTEs (`scored_b` + `t`, the exact top-k) over
+    * an existing `e(vec_id, emb)` CTE — the ann_bruteforce oracle and
+    * every eval oracle's truth. */
+  private lazy val bruteTruthCtes: String =
+    s"""scored_b AS (
+           SELECT q.qid, c.vec_id,
+                  round(list_cosine_similarity(c.emb, q.emb), 6) AS cosine
+           FROM e c CROSS JOIN ${queriesSql("e", "emb")} q),
+         t AS MATERIALIZED (${topkSql("scored_b")})"""
+
+  private lazy val BruteforceTopkSql: String =
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
+                   FROM embeddings),
+         $bruteTruthCtes
+         SELECT qid, rank, vec_id, cosine FROM t ORDER BY qid, rank"""
 
   /** Shared LSH-bucket CTE prefix (`e`/`b`/`ck`), generated from the
     * same plane constants the Spark operators use: per-vector
-    * DOUBLE[] cast, the 4 per-table 8-sign-bit bucket ints, and the
-    * 4 "t#bucket" corpus keys. */
+    * DOUBLE[] cast, the per-table sign-bit bucket ints, and the
+    * "t#bucket" corpus keys. */
   private lazy val lshBucketCte: String = {
     def planeLit(p: Array[Float]): String =
       p.map(_.toDouble.toString).mkString("[", ", ", "]")
     def bucketExpr(t: Int): String =
-      (0 until 8).map { b =>
-        s"CASE WHEN list_cosine_similarity(emb, ${planeLit(planes(t * 8 + b))}) > 0 THEN ${1 << b} ELSE 0 END"
+      (0 until NBits).map { b =>
+        s"CASE WHEN list_cosine_similarity(emb, ${planeLit(planes(t * NBits + b))}) > 0 THEN ${1 << b} ELSE 0 END"
       }.mkString("\n                  + ")
-    val bucketCols = (0 until 4)
+    val bucketCols = (0 until NTables)
       .map(t => s"${bucketExpr(t)} AS b$t").mkString(",\n                ")
-    val corpusKeys = (0 until 4)
+    val corpusKeys = (0 until NTables)
       .map(t => s"'$t#' || CAST(b$t AS VARCHAR)").mkString(", ")
     s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                    FROM embeddings),
@@ -1465,17 +1290,18 @@ object Ann {
          ck AS (SELECT vec_id, unnest([$corpusKeys]) AS k FROM b)"""
   }
 
-  /** ann_lsh oracle, generated from the same plane constants and probe
-    * masks the Spark operator uses. */
-  private lazy val annLshSql: String = {
-    val probeKeys = (0 until 4)
+  /** The ann_lsh CTE chain ending at `scored` (the candidates' exact
+    * cosines), generated from the same plane constants and probe masks
+    * the Spark operator uses. */
+  private lazy val lshCtes: String = {
+    val probeKeys = (0 until NTables)
       .map(t => s"'$t#' || CAST(xor(b$t, m) AS VARCHAR)").mkString(", ")
     val masks = probeMasks.mkString("[", ", ", "]")
-    s"""WITH $lshBucketCte,
+    val buckets = (0 until NTables).map(t => s"b$t").mkString(", ")
+    s"""$lshBucketCte,
          pm AS (SELECT unnest($masks) AS m),
          pk AS (SELECT qid, unnest([$probeKeys]) AS k
-                FROM (SELECT vec_id AS qid, b0, b1, b2, b3 FROM b
-                      WHERE vec_id < 10)
+                FROM ${queriesSql("b", buckets)}
                 CROSS JOIN pm),
          cand AS (SELECT DISTINCT pk.qid, ck.vec_id
                   FROM ck JOIN pk ON ck.k = pk.k),
@@ -1484,68 +1310,31 @@ object Ann {
                   round(list_cosine_similarity(ec.emb, eq.emb), 6) AS cosine
            FROM cand c
            JOIN e ec ON ec.vec_id = c.vec_id
-           JOIN e eq ON eq.vec_id = c.qid),
-         ranked AS (
-           SELECT qid, vec_id, cosine,
-                  row_number() OVER (PARTITION BY qid
-                    ORDER BY cosine DESC, vec_id) AS rank
-           FROM scored)
-         SELECT qid, rank, vec_id, cosine FROM ranked
-         WHERE rank <= 5 ORDER BY qid, rank"""
+           JOIN e eq ON eq.vec_id = c.qid)"""
   }
 
-  /** The ann_ivf CTE chain ending at `ranked` — shared by the ann_ivf
-    * oracle and the IVF eval oracle (one SQL statement of truth,
-    * same constants as the Spark operator: hash-ordered codebook of
-    * [[IvfK]] cells via the shared
-    * [[codebookCteSql]] fragment, nprobe 8,
-    * query set < 10). */
-  private val ivfCtes: String =
+  /** The ann_ivf CTE chain ending at `scored`: the [[ivfProbeCtes]]
+    * cells and probes, and the probed members' exact cosines. */
+  private lazy val ivfCtes: String =
     s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                     FROM embeddings),
-         c AS (${codebookCteSql("e")}),
-         cells AS (
-           SELECT vec_id, emb, cell FROM (
-             SELECT e.vec_id, e.emb, c.cent_id AS cell,
-                    row_number() OVER (PARTITION BY e.vec_id
-                      ORDER BY list_cosine_similarity(e.emb, c.ce) DESC,
-                               c.cent_id) AS rn
-             FROM e CROSS JOIN c) WHERE rn = 1),
-         q AS (SELECT vec_id AS qid, emb AS qe FROM e WHERE vec_id < 10),
-         probes AS (
-           SELECT qid, qe, cell FROM (
-             SELECT q.qid, q.qe, c.cent_id AS cell,
-                    row_number() OVER (PARTITION BY q.qid
-                      ORDER BY list_cosine_similarity(q.qe, c.ce) DESC,
-                               c.cent_id) AS rn
-             FROM q CROSS JOIN c) WHERE rn <= 8),
+         q AS ${queriesSql("e", "emb AS qe")},
+         ${ivfProbeCtes("e", "q")},
          scored AS (
            SELECT DISTINCT p.qid, s.vec_id,
                   round(list_cosine_similarity(s.emb, p.qe), 6) AS cosine
-           FROM cells s JOIN probes p ON p.cell = s.cell),
-         ranked AS (
-           SELECT qid, vec_id, cosine,
-                  row_number() OVER (PARTITION BY qid
-                    ORDER BY cosine DESC, vec_id) AS rank
-           FROM scored)"""
+           FROM cells s JOIN probes p ON p.cell = s.cell)"""
 
-  /** Brute-force truth CTEs (`scored_b` + `t`) over an existing `e`
-    * CTE — shared by every eval oracle. */
-  private val bruteTruthCtes: String =
-    """scored_b AS (
-           SELECT q.qid, c.vec_id,
-                  round(list_cosine_similarity(c.emb, q.emb), 6) AS cosine
-           FROM e c CROSS JOIN
-             (SELECT vec_id AS qid, emb FROM e WHERE vec_id < 10) q),
-         t AS (
-           SELECT qid, vec_id, rank FROM (
-             SELECT qid, vec_id,
-                    row_number() OVER (PARTITION BY qid
-                      ORDER BY cosine DESC, vec_id) AS rank
-             FROM scored_b) WHERE rank <= 5)"""
+  private lazy val annLshSql: String =
+    s"""WITH $lshCtes
+         ${topkResultSql("scored")}"""
 
-  /** Shared eval tail over CTEs `al` (approx top-5) and `t` (truth
-    * top-5): overlap/recall/reciprocal-rank metrics — id joins only,
+  private lazy val annIvfSql: String =
+    s"""WITH $ivfCtes
+         ${topkResultSql("scored")}"""
+
+  /** Shared eval tail over CTEs `al` (approx top-k) and `t` (truth
+    * top-k): overlap/recall/reciprocal-rank metrics — id joins only,
     * the reciprocal rank micro-quantized so the summary MRR
     * numerator is an exact BIGINT sum. ONE statement of truth for
     * every ranking the harness scores. */
@@ -1579,6 +1368,19 @@ object Ann {
          FROM per
          ORDER BY qid"""
 
+  /** An eval oracle: the approximate chain `ctes` (ending at
+    * `scored`) ranked, the brute-force truth and the shared metrics
+    * tail. */
+  private def evalSql(ctes: String): String =
+    s"""WITH $ctes,
+         al AS (${topkSql("scored")}),
+         $bruteTruthCtes,
+         $evalTailSql"""
+
+  private lazy val annEvalSql: String = evalSql(lshCtes)
+
+  private lazy val annEvalIvfSql: String = evalSql(ivfCtes)
+
   /** ann_sweep_k oracle family: the truth chain + a caller-chosen
     * approx ranking composed as CTEs, one conditional-count arm per
     * k over the single joined frame — the same one-pass bank the
@@ -1609,51 +1411,7 @@ object Ann {
 
   private lazy val annSweepKSql: String = annSweepKSqlOver(annLshSql)
 
-  /** ann_sweep_k_ivf oracle: the same bank over the SERVING-TIER ivf
-    * ranking (the nested WITH scopes the ivf CTE names locally, so
-    * they can't collide with the truth chain's). */
-  private lazy val annSweepKIvfSql: String = annSweepKSqlOver(
-    s"""WITH $ivfCtes
-        SELECT qid, rank, vec_id, cosine FROM ranked
-        WHERE rank <= ${TopK}""")
-
-  /** ann_eval oracle: the ann_lsh chain, the brute-force chain, and
-    * the shared metrics tail composed. */
-  private lazy val annEvalSql: String = {
-    val probeKeys = (0 until 4)
-      .map(t => s"'$t#' || CAST(xor(b$t, m) AS VARCHAR)").mkString(", ")
-    val masks = probeMasks.mkString("[", ", ", "]")
-    s"""WITH $lshBucketCte,
-         pm AS (SELECT unnest($masks) AS m),
-         pk AS (SELECT qid, unnest([$probeKeys]) AS k
-                FROM (SELECT vec_id AS qid, b0, b1, b2, b3 FROM b
-                      WHERE vec_id < 10)
-                CROSS JOIN pm),
-         cand AS (SELECT DISTINCT pk.qid, ck.vec_id
-                  FROM ck JOIN pk ON ck.k = pk.k),
-         scored_l AS (
-           SELECT c.qid, c.vec_id,
-                  round(list_cosine_similarity(ec.emb, eq.emb), 6) AS cosine
-           FROM cand c
-           JOIN e ec ON ec.vec_id = c.vec_id
-           JOIN e eq ON eq.vec_id = c.qid),
-         al AS (
-           SELECT qid, vec_id, rank FROM (
-             SELECT qid, vec_id,
-                    row_number() OVER (PARTITION BY qid
-                      ORDER BY cosine DESC, vec_id) AS rank
-             FROM scored_l) WHERE rank <= 5),
-         $bruteTruthCtes,
-         $evalTailSql"""
-  }
-
-  /** ann_eval_ivf oracle: the ann_ivf chain + the same truth and
-    * metrics tail. */
-  private lazy val annEvalIvfSql: String =
-    s"""WITH $ivfCtes,
-         al AS (SELECT qid, vec_id, rank FROM ranked WHERE rank <= 5),
-         $bruteTruthCtes,
-         $evalTailSql"""
+  private lazy val annSweepKIvfSql: String = annSweepKSqlOver(annIvfSql)
 
   /** ann_knn_join oracle: same bucket CTE, self-joined. */
   private lazy val annKnnJoinSql: String =
@@ -1666,14 +1424,8 @@ object Ann {
                   round(list_cosine_similarity(ea.emb, eb.emb), 6) AS cosine
            FROM cand c
            JOIN e ea ON ea.vec_id = c.qid
-           JOIN e eb ON eb.vec_id = c.vid),
-         ranked AS (
-           SELECT qid, vec_id, cosine,
-                  row_number() OVER (PARTITION BY qid
-                    ORDER BY cosine DESC, vec_id) AS rank
-           FROM scored)
-         SELECT qid, rank, vec_id, cosine FROM ranked
-         WHERE rank <= 3 ORDER BY qid, rank"""
+           JOIN e eb ON eb.vec_id = c.vid)
+         ${topkResultSql("scored", k = KnnK)}"""
 
   /** [[bruteforce]] in plain SQL: broadcast the
     * 10-query side, score with the registered `cosine_sim`, keep

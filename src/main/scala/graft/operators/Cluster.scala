@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -123,7 +123,7 @@ object Cluster {
     * see that doc for the fail-vs-skip split. (The cosine kernels
     * take the other branch of the same decision: scoring paths DEMOTE
     * non-finite vectors to 0.0 because a ranking must stay total.)
-    * The DuckDB twin ([[kmeansAssignCtes]]) carries the same
+    * The DuckDB twin ([[quantizedCtes]]) carries the same
     * component gate via error(), so both engines refuse the same
     * inputs. */
   private[graft] def quantized(embeddings: DataFrame): DataFrame =
@@ -146,6 +146,21 @@ object Cluster {
                 lit(" — gate or rescale corrupt vectors upstream"))).cast("long"))
               .otherwise(floor(x.cast("double") * Scale).cast("long"))))
           .as("q"))
+
+  /** DuckDB twin of [[quantized]] with its input gate, to follow a
+    * `WITH`: `e(vec_id, q)` over the `embeddings` table, and
+    * `x(vec_id, v, d)`, one row per component. */
+  private[graft] val quantizedCtes: String =
+    s"""e AS (SELECT vec_id,
+               CASE WHEN embedding IS NULL OR len(embedding) > $MaxDim
+                 THEN CAST(error('quantizer: NULL or over-$MaxDim-dim embedding') AS BIGINT[])
+                 ELSE list_transform(CAST(embedding AS DOUBLE[]),
+                   x -> CASE WHEN x IS NULL OR isnan(x) OR abs(x) >= $MaxAbsComponent
+                        THEN CAST(error('quantizer: NULL, non-finite or out-of-range embedding component') AS BIGINT)
+                        ELSE CAST(floor(x * $Scale) AS BIGINT) END) END AS q
+             FROM embeddings),
+         x AS (SELECT vec_id, unnest(q) AS v,
+                      unnest(range(len(q))) AS d FROM e)"""
 
   /** Rows whose embedding is non-NULL, ≤ [[MaxDim]]-dimensional, and
     * entirely finite / NULL-free / inside the quantizer's range — the
@@ -186,6 +201,24 @@ object Cluster {
   private[graft] def assignCol(q: Column, cents: Array[Array[Long]]): Column =
     ColumnBridge.column(NearestCentroidSq(ColumnBridge.expression(q), cents))
 
+  /** DuckDB twin of [[assignCol]] over long-form components: `$d` is
+    * the squared-L2 distance of every `$vecs(vec_id, d, v)` vector to
+    * every `$cents(cid, d, v)` centroid — per subspace `s = d // dsub`
+    * when `dsub > 0` (the PQ encode) — and `$a` keeps the first
+    * minimum (`ORDER BY dist, cid` ≡ the kernel's strict `<`). */
+  private[graft] def nearestCentroidCtes(d: String, a: String,
+      vecs: String, cents: String, dsub: Int = 0): String = {
+    val (key, part) =
+      if (dsub > 0) (s"x.vec_id, x.d // $dsub AS s", "vec_id, s")
+      else ("x.vec_id", "vec_id")
+    s"""$d AS (SELECT $key, c.cid,
+               CAST(sum((x.v - c.v) * (x.v - c.v)) AS BIGINT) AS dist
+             FROM $vecs x JOIN $cents c ON x.d = c.d GROUP BY ALL),
+         $a AS (SELECT * FROM $d
+             QUALIFY row_number() OVER (PARTITION BY $part
+                                        ORDER BY dist, cid) = 1)"""
+  }
+
   def embKmeans(spark: SparkSession, dir: String,
       k: Int = 8, iters: Int = 3): DataFrame =
     kmeansDf(Tables(spark, dir).embeddings, k, iters)
@@ -207,15 +240,28 @@ object Cluster {
     kmeansLoop(e, hashSeeds(e, k), iters)._1
   }
 
-  /** Deterministic seeds: the k smallest portable hashes, cid in that
-    * order (k×dim driver round-trip, bounded by construction). */
-  private def hashSeeds(e: DataFrame, k: Int): Array[Array[Long]] = e
-    .withColumn("h", PortableHash.h60(col("vec_id").cast("string")))
-    .orderBy(col("h"), col("vec_id"))
-    .limit(k)
-    .select(col("q"))
-    .collect()
-    .map(_.getSeq[Long](0).toArray)
+  /** THE seed rule: the `k` rows of `df` with the smallest portable
+    * hash of `vec_id` (ties → lower vec_id), in that order — the
+    * k-means seeds, the PQ subspace seeds, the IVF coarse codebook and
+    * the streaming model's first centers are all this sample. ≤ k rows
+    * reach the driver (TakeOrdered), never ∝ corpus. DuckDB twin:
+    * [[hashSeedsSql]]. */
+  private[graft] def hashSeedRows(df: DataFrame, k: Int): Array[Row] =
+    df.withColumn("h", PortableHash.h60(col("vec_id").cast("string")))
+      .orderBy(col("h"), col("vec_id")).limit(k).drop("h").collect()
+
+  /** [[hashSeedRows]]' integer vectors `q`, cid in seed order. */
+  private[graft] def hashSeeds(df: DataFrame, k: Int): Array[Array[Long]] =
+    hashSeedRows(df.select(col("vec_id"), col("q")), k)
+      .map(_.getSeq[Long](1).toArray)
+
+  /** DuckDB twin of [[hashSeedRows]]: `src`'s `k` lowest-hash rows,
+    * `cid` = 0-based seed order. */
+  private[graft] def hashSeedsSql(src: String, k: Int): String =
+    s"""SELECT *, row_number() OVER (ORDER BY
+                   ${PortableHash.h60Sql("CAST(vec_id AS VARCHAR)")},
+                   vec_id) - 1 AS cid
+               FROM $src QUALIFY cid < $k"""
 
   /** The Lloyd's rounds from an EXPLICIT round-0 codebook — the loop
     * body [[kmeansAssign]] and the warm-start resume share. Returns
@@ -277,40 +323,35 @@ object Cluster {
     * CTE `a<iters>` = (vec_id, cid, dist). Shared by the k-means
     * oracle and the semantic-dedup oracle so the clustering
     * trajectory has exactly ONE SQL statement of truth. */
-  def kmeansAssignCtes(k: Int = 8, iters: Int = 3): String = {
+  def kmeansAssignCtes(k: Int = 8, iters: Int = 3): String =
+    s"""$quantizedCtes,
+         ${lloydCtes(k, iters)}"""
+
+  /** DuckDB twin of [[kmeansLoop]] from the [[hashSeeds]], to follow
+    * [[quantizedCtes]]: `seeds` and their components `c0`, then per
+    * round r the assignment `d<r>`/`a<r>` ([[nearestCentroidCtes]])
+    * against `c<r−1>` and, before the last round, the truncating-mean
+    * update `u<r>`/`c<r>` (an empty cell keeps its centroid). `vecs`
+    * is the `(vec_id, d, v)` relation clustered; `dsub > 0` trains one
+    * codebook per subspace ([[Ann.pqCodebooks]]). */
+  private[graft] def lloydCtes(k: Int, iters: Int, vecs: String = "x",
+      dsub: Int = 0): String = {
+    val sub = if (dsub > 0) s" AND x.d // $dsub = a.s" else ""
     val rounds = (1 to iters).map { r =>
-      val assign =
-        s"""d$r AS (SELECT x.vec_id, c.cid,
-               CAST(sum((x.v - c.v) * (x.v - c.v)) AS BIGINT) AS dist
-             FROM x JOIN c${r - 1} c ON x.d = c.d GROUP BY 1, 2),
-         a$r AS (SELECT vec_id, cid, dist FROM d$r
-             QUALIFY row_number() OVER (PARTITION BY vec_id
-                                        ORDER BY dist, cid) = 1)"""
       val update = if (r < iters)
         s""",
          u$r AS (SELECT a.cid, x.d,
                CAST(sum(x.v) // count(*) AS BIGINT) AS v
-             FROM a$r a JOIN x ON a.vec_id = x.vec_id GROUP BY 1, 2),
+             FROM a$r a JOIN $vecs x ON a.vec_id = x.vec_id$sub GROUP BY 1, 2),
          c$r AS (SELECT p.cid, p.d, coalesce(u.v, p.v) AS v
              FROM c${r - 1} p LEFT JOIN u$r u
                ON p.cid = u.cid AND p.d = u.d)"""
       else ""
-      assign + update
+      nearestCentroidCtes(s"d$r", s"a$r", vecs, s"c${r - 1}", dsub) + update
     }.mkString(",\n         ")
-    s"""e AS (SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 x -> CASE WHEN isnan(x) OR abs(x) >= 128
-                      THEN CAST(error('kmeans: non-finite or out-of-range embedding component') AS BIGINT)
-                      ELSE CAST(floor(x * $Scale) AS BIGINT) END) AS q
-             FROM embeddings),
-         x AS (SELECT vec_id, unnest(q) AS v,
-                      unnest(range(len(q))) AS d FROM e),
-         seeds AS (SELECT vec_id, row_number() OVER (ORDER BY
-                     ${PortableHash.h60Sql("CAST(vec_id AS VARCHAR)")},
-                     vec_id) - 1 AS cid
-                   FROM e QUALIFY cid < $k),
+    s"""seeds AS (${hashSeedsSql("e", k)}),
          c0 AS (SELECT s.cid, x.d, x.v
-                FROM seeds s JOIN x ON s.vec_id = x.vec_id),
+                FROM seeds s JOIN $vecs x ON s.vec_id = x.vec_id),
          $rounds"""
   }
 
@@ -609,17 +650,11 @@ object Cluster {
                                 ELSE (w * $Scale) // m END AS v
                  FROM w$r, m$r)"""
     }.mkString(",\n         ")
-    s"""WITH e AS (SELECT vec_id,
-               list_transform(CAST(embedding AS DOUBLE[]),
-                 x -> CASE WHEN isnan(x) OR abs(x) >= $MaxAbsComponent
-                      THEN CAST(error('emb_pca: non-finite or out-of-range embedding component') AS BIGINT)
-                      ELSE CAST(floor(x * $Scale) AS BIGINT) END) AS q
-             FROM embeddings),
-         x AS (SELECT vec_id, unnest(range(len(q))) AS j,
-                      unnest(q) // $PcaShift AS v FROM e),
+    s"""WITH $quantizedCtes,
+         xs AS (SELECT vec_id, d AS j, v // $PcaShift AS v FROM x),
          c AS MATERIALIZED (
                SELECT a.j AS cj, b.j AS ck, CAST(sum(a.v * b.v) AS BIGINT) AS c
-               FROM x a JOIN x b ON a.vec_id = b.vec_id GROUP BY 1, 2),
+               FROM xs a JOIN xs b ON a.vec_id = b.vec_id GROUP BY 1, 2),
          v0 AS (SELECT DISTINCT cj AS j, CAST($Scale AS HUGEINT) AS v FROM c),
          $chain,
          js AS (SELECT j FROM v$rounds ORDER BY abs(v) DESC, j LIMIT 1),

@@ -938,7 +938,7 @@ object Dedup {
       s"SELECT doc_id, CAST($bands AS BIGINT) AS bands, " +
         s"unnest(${bandKeysSql(bands, k / bands)}) AS bk FROM sig"
     }.mkString("\n         UNION ALL ")
-    s"""WITH $grams3Cte,
+    s"""WITH ${SimJoin.interPairsCtes},
          ${minhashSigCte(k)},
          bkall AS ($armSelects),
          cand AS (SELECT DISTINCT a.bands, a.doc_id AS d1, b.doc_id AS d2
@@ -947,29 +947,12 @@ object Dedup {
                        AND a.doc_id < b.doc_id),
          nc AS (SELECT bands, CAST(count(*) AS BIGINT) AS n_candidates
                 FROM cand GROUP BY 1),
-         sizes AS (SELECT doc_id, len(gs) AS n FROM g),
-         cint AS (SELECT c.bands, c.d1, c.d2, count(*) AS inter
-                  FROM cand c
-                  JOIN posts p1 ON p1.doc_id = c.d1
-                  JOIN posts p2 ON p2.doc_id = c.d2 AND p2.gram = p1.gram
-                  GROUP BY 1, 2, 3),
-         nv AS (SELECT i.bands, CAST(count(*) AS BIGINT) AS n_verified
-                FROM cint i
-                JOIN sizes s1 ON s1.doc_id = i.d1
-                JOIN sizes s2 ON s2.doc_id = i.d2
-                WHERE round(i.inter * 1.0 / (s1.n + s2.n - i.inter), 6)
-                        >= $tau
+         nv AS (SELECT c.bands, CAST(count(*) AS BIGINT) AS n_verified
+                FROM cand c JOIN pairs p ON p.d1 = c.d1 AND p.d2 = c.d2
+                WHERE ${SimJoin.jaccardSql} >= $tau
                 GROUP BY 1),
-         tint AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-                  FROM posts a JOIN posts b
-                    ON a.gram = b.gram AND a.doc_id < b.doc_id
-                  GROUP BY 1, 2),
          nt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth
-                FROM tint i
-                JOIN sizes s1 ON s1.doc_id = i.d1
-                JOIN sizes s2 ON s2.doc_id = i.d2
-                WHERE round(i.inter * 1.0 / (s1.n + s2.n - i.inter), 6)
-                        >= $tau),
+                FROM pairs WHERE ${SimJoin.jaccardSql} >= $tau),
          tb AS (SELECT CAST(unnest([${LshBandSweep.mkString(", ")}])
                   AS BIGINT) AS bands)
          SELECT tb.bands, CAST($k // tb.bands AS BIGINT) AS rows_per_band,
@@ -1214,49 +1197,32 @@ object Dedup {
   /** dedup_minhash_lsh oracle, generated from the same affine salt
     * parameters as [[graft.functions.MinHashAgg]]. */
   private lazy val minhashLshSql: String =
-    s"""WITH ${grams3Cte},
+    s"""WITH ${SimJoin.interPairsCtes},
          ${minhashSigCte(32)},
          bk AS (SELECT doc_id, unnest(${bandKeysSql(8, 4)}) AS bk FROM sig),
          cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
                   FROM bk a JOIN bk b
-                    ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         sizes AS (SELECT doc_id, len(gs) AS n FROM g),
-         inter AS (SELECT c.d1, c.d2, count(*) AS inter
-                   FROM cand c
-                   JOIN posts p1 ON p1.doc_id = c.d1
-                   JOIN posts p2 ON p2.doc_id = c.d2 AND p2.gram = p1.gram
-                   GROUP BY c.d1, c.d2)
-         SELECT i.d1, i.d2,
-                round(i.inter * 1.0 / (s1.n + s2.n - i.inter), 6) AS jaccard
-         FROM inter i
-         JOIN sizes s1 ON s1.doc_id = i.d1
-         JOIN sizes s2 ON s2.doc_id = i.d2
-         WHERE round(i.inter * 1.0 / (s1.n + s2.n - i.inter), 6) >= 0.5
-         ORDER BY d1, d2"""
+                    ON a.bk = b.bk AND a.doc_id < b.doc_id)
+         SELECT p.d1, p.d2, ${SimJoin.jaccardSql} AS jaccard
+         FROM cand c JOIN pairs p ON p.d1 = c.d1 AND p.d2 = c.d2
+         WHERE ${SimJoin.jaccardSql} >= 0.5
+         ORDER BY p.d1, p.d2"""
 
   /** dedup_incremental oracle: same generated signature/band-key
     * machinery as [[minhashLshSql]], with the asymmetric
     * fresh-probes-existing candidate join and a per-fresh-doc
     * best-match verdict. */
   private lazy val dedupIncrementalSql: String =
-    s"""WITH ${grams3Cte},
+    s"""WITH ${SimJoin.interPairsCtes},
          ${minhashSigCte(32)},
          bk AS (SELECT doc_id, unnest(${bandKeysSql(8, 4)}) AS bk FROM sig),
          cand AS (SELECT DISTINCT f.doc_id AS dn, e.doc_id AS de
                   FROM bk f JOIN bk e ON f.bk = e.bk
                   WHERE f.doc_id % 10 = 0 AND e.doc_id % 10 <> 0),
-         sizes AS (SELECT doc_id, len(gs) AS n FROM g),
-         inter AS (SELECT c.dn, c.de, count(*) AS inter
-                   FROM cand c
-                   JOIN posts p1 ON p1.doc_id = c.dn
-                   JOIN posts p2 ON p2.doc_id = c.de AND p2.gram = p1.gram
-                   GROUP BY c.dn, c.de),
-         scored AS (SELECT i.dn, i.de,
-                           round(i.inter * 1.0 / (s1.n + s2.n - i.inter), 6) AS j
-                    FROM inter i
-                    JOIN sizes s1 ON s1.doc_id = i.dn
-                    JOIN sizes s2 ON s2.doc_id = i.de
-                    WHERE round(i.inter * 1.0 / (s1.n + s2.n - i.inter), 6) >= 0.5),
+         scored AS (SELECT c.dn, c.de, ${SimJoin.jaccardSql} AS j
+                    FROM cand c JOIN pairs p
+                      ON p.d1 = least(c.dn, c.de) AND p.d2 = greatest(c.dn, c.de)
+                    WHERE ${SimJoin.jaccardSql} >= 0.5),
          best AS (SELECT dn, de, j,
                          row_number() OVER (PARTITION BY dn
                            ORDER BY j DESC, de ASC) AS rn

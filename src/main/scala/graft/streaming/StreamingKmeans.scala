@@ -5,7 +5,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.DataFrame
 
-import graft.functions.PortableHash
 import graft.operators.Cluster
 
 /** Streaming incremental k-means (SURVEY §2 roadmap item): the
@@ -82,16 +81,6 @@ final class StreamingKmeans(val k: Int) extends Serializable {
     lastBatchId = batchId
   }
 
-  /** Deterministic seed candidates: the batch's `need`
-    * smallest-portable-hash vectors. */
-  private def seedCandidates(q: DataFrame, need: Int): Array[Array[Long]] =
-    q.withColumn("h", PortableHash.h60(col("vec_id").cast("string")))
-      .orderBy(col("h"), col("vec_id"))
-      .limit(need)
-      .select(col("q"))
-      .collect()
-      .map(_.getSeq[Long](0).toArray)
-
   /** One mini-batch step, unguarded. The unit the spec's reference
     * fold replays; stream sinks go through the batchId overload.
     * Corrupt vectors are SKIPPED (see [[assign]]): a micro-batch
@@ -102,7 +91,7 @@ final class StreamingKmeans(val k: Int) extends Serializable {
   def processBatch(batch: DataFrame): Unit = {
     val q = Cluster.quantizedLenient(batch)
     if (cents == null) {
-      val seeds = seedCandidates(q, k)
+      val seeds = Cluster.hashSeeds(q, k)
       if (seeds.isEmpty) return // empty first batch: stay unseeded
       cents = seeds
       sums = Array.fill(k)(new Array[Long](seeds.head.length))
@@ -119,7 +108,7 @@ final class StreamingKmeans(val k: Int) extends Serializable {
       // ONE top-up batch must not both seed (the second would be the
       // same dead duplicate the pre-existing check guards against).
       var have = cents.map(_.toSeq).toSet
-      seedCandidates(q, k - cents.length).foreach { c =>
+      Cluster.hashSeeds(q, k - cents.length).foreach { c =>
         if (cents.length < k && !have.contains(c.toSeq)) {
           cents = cents :+ c
           have = have + c.toSeq

@@ -112,6 +112,37 @@ class AnnSpec extends SparkSpecBase {
     }
   }
 
+  test("ADC table lookups equal the direct Σ(q − recon)² for plain and residual codes") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import Ann.{PqDsub, PqK, PqM}
+    val rnd = new scala.util.Random(11)
+    def vec(): Array[Long] =
+      Array.fill(PqM * PqDsub)(rnd.nextInt(1 << 21).toLong - (1 << 20))
+    val subCents = Array.fill(PqM, PqK)(
+      Array.fill(PqDsub)(rnd.nextInt(1 << 21).toLong - (1 << 20)))
+    val vecs = Seq.tabulate(200)(i => (i.toLong, vec()))
+    // IVF-PQ codes the residual against the vector's cell centroid, and
+    // its probe is the query's residual against the same centroid
+    for ((kind, centroid) <- Seq("plain" -> Array.fill(PqM * PqDsub)(0L),
+        "residual" -> vec())) {
+      def minus(v: Array[Long]) = v.zip(centroid).map { case (a, b) => a - b }
+      val probe = minus(vec())
+      val got = Ann.pqEncode(vecs.map { case (id, v) => (id, minus(v)) }
+          .toDF("vec_id", "r"), "r", subCents)
+        .select(array((0 until PqM).map(s => col(s"c$s")): _*),
+          Ann.adcDistance(typedlit(Ann.adcTable(probe, subCents).toSeq)))
+        .collect()
+      assert(got.length == vecs.length)
+      got.foreach { row =>
+        val recon = row.getSeq[Int](0).zipWithIndex
+          .flatMap { case (c, s) => subCents(s)(c) }
+        val want = probe.zip(recon).map { case (a, b) => (a - b) * (a - b) }.sum
+        assert(row.getLong(1) == want, s"$kind: table lookup ${row.getLong(1)} != $want")
+      }
+    }
+  }
+
   test("ivf-pq recall@5 vs bruteforce") {
     val approx = topk(Ann.ivfPq(spark, Sf))
     val recall = recallOf(approx)

@@ -55,7 +55,7 @@ fi
 echo "=== one similarity-join kernel ==="
 sqlSurface=$(awk '/val SimhashSparkSql/ {on = 1} on {print FILENAME ":" FNR ":"}
     on && /"""$/ {on = 0}' src/main/scala/graft/operators/Dedup.scala)
-probes=$(grep -rnE 'bit_count\(xor\(|a\.ck = b\.ck|col\("a\.ck"\) === col\("b\.ck"\)|JOIN tb ON|LEFT JOIN pairs p ON' \
+probes=$(grep -rnE 'bit_count\(xor\(|a\.ck = b\.ck|col\("a\.ck"\) === col\("b\.ck"\)|JOIN tb ON|LEFT JOIN pairs p ON|s2\.n - i\.inter' \
     src/main/scala \
   | grep -vE '^src/main/scala/graft/core/SimJoin\.scala:' \
   | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(/\*\*|\*)' \
@@ -63,6 +63,33 @@ probes=$(grep -rnE 'bit_count\(xor\(|a\.ck = b\.ck|col\("a\.ck"\) === col\("b\.c
 if [ -n "$probes" ]; then
   echo "similarity-join step outside core/SimJoin.scala:"
   echo "$probes"
+  exit 1
+fi
+
+# One vector-search kernel: the hash-seed rule, the integer quantizer
+# and the centroid argmin live in Cluster (hashSeedRows, quantizedCtes,
+# nearestCentroidCtes), the cell probe and the per-query top-k in Ann
+# (ivfProbeCtes, topkSql), each beside its Spark kernel, and every
+# oracle interpolates the query-set size; a copy outside those
+# definitions is a second home that can drift. Scaladoc lines are
+# exempt, and so is Ann's BruteforceSparkSql: ann_bruteforce_sql types
+# its query as plain Spark SQL on purpose.
+echo "=== one vector-search kernel ==="
+homes=$(awk '
+    FILENAME ~ /Cluster\.scala$/ &&
+      /(def|val) (hashSeedRows|quantizedCtes|nearestCentroidCtes)[^A-Za-z0-9]/ {on = 1}
+    FILENAME ~ /Ann\.scala$/ &&
+      /(def|val) (ivfProbeCtes|topkSql|BruteforceSparkSql)[^A-Za-z0-9]/ {on = 1}
+    on && /^[[:space:]]*$/ {on = 0}
+    on {print FILENAME ":" FNR ":"}' \
+    src/main/scala/graft/operators/Cluster.scala src/main/scala/graft/operators/Ann.scala)
+kernels=$(grep -rnE 'ORDER BY dist, cid|floor\(x \* |ce\) DESC|PARTITION BY qid|orderBy\(col\("h"\), col\("vec_id"\)\)|vec_id < 10' \
+    src/main/scala \
+  | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(/\*\*|\*)' \
+  | grep -vF -e "${homes:-no kernel homes}" || true)
+if [ -n "$kernels" ]; then
+  echo "vector-search kernel step outside its home in Cluster.scala/Ann.scala:"
+  echo "$kernels"
   exit 1
 fi
 
